@@ -1,7 +1,9 @@
-"""Dump .explain('formatted') for the r16-touched queries.
+"""Dump .explain('formatted') for chosen queries() keys.
 
-Usage: python scripts/dump_r16_plans.py <checkout> <suffix> [key...]
-Writes /root/repo/plans/r16/<key>_<suffix>.txt for each key.
+Usage: python scripts/dump_key_plans.py <checkout> <out_dir> <suffix> [key...]
+Writes <out_dir>/<key>_<suffix>.txt for each key, planning the queries
+of <checkout> against the data set in $SPARK_GRAFT_SF_DIR (default sf0.1).
+Dump a parent and a changed checkout with two suffixes to diff plans.
 """
 
 from __future__ import annotations
@@ -12,16 +14,16 @@ import sys
 from contextlib import redirect_stdout
 
 repo = os.path.abspath(sys.argv[1])
-suffix = sys.argv[2]
-keys = sys.argv[3:]
+out_dir = os.path.abspath(sys.argv[2])
+suffix = sys.argv[3]
+keys = sys.argv[4:]
 sys.path.insert(0, repo)
 os.chdir(repo)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from social_media_etl_spark.session import get_spark  # noqa: E402
 
-OUT = "/root/repo/plans/r16"
-os.makedirs(OUT, exist_ok=True)
+os.makedirs(out_dir, exist_ok=True)
 spark = get_spark("plan-dump")
 sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 qs = entrymod.queries()
@@ -30,6 +32,7 @@ for k in keys:
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
-    with open(f"{OUT}/{k}_{suffix}.txt", "w") as f:
+    path = os.path.join(out_dir, f"{k}_{suffix}.txt")
+    with open(path, "w") as f:
         f.write(buf.getvalue())
-    print(k, "->", f"{OUT}/{k}_{suffix}.txt")
+    print(k, "->", path)

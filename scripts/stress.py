@@ -883,12 +883,10 @@ def lakehouse_metadata_probe(spark, events) -> None:
     """r9 (VERDICT r8 #3/#5): quantify the manifest-segment and
     deletion-vector contracts at chain length.
 
-    (a) APPEND-CHAIN METADATA: run the same 30-append chain against a
-    SEGMENTED table and a legacy INLINE table and measure the metadata
-    bytes the LAST commit writes (pointer+segment vs full manifest).
-    Inline grows O(all files); segmented stays O(appended files) — at
-    10⁵ files that asymmetry is the difference between a KB commit and
-    a multi-MB driver-held JSON per append.
+    (a) APPEND-CHAIN METADATA: run a 30-append chain and measure the
+    metadata bytes the LAST commit writes (pointer + its one new
+    segment) and the chain's wall time. Segmented metadata stays
+    O(appended files) per commit however long the chain grows.
 
     (b) MERGE-ON-READ DELETE: the same narrow-range delete the COW
     probe runs, as a deletion vector — files reused must equal files
@@ -912,34 +910,24 @@ def lakehouse_metadata_probe(spark, events) -> None:
         chunk = events.select("event_id", "event_type", "value").filter(
             F.col("event_id") % 97 == 3
         )
-        sizes = {}
-        times = {}
-        for layout, segmented in (("segmented", True), ("inline", False)):
-            t = VersionedTable.create(
-                spark, f"{d}/{layout}", base, segmented=segmented
-            )
-            t0 = time.time()
-            for _ in range(30):
-                t.append(chunk)
-            times[layout] = round(time.time() - t0, 2)
-            head = t.head_version()
-            mdir = f"{d}/{layout}/_manifests"
-            ptr_path = f"{mdir}/v{head:08d}.json"
-            written = os.path.getsize(ptr_path)
-            ptr = t._read_pointer(head)
-            if "segments" in ptr:
-                written += os.path.getsize(f"{mdir}/{ptr['segments'][-1]}")
-            sizes[layout] = written
+        t = VersionedTable.create(spark, f"{d}/segmented", base)
+        t0 = time.time()
+        for _ in range(30):
+            t.append(chunk)
+        chain_s = round(time.time() - t0, 2)
+        head = t.head_version()
+        mdir = f"{d}/segmented/_manifests"
+        written = os.path.getsize(f"{mdir}/v{head:08d}.json")
+        written += os.path.getsize(
+            f"{mdir}/{t._read_pointer(head)['segments'][-1]}"
+        )
         print(
             json.dumps(
                 {
                     "probe": "append_chain_metadata",
                     "appends": 30,
-                    "last_commit_metadata_bytes": sizes,
-                    "chain_wall_s": times,
-                    "inline_over_segmented": round(
-                        sizes["inline"] / max(sizes["segmented"], 1), 1
-                    ),
+                    "last_commit_metadata_bytes": written,
+                    "chain_wall_s": chain_s,
                 }
             )
         )

@@ -37,13 +37,13 @@ the reference has no transactional layer (it truncate-and-loads into
 Postgres); this closes the engine's own gap noted in round-5 review.
 
 MANIFEST SEGMENTS (VERDICT r8 #3 — the Iceberg manifest-list
-pattern): a naive manifest inlines EVERY live file's path/stats/
-partition value, so an append to an N-file table writes (and holds in
-driver memory) O(N) JSON — the long-append-chain killer at 10⁵–10⁶
-files. A SEGMENTED table (the default for new tables) instead commits
-a small POINTER manifest listing immutable SEGMENT files
-(``_manifests/seg-<id>.json``), each carrying the file/stats/
-partition metadata for ONE commit's files:
+pattern): a manifest that inlined EVERY live file's path/stats/
+partition value would make an append to an N-file table write (and
+hold in driver memory) O(N) JSON — the long-append-chain killer at
+10⁵–10⁶ files. Every table instead commits a small POINTER manifest
+listing immutable SEGMENT files (``_manifests/seg-<id>.json``), each
+carrying the file/stats/partition metadata for ONE commit's files; a
+pointer without a segment list is refused at the protocol gate:
 
 - ``append`` writes ONE new segment of size O(appended files) and a
   pointer whose segment list is the parent's plus that name — it
@@ -56,6 +56,11 @@ partition metadata for ONE commit's files:
   cached process-wide), so snapshot isolation, time travel, CDC and
   pruning semantics are unchanged; per-commit stats collection was
   already O(new files) and stays that way.
+
+Every commit goes through :meth:`VersionedTable._commit`: it builds
+the child pointer from the parent's carried keys plus the op's own
+fields, derives the segment list, and CASes, rebasing or refusing on
+a lost race.
 """
 
 from __future__ import annotations
@@ -87,8 +92,8 @@ __all__ = [
 #: manifest whose recorded features this build does not know, by
 #: name — the alternative is silent misreads (a reader without DV
 #: support would resurrect every deleted row of a vectored table).
-#: Feature-LESS manifests (pre-r12 tables) always pass: absence means
-#: "base protocol only", exactly Delta's legacy-protocol reading.
+#: Feature-LESS manifests (pre-r12 tables) pass: absence means "base
+#: protocol only", exactly Delta's legacy-protocol reading.
 SUPPORTED_FEATURES = frozenset(
     {
         # file/stats metadata lives in immutable segment files
@@ -120,6 +125,10 @@ SUPPORTED_FEATURES = frozenset(
 #: ``None`` is itself a meaningful value (overwrite's partition_by:
 #: None = drop partitioning, _UNSET = carry the current spec)
 _UNSET = object()
+
+#: ``removed`` value for :meth:`VersionedTable._commit` — a full
+#: rewrite replaces every file of the parent snapshot
+_ALL_FILES = object()
 
 #: (applicationId, path, version, manifest-identity) -> lazy snapshot
 #: plan (see :meth:`VersionedTable.read`). Plans, never results.
@@ -418,13 +427,13 @@ class VersionedTable:
         return json.loads(text)
 
     def _read_pointer(self, version: int) -> dict:
-        """The manifest JSON exactly as committed — for a SEGMENTED
-        table that is the small pointer (no file list). Commit paths
+        """The manifest JSON exactly as committed — the small pointer
+        (segment names, no file list). Commit paths
         work on pointers so their metadata IO is O(changed files).
 
         The protocol gate lives HERE, not only in :meth:`_resolve`:
-        segmented appends (and the other pointer-carrying commits)
-        never materialize a file list, and even VACUUM must refuse —
+        appends (and the other pointer-carrying commits) never
+        materialize a file list, and even VACUUM must refuse —
         a future feature could root file liveness somewhere this
         build does not scan, so sweeping under it would delete live
         data."""
@@ -434,9 +443,7 @@ class VersionedTable:
 
     def _read_manifest(self, version: int) -> dict:
         """The RESOLVED manifest: pointer plus materialized
-        files/stats/parts (unioned from its segments). Read paths and
-        external callers see one shape whether the table is segmented
-        or legacy-inline."""
+        files/stats/parts (unioned from its segments)."""
         return self._resolve(self._read_pointer(version))
 
     # segments are immutable once a pointer references them — cache
@@ -542,7 +549,16 @@ class VersionedTable:
         Iceberg format-version): refuse a manifest recording a feature
         this build does not know, BY NAME, before any file is read or
         any commit is staged. Feature-less manifests (pre-r12 tables)
-        mean base protocol and always pass."""
+        mean base protocol and pass; a manifest without a segment list
+        (an inline file list) is refused by name."""
+        if "segments" not in ptr:
+            raise UnsupportedTableFeatureError(
+                f"VersionedTable: manifest v{ptr.get('version')} has no "
+                "segment list — the legacy inline layout (file list "
+                "inside the manifest) is no longer supported; rewrite "
+                "the table into a new one with an engine that still "
+                "reads it"
+            )
         unknown = sorted(set(ptr.get("features") or []) - SUPPORTED_FEATURES)
         if unknown:
             raise UnsupportedTableFeatureError(
@@ -834,26 +850,21 @@ class VersionedTable:
         return out
 
     @staticmethod
-    def _add_feature(m: dict, name: str) -> dict:
-        """Record that a commit relies on ``name`` (first use turns
-        the flag on; it never turns off — files written under it
-        remain in the snapshot until a full rewrite, and even then
-        the flag staying on only costs a set lookup)."""
-        feats = set(m.get("features") or [])
-        if name not in feats:
-            m["features"] = sorted(feats | {name})
-        return m
+    def _features_with(ptr: dict, *names: str) -> list[str]:
+        """``ptr``'s feature list plus ``names``, for a commit that
+        relies on them (first use turns a flag on; it never turns
+        off — files written under it remain in the snapshot until a
+        full rewrite, and even then the flag staying on only costs a
+        set lookup)."""
+        return sorted(set(ptr.get("features") or []) | set(names))
 
     def _resolve(self, ptr: dict) -> dict:
-        """Materialize files/stats/parts from a pointer's segments; a
-        legacy inline manifest passes through unchanged. Refuses a
-        manifest whose recorded ``features`` this build does not
-        support (:meth:`_check_features`) — every caller that reads
-        data or stages a commit resolves first, so the gate is
+        """Materialize files/stats/parts from a pointer's segments.
+        Refuses a manifest whose recorded ``features`` this build does
+        not support (:meth:`_check_features`) — every caller that
+        reads data or stages a commit resolves first, so the gate is
         table-wide."""
         self._check_features(ptr)
-        if "segments" not in ptr:
-            return ptr
         files: list[str] = []
         stats: dict = {}
         parts: dict = {}
@@ -878,21 +889,27 @@ class VersionedTable:
             out["specs"] = specs
         return out
 
-    def _segments_without(self, ptr: dict, removed: set[str]) -> list[str]:
-        """Segment list with ``removed`` files dropped: untouched
-        segments carry forward BY NAME (zero IO, zero rewrite);
-        segments that lost files are re-written filtered; segments
-        that lost everything disappear. O(affected segments) metadata
-        — the DML analogue of copy-on-write at the metadata layer."""
+    def _segments_without(
+        self, ptr: dict, removed: set[str]
+    ) -> tuple[list[str], int]:
+        """Segment list with ``removed`` files dropped, and the number
+        of files it still holds: untouched segments carry forward BY
+        NAME (zero IO, zero rewrite); segments that lost files are
+        re-written filtered; segments that lost everything disappear.
+        O(affected segments) metadata — the DML analogue of
+        copy-on-write at the metadata layer."""
         out = []
+        n_files = 0
         for name in ptr["segments"]:
             seg = self._read_segment(name)
             if removed.isdisjoint(seg["files"]):
                 out.append(name)
+                n_files += len(seg["files"])
                 continue
             kept = [f for f in seg["files"] if f not in removed]
             if not kept:
                 continue
+            n_files += len(kept)
             kept_set = set(kept)
             out.append(
                 self._write_segment(
@@ -910,7 +927,7 @@ class VersionedTable:
                     seg.get("spec"),
                 )
             )
-        return out
+        return out, n_files
 
     def _try_commit(self, manifest: dict, version: int) -> bool:
         """Write the manifest fully to a temp name, then CAS-rename it
@@ -949,6 +966,123 @@ class VersionedTable:
         if not ok:
             self._fs.delete(tmp, False)
         return ok
+
+    #: Pointer keys a commit inherits from its parent unless the op
+    #: sets them: the table definition, column mapping, index configs,
+    #: deletion vectors and the segment list. Every other key (merge_on,
+    #: mode, predicate, cdc, restored_from, cloned_from, copied_files)
+    #: describes only the commit that wrote it and is never carried.
+    #: Full rewrites carry ``aliases`` too: once no live footer holds an
+    #: old physical name its alias entries are inert (reads coalesce
+    #: only the names a footer actually has).
+    _CARRY = (
+        "schema",
+        "schema_json",
+        "mixed",
+        "stats_cols",
+        "bloom",
+        "partition_by",
+        "bucket_by",
+        "constraints",
+        "cdf",
+        "generated",
+        "identity",
+        "properties",
+        "features",
+        "field_ids",
+        "aliases",
+        "dropped_phys",
+        "delete_vectors",
+        "segments",
+        "n_files",
+    )
+
+    def _commit(
+        self,
+        op: str,
+        parent: int | None,
+        fields=None,
+        *,
+        txn: str | None = None,
+        new_files: list[str] = (),
+        removed=None,
+        check: bool = False,
+        rebase=None,
+        carry_from: dict | None = None,
+        retries: int = 10,
+    ) -> int:
+        """Commit one version — the only place a manifest pointer is
+        built and CASed. Returns the committed version.
+
+        The child pointer is the parent's :attr:`_CARRY` keys (or
+        ``carry_from``'s: restore carries its target snapshot, a clone
+        its source), then ``version``/``parent``/``op``/``txn`` and
+        the ``txns`` idempotency set (the parent's plus ``txn`` — what
+        a streaming sink's exactly-once replay checks), then the op's
+        own ``fields``: a dict, or a callable of the parent pointer
+        when they depend on it and the commit may rebase.
+
+        ``new_files`` land as new segments, built once under the
+        child's stats/bloom/partition config and reused across
+        retries. ``removed`` drops files from the parent's segments
+        (:meth:`_segments_without`); :data:`_ALL_FILES` replaces the
+        whole file set, and its deletion vectors with it. ``check``
+        validates CHECK constraints over ``new_files`` once, before
+        the first CAS.
+
+        On a lost CAS, ``rebase(parent, ptr)`` returns the new
+        ``(parent, ptr)`` to retry on or raises; without it the commit
+        raises :class:`ConcurrentWriteError` naming the op and its
+        stale parent."""
+        ptr = {} if parent is None else self._read_pointer(parent)
+        new_segs = None
+        for _ in range(retries):
+            src = ptr if carry_from is None else carry_from
+            m = {k: src[k] for k in self._CARRY if k in src}
+            m.update(
+                version=0 if parent is None else parent + 1,
+                parent=parent,
+                op=op,
+                txn=txn,
+                txns=self._txns_after(ptr, txn),
+            )
+            m.update((fields(ptr) if callable(fields) else fields) or {})
+            if new_segs is None:
+                if check:
+                    # new files carry no deletion vectors
+                    self._check_constraints(
+                        new_files, {**m, "delete_vectors": []}
+                    )
+                new_segs = self._build_segments(
+                    new_files,
+                    m.get("stats_cols"),
+                    m.get("partition_by"),
+                    m.get("bloom"),
+                )
+            if removed is _ALL_FILES:
+                m.pop("delete_vectors", None)
+                m["segments"], m["n_files"] = [], 0
+            elif removed:
+                m["segments"], m["n_files"] = self._segments_without(
+                    src, removed
+                )
+            m["segments"] = m["segments"] + new_segs
+            m["n_files"] += len(new_files)
+            if self._try_commit(m, m["version"]):
+                return m["version"]
+            if rebase is None:
+                raise ConcurrentWriteError(
+                    f"VersionedTable: {op} raced another writer creating "
+                    f"{self.path}"
+                    if parent is None
+                    else f"VersionedTable: {op} raced past stale "
+                    f"v{parent}; head is now v{self.head_version()} — "
+                    "re-run"
+                )
+            parent, ptr = rebase(parent, ptr)
+        raise ConcurrentWriteError(
+            f"VersionedTable: {op} lost {retries} CAS races"
+        )
 
     # -- data IO ------------------------------------------------------------
 
@@ -1620,9 +1754,9 @@ class VersionedTable:
             out = df
             for dc, c in zip(dir_cols, pb):
                 out = out.withColumn(dc, F.col(c).cast("string"))
-            apply_light_committer(
-                out.write.mode("error"), self.spark
-            ).partitionBy(*dir_cols).parquet(ddir)
+            apply_light_committer(out.write.mode("error")).partitionBy(
+                *dir_cols
+            ).parquet(ddir)
         elif bucket_by:
             # BUCKET-HASHED layout (VERDICT r9 #5): route the bucketed
             # write through a throwaway EXTERNAL catalog table — the
@@ -1643,7 +1777,7 @@ class VersionedTable:
             tmp = f"smetl_vbkt_{uuid.uuid4().hex[:10]}"
             (
                 apply_light_committer(
-                    df.repartition(nb, bcol).write.mode("error"), self.spark
+                    df.repartition(nb, bcol).write.mode("error")
                 )
                 .option("path", ddir)
                 .bucketBy(nb, bcol)
@@ -1652,9 +1786,7 @@ class VersionedTable:
             )
             self.spark.sql(f"DROP TABLE `{tmp}`")
         else:
-            apply_light_committer(
-                df.write.mode("error"), self.spark
-            ).parquet(ddir)
+            apply_light_committer(df.write.mode("error")).parquet(ddir)
         files = []
         if self._local:
             for root, _dirs, names in os.walk(ddir):
@@ -1703,7 +1835,7 @@ class VersionedTable:
         race leaves an orphan dir that vacuum sweeps age-guarded.
         Bounded by the commit's own changed rows, distributed write."""
         cdir = f"{self.path}/cdc/b{version_hint:08d}-{uuid.uuid4().hex[:8]}"
-        apply_light_committer(df.write.mode("error"), self.spark).parquet(cdir)
+        apply_light_committer(df.write.mode("error")).parquet(cdir)
         return cdir
 
     def _write_cdc_if_any(self, df: DataFrame, version_hint: int) -> str | None:
@@ -1852,7 +1984,6 @@ class VersionedTable:
         stats_cols: list[str] | None = None,
         partition_by: str | list | None = None,
         constraints: dict | None = None,
-        segmented: bool = True,
         bucket_by: tuple | None = None,
         change_data_feed: bool = False,
         bloom_cols: list[str] | None = None,
@@ -1875,11 +2006,9 @@ class VersionedTable:
         (Delta table-constraint semantics: FALSE rows are violations,
         NULL passes); every data-adding commit — this create, appends,
         upserts, overwrites, updates — validates its new rows against
-        them and refuses to commit on violation. ``segmented`` (the
-        default) stores file metadata in per-commit SEGMENT files so
-        appends write O(appended files) of metadata (see module
-        docstring); ``False`` keeps the legacy inline layout — the
-        format is fixed per table at create time. ``generated`` maps
+        them and refuses to commit on violation. File metadata lives
+        in per-commit SEGMENT files, so appends write O(appended
+        files) of metadata (see module docstring). ``generated`` maps
         column → SQL expression (Delta's GENERATED ALWAYS AS, r13):
         ingests that omit the column get it COMPUTED, ingests that
         supply it get it VALIDATED in-plan (a disagreeing value
@@ -1962,14 +2091,9 @@ class VersionedTable:
             }
         files = t._write_data(df, 0, partition_by, bucket)
         m = {
-            "version": 0,
-            "parent": None,
-            "op": "create",
             "schema": df.schema.simpleString(),
             "schema_json": df.schema.json(),
             "mixed": False,
-            "txn": txn,
-            "txns": [txn] if txn else [],
             "stats_cols": stats_cols or [],
             # per-file bloom bitmaps for point-lookup skipping (r11):
             # every data-adding commit inherits the config and records
@@ -1984,11 +2108,11 @@ class VersionedTable:
             "constraints": constraints or {},
             # GENERATED ALWAYS AS expressions (r13): computed when an
             # ingest omits the column, validated in-plan when it
-            # supplies one; carried by every commit (_carry_mapping)
+            # supplies one; carried by every commit (_CARRY)
             "generated": generated or {},
             # GENERATED ALWAYS AS IDENTITY specs + per-column high
             # watermark (r15): advanced by every allocating commit,
-            # carried by the rest (_carry_mapping)
+            # carried by the rest (_CARRY)
             "identity": cls._bump_identity(
                 id_map,
                 t._identity_watermark(files, id_map, id_alloc),
@@ -2007,7 +2131,7 @@ class VersionedTable:
             # USE a feature later (MoR DML → dv, rename → column_
             # mapping, widen_column → widen) add their flag then
             "features": sorted(
-                (["segments"] if segmented else [])
+                ["segments"]
                 + (["cdf"] if change_data_feed else [])
                 + (["bloom"] if bloom else [])
                 + (["bucket"] if bucket else [])
@@ -2016,28 +2140,15 @@ class VersionedTable:
                 + (["identity"] if id_map else [])
             ),
         }
-        if segmented:
-            m["segments"] = t._build_segments(
-                files, stats_cols, partition_by, bloom
-            )
-            m["n_files"] = len(files)
-        else:
-            stats = (
-                t._collect_stats(files, stats_cols, bloom)
-                if stats_cols or bloom
-                else {}
-            )
-            parts = (
-                t._partition_values(files, partition_by)
-                if partition_by
-                else {}
-            )
-            m.update({"files": files, "stats": stats, "parts": parts})
-        t._check_constraints(files, m)
-        if not t._try_commit(m, 0):
-            raise ConcurrentWriteError(
-                f"VersionedTable: concurrent create at {path}"
-            )
+        t._commit(
+            "create",
+            None,
+            m,
+            txn=txn,
+            new_files=files,
+            removed=_ALL_FILES,
+            check=True,
+        )
         return t
 
     def committed_txns(self) -> set[str]:
@@ -2060,29 +2171,6 @@ class VersionedTable:
         return out
 
     @staticmethod
-    def _carry_mapping(m: dict, base: dict) -> dict:
-        """Carry the column-mapping metadata (``field_ids``,
-        ``aliases``) from a parent manifest into a fresh child — every
-        commit op calls this so a RENAME's indirection survives any
-        later DML. Full rewrites keep ``aliases`` too: once no live
-        footer carries an old physical name the alias entries are
-        inert (the read path only coalesces names actually present)."""
-        for k in (
-            "field_ids",
-            "aliases",
-            "bucket_by",
-            "cdf",
-            "dropped_phys",
-            "features",
-            "properties",
-            "generated",
-            "identity",
-        ):
-            if base.get(k):
-                m[k] = base[k]
-        return m
-
-    @staticmethod
     def _txns_after(base: dict, txn: str | None) -> list[str]:
         prior = base.get("txns") or ([base["txn"]] if base.get("txn") else [])
         return sorted(set(prior) | {txn}) if txn else sorted(set(prior))
@@ -2096,10 +2184,10 @@ class VersionedTable:
             return T.StructType.fromJson(json.loads(manifest["schema_json"]))
         return None
 
-    def _check_schema(self, df: DataFrame, parent: int) -> dict:
-        """Validate an append's schema against the parent manifest and
-        return the child manifest's schema fields: ``{"schema",
-        "schema_json", "mixed"}``.
+    def _check_schema(self, df: DataFrame, base: dict) -> dict:
+        """Validate an append's schema against the parent pointer
+        ``base`` and return the child manifest's schema fields:
+        ``{"schema", "schema_json", "mixed"}``.
 
         Evolution contract (VERDICT r6, the Delta/Iceberg add-column
         rule): an append may ADD new columns — they become nullable
@@ -2108,7 +2196,6 @@ class VersionedTable:
         drift: that would corrupt snapshot reads. ``mixed`` marks a
         manifest whose file set spans more than one physical schema,
         switching reads to footer-merged mode."""
-        base = self._read_pointer(parent)
         table = self._manifest_schema(base)
         if table is None:
             want = base["schema"]
@@ -2213,21 +2300,15 @@ class VersionedTable:
         for v in self.versions():
             m = self._read_pointer(v)
             mt = self._commit_ts_ms(v)
-            if "segments" in m:
-                # the pointer records its file count — history never
-                # needs to open a segment
-                n_files = m.get("n_files")
-                if n_files is None:  # pragma: no cover - belt and braces
-                    n_files = len(self._resolve(m)["files"])
-            else:
-                n_files = len(m.get("files") or [])
             rows.append(
                 (
                     v,
                     m.get("parent"),
                     m.get("op"),
                     m.get("txn"),
-                    n_files,
+                    # the pointer records its file count — history
+                    # never needs to open a segment
+                    m["n_files"],
                     int(mt),
                 )
             )
@@ -2430,12 +2511,10 @@ class VersionedTable:
         schema evolution (new nullable columns) is allowed; see
         :meth:`_check_schema`.
 
-        METADATA COST: on a segmented table this writes ONE segment of
-        size O(appended files) and a pointer listing segment names —
-        the table's own file list is never materialized, so a commit
-        to a 10⁶-file table moves the same few KB as a commit to a
-        10-file one. Legacy inline tables keep the old O(all files)
-        manifest write."""
+        METADATA COST: this writes ONE segment of size O(appended
+        files) and a pointer listing segment names — the table's own
+        file list is never materialized, so a commit to a 10⁶-file
+        table moves the same few KB as a commit to a 10-file one."""
         parent = self.head_version()
         _ptr0 = self._read_pointer(parent)
         id_map = _ptr0.get("identity") or {}
@@ -2449,7 +2528,7 @@ class VersionedTable:
                 order += [c for c in df.columns if c not in order]
                 df = df.select(*order)
         df = self._apply_generated(df, _ptr0.get("generated"))
-        sch = self._check_schema(df, parent)
+        self._check_schema(df, _ptr0)
         partition_by = _ptr0.get("partition_by")
         bucket_by = _ptr0.get("bucket_by")
         files = self._write_data(df, parent + 1, partition_by, bucket_by)
@@ -2458,12 +2537,22 @@ class VersionedTable:
             if id_alloc
             else {}
         )
-        new_parts = None
-        new_stats = None
-        new_segs = None
-        new_checked = False
-        for _ in range(max_retries):
-            base = self._read_pointer(parent)
+
+        def fields(base: dict) -> dict:
+            # the winner of a lost race may itself have evolved the
+            # schema: re-validate against each head tried
+            out = self._check_schema(df, base)
+            if id_marks:
+                out["identity"] = self._bump_identity(id_map, id_marks)
+            # op-specific metadata riders (copy_into's loaded-file
+            # record) — never carried keys, so every attempt re-applies
+            # them verbatim
+            out.update(_commit_extra or {})
+            return out
+
+        def rebase(_parent: int, _ptr: dict) -> tuple[int, dict]:
+            head = self.head_version()
+            base = self._read_pointer(head)
             if id_alloc and (base.get("identity") or {}) != id_map:
                 # a raced commit advanced the identity watermark: the
                 # staged files carry ids allocated from the STALE
@@ -2492,68 +2581,19 @@ class VersionedTable:
                     f"{base.get('bucket_by')!r}); the staged files "
                     "follow the old layout — re-run"
                 )
-            v = parent + 1
-            stats_cols = base.get("stats_cols") or []
-            m = {
-                "version": v,
-                "parent": parent,
-                "op": "append",
-                "schema": sch["schema"],
-                "schema_json": sch["schema_json"],
-                "mixed": sch["mixed"],
-                "txn": txn,
-                "txns": self._txns_after(base, txn),
-                "stats_cols": stats_cols,
-                "bloom": base.get("bloom"),
-                "partition_by": partition_by,
-                "constraints": base.get("constraints") or {},
-            }
-            m = self._carry_mapping(m, base)
-            if id_marks:
-                m["identity"] = self._bump_identity(id_map, id_marks)
-            if base.get("delete_vectors"):
-                # new files carry no deleted rows; existing vectors
-                # still apply to the files they were cut for
-                m["delete_vectors"] = base["delete_vectors"]
-            if "segments" in base:
-                if new_segs is None:
-                    new_segs = self._build_segments(
-                        files, stats_cols, partition_by, base.get("bloom")
-                    )
-                m["segments"] = base["segments"] + new_segs
-                m["n_files"] = base.get("n_files", 0) + len(files)
-            else:
-                if (stats_cols or base.get("bloom")) and new_stats is None:
-                    new_stats = self._collect_stats(
-                        files, stats_cols, base.get("bloom")
-                    )
-                if new_parts is None:
-                    new_parts = (
-                        self._partition_values(files, partition_by)
-                        if partition_by
-                        else {}
-                    )
-                m["files"] = sorted(base["files"] + files)
-                m["stats"] = {
-                    **(base.get("stats") or {}),
-                    **(new_stats or {}),
-                }
-                m["parts"] = {**(base.get("parts") or {}), **new_parts}
-            if _commit_extra:
-                # op-specific metadata riders (copy_into's loaded-file
-                # record) — never core manifest keys, so the rebase
-                # loop can re-apply them verbatim each attempt
-                m.update(_commit_extra)
-            if new_checked is False:
-                # new files carry no deletion vectors — skip the anti-join
-                self._check_constraints(files, {**m, "delete_vectors": []})
-                new_checked = True
-            if self._try_commit(m, v):
-                return v
-            parent = self.head_version()
-            sch = self._check_schema(df, parent)
-        raise ConcurrentWriteError(
-            f"VersionedTable: append lost {max_retries} CAS races"
+            return head, base
+
+        # new files carry no deleted rows; existing vectors still apply
+        # to the files they were cut for, so they carry
+        return self._commit(
+            "append",
+            parent,
+            fields,
+            txn=txn,
+            new_files=files,
+            check=True,
+            rebase=rebase,
+            retries=max_retries,
         )
 
     def copy_into(
@@ -2752,52 +2792,20 @@ class VersionedTable:
             # whose every row lost (or tied) changes nothing; the
             # guard reads the written footers (one plan execution)
             cdc_dir = self._write_cdc_if_any(cdc, v)
-        stats_cols = base.get("stats_cols") or []
-        m = {
-            "version": v,
-            "parent": parent,
-            "op": "upsert",
-            "schema": base["schema"],
-            "schema_json": base.get("schema_json", latest.schema.json()),
-            # a full rewrite lands every logical column in every file,
-            # collapsing any earlier mixed layout back to uniform
-            "mixed": False,
-            "txns": self._txns_after(base, None),
-            "stats_cols": stats_cols,
-            "bloom": base.get("bloom"),
-            "partition_by": partition_by,
-            "constraints": base.get("constraints") or {},
-        }
-        m = self._carry_mapping(m, base)
-        if cdc_dir:
-            m["cdc"] = cdc_dir
-        stats = parts = None
-        if "segments" not in base:
-            stats = (
-                self._collect_stats(files, stats_cols, base.get("bloom"))
-                if stats_cols or base.get("bloom")
-                else {}
-            )
-            parts = (
-                self._partition_values(files, partition_by)
-                if partition_by
-                else {}
-            )
-        if "segments" in base:
-            # full rewrite → fresh consolidated segments (chunked)
-            m["segments"] = self._build_segments(
-                files, stats_cols, partition_by, base.get("bloom")
-            )
-            m["n_files"] = len(files)
-        else:
-            m.update({"files": files, "stats": stats, "parts": parts})
-        self._check_constraints(files, m)
-        if not self._try_commit(m, v):
-            raise ConcurrentWriteError(
-                f"VersionedTable: upsert merged against stale v{parent}; "
-                f"head is now v{self.head_version()} — re-run"
-            )
-        return v
+        return self._commit(
+            "upsert",
+            parent,
+            {
+                # a full rewrite lands every logical column in every
+                # file, collapsing any earlier mixed layout back to
+                # uniform
+                "mixed": False,
+                "cdc": cdc_dir,
+            },
+            new_files=files,
+            removed=_ALL_FILES,
+            check=True,
+        )
 
     def read_changes(
         self, from_version: int, to_version: int | None = None
@@ -2842,28 +2850,20 @@ class VersionedTable:
                 "are only defined along append-only chains; re-read the "
                 "snapshot instead"
             )
-        base_ptr = self._read_pointer(from_version)
-        target_ptr = self._read_pointer(to_v)
-        if "segments" in base_ptr and "segments" in target_ptr:
-            # segment-level diff: along an append-only span the target
-            # only ADDED segments, so the delta never materializes the
-            # base file list — O(new segments) metadata at any table
-            # size
-            base_segs = set(base_ptr["segments"])
-            new_files = sorted(
-                f
-                for s in target_ptr["segments"]
-                if s not in base_segs
-                for f in self._read_segment(s)["files"]
-            )
-            target = target_ptr
-        else:
-            base = self._resolve(base_ptr)
-            target = self._resolve(target_ptr)
-            new_files = sorted(set(target["files"]) - set(base["files"]))
+        base_segs = set(self._read_pointer(from_version)["segments"])
+        target = self._read_pointer(to_v)
+        # segment-level diff: along an append-only span the target only
+        # ADDED segments, so the delta never materializes the base file
+        # list — O(new segments) metadata at any table size
+        new_files = sorted(
+            f
+            for s in target["segments"]
+            if s not in base_segs
+            for f in self._read_segment(s)["files"]
+        )
         if not new_files:
             return self._read_files(
-                target, self._resolve(target_ptr)["files"]
+                target, self._resolve(target)["files"]
             ).limit(0)
         return self._read_files(target, new_files)
 
@@ -2932,27 +2932,17 @@ class VersionedTable:
                 # likewise emits nothing for OPTIMIZE (ADVICE r10)
                 continue
             if op in ("append", "create"):
-                base_ptr = self._read_pointer(ptr["parent"]) if ptr.get(
-                    "parent"
-                ) is not None else None
-                if base_ptr is not None and "segments" in base_ptr and (
-                    "segments" in ptr
-                ):
-                    base_segs = set(base_ptr["segments"])
-                    new_files = sorted(
-                        f
-                        for s_ in ptr["segments"]
-                        if s_ not in base_segs
-                        for f in self._read_segment(s_)["files"]
-                    )
-                else:
-                    m_v = self._resolve(ptr)
-                    base_files = (
-                        set(self._resolve(base_ptr)["files"])
-                        if base_ptr is not None
-                        else set()
-                    )
-                    new_files = sorted(set(m_v["files"]) - base_files)
+                base_segs = (
+                    set(self._read_pointer(ptr["parent"])["segments"])
+                    if ptr.get("parent") is not None
+                    else set()
+                )
+                new_files = sorted(
+                    f
+                    for s_ in ptr["segments"]
+                    if s_ not in base_segs
+                    for f in self._read_segment(s_)["files"]
+                )
                 if not new_files:
                     continue
                 df = self._read_files(
@@ -3173,6 +3163,7 @@ class VersionedTable:
                         "expressions may only use regular columns"
                     )
             df = self._apply_generated(df, generated)
+        base = self._read_pointer(parent)
         if replace_schema:
             sch = {
                 "schema": df.schema.simpleString(),
@@ -3180,10 +3171,9 @@ class VersionedTable:
                 "mixed": False,
             }
         else:
-            sch = self._check_schema(df, parent)
+            sch = self._check_schema(df, base)
             # a full rewrite lands every logical column in every file
             sch["mixed"] = False
-        base = self._read_pointer(parent)
         new_pb = partition_by
         partition_by = base.get("partition_by")
         if replace_schema and new_pb is not _UNSET:
@@ -3272,84 +3262,54 @@ class VersionedTable:
                     {**bloom_cfg, "cols": live_bloom} if live_bloom else None
                 )
         m = {
-            "version": v,
-            "parent": parent,
-            "op": "overwrite",
-            "schema": sch["schema"],
-            "schema_json": sch["schema_json"],
-            "mixed": sch["mixed"],
-            "txn": txn,
-            "txns": self._txns_after(base, txn),
+            **sch,
             "stats_cols": stats_cols,
             "bloom": bloom_cfg,
             "partition_by": partition_by,
-            "constraints": (
-                dict(constraints)
-                if replace_schema and constraints is not None
-                else base.get("constraints") or {}
-            ),
+            "cdc": cdc_dir,
         }
-        m = self._carry_mapping(m, base)
         if replace_schema:
+            if constraints is not None:
+                m["constraints"] = dict(constraints)
             # the schema swap redefines the table — generation
             # expressions over the OLD columns no longer apply; a
             # supplied map declares the NEW contract (create's
             # semantics, r14)
-            m.pop("generated", None)
-            if generated:
-                m["generated"] = dict(generated)
-                self._add_feature(m, "generated")
-            if constraints:
-                self._add_feature(m, "constraints")
-            m.pop("identity", None)
-            if id_map:
-                m["identity"] = self._bump_identity(
+            m["generated"] = dict(generated or {})
+            m["identity"] = (
+                self._bump_identity(
                     id_map,
                     self._identity_watermark(files, id_map, id_alloc),
                 )
-                self._add_feature(m, "identity")
+                if id_map
+                else {}
+            )
+            m["features"] = self._features_with(
+                base,
+                *(["generated"] if generated else []),
+                *(["constraints"] if constraints else []),
+                *(["identity"] if id_map else []),
+            )
             if properties is not None:
                 # the REPLACE lands as ONE commit: the declared
                 # property map rides the same CAS as the data swap,
                 # so no reader ever sees the new definition under the
                 # old table's properties (ADVICE r14 #1)
-                if properties:
-                    m["properties"] = dict(properties)
-                else:
-                    m.pop("properties", None)
+                m["properties"] = dict(properties)
         elif id_alloc:
             m["identity"] = self._bump_identity(
                 id_map,
                 self._identity_watermark(files, id_map, id_alloc),
             )
-        if cdc_dir:
-            m["cdc"] = cdc_dir
-        stats = parts = None
-        if "segments" not in base:
-            stats = (
-                self._collect_stats(files, stats_cols, bloom_cfg)
-                if stats_cols or bloom_cfg
-                else {}
-            )
-            parts = (
-                self._partition_values(files, partition_by)
-                if partition_by
-                else {}
-            )
-        if "segments" in base:
-            m["segments"] = self._build_segments(
-                files, stats_cols, partition_by, bloom_cfg
-            )
-            m["n_files"] = len(files)
-        else:
-            m.update({"files": files, "stats": stats, "parts": parts})
-        self._check_constraints(files, m)
-        if not self._try_commit(m, v):
-            raise ConcurrentWriteError(
-                f"VersionedTable: overwrite raced past stale v{parent}; "
-                f"head is now v{self.head_version()} — re-run"
-            )
-        return v
+        return self._commit(
+            "overwrite",
+            parent,
+            m,
+            txn=txn,
+            new_files=files,
+            removed=_ALL_FILES,
+            check=True,
+        )
 
     def restore(self, version: int, txn: str | None = None) -> int:
         """RESTORE TABLE TO VERSION AS OF (the Delta RESTORE command):
@@ -3450,35 +3410,22 @@ class VersionedTable:
                     # the feed projects to the reader's end schema
                     cdc = cdc.unionByName(fdf, allowMissingColumns=True)
                 cdc_dir = self._write_cdc_if_any(cdc, v)
-        m = dict(target_ptr)
-        # op-specific keys of the TARGET commit would misdescribe this
-        # one (and an inherited cdc dir would double-count its changes)
-        for stale in ("merge_on", "mode", "predicate", "txn", "cdc"):
-            m.pop(stale, None)
-        m.update(
+        # the target's snapshot content and definition carry; its
+        # op-specific keys (and cdc dir) never do. Idempotency keys
+        # are live table state, not snapshot content: ``txns`` follows
+        # the HEAD (the commit's parent), and so does the
+        # change-data-feed flag, a live table property
+        return self._commit(
+            "restore",
+            parent,
             {
-                "version": v,
-                "parent": parent,
-                "op": "restore",
                 "restored_from": version,
-                "txn": txn,
-                # idempotency keys are live table state, not snapshot
-                # content: carry the HEAD's set forward
-                "txns": self._txns_after(head_ptr, txn),
-            }
+                "cdf": head_ptr.get("cdf"),
+                "cdc": cdc_dir,
+            },
+            txn=txn,
+            carry_from=target_ptr,
         )
-        if head_ptr.get("cdf"):
-            m["cdf"] = head_ptr["cdf"]
-        else:
-            m.pop("cdf", None)
-        if cdc_dir:
-            m["cdc"] = cdc_dir
-        if not self._try_commit(m, v):
-            raise ConcurrentWriteError(
-                f"VersionedTable: restore raced past stale v{parent}; "
-                f"head is now v{self.head_version()} — re-run"
-            )
-        return v
 
     def clone(
         self,
@@ -3548,44 +3495,24 @@ class VersionedTable:
                 "own source is a no-op loop — pick a different "
                 "destination"
             )
-        v_new = dest.head_version() + 1 if replacing else 0
-        m = dict(ptr)
-        # op-specific keys of the source commit would misdescribe the
-        # clone's create (and an inherited cdc dir would replay the
-        # source commit's changes as the clone's)
-        for stale in (
-            "merge_on", "mode", "predicate", "txn", "cdc", "restored_from",
-        ):
-            m.pop(stale, None)
-        m.update(
+        # the snapshot's definition and files carry; the source
+        # commit's op-specific keys would misdescribe the clone's
+        # create (an inherited cdc dir would replay the source commit's
+        # changes as the clone's) and never do
+        dest._commit(
+            "replace_clone" if replacing else "create",
+            dest.head_version() if replacing else None,
             {
-                "version": v_new,
-                "parent": dest.head_version() if replacing else None,
-                "op": "replace_clone" if replacing else "create",
                 "cloned_from": {"path": self.path, "version": src_v},
-                "txn": None,
+                # the clone keeps its own idempotency record
                 "txns": [],
-            }
+                "segments": [
+                    dest._write_segment_body(dict(self._read_segment(s)))
+                    for s in ptr["segments"]
+                ],
+            },
+            carry_from=ptr,
         )
-        if "segments" in ptr:
-            m["segments"] = [
-                dest._write_segment_body(dict(self._read_segment(s)))
-                for s in ptr["segments"]
-            ]
-        elif replacing and "segments" in dest._read_pointer(
-            dest.head_version()
-        ):
-            raise ValueError(
-                "VersionedTable.clone: replace-clone from a legacy "
-                "inline source onto a segmented destination would "
-                "demote the destination's metadata format — OPTIMIZE "
-                "the source first"
-            )
-        if not dest._try_commit(m, v_new):
-            raise ConcurrentWriteError(
-                f"VersionedTable: clone raced another commit at "
-                f"{dest_path}"
-            )
         # back-registry at the SOURCE (r12): lets vacuum keep the
         # shared snapshot alive. Best-effort by design — the clone is
         # already committed and valid; a source this writer cannot
@@ -3739,32 +3666,9 @@ class VersionedTable:
                         F.col(self._DV_POS),
                     )
                 )
-                apply_light_committer(
-                    dv.write.mode("error"), self.spark
-                ).parquet(dvd_new)
-        m = dict(ptr)
-        for stale in (
-            "merge_on", "mode", "predicate", "txn", "cdc", "restored_from",
-        ):
-            m.pop(stale, None)
-        m.update(
-            {
-                "version": 0,
-                "parent": None,
-                "op": "create",
-                "cloned_from": {
-                    "path": self.path,
-                    "version": src_v,
-                    "deep": True,
-                },
-                "txn": None,
-                "txns": [],
-            }
-        )
-        if dv_mapping:
-            m["delete_vectors"] = [
-                dv_mapping[d] for d in ptr["delete_vectors"]
-            ]
+                apply_light_committer(dv.write.mode("error")).parquet(
+                    dvd_new
+                )
 
         def _remap_body(body: dict) -> dict:
             out = dict(body)
@@ -3779,20 +3683,22 @@ class VersionedTable:
                 }
             return out
 
-        if "segments" in ptr:
-            m["segments"] = [
-                dest._write_segment_body(
-                    _remap_body(self._read_segment(s))
-                )
+        fields = {
+            "cloned_from": {
+                "path": self.path,
+                "version": src_v,
+                "deep": True,
+            },
+            "segments": [
+                dest._write_segment_body(_remap_body(self._read_segment(s)))
                 for s in ptr["segments"]
+            ],
+        }
+        if dv_mapping:
+            fields["delete_vectors"] = [
+                dv_mapping[d] for d in ptr["delete_vectors"]
             ]
-        else:
-            m.update(_remap_body(m))
-        if not dest._try_commit(m, 0):
-            raise ConcurrentWriteError(
-                f"VersionedTable: deep_clone raced another create at "
-                f"{dest_path}"
-            )
+        dest._commit("create", None, fields, carry_from=ptr)
         # NO back-registry at the source — independence is the point:
         # source vacuum owes this clone nothing
         return dest
@@ -3933,42 +3839,25 @@ class VersionedTable:
             or {f.name: i + 1 for i, f in enumerate(schema.fields)}
         )
         field_ids[name] = max(field_ids.values(), default=0) + 1
-        n_files = ptr.get("n_files")
-        if n_files is None:
-            n_files = len(ptr.get("files") or [])
-        v = parent + 1
-        m = dict(ptr)
-        for stale in (
-            "merge_on", "mode", "predicate", "cdc", "restored_from",
-        ):
-            m.pop(stale, None)
-        m.update(
+        return self._commit(
+            "add_column",
+            parent,
             {
-                "version": v,
-                "parent": parent,
-                "op": "add_column",
                 "schema": merged.simpleString(),
                 "schema_json": merged.json(),
                 # existing files lack the column → reads NULL-fill
                 # through the mixed projection (unless the table is
                 # empty, where the next write lands the full schema)
-                "mixed": bool(ptr.get("mixed")) or n_files > 0,
-                "txn": txn,
-                "txns": self._txns_after(ptr, txn),
+                "mixed": bool(ptr.get("mixed")) or ptr["n_files"] > 0,
                 "field_ids": field_ids,
-            }
+            },
+            txn=txn,
         )
-        if not self._try_commit(m, v):
-            raise ConcurrentWriteError(
-                f"VersionedTable: add_column raced past stale "
-                f"v{parent}; head is now v{self.head_version()} — re-run"
-            )
-        return v
 
     def properties(self) -> dict[str, str]:
         """The table's user-level properties (TBLPROPERTIES) as of the
         head — one pointer read, the map is carried forward by every
-        commit (``_carry_mapping``)."""
+        commit (:attr:`_CARRY`)."""
         return dict(
             self._read_pointer(self.head_version()).get("properties") or {}
         )
@@ -4059,28 +3948,12 @@ class VersionedTable:
     def _commit_properties(self, fn, txn: str | None) -> int:
         parent = self.head_version()
         ptr = self._read_pointer(parent)
-        v = parent + 1
-        m = dict(ptr)
-        for stale in (
-            "merge_on", "mode", "predicate", "cdc", "restored_from",
-        ):
-            m.pop(stale, None)
-        m.update(
-            {
-                "version": v,
-                "parent": parent,
-                "op": "set_properties",
-                "txn": txn,
-                "txns": self._txns_after(ptr, txn),
-                "properties": fn(dict(ptr.get("properties") or {})),
-            }
+        return self._commit(
+            "set_properties",
+            parent,
+            {"properties": fn(dict(ptr.get("properties") or {}))},
+            txn=txn,
         )
-        if not self._try_commit(m, v):
-            raise ConcurrentWriteError(
-                f"VersionedTable: set/unset_properties raced past stale "
-                f"v{parent}; head is now v{self.head_version()} — re-run"
-            )
-        return v
 
     def add_constraint(
         self, cname: str, expr: str, txn: str | None = None
@@ -4115,29 +3988,15 @@ class VersionedTable:
         self._check_constraints(
             base["files"], {**base, "constraints": {cname: expr}}
         )
-        v = parent + 1
-        m = dict(ptr)
-        for stale in (
-            "merge_on", "mode", "predicate", "cdc", "restored_from",
-        ):
-            m.pop(stale, None)
-        m.update(
+        return self._commit(
+            "add_constraint",
+            parent,
             {
-                "version": v,
-                "parent": parent,
-                "op": "add_constraint",
-                "txn": txn,
-                "txns": self._txns_after(ptr, txn),
                 "constraints": {**existing, cname: expr},
-            }
+                "features": self._features_with(ptr, "constraints"),
+            },
+            txn=txn,
         )
-        self._add_feature(m, "constraints")
-        if not self._try_commit(m, v):
-            raise ConcurrentWriteError(
-                f"VersionedTable: add_constraint raced past stale "
-                f"v{parent}; head is now v{self.head_version()} — re-run"
-            )
-        return v
 
     def drop_constraint(self, cname: str, txn: str | None = None) -> int:
         """ALTER TABLE DROP CONSTRAINT (r12): metadata-only removal;
@@ -4153,28 +4012,9 @@ class VersionedTable:
                 f"'{cname}' (have: {sorted(existing)})"
             )
         existing.pop(cname)
-        v = parent + 1
-        m = dict(ptr)
-        for stale in (
-            "merge_on", "mode", "predicate", "cdc", "restored_from",
-        ):
-            m.pop(stale, None)
-        m.update(
-            {
-                "version": v,
-                "parent": parent,
-                "op": "drop_constraint",
-                "txn": txn,
-                "txns": self._txns_after(ptr, txn),
-                "constraints": existing,
-            }
+        return self._commit(
+            "drop_constraint", parent, {"constraints": existing}, txn=txn
         )
-        if not self._try_commit(m, v):
-            raise ConcurrentWriteError(
-                f"VersionedTable: drop_constraint raced past stale "
-                f"v{parent}; head is now v{self.head_version()} — re-run"
-            )
-        return v
 
     @staticmethod
     def _merge_stats_entry(old, new):
@@ -4305,64 +4145,40 @@ class VersionedTable:
             if (cur_bloom or added_bloom)
             else None
         )
-        v = parent + 1
-        m = dict(ptr)
-        for stale in (
-            "merge_on", "mode", "predicate", "cdc", "restored_from",
-        ):
-            m.pop(stale, None)
-        m.update(
+        segs = []
+        for name in ptr["segments"]:
+            seg = self._read_segment(name)
+            touched = [f for f in seg["files"] if f in new_entries]
+            if not touched:
+                segs.append(name)  # nothing new recorded: carry
+                continue
+            merged = dict(seg.get("stats") or {})
+            for f in touched:
+                ent = dict(merged.get(f) or {})
+                for c, e in new_entries[f].items():
+                    ent[c] = self._merge_stats_entry(ent.get(c), e)
+                merged[f] = ent
+            segs.append(
+                self._write_segment(
+                    seg["files"],
+                    merged,
+                    seg.get("parts") or {},
+                    seg.get("spec"),
+                )
+            )
+        return self._commit(
+            "analyze",
+            parent,
             {
-                "version": v,
-                "parent": parent,
-                "op": "analyze",
-                "txn": txn,
-                "txns": self._txns_after(ptr, txn),
                 "stats_cols": new_stats_cols,
                 "bloom": new_bloom_cfg,
-            }
+                "segments": segs,
+                "features": self._features_with(
+                    ptr, *(["bloom"] if new_bloom_cfg else [])
+                ),
+            },
+            txn=txn,
         )
-        if "segments" in ptr:
-            segs = []
-            for name in ptr["segments"]:
-                seg = self._read_segment(name)
-                touched = [f for f in seg["files"] if f in new_entries]
-                if not touched:
-                    segs.append(name)  # nothing new recorded: carry
-                    continue
-                merged = dict(seg.get("stats") or {})
-                for f in touched:
-                    ent = dict(merged.get(f) or {})
-                    for c, e in new_entries[f].items():
-                        ent[c] = self._merge_stats_entry(ent.get(c), e)
-                    merged[f] = ent
-                segs.append(
-                    self._write_segment(
-                        seg["files"],
-                        merged,
-                        seg.get("parts") or {},
-                        seg.get("spec"),
-                    )
-                )
-            m["segments"] = segs
-        else:
-            merged_all = {
-                f: dict(e) for f, e in (base.get("stats") or {}).items()
-            }
-            for f, cols in new_entries.items():
-                ent = dict(merged_all.get(f) or {})
-                for c, e in cols.items():
-                    ent[c] = self._merge_stats_entry(ent.get(c), e)
-                merged_all[f] = ent
-            m["stats"] = merged_all
-        if new_bloom_cfg:
-            self._add_feature(m, "bloom")
-        if not self._try_commit(m, v):
-            raise ConcurrentWriteError(
-                f"VersionedTable: analyze raced past stale v{parent}; "
-                f"head is now v{self.head_version()} — re-run"
-            )
-        return v
 
     def rename_column(self, old: str, new: str, txn: str | None = None) -> int:
         """Column RENAME as a METADATA-ONLY commit (VERDICT r9 #4 —
@@ -4460,54 +4276,33 @@ class VersionedTable:
             pb = new if pb == old else pb
         elif pb:
             pb = [new if c == old else c for c in pb]
-        n_files = ptr.get("n_files")
-        if n_files is None:
-            n_files = len(ptr.get("files") or [])
-        v = parent + 1
-        m = dict(ptr)
-        for stale in (
-            "merge_on", "mode", "predicate", "cdc", "restored_from",
-        ):
-            m.pop(stale, None)
-        m.update(
-            {
-                "version": v,
-                "parent": parent,
-                "op": "rename",
-                "schema": merged.simpleString(),
-                "schema_json": merged.json(),
-                # pre-rename files now carry a different physical name
-                # for the field → reads must footer-merge (unless the
-                # table is empty)
-                "mixed": bool(ptr.get("mixed")) or n_files > 0,
-                "txn": txn,
-                "txns": self._txns_after(ptr, txn),
-                "stats_cols": [
-                    new if c == old else c
-                    for c in (ptr.get("stats_cols") or [])
-                ],
-                "partition_by": pb,
-                "aliases": aliases,
-                "field_ids": field_ids,
-                "generated": gen,
-            }
-        )
+        fields = {
+            "schema": merged.simpleString(),
+            "schema_json": merged.json(),
+            # pre-rename files now carry a different physical name for
+            # the field → reads must footer-merge (unless the table is
+            # empty)
+            "mixed": bool(ptr.get("mixed")) or ptr["n_files"] > 0,
+            "stats_cols": [
+                new if c == old else c
+                for c in (ptr.get("stats_cols") or [])
+            ],
+            "partition_by": pb,
+            "aliases": aliases,
+            "field_ids": field_ids,
+            "generated": gen,
+            # readers must walk the alias chain or miss the column in
+            # pre-rename footers — gate them (protocol feature, r12)
+            "features": self._features_with(ptr, "column_mapping"),
+        }
         if ptr.get("identity"):
-            m["identity"] = ids
-        bk = m.get("bucket_by")
+            fields["identity"] = ids
+        bk = ptr.get("bucket_by")
         if bk and bk.get("col") == old:
             # bucket hashing is value-based — the spec just tracks the
             # column's new name
-            m["bucket_by"] = {**bk, "col": new}
-        # readers must walk the alias chain or miss the column in
-        # pre-rename footers — gate them (protocol feature, r12)
-        self._add_feature(m, "column_mapping")
-        if not self._try_commit(m, v):
-            raise ConcurrentWriteError(
-                f"VersionedTable: rename_column raced past stale "
-                f"v{parent}; head is now v{self.head_version()} — re-run"
-            )
-        return v
+            fields["bucket_by"] = {**bk, "col": new}
+        return self._commit("rename", parent, fields, txn=txn)
 
     def drop_column(self, name: str, txn: str | None = None) -> int:
         """Column DROP as a METADATA-ONLY commit (VERDICT r10 #7 —
@@ -4605,27 +4400,15 @@ class VersionedTable:
             ptr.get("field_ids") or {n: i + 1 for i, n in enumerate(names)}
         )
         field_ids.pop(name, None)
-        n_files = ptr.get("n_files")
-        if n_files is None:
-            n_files = len(ptr.get("files") or [])
-        v = parent + 1
-        m = dict(ptr)
-        for stale in (
-            "merge_on", "mode", "predicate", "cdc", "restored_from",
-        ):
-            m.pop(stale, None)
-        m.update(
+        return self._commit(
+            "drop",
+            parent,
             {
-                "version": v,
-                "parent": parent,
-                "op": "drop",
                 "schema": merged.simpleString(),
                 "schema_json": merged.json(),
                 # existing files carry MORE columns than the manifest
                 # declares → reads must project the manifest schema
-                "mixed": bool(ptr.get("mixed")) or n_files > 0,
-                "txn": txn,
-                "txns": self._txns_after(ptr, txn),
+                "mixed": bool(ptr.get("mixed")) or ptr["n_files"] > 0,
                 "stats_cols": [
                     c for c in (ptr.get("stats_cols") or []) if c != name
                 ],
@@ -4633,23 +4416,15 @@ class VersionedTable:
                 "field_ids": field_ids,
                 "dropped_phys": dropped,
                 "generated": gen,
-            }
+                # dropping the identity column retires its sequence
+                "identity": drop_ids,
+                # readers must honor dropped_phys or resurrect the
+                # column from old footers — gate them (protocol
+                # feature, r12)
+                "features": self._features_with(ptr, "column_mapping"),
+            },
+            txn=txn,
         )
-        if ptr.get("identity"):
-            # dropping the identity column retires its sequence
-            if drop_ids:
-                m["identity"] = drop_ids
-            else:
-                m.pop("identity", None)
-        # readers must honor dropped_phys or resurrect the column from
-        # old footers — gate them (protocol feature, r12)
-        self._add_feature(m, "column_mapping")
-        if not self._try_commit(m, v):
-            raise ConcurrentWriteError(
-                f"VersionedTable: drop_column raced past stale "
-                f"v{parent}; head is now v{self.head_version()} — re-run"
-            )
-        return v
 
     # lossless primitive widenings (Iceberg/Delta type-widening set,
     # plus int→double which is exact for 32-bit integers); Spark 4's
@@ -4725,38 +4500,22 @@ class VersionedTable:
                 for f in schema.fields
             ]
         )
-        n_files = ptr.get("n_files")
-        if n_files is None:
-            n_files = len(ptr.get("files") or [])
-        v = parent + 1
-        m = dict(ptr)
-        for stale in (
-            "merge_on", "mode", "predicate", "cdc", "restored_from",
-        ):
-            m.pop(stale, None)
-        m.update(
+        return self._commit(
+            "widen",
+            parent,
             {
-                "version": v,
-                "parent": parent,
-                "op": "widen",
                 "schema": merged.simpleString(),
                 "schema_json": merged.json(),
                 # existing files carry the NARROW physical type →
                 # reads must request the manifest schema
-                "mixed": bool(ptr.get("mixed")) or n_files > 0,
-                "txn": txn,
-                "txns": self._txns_after(ptr, txn),
-            }
+                "mixed": bool(ptr.get("mixed")) or ptr["n_files"] > 0,
+                # readers must request the manifest type over narrower
+                # footers or fail/misread the promotion — gate them
+                # (r12)
+                "features": self._features_with(ptr, "widen"),
+            },
+            txn=txn,
         )
-        # readers must request the manifest type over narrower footers
-        # or fail/misread the promotion — gate them (r12)
-        self._add_feature(m, "widen")
-        if not self._try_commit(m, v):
-            raise ConcurrentWriteError(
-                f"VersionedTable: widen_column raced past stale "
-                f"v{parent}; head is now v{self.head_version()} — re-run"
-            )
-        return v
 
     def register_bucketed(
         self, name: str, version: int | None = None, mode: str = "link"
@@ -4910,19 +4669,12 @@ class VersionedTable:
         commits (old files keep their recorded values). OPTIMIZE after
         an evolution consolidates everything into the current spec.
 
-        Refusals: unknown columns, legacy inline tables (their parts
-        have no per-segment spec record), bucket-spec'd tables
+        Refusals: unknown columns, bucket-spec'd tables
         (bucket/partition layouts don't compose), and tables whose
         pre-feature segments lack a spec record while partitioned —
         each would make old values misread under the new spec."""
         parent = self.head_version()
         ptr = self._read_pointer(parent)
-        if "segments" not in ptr:
-            raise ValueError(
-                "VersionedTable.set_partition_spec: legacy inline "
-                "tables carry no per-segment spec — only segmented "
-                "tables support spec evolution"
-            )
         if ptr.get("bucket_by"):
             raise ValueError(
                 "VersionedTable.set_partition_spec: bucket_by does not "
@@ -4953,28 +4705,12 @@ class VersionedTable:
                         "would misread under a new spec; OPTIMIZE "
                         "first to rewrite under a recorded spec"
                     )
-        v = parent + 1
-        m = dict(ptr)
-        for stale in (
-            "merge_on", "mode", "predicate", "cdc", "restored_from",
-        ):
-            m.pop(stale, None)
-        m.update(
-            {
-                "version": v,
-                "parent": parent,
-                "op": "set_partition_spec",
-                "partition_by": partition_by,
-                "txn": txn,
-                "txns": self._txns_after(ptr, txn),
-            }
+        return self._commit(
+            "set_partition_spec",
+            parent,
+            {"partition_by": partition_by},
+            txn=txn,
         )
-        if not self._try_commit(m, v):
-            raise ConcurrentWriteError(
-                f"VersionedTable: set_partition_spec raced past stale "
-                f"v{parent}; head is now v{self.head_version()} — re-run"
-            )
-        return v
 
     def _touched_files(
         self,
@@ -5103,7 +4839,6 @@ class VersionedTable:
         touched = set(touched_files)
         if not touched_files:
             return parent
-        kept_files = [f for f in base["files"] if f not in touched]
         keep_rows = ~F.coalesce(F.expr(predicate), F.lit(False))
         remaining = self._read_files(base, touched_files).filter(keep_rows)
         cdc_dir = None
@@ -5137,106 +4872,26 @@ class VersionedTable:
             base.get("bucket_by"),
             drop_if_empty=True,
         )
-        stats_cols = base.get("stats_cols") or []
-        new_stats = (
-            self._collect_stats(new_files, stats_cols, base.get("bloom"))
-            if "segments" not in ptr
-            and (stats_cols or base.get("bloom"))
-            and new_files
-            else {}
-        )
-        new_parts = (
-            self._partition_values(new_files, partition_by)
-            if "segments" not in ptr and partition_by
-            else {}
-        )
-        new_segs = None
-        for _ in range(10):
-            v = parent + 1
-            m = {
-                "version": v,
-                "parent": parent,
-                "op": "delete",
-                "predicate": predicate,
-                # on a rebase the winner may have evolved the schema
-                # additively — the commit keeps the HEAD's logical
-                # schema; the rewritten files are then one more
-                # physical generation under it
-                "schema": base["schema"],
-                "schema_json": base.get("schema_json"),
-                # kept files may still span pre-evolution physical
-                # schemas
-                "mixed": bool(base.get("mixed")),
-                "txn": txn,
-                "txns": self._txns_after(base, txn),
-                # from the REBASED head, not the pre-race capture: an
-                # analyze winner may have extended the index config
-                "stats_cols": base.get("stats_cols") or [],
-                "bloom": base.get("bloom"),
-                "partition_by": partition_by,
-                # a delete keeps a subset of already-valid rows — no
-                # check
-                "constraints": base.get("constraints") or {},
-            }
-            m = self._carry_mapping(m, base)
-            if cdc_dir:
-                m["cdc"] = cdc_dir
-            if base.get("delete_vectors"):
-                # rewritten files dropped their DV'd rows physically;
-                # kept files still need the vectors applied at read
-                # time
-                m["delete_vectors"] = base["delete_vectors"]
-            if "segments" in ptr:
-                segs = self._segments_without(ptr, touched)
-                if new_files:
-                    if new_segs is None:
-                        new_segs = self._build_segments(
-                            new_files,
-                            stats_cols,
-                            partition_by,
-                            base.get("bloom"),
-                        )
-                    segs.extend(new_segs)
-                m["segments"] = segs
-                m["n_files"] = len(kept_files) + len(new_files)
-            else:
-                kept_set = set(kept_files)
-                m["files"] = sorted(kept_files + new_files)
-                m["stats"] = {
-                    **{
-                        f: s
-                        for f, s in (base.get("stats") or {}).items()
-                        if f in kept_set
-                    },
-                    **new_stats,
-                }
-                m["parts"] = {
-                    **{
-                        f: p
-                        for f, p in (base.get("parts") or {}).items()
-                        if f in kept_set
-                    },
-                    **new_parts,
-                }
-            if self._try_commit(m, v):
-                return v
-            # CAS lost. Delta's file-granularity conflict rules (r11):
-            # a DELETE commutes with appends AND with disjoint
-            # rewrites — any winner that neither touched this delete's
-            # files nor added rows the predicate covers. Verify, then
-            # rebase the already-written rewrite onto the new head;
-            # anything else still raises.
-            parent, ptr, base = self._rebase_over_disjoint(
-                parent,
-                ptr,
-                base,
-                "delete",
-                touched,
-                self._stale_if_predicate_match(predicate),
-            )
-            kept_files = [f for f in base["files"] if f not in touched]
-        raise ConcurrentWriteError(
-            "VersionedTable: delete lost 10 CAS races"
+        stale = self._stale_if_predicate_match(predicate)
+        # a delete keeps a subset of already-valid rows — no CHECK;
+        # rewritten files dropped their DV'd rows physically, kept
+        # files still need the vectors applied at read time. On a lost
+        # CAS, Delta's file-granularity conflict rules (r11): a DELETE
+        # commutes with appends AND with disjoint rewrites — any winner
+        # that neither touched this delete's files nor added rows the
+        # predicate covers; the already-written rewrite then commits
+        # onto the new head (which keeps its own logical schema — the
+        # rewritten files are one more physical generation under it).
+        return self._commit(
+            "delete",
+            parent,
+            {"predicate": predicate, "cdc": cdc_dir},
+            txn=txn,
+            new_files=new_files,
+            removed=touched,
+            rebase=lambda p, b: self._rebase_over_disjoint(
+                p, b, "delete", touched, stale
+            ),
         )
 
     def overwrite_where(
@@ -5298,7 +4953,7 @@ class VersionedTable:
                 ]
                 order += [c for c in df.columns if c not in order]
                 df = df.select(*order)
-        sch = self._check_schema(df, parent)
+        sch = self._check_schema(df, ptr)
         # conformance probe (bounded: first violation only) — BEFORE
         # any file is written
         stray = (
@@ -5320,7 +4975,6 @@ class VersionedTable:
             base, predicate, prune, verify_prune
         )
         touched = set(touched_files)
-        kept_files = [f for f in base["files"] if f not in touched]
         # probe the replacement frame only when nothing was touched —
         # the common touched-files path skips the extra job (r16)
         if not touched_files and not df.limit(1).count():
@@ -5367,107 +5021,45 @@ class VersionedTable:
             if id_alloc and new_files
             else {}
         )
-        stats_cols = base.get("stats_cols") or []
-        new_stats = (
-            self._collect_stats(new_files, stats_cols, base.get("bloom"))
-            if "segments" not in ptr
-            and (stats_cols or base.get("bloom"))
-            and new_files
-            else {}
-        )
-        new_parts = (
-            self._partition_values(new_files, partition_by)
-            if "segments" not in ptr and partition_by
-            else {}
-        )
-        new_segs = None
-        checked = False
-        for _ in range(10):
-            v = parent + 1
-            m = {
-                "version": v,
-                "parent": parent,
-                "op": "replace_where",
+        stale = self._stale_if_predicate_match(predicate)
+
+        def fields(base: dict) -> dict:
+            out = {
                 "predicate": predicate,
                 "schema": sch["schema"],
                 "schema_json": sch["schema_json"],
                 "mixed": bool(base.get("mixed")) or bool(sch["mixed"]),
-                "txn": txn,
-                "txns": self._txns_after(base, txn),
-                "stats_cols": base.get("stats_cols") or [],
-                "bloom": base.get("bloom"),
-                "partition_by": partition_by,
-                "constraints": base.get("constraints") or {},
+                "cdc": cdc_dir,
             }
-            m = self._carry_mapping(m, base)
             if id_marks:
-                m["identity"] = self._bump_identity(
-                    ptr.get("identity") or id_map, id_marks
+                out["identity"] = self._bump_identity(
+                    base.get("identity") or id_map, id_marks
                 )
-            if cdc_dir:
-                m["cdc"] = cdc_dir
-            if base.get("delete_vectors"):
-                m["delete_vectors"] = base["delete_vectors"]
-            if "segments" in ptr:
-                segs = self._segments_without(ptr, touched)
-                if new_files:
-                    if new_segs is None:
-                        new_segs = self._build_segments(
-                            new_files,
-                            stats_cols,
-                            partition_by,
-                            base.get("bloom"),
-                        )
-                    segs.extend(new_segs)
-                m["segments"] = segs
-                m["n_files"] = len(kept_files) + len(new_files)
-            else:
-                kept_set = set(kept_files)
-                m["files"] = sorted(kept_files + new_files)
-                m["stats"] = {
-                    **{
-                        f: s
-                        for f, s in (base.get("stats") or {}).items()
-                        if f in kept_set
-                    },
-                    **new_stats,
-                }
-                m["parts"] = {
-                    **{
-                        f: p
-                        for f, p in (base.get("parts") or {}).items()
-                        if f in kept_set
-                    },
-                    **new_parts,
-                }
-            if not checked:
-                # the replacement rows are NEW — CHECK constraints
-                # must hold on them (remaining rows re-validate for
-                # free; they were already valid). New files carry no
-                # DVs.
-                self._check_constraints(
-                    new_files, {**m, "delete_vectors": []}
-                )
-                checked = True
-            if self._try_commit(m, v):
-                return v
-            parent, ptr, base = self._rebase_over_disjoint(
-                parent,
-                ptr,
-                base,
-                "replace_where",
-                touched,
-                self._stale_if_predicate_match(predicate),
+            return out
+
+        def rebase(p: int, b: dict) -> tuple[int, dict]:
+            p, b = self._rebase_over_disjoint(
+                p, b, "replace_where", touched, stale
             )
-            if id_alloc and (ptr.get("identity") or {}) != id_map:
+            if id_alloc and (b.get("identity") or {}) != id_map:
                 raise ConcurrentWriteError(
                     "VersionedTable: replace_where raced a commit "
                     "that advanced the identity watermark; the "
                     "staged ids are stale — re-run"
                 )
-            kept_files = [f for f in base["files"] if f not in touched]
-        raise ConcurrentWriteError(
-            "VersionedTable: overwrite_where lost 10 CAS races"
+            return p, b
+
+        # the replacement rows are NEW — CHECK constraints must hold on
+        # them (remaining rows were already valid)
+        return self._commit(
+            "replace_where",
+            parent,
+            fields,
+            txn=txn,
+            new_files=new_files,
+            removed=touched,
+            check=True,
+            rebase=rebase,
         )
 
     # commit ops a lost CAS race can rebase OVER: appends and
@@ -5492,8 +5084,8 @@ class VersionedTable:
     )
 
     def _rebase_over_disjoint(
-        self, parent: int, ptr: dict, base: dict, op: str, touched, is_stale
-    ):
+        self, parent: int, ptr: dict, op: str, touched, is_stale
+    ) -> tuple[int, dict]:
         """After a file-scoped rewrite lost its CAS: decide whether the
         staged change set still holds on the new head, at FILE
         granularity — Delta's conflict rules (ConcurrentAppend /
@@ -5515,7 +5107,9 @@ class VersionedTable:
            set mis-classified (an appended/updated row the predicate
            or merge keys now cover).
 
-        Returns the new ``(head, pointer, manifest)`` to rebase onto;
+        ``ptr`` is the pointer of ``parent``, the snapshot the rewrite
+        was staged on. Returns the new ``(head, pointer)`` to rebase
+        onto — the ``rebase`` callback contract of :meth:`_commit`;
         any violated rule raises :class:`ConcurrentWriteError` and the
         caller must recompute. Cost is O(span metadata) + one scan of
         the span's added files — never a re-scan of the table."""
@@ -5535,6 +5129,7 @@ class VersionedTable:
                 "stale — re-run"
             )
         new_ptr = self._read_pointer(new_head)
+        base = self._resolve(ptr)
         new_base = self._resolve(new_ptr)
         touched = set(touched)
         removed = set(base["files"]) - set(new_base["files"])
@@ -5575,7 +5170,7 @@ class VersionedTable:
                 raise ConcurrentWriteError(
                     f"VersionedTable: {op} {reason}"
                 )
-        return new_head, new_ptr, new_base
+        return new_head, new_ptr
 
     def _stale_if_predicate_match(self, predicate: str):
         """`is_stale` for predicate-scoped DML: the span's added rows
@@ -5645,9 +5240,7 @@ class VersionedTable:
         if not hits.limit(1).count():
             return parent
         dv_dir = f"{self.path}/dv/b{parent + 1:08d}-{uuid.uuid4().hex[:8]}"
-        apply_light_committer(
-            hits.write.mode("error"), self.spark
-        ).parquet(dv_dir)
+        apply_light_committer(hits.write.mode("error")).parquet(dv_dir)
         from urllib.parse import unquote, urlparse
 
         # the files this vector names: the staged (file, position)
@@ -5660,52 +5253,29 @@ class VersionedTable:
             .distinct()
             .collect()
         }
-        for _ in range(10):
-            v = parent + 1
-            m = dict(ptr)
-            # drop op-specific keys a previous commit may have left in
-            # the pointer (a stale merge_on/predicate would misdescribe
-            # THIS commit in history inspection; an inherited cdc dir
-            # would double-count the WINNER's changes at this version)
-            for stale in (
-                "merge_on", "mode", "predicate", "txn", "cdc",
-                "restored_from",
-            ):
-                m.pop(stale, None)
-            m.update(
-                {
-                    "version": v,
-                    "parent": parent,
-                    "op": "delete",
-                    "mode": "mor",
-                    "predicate": predicate,
-                    "txn": txn,
-                    "txns": self._txns_after(ptr, txn),
-                    "delete_vectors": (ptr.get("delete_vectors") or [])
-                    + [dv_dir],
-                }
-            )
-            # readers must anti-join the vector or resurrect rows —
-            # gate them (protocol feature, r12)
-            self._add_feature(m, "dv")
-            if self._try_commit(m, v):
-                return v
-            # the vector names (file, position) keys — appends never
-            # move files and disjoint rewrites by definition don't
-            # touch the vectored files, so the keys stay valid on the
-            # new head; the same file-granularity rules as COW delete
-            # apply (r11): a winner that rewrote a vectored file, or
-            # added rows the predicate covers, raises
-            parent, ptr, base = self._rebase_over_disjoint(
-                parent,
-                ptr,
-                base,
-                "delete(mor)",
-                dv_touched,
-                self._stale_if_predicate_match(predicate),
-            )
-        raise ConcurrentWriteError(
-            "VersionedTable: delete(mor) lost 10 CAS races"
+        stale = self._stale_if_predicate_match(predicate)
+        # the vector names (file, position) keys — appends never move
+        # files and disjoint rewrites by definition don't touch the
+        # vectored files, so the keys stay valid on a rebased head; the
+        # same file-granularity rules as COW delete apply (r11): a
+        # winner that rewrote a vectored file, or added rows the
+        # predicate covers, raises
+        return self._commit(
+            "delete",
+            parent,
+            lambda b: {
+                "mode": "mor",
+                "predicate": predicate,
+                "delete_vectors": (b.get("delete_vectors") or [])
+                + [dv_dir],
+                # readers must anti-join the vector or resurrect rows —
+                # gate them (protocol feature, r12)
+                "features": self._features_with(b, "dv"),
+            },
+            txn=txn,
+            rebase=lambda p, b: self._rebase_over_disjoint(
+                p, b, "delete(mor)", dv_touched, stale
+            ),
         )
 
     #: target rows per MoR-written file — sizes new-rows-only commits
@@ -5854,8 +5424,7 @@ class VersionedTable:
         # the vector hides the pre-update versions…
         dv_dir = f"{self.path}/dv/b{v:08d}-{uuid.uuid4().hex[:8]}"
         apply_light_committer(
-            rows.select(self._DV_FILE, self._DV_POS).write.mode("error"),
-            self.spark,
+            rows.select(self._DV_FILE, self._DV_POS).write.mode("error")
         ).parquet(dv_dir)
         from urllib.parse import unquote, urlparse
 
@@ -5898,83 +5467,30 @@ class VersionedTable:
                 ),
                 v,
             )
-        stats_cols = base.get("stats_cols") or []
-        new_stats = (
-            self._collect_stats(new_files, stats_cols, base.get("bloom"))
-            if "segments" not in ptr and (stats_cols or base.get("bloom"))
-            else {}
-        )
-        new_parts = (
-            self._partition_values(new_files, partition_by)
-            if "segments" not in ptr and partition_by
-            else {}
-        )
-        new_segs = None
-        checked = False
-        for _ in range(10):
-            v = parent + 1
-            m = dict(ptr)
-            for stale in (
-                "merge_on", "mode", "predicate", "txn", "cdc",
-                "restored_from",
-            ):
-                m.pop(stale, None)
-            m.update(
-                {
-                    "version": v,
-                    "parent": parent,
-                    "op": "update",
-                    "mode": "mor",
-                    "predicate": predicate,
-                    "txn": txn,
-                    "txns": self._txns_after(ptr, txn),
-                    "delete_vectors": (ptr.get("delete_vectors") or [])
-                    + [dv_dir],
-                }
-            )
-            if "segments" in ptr:
-                if new_segs is None:
-                    new_segs = self._build_segments(
-                        new_files,
-                        stats_cols,
-                        partition_by,
-                        base.get("bloom"),
-                    )
-                # every parent segment carries BY NAME — the zero-
-                # rewrite contract at the metadata layer too
-                m["segments"] = list(ptr["segments"]) + new_segs
-                m["n_files"] = ptr["n_files"] + len(new_files)
-            else:
-                m["files"] = sorted(base["files"] + new_files)
-                m["stats"] = {**(base.get("stats") or {}), **new_stats}
-                m["parts"] = {**(base.get("parts") or {}), **new_parts}
-            if cdc_dir:
-                m["cdc"] = cdc_dir
-            self._add_feature(m, "dv")
-            if not checked:
-                # post-images can leave a CHECK; new files carry no
-                # vectors, skip the anti-join
-                self._check_constraints(
-                    new_files, {**m, "delete_vectors": []}
-                )
-                checked = True
-            if self._try_commit(m, v):
-                return v
-            # same file-granularity rules as delete(mor): the vector's
-            # (file, position) keys survive appends and disjoint
-            # rewrites; a winner that rewrote/vectored one of the
-            # vectored files, or added rows the predicate covers,
-            # raises
-            parent, ptr, base = self._rebase_over_disjoint(
-                parent,
-                ptr,
-                base,
-                "update(mor)",
-                dv_touched,
-                self._stale_if_predicate_match(predicate),
-            )
-        raise ConcurrentWriteError(
-            "VersionedTable: update(mor) lost 10 CAS races"
+        stale = self._stale_if_predicate_match(predicate)
+        # every parent segment carries BY NAME — the zero-rewrite
+        # contract at the metadata layer too; post-images can leave a
+        # CHECK. Same file-granularity rules as delete(mor): the
+        # vector's (file, position) keys survive appends and disjoint
+        # rewrites; a winner that rewrote/vectored one of the vectored
+        # files, or added rows the predicate covers, raises
+        return self._commit(
+            "update",
+            parent,
+            lambda b: {
+                "mode": "mor",
+                "predicate": predicate,
+                "delete_vectors": (b.get("delete_vectors") or [])
+                + [dv_dir],
+                "cdc": cdc_dir,
+                "features": self._features_with(b, "dv"),
+            },
+            txn=txn,
+            new_files=new_files,
+            check=True,
+            rebase=lambda p, b: self._rebase_over_disjoint(
+                p, b, "update(mor)", dv_touched, stale
+            ),
         )
 
     def merge(
@@ -6063,8 +5579,7 @@ class VersionedTable:
         (found via a key semi-join against a scan-level
         ``input_file_name`` projection — manifest metadata in,
         O(matched files) out); untouched files carry over
-        byte-identical, and on a segmented table untouched SEGMENTS
-        carry by NAME. Inserts land in the same new file set, so the
+        byte-identical, and untouched SEGMENTS carry by NAME. Inserts land in the same new file set, so the
         whole MERGE is one atomic snapshot swap with
         first-committer-wins CAS (a lost race raises — the merge was
         computed against a stale snapshot). A target row matching
@@ -6484,7 +5999,6 @@ class VersionedTable:
                 for r in bs_scan.select("__f").distinct().collect()
             }
         touched_files = [f for f in base["files"] if f in touched]
-        kept_files = [f for f in base["files"] if f not in touched]
 
         # rewritten rows: matched targets take the delete/update
         # clauses; unmatched rows in touched files carry unchanged
@@ -6882,9 +6396,9 @@ class VersionedTable:
                 # old limit(1) probe executed the vector plan once and
                 # the write executed it again
                 dv_dir = f"{self.path}/dv/b{v:08d}-{uuid.uuid4().hex[:8]}"
-                apply_light_committer(
-                    dv_rows.write.mode("error"), self.spark
-                ).parquet(dv_dir)
+                apply_light_committer(dv_rows.write.mode("error")).parquet(
+                    dv_dir
+                )
                 if self._dir_num_rows(dv_dir) == 0:
                     if self._local:
                         import shutil
@@ -6929,7 +6443,6 @@ class VersionedTable:
             if joined_cache is not None:
                 joined_cache.unpersist()
             raise
-        stats_cols = base.get("stats_cols") or []
         id_alloc_cols = (
             sorted(id_map)
             if id_map and when_not_matched_insert is not None
@@ -6940,160 +6453,81 @@ class VersionedTable:
             if id_alloc_cols and new_files
             else {}
         )
-        new_stats = (
-            self._collect_stats(new_files, stats_cols, base.get("bloom"))
-            if "segments" not in ptr
-            and (stats_cols or base.get("bloom"))
-            and new_files
-            else {}
-        )
-        new_parts = (
-            self._partition_values(new_files, partition_by)
-            if "segments" not in ptr and partition_by
-            else {}
-        )
-        new_segs = None
-        checked = False
-        for _ in range(10):
-            v = parent + 1
-            m = {
-                "version": v,
-                "parent": parent,
-                "op": "merge",
-                "merge_on": list(on),
-                "schema": base["schema"],
-                "schema_json": base.get("schema_json"),
-                "mixed": bool(base.get("mixed")),
-                "txn": txn,
-                "txns": self._txns_after(base, txn),
-                # from the REBASED head, not the pre-race capture: an
-                # analyze winner may have extended the index config
-                "stats_cols": base.get("stats_cols") or [],
-                "bloom": base.get("bloom"),
-                "partition_by": partition_by,
-                "constraints": base.get("constraints") or {},
-            }
+
+        def fields(b: dict) -> dict:
+            out = {"merge_on": list(on), "cdc": cdc_dir}
             if mor:
-                m["mode"] = "mor"
+                out["mode"] = "mor"
             if mor and dv_dir:
-                m["delete_vectors"] = (
-                    base.get("delete_vectors") or []
-                ) + [dv_dir]
-            elif base.get("delete_vectors"):
-                # rewritten files dropped their DV'd rows physically;
-                # kept files still need the vectors applied at read
-                # time
-                m["delete_vectors"] = base["delete_vectors"]
-            if "segments" in ptr:
-                # MoR keeps every parent segment BY NAME (zero file
-                # AND zero metadata rewrite); COW drops touched files
-                segs = (
-                    list(ptr["segments"])
-                    if mor
-                    else self._segments_without(ptr, touched)
-                )
-                if new_files:
-                    if new_segs is None:
-                        new_segs = self._build_segments(
-                            new_files,
-                            stats_cols,
-                            partition_by,
-                            base.get("bloom"),
-                        )
-                    segs.extend(new_segs)
-                m["segments"] = segs
-                m["n_files"] = (
-                    ptr["n_files"] if mor else len(kept_files)
-                ) + len(new_files)
-            elif mor:
-                m["files"] = sorted(base["files"] + new_files)
-                m["stats"] = {**(base.get("stats") or {}), **new_stats}
-                m["parts"] = {**(base.get("parts") or {}), **new_parts}
-            else:
-                kept_set = set(kept_files)
-                m["files"] = sorted(kept_files + new_files)
-                m["stats"] = {
-                    **{
-                        f: s
-                        for f, s in (base.get("stats") or {}).items()
-                        if f in kept_set
-                    },
-                    **new_stats,
-                }
-                m["parts"] = {
-                    **{
-                        f: p
-                        for f, p in (base.get("parts") or {}).items()
-                        if f in kept_set
-                    },
-                    **new_parts,
-                }
-            m = self._carry_mapping(m, base)
+                out["delete_vectors"] = (b.get("delete_vectors") or []) + [
+                    dv_dir
+                ]
+                out["features"] = self._features_with(b, "dv")
             if id_marks:
-                m["identity"] = self._bump_identity(
-                    ptr.get("identity") or id_map, id_marks
+                out["identity"] = self._bump_identity(
+                    b.get("identity") or id_map, id_marks
                 )
-            if mor and dv_dir:
-                self._add_feature(m, "dv")
-            if cdc_dir:
-                m["cdc"] = cdc_dir
-            if not checked:
-                # updates and inserts can both push rows outside a
-                # CHECK; new files carry no deletion vectors, so skip
-                # the DV anti-join
-                self._check_constraints(
-                    new_files, {**m, "delete_vectors": []}
-                )
-                checked = True
-            if self._try_commit(m, v):
-                return v
-            # CAS lost. The r11 file-granularity rules, merge form: a
-            # winner commutes iff it neither touched a file this merge
-            # rewrote (every source-key MATCH lives in one of those)
-            # nor added rows that join the SOURCE on the merge keys
-            # (null-unsafe, the merge contract) — such a row would
-            # have been a MATCH this merge mis-classified as absent.
-            # One bounded semi-join over just the winners' added
-            # files decides; any other race raises.
-            def _stale_if_key_match(df: DataFrame):
-                if by_source:
-                    # a by-source clause classifies EVERY target row,
-                    # so any row the span added is a row this merge
-                    # never considered — matched or not
-                    if df.limit(1).count():
-                        return (
-                            "raced a commit that added rows — a NOT "
-                            "MATCHED BY SOURCE clause classifies every "
-                            "row, so the change set is stale; re-run"
-                        )
-                    return None
-                hit = df.select(*on).join(src_keys, list(on), "left_semi")
-                if hit.limit(1).count():
+            return out
+
+        # On a lost CAS, the r11 file-granularity rules, merge form: a
+        # winner commutes iff it neither touched a file this merge
+        # rewrote (every source-key MATCH lives in one of those) nor
+        # added rows that join the SOURCE on the merge keys
+        # (null-unsafe, the merge contract) — such a row would have
+        # been a MATCH this merge mis-classified as absent. One bounded
+        # semi-join over just the winners' added files decides; any
+        # other race raises.
+        def _stale_if_key_match(df: DataFrame):
+            if by_source:
+                # a by-source clause classifies EVERY target row, so
+                # any row the span added is a row this merge never
+                # considered — matched or not
+                if df.limit(1).count():
                     return (
-                        "raced a commit whose added rows match the "
-                        "source keys — the computed change set "
-                        "mis-classifies them; re-run against the new "
-                        "head"
+                        "raced a commit that added rows — a NOT "
+                        "MATCHED BY SOURCE clause classifies every "
+                        "row, so the change set is stale; re-run"
                     )
                 return None
+            hit = df.select(*on).join(src_keys, list(on), "left_semi")
+            if hit.limit(1).count():
+                return (
+                    "raced a commit whose added rows match the "
+                    "source keys — the computed change set "
+                    "mis-classifies them; re-run against the new "
+                    "head"
+                )
+            return None
 
-            parent, ptr, base = self._rebase_over_disjoint(
-                parent,
-                ptr,
-                base,
+        def rebase(p: int, b: dict) -> tuple[int, dict]:
+            p, b = self._rebase_over_disjoint(
+                p,
+                b,
                 "merge(mor)" if mor else "merge",
                 dv_touched if mor else touched,
                 _stale_if_key_match,
             )
-            if id_alloc_cols and (ptr.get("identity") or {}) != id_map:
+            if id_alloc_cols and (b.get("identity") or {}) != id_map:
                 raise ConcurrentWriteError(
                     "VersionedTable: merge raced a commit that "
                     "advanced the identity watermark; the staged "
                     "inserted ids are stale — re-run"
                 )
-            kept_files = [f for f in base["files"] if f not in touched]
-        raise ConcurrentWriteError(
-            "VersionedTable: merge lost 10 CAS races"
+            return p, b
+
+        # MoR keeps every parent segment BY NAME (zero file AND zero
+        # metadata rewrite); COW drops touched files — their DV'd rows
+        # are physically gone, kept files still need the vectors.
+        # Updates and inserts can both push rows outside a CHECK.
+        return self._commit(
+            "merge",
+            parent,
+            fields,
+            txn=txn,
+            new_files=new_files,
+            removed=None if mor else touched,
+            check=True,
+            rebase=rebase,
         )
 
     def update(
@@ -7164,7 +6598,6 @@ class VersionedTable:
         touched = set(touched_files)
         if not touched_files:
             return parent
-        kept_files = [f for f in base["files"] if f not in touched]
         hit = F.coalesce(F.expr(predicate), F.lit(False))
 
         def _assigned(name):
@@ -7226,96 +6659,22 @@ class VersionedTable:
         new_files = self._write_data(
             rewritten, parent + 1, partition_by, base.get("bucket_by")
         )
-        stats_cols = base.get("stats_cols") or []
-        new_stats = (
-            self._collect_stats(new_files, stats_cols, base.get("bloom"))
-            if "segments" not in ptr and (stats_cols or base.get("bloom"))
-            else {}
-        )
-        new_parts = (
-            self._partition_values(new_files, partition_by)
-            if "segments" not in ptr and partition_by
-            else {}
-        )
-        new_segs = None
-        checked = False
-        for _ in range(10):
-            v = parent + 1
-            kept_set = set(kept_files)
-            m = {
-                "version": v,
-                "parent": parent,
-                "op": "update",
-                "predicate": predicate,
-                "schema": base["schema"],
-                "schema_json": base.get("schema_json"),
-                "mixed": bool(base.get("mixed")),
-                "txn": txn,
-                "txns": self._txns_after(base, txn),
-                # from the REBASED head, not the pre-race capture: an
-                # analyze winner may have extended the index config
-                "stats_cols": base.get("stats_cols") or [],
-                "bloom": base.get("bloom"),
-                "partition_by": partition_by,
-                "constraints": base.get("constraints") or {},
-            }
-            if base.get("delete_vectors"):
-                # rewritten files dropped their DV'd rows physically;
-                # kept files still need the vectors applied at read
-                # time
-                m["delete_vectors"] = base["delete_vectors"]
-            if "segments" in ptr:
-                if new_segs is None:
-                    new_segs = self._build_segments(
-                        new_files, stats_cols, partition_by, base.get("bloom")
-                    )
-                m["segments"] = (
-                    self._segments_without(ptr, touched) + new_segs
-                )
-                m["n_files"] = len(kept_files) + len(new_files)
-            else:
-                m["files"] = sorted(kept_files + new_files)
-                m["stats"] = {
-                    **{
-                        f: s
-                        for f, s in (base.get("stats") or {}).items()
-                        if f in kept_set
-                    },
-                    **new_stats,
-                }
-                m["parts"] = {
-                    **{
-                        f: p
-                        for f, p in (base.get("parts") or {}).items()
-                        if f in kept_set
-                    },
-                    **new_parts,
-                }
-            m = self._carry_mapping(m, base)
-            if cdc_dir:
-                m["cdc"] = cdc_dir
-            if not checked:
-                # assignments can push rows outside a CHECK constraint;
-                # the rewritten files carry no deletion vectors — skip
-                # the anti-join
-                self._check_constraints(new_files, {**m, "delete_vectors": []})
-                checked = True
-            if self._try_commit(m, v):
-                return v
-            # same file-granularity rules as delete (r11): appends and
-            # disjoint rewrites whose rows miss the predicate commute;
-            # anything else raises
-            parent, ptr, base = self._rebase_over_disjoint(
-                parent,
-                ptr,
-                base,
-                "update",
-                touched,
-                self._stale_if_predicate_match(predicate),
-            )
-            kept_files = [f for f in base["files"] if f not in touched]
-        raise ConcurrentWriteError(
-            "VersionedTable: update lost 10 CAS races"
+        stale = self._stale_if_predicate_match(predicate)
+        # assignments can push rows outside a CHECK constraint. Same
+        # file-granularity rules as delete (r11): appends and disjoint
+        # rewrites whose rows miss the predicate commute; anything
+        # else raises
+        return self._commit(
+            "update",
+            parent,
+            {"predicate": predicate, "cdc": cdc_dir},
+            txn=txn,
+            new_files=new_files,
+            removed=touched,
+            check=True,
+            rebase=lambda p, b: self._rebase_over_disjoint(
+                p, b, "update", touched, stale
+            ),
         )
 
     def optimize(
@@ -7381,7 +6740,6 @@ class VersionedTable:
         else:
             touched_files = base["files"]
         touched = set(touched_files)
-        untouched = [f for f in base["files"] if f not in touched]
         df = self._read_files(base, touched_files)
         if zorder_by:
             from social_media_etl_spark.operators.warehouse import (
@@ -7404,106 +6762,46 @@ class VersionedTable:
         files = self._write_data(
             df, parent + 1, partition_by, base.get("bucket_by")
         )
-        stats_cols = base.get("stats_cols") or []
-        if "segments" in base_ptr:
-            new_stats = new_parts = {}
-            compacted_segs = self._build_segments(
-                files, stats_cols, partition_by, base.get("bloom")
-            )
-        else:
-            new_stats = (
-                self._collect_stats(files, stats_cols, base.get("bloom"))
-                if stats_cols or base.get("bloom")
-                else {}
-            )
-            new_parts = (
-                self._partition_values(files, partition_by)
-                if partition_by
-                else {}
-            )
-            compacted_segs = None
-        compacted_parent = parent
-        head_ptr, head_m = base_ptr, base
-        for _ in range(max_retries):
-            head = self.head_version()
-            if head != compacted_parent:
-                # file-granularity rebase (r11): optimize commutes with
-                # appends AND with DISJOINT rewrites — any winner that
-                # left the compacted files alone. A content-identical
-                # rewrite has no change set for added rows to stale
-                # (is_stale → None); a winner that removed or vectored
-                # a compacted file raises (the compacted content is
-                # then stale and must be recomputed).
-                head, head_ptr, head_m = self._rebase_over_disjoint(
-                    compacted_parent,
-                    base_ptr,
-                    base,
-                    "optimize",
-                    touched,
-                    lambda df: None,
-                )
-            v = head + 1
-            m = {
-                "version": v,
-                "parent": head,
-                "op": "optimize",
+
+        def fields(head: dict) -> dict:
+            # assembly is HEAD-relative: the new snapshot is the head's
+            # files minus the compacted ones plus their replacement —
+            # winners' appends AND disjoint rewrites carry through by
+            # construction (their files are simply "kept"). touched ⊆
+            # head files (a rebase proves no winner removed one).
+            kept_any = head["n_files"] > len(touched)
+            out = {
                 # appends may have evolved the schema; the rebase keeps
                 # the HEAD's logical schema (compacted files are then a
                 # pre-evolution physical layout → mixed)
-                "schema": head_ptr["schema"],
-                "schema_json": head_ptr.get("schema_json"),
-                "txns": self._txns_after(head_ptr, None),
-                # from the REBASED head, not the pre-race capture: an
-                # analyze winner may have extended the index config
-                "stats_cols": head_ptr.get("stats_cols") or [],
-                "bloom": head_ptr.get("bloom"),
-                "partition_by": partition_by,
-                # content-identical rewrite of already-valid rows
-                "constraints": head_ptr.get("constraints") or {},
+                "mixed": (kept_any and bool(head.get("mixed")))
+                or (bool(files) and head["schema"] != base["schema"]),
             }
-            m = self._carry_mapping(m, head_ptr)
-            # assembly is HEAD-relative: the new snapshot is the head's
-            # files minus the compacted ones plus their replacement —
-            # winners' appends AND disjoint rewrites carry through
-            # by construction (their files are simply "kept")
-            if compacted_segs is not None:
-                kept_segs = self._segments_without(head_ptr, touched)
-                m["segments"] = kept_segs + compacted_segs
-                # touched ⊆ head files (the rebase proved no winner
-                # removed one), so the kept count is exact arithmetic
-                m["n_files"] = head_ptr["n_files"] - len(touched) + len(files)
-                kept_any = head_ptr["n_files"] > len(touched)
-                m["mixed"] = (kept_any and bool(head_ptr.get("mixed"))) or (
-                    bool(files) and head_ptr["schema"] != base["schema"]
-                )
-            else:
-                head_stats = head_m.get("stats") or {}
-                head_parts = head_m.get("parts") or {}
-                kept = [f for f in head_m["files"] if f not in touched]
-                m["files"] = sorted(kept + files)
-                kept_any = bool(kept)
-                m["mixed"] = (kept_any and bool(head_m.get("mixed"))) or (
-                    bool(files) and head_m["schema"] != base["schema"]
-                )
-                m["stats"] = {
-                    **{f: head_stats[f] for f in kept if f in head_stats},
-                    **new_stats,
-                }
-                m["parts"] = {
-                    **{f: head_parts[f] for f in kept if f in head_parts},
-                    **new_parts,
-                }
-            if kept_any and head_m.get("delete_vectors"):
-                # scoped compaction: the head's vectors still hide rows
-                # of the carried-over files; entries for the vanished
-                # compacted files are inert (their paths match no
-                # scanned row). A winner's NEW vector on a compacted
-                # file was already rejected by the rebase.
-                m["delete_vectors"] = head_m["delete_vectors"]
-            if self._try_commit(m, v):
-                return v
-        raise ConcurrentWriteError(
-            f"VersionedTable: optimize lost {max_retries} CAS races"
+            # scoped compaction carries the head's vectors: they still
+            # hide rows of the carried-over files; entries for the
+            # vanished compacted files are inert (their paths match no
+            # scanned row). A winner's NEW vector on a compacted file
+            # was already rejected by the rebase.
+            if not kept_any:
+                out["delete_vectors"] = []
+            return out
+
+        # file-granularity rebase (r11): optimize commutes with appends
+        # AND with DISJOINT rewrites — any winner that left the
+        # compacted files alone. A content-identical rewrite has no
+        # change set for added rows to stale (is_stale → None); a
+        # winner that removed or vectored a compacted file raises (the
+        # compacted content is then stale and must be recomputed).
+        return self._commit(
+            "optimize",
+            parent,
+            fields,
+            new_files=files,
+            removed=touched,
+            rebase=lambda p, b: self._rebase_over_disjoint(
+                p, b, "optimize", touched, lambda df: None
+            ),
+            retries=max_retries,
         )
 
     def _drop_view_registration(self, view_path) -> None:

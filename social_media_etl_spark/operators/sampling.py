@@ -188,7 +188,7 @@ def write_shuffled_shards(
     )
     from social_media_etl_spark.write_opts import apply_light_committer
 
-    apply_light_committer(out.write.mode(mode), out.sparkSession).parquet(path)
+    apply_light_committer(out.write.mode(mode)).parquet(path)
 
 
 def importance_sample(

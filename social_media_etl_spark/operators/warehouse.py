@@ -130,7 +130,7 @@ def write_partitioned(
         # interaction hazards (MAPREDUCE-7282-class)
         writer = writer.option("partitionOverwriteMode", "dynamic")
     else:
-        writer = apply_light_committer(writer, out.sparkSession)
+        writer = apply_light_committer(writer)
     writer.parquet(path)
 
 
@@ -250,8 +250,7 @@ def write_zordered(
         else out.repartitionByRange(F.col("__z"))
     )
     apply_light_committer(
-        out.sortWithinPartitions("__z").drop("__z").write.mode(mode),
-        out.sparkSession,
+        out.sortWithinPartitions("__z").drop("__z").write.mode(mode)
     ).parquet(path)
 
 
@@ -321,9 +320,7 @@ def upsert_parquet(
         fs.delete(tmp, True)
     # writing to the sibling dir also removes the need to materialize
     # the merged frame first (it no longer reads its own output path)
-    apply_light_committer(
-        latest.write.mode("overwrite"), latest.sparkSession
-    ).parquet(str(tmp))
+    apply_light_committer(latest.write.mode("overwrite")).parquet(str(tmp))
     _swap_into_place(fs, jvm, tmp, dest, path, op="upsert_parquet")
 
 
@@ -508,7 +505,7 @@ def compact_parquet_dir(
     if fs.exists(tmp):
         fs.delete(tmp, True)
     apply_light_committer(
-        df.repartition(int(n_files)).write.mode("overwrite"), spark
+        df.repartition(int(n_files)).write.mode("overwrite")
     ).parquet(str(tmp))
     _swap_into_place(fs, jvm, tmp, jpath, path, op="compact_parquet_dir")
     return int(n_files)
@@ -612,7 +609,7 @@ def write_sorted(
         else df.repartitionByRange(*range_args)
     )
     out = out.sortWithinPartitions(*[F.col(c) for c in sort_cols])
-    writer = apply_light_committer(out.write.mode(mode), out.sparkSession)
+    writer = apply_light_committer(out.write.mode(mode))
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.parquet(path)

@@ -41,9 +41,7 @@ def write_table(
         raise ValueError(f"unsupported format {fmt!r}")
     from social_media_etl_spark.write_opts import apply_light_committer
 
-    writer = apply_light_committer(df.write.mode(mode), df.sparkSession).format(
-        fmt
-    )
+    writer = apply_light_committer(df.write.mode(mode)).format(fmt)
     codec = compression or _DEFAULT_COMPRESSION[fmt]
     if codec:
         writer = writer.option("compression", codec)

@@ -227,13 +227,22 @@ def _segment_files(fs, root: str, seg_name: str) -> list[str]:
 
 
 def _files_of(fs, root: str, ptr: dict) -> list[str]:
-    if "segments" in ptr:
-        return sorted(
-            f
-            for s in ptr["segments"]
-            for f in _segment_files(fs, root, s)
-        )
-    return sorted(ptr["files"])
+    return sorted(
+        f for s in ptr["segments"] for f in _segment_files(fs, root, s)
+    )
+
+
+def _added_files(fs, root: str, base: dict | None, ptr: dict) -> list[str]:
+    """Files of ``ptr``'s segments that ``base`` lacks: appends only ADD
+    segments, so along an append-only span this is exactly the new
+    rows — O(new segments) metadata, the base file list never loads."""
+    base_segs = set(base["segments"]) if base is not None else set()
+    return sorted(
+        f
+        for s in ptr["segments"]
+        if s not in base_segs
+        for f in _segment_files(fs, root, s)
+    )
 
 
 def _span_files(
@@ -294,20 +303,7 @@ def _span_files(
                     "a change stream is only defined along append-only "
                     "chains; restart the stream from a fresh snapshot"
                 )
-    base = _pointer(fs, root, start_v)
-    if "segments" in base and "segments" in target:
-        # segment-level diff: appends only ADD segments, so the new
-        # rows are exactly the segments target has that base lacks —
-        # O(new segments) metadata, the base file list never loads
-        base_segs = set(base["segments"])
-        return sorted(
-            f
-            for s in target["segments"]
-            if s not in base_segs
-            for f in _segment_files(fs, root, s)
-        )
-    base_files = set(_files_of(fs, root, base))
-    return sorted(set(_files_of(fs, root, target)) - base_files)
+    return _added_files(fs, root, _pointer(fs, root, start_v), target)
 
 
 def _span_changes(
@@ -359,22 +355,10 @@ def _span_changes(
         if op in ("append", "create"):
             parent = ptr.get("parent")
             base = _pointer(fs, root, parent) if parent is not None else None
-            if base is not None and "segments" in base and "segments" in ptr:
-                base_segs = set(base["segments"])
-                new_files = sorted(
-                    f
-                    for s in ptr["segments"]
-                    if s not in base_segs
-                    for f in _segment_files(fs, root, s)
-                )
-            else:
-                base_files = (
-                    set(_files_of(fs, root, base)) if base is not None else set()
-                )
-                new_files = sorted(
-                    set(_files_of(fs, root, ptr)) - base_files
-                )
-            out.extend((f, "insert", v, None) for f in new_files)
+            out.extend(
+                (f, "insert", v, None)
+                for f in _added_files(fs, root, base, ptr)
+            )
             continue
         if op == "delete" and ptr.get("mode") == "mor":
             parent_dvs = set(

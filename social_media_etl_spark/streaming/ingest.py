@@ -345,9 +345,9 @@ def write_foreach_batch_overwrite(
         out = transform(batch_df) if transform else batch_df
         from social_media_etl_spark.write_opts import apply_light_committer
 
-        apply_light_committer(
-            out.write.mode("overwrite"), out.sparkSession
-        ).format(fmt).save(target_path)
+        apply_light_committer(out.write.mode("overwrite")).format(fmt).save(
+            target_path
+        )
 
     writer = (
         stream_df.writeStream.foreachBatch(_sink)

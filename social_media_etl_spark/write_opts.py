@@ -22,8 +22,8 @@ for a representative single-commit write, r16 probe). The options:
 
 At 100 TB on an object store the same reasoning picks the
 cloud-native committer (magic/S3A committer); v2 is the local-FS
-analog. Disable with ``spark.smetl.write.lightCommitter=false`` if a
-deployment's storage needs v1's atomic-job-commit semantics.
+analog. A deployment whose storage needs v1's atomic-job-commit
+semantics changes ``LIGHT_COMMITTER`` here; there is no switch.
 
 Options are applied per-write (``DataFrameWriter.option`` merges them
 into the job's Hadoop conf via ``newHadoopConfWithOptions``), so user
@@ -32,25 +32,14 @@ sessions and external writers keep their own defaults.
 
 from __future__ import annotations
 
-__all__ = ["light_committer_options", "apply_light_committer"]
+__all__ = ["LIGHT_COMMITTER", "apply_light_committer"]
 
-_LIGHT = {
+LIGHT_COMMITTER = {
     "mapreduce.fileoutputcommitter.marksuccessfuljobs": "false",
     "mapreduce.fileoutputcommitter.algorithm.version": "2",
 }
 
 
-def light_committer_options(spark) -> dict[str, str]:
-    """The option dict (empty when disabled by conf)."""
-    try:
-        enabled = spark.conf.get("spark.smetl.write.lightCommitter", "true")
-    except Exception:  # pragma: no cover - defensive: conf unavailable
-        enabled = "true"
-    return dict(_LIGHT) if str(enabled).lower() == "true" else {}
-
-
-def apply_light_committer(writer, spark):
+def apply_light_committer(writer):
     """Apply the light-committer options to a DataFrameWriter."""
-    for k, v in light_committer_options(spark).items():
-        writer = writer.option(k, v)
-    return writer
+    return writer.options(**LIGHT_COMMITTER)

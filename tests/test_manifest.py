@@ -4,6 +4,8 @@ layer: snapshot isolation, time travel, commit races, vacuum."""
 from __future__ import annotations
 
 import json
+import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -1466,11 +1468,6 @@ def test_set_partition_spec_refusals_and_cdc_transparency(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="compose"):
         tb.set_partition_spec("v")
-    ti = VersionedTable.create(
-        spark, str(tmp_path / "ti"), df, segmented=False
-    )
-    with pytest.raises(ValueError, match="inline"):
-        ti.set_partition_spec("v")
     # a spec change is metadata-only: read_changes spans CROSS it
     t.set_partition_spec("v")
     t.append(spark.createDataFrame([(2, "b")], "k long, v string"))
@@ -2217,3 +2214,125 @@ def test_widen_float_to_double_and_feed_skip(spark, tmp_path):
     assert t2.read_where_eq("u", 77).count() == 1
     kb, kr, _ = t2.pruned_file_count_eq("u", 10**9)
     assert kb < kr
+
+
+# -- commit path: op-specific keys never carry -------------------------------
+
+
+def test_copied_files_record_does_not_carry_into_later_commits(
+    spark, tmp_path
+):
+    """``copied_files`` describes the COPY INTO commit that wrote it;
+    a later metadata commit must not inherit it, and a repeated COPY
+    INTO of the same directory still loads nothing."""
+    t = VersionedTable.create(spark, str(tmp_path / "t"), _df(spark, [(0, "a", 0)]))
+    land = tmp_path / "land"
+    land.mkdir()
+    gen = tmp_path / "gen"
+    _df(spark, [(1, "b", 1)]).coalesce(1).write.parquet(str(gen))
+    for p in gen.glob("*.parquet"):
+        shutil.copy(p, land / "f0.parquet")
+    v1 = t.copy_into(str(land))
+    assert t._read_pointer(v1)["copied_files"]
+    v2 = t.set_properties({"owner": "etl"})
+    assert "copied_files" not in t._read_pointer(v2)
+    assert t.copy_into(str(land)) == v2
+    assert sorted(r["k"] for r in t.read().collect()) == [0, 1]
+
+
+# -- read-plan memo, light committer, write-first rewrites -------------------
+
+
+def _frame(spark, n=6):
+    return spark.range(n).selectExpr("id", "id * 2 AS v")
+
+
+def test_read_plan_memo_hits_same_version_and_misses_new_commit(
+    spark, tmp_path
+):
+    t = VersionedTable.create(spark, str(tmp_path / "t"), _frame(spark))
+    r1 = t.read()
+    r2 = t.read()
+    assert r1 is r2, "unchanged (path, version) must serve the memoized plan"
+    t.append(_frame(spark, 3))
+    r3 = t.read()
+    assert r3 is not r1, "a new commit must build a new head plan"
+    assert r3.count() == 9 and r1.count() == 6  # plans, never stale data
+
+
+def test_light_committer_writes_no_success_marker(spark, tmp_path):
+    t = VersionedTable.create(spark, str(tmp_path / "t"), _frame(spark))
+    t.append(_frame(spark, 4))
+    markers = [
+        os.path.join(root, n)
+        for root, _d, names in os.walk(str(tmp_path / "t"))
+        for n in names
+        if n == "_SUCCESS"
+    ]
+    assert markers == []
+    manifest = t._read_manifest(1)
+    assert len(manifest["files"]) > 0
+    assert all(os.path.exists(f) for f in manifest["files"])
+    assert t.read().count() == 10
+
+
+def test_dir_num_rows_counts_footers_and_missing_dir_is_empty(
+    spark, tmp_path
+):
+    t = VersionedTable.create(spark, str(tmp_path / "t"), _frame(spark, 7))
+    ddir = os.path.dirname(t._read_manifest(0)["files"][0])
+    assert t._dir_num_rows(ddir) == 7
+    assert t._dir_num_rows(str(tmp_path / "nope")) == 0
+
+
+def test_write_first_empty_rewrite_leaves_no_stray_data_dir(
+    spark, tmp_path
+):
+    """drop_if_empty (r16): an all-rows COW delete commits an EMPTY
+    file list — and the write-first guard must remove the all-empty
+    data dir it wrote, so the table directory holds no orphan b* dir
+    a vacuum would have to sweep."""
+    t = VersionedTable.create(spark, str(tmp_path / "t"), _frame(spark))
+    dirs_before = set(os.listdir(str(tmp_path / "t" / "data")))
+    v = t.delete("id >= 0")
+    assert v == 1
+    # no NEW data files: every surviving manifest entry was already in
+    # v0 (a create may leave 0-row part files; those aren't "touched")
+    assert set(t._read_manifest(1)["files"]) <= set(
+        t._read_manifest(0)["files"]
+    )
+    assert t.read().count() == 0
+    assert set(os.listdir(str(tmp_path / "t" / "data"))) == dirs_before
+
+
+def test_upsert_cdf_readback_matches_relational_feed(spark, tmp_path):
+    """The r16 upsert read-back (CDC classification reads the WRITTEN
+    snapshot instead of re-executing the window plan) must record the
+    exact same typed feed."""
+    t = VersionedTable.create(
+        spark,
+        str(tmp_path / "t"),
+        spark.createDataFrame(
+            [(1, "a", 1), (2, "b", 1)], "k long, s string, o long"
+        ),
+        change_data_feed=True,
+    )
+    t.upsert(
+        spark.createDataFrame(
+            [(2, "B", 2), (3, "c", 1), (1, "a", 0)],
+            "k long, s string, o long",
+        ),
+        ["k"],
+        ["o"],
+    )
+    feed = {
+        (r["k"], r["s"], r["_change_type"])
+        for r in t.read_change_feed(0, 1).collect()
+    }
+    # k=1: incoming row LOST (older o) -> no change recorded;
+    # k=2: update pre+post; k=3: insert
+    assert feed == {
+        (2, "b", "update_preimage"),
+        (2, "B", "update_postimage"),
+        (3, "c", "insert"),
+    }

@@ -44,10 +44,8 @@ def test_create_records_initial_features(spark, tmp_path):
 
 
 def test_plain_create_records_base_features_only(spark, tmp_path):
-    t = VersionedTable.create(
-        spark, str(tmp_path / "t"), _df(spark, [(1, "a")]), segmented=False
-    )
-    assert _feats(t, 0) == set()
+    t = VersionedTable.create(spark, str(tmp_path / "t"), _df(spark, [(1, "a")]))
+    assert _feats(t, 0) == {"segments"}
 
 
 def test_first_use_ops_turn_their_flag_on(spark, tmp_path):
@@ -67,9 +65,9 @@ def test_first_use_ops_turn_their_flag_on(spark, tmp_path):
 
 
 def test_features_survive_later_dml(spark, tmp_path):
-    """`_carry_mapping` carries the set through flat-dict commits
-    (append/delete/update/merge/optimize) — a rename's gate must not
-    vanish under the next append."""
+    """Every commit carries the set (``_commit``'s carry list) — a
+    rename's gate must not vanish under the next append, delete or
+    optimize."""
     t = VersionedTable.create(
         spark, str(tmp_path / "t"), _df(spark, [(i, "x") for i in range(4)])
     )
@@ -119,9 +117,7 @@ def test_featureless_legacy_manifest_still_reads(spark, tmp_path):
     """Pre-r12 tables have no ``features`` key at all — they are base
     protocol and must read/commit untouched (Delta's legacy-protocol
     rule)."""
-    t = VersionedTable.create(
-        spark, str(tmp_path / "t"), _df(spark, [(1, "a")]), segmented=False
-    )
+    t = VersionedTable.create(spark, str(tmp_path / "t"), _df(spark, [(1, "a")]))
     # strip the key from the committed manifest, simulating an old table
     p = tmp_path / "t" / "_manifests" / "v00000000.json"
     m = json.loads(p.read_text())
@@ -166,3 +162,22 @@ def test_supported_set_is_the_documented_ten(spark):
         "generated",
         "identity",
     }
+
+
+def test_read_plan_memo_does_not_bypass_feature_gate(spark, tmp_path):
+    from social_media_etl_spark.operators import manifest as m
+
+    t = VersionedTable.create(
+        spark,
+        str(tmp_path / "t"),
+        spark.range(6).selectExpr("id", "id * 2 AS v"),
+        generated={"g": "v + 1"},
+    )
+    t.read()  # populate the memo
+    old = m.SUPPORTED_FEATURES
+    m.SUPPORTED_FEATURES = frozenset(old - {"generated"})
+    try:
+        with pytest.raises(UnsupportedTableFeatureError, match="generated"):
+            t.read()
+    finally:
+        m.SUPPORTED_FEATURES = old

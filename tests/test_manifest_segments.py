@@ -1,9 +1,8 @@
 """Segmented manifests (VERDICT r8 #3 — the Iceberg manifest-list
 pattern): commits write O(changed files) of metadata, readers resolve
-pointer + segments to the same snapshot semantics as the inline
-layout. These tests pin the METADATA COST contract, not just the
-read-back content (test_manifest.py already covers that for both
-layouts, since segmented is now the create() default)."""
+pointer + segments to the table's snapshot. These tests pin the
+METADATA COST contract, not just the read-back content
+(test_manifest.py covers that)."""
 
 from __future__ import annotations
 
@@ -13,6 +12,7 @@ import pytest
 
 from social_media_etl_spark.operators.manifest import (
     ConcurrentWriteError,
+    UnsupportedTableFeatureError,
     VersionedTable,
 )
 
@@ -117,15 +117,34 @@ def test_read_changes_diffs_at_segment_level(spark, tmp_path):
     assert t.read_changes(2, 2).count() == 0
 
 
-def test_legacy_inline_layout_still_available(spark, tmp_path):
-    t = VersionedTable.create(
-        spark, str(tmp_path / "t"), _df(spark, [(1, "a")]), segmented=False
-    )
-    ptr = _pointer(t, 0)
-    assert "segments" not in ptr and "files" in ptr
-    t.append(_df(spark, [(2, "b")]))
-    assert "files" in _pointer(t, 1)  # the format is sticky per table
-    assert sorted(r["k"] for r in t.read().collect()) == [1, 2]
+def test_inline_manifest_refused_by_name(spark, tmp_path):
+    """A manifest without a segment list (the retired inline layout,
+    file list inside the manifest) is outside input on disk: reads,
+    commits and history refuse it by name instead of failing on a
+    missing key."""
+    t = VersionedTable.create(spark, str(tmp_path / "t"), _df(spark, [(1, "a")]))
+    files = t._read_manifest(0)["files"]
+    inline = VersionedTable(spark, str(tmp_path / "inline"))
+    v0 = {
+        "version": 0,
+        "parent": None,
+        "op": "create",
+        "schema": "struct<k:bigint,v:string>",
+        "schema_json": _df(spark, []).schema.json(),
+        "txns": [],
+        "files": files,
+        "stats": {},
+        "parts": {},
+    }
+    assert inline._try_commit(v0, 0)
+    for op in (
+        lambda: inline.read(),
+        lambda: inline.append(_df(spark, [(2, "b")])),
+        lambda: inline.history(),
+    ):
+        with pytest.raises(UnsupportedTableFeatureError, match="inline"):
+            op()
+    assert inline.versions() == [0]
 
 
 def test_segment_cache_serves_repeat_resolution(spark, tmp_path):
