@@ -6,9 +6,12 @@ append, copy_into, upsert, overwrite with and without replace_schema,
 restore, clone and replace-clone, deep_clone, add_column,
 set/unset_properties, add/drop_constraint, analyze, rename/drop/widen
 column, set_partition_spec, COW and MoR delete, update and merge,
-overwrite_where, scoped and full optimize) on small seeded tables. Run
+overwrite_where, scoped and full optimize) on small seeded tables. The
+MoR ops cover every clause kind (a merge with matched-delete and
+by-source clauses on the change-feed table) and both layout branches of
+MoR file sizing (updates on a partitioned and on a bucketed table). Run
 it against two checkouts and compare, to check that a change to the
-commit path leaves every committed pointer the same:
+commit path leaves every committed pointer and every row the same:
 
     python scripts/commit_pointers.py dump <checkout> <out.json>
     python scripts/commit_pointers.py compare <before.json> <after.json>
@@ -19,11 +22,16 @@ CDC and deletion-vector directories, part files, segment files) and the
 scratch root are masked. ``compare`` drops keys whose value is null,
 false or empty on both sides before comparing: every reader takes those
 keys with ``.get()`` and an empty default, so absent and empty mean the
-same. It exits 1 if any pointer differs.
+same. Each version's record also carries ``rows_digest``, a sha256 of
+the sorted rows read at that version, and on table ``a`` (the
+change-feed table) ``feed_digest``, the same of its change feed over
+that one version (or the error class a version's read raises).
+It exits 1 if any pointer or digest differs.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import re
@@ -98,6 +106,15 @@ def run_sequence(spark, root: str) -> dict[str, str]:
         when_not_matched_insert="*",
         mode="mor",
     )
+    a.merge(
+        df([(17, "m17", "odd", 1), (19, "del", "odd", 2), (82, "m82", "even", 3)]),
+        on=["k"],
+        when_matched_delete="s.s = 'del'",
+        when_matched_update={"x": "s.x"},
+        when_not_matched_by_source_delete="t.k = 23",
+        when_not_matched_insert="*",
+        mode="mor",
+    )
     a.overwrite_where(df([(20, "rw20", "even", 200)]), "k >= 20 AND k < 22", txn="t5")
     a.add_column("extra", "string", txn="t6")
     a.analyze(stats_cols=["x"], bloom_cols=["p"])
@@ -130,6 +147,7 @@ def run_sequence(spark, root: str) -> dict[str, str]:
     b.set_partition_spec(None)
     b.append(df(_rows(16, 20)))
     b.set_partition_spec(["p"])
+    b.update("k >= 10 AND k < 14", {"x": "x + 1"}, mode="mor")
     b.delete("k < 3")
     b.optimize(target_files=1)
 
@@ -137,6 +155,7 @@ def run_sequence(spark, root: str) -> dict[str, str]:
     c = VersionedTable.create(spark, paths["c"], df(_rows(0, 16), parts=2), bucket_by=("k", 4))
     c.append(df(_rows(16, 20)))
     c.update("k = 2", {"s": "'b2'"})
+    c.update("k >= 5 AND k < 9", {"x": "x + 1"}, mode="mor")
 
     # -- table id: identity + generated columns ------------------------------
     ids = VersionedTable.create(
@@ -167,8 +186,19 @@ def _mask(obj, root: str):
     return obj
 
 
+def _digest(read) -> str:
+    """sha256 of the sorted rows of ``read()``, or the error it raises."""
+    try:
+        df = read()
+        rows = sorted(json.dumps(list(r), default=str) for r in df.collect())
+    except Exception as e:  # noqa: BLE001 - the error class is the record
+        return f"error: {type(e).__name__}"
+    return hashlib.sha256(json.dumps([df.columns, rows]).encode()).hexdigest()
+
+
 def dump(checkout: str, out: str) -> None:
     sys.path.insert(0, os.path.abspath(checkout))
+    from social_media_etl_spark.operators.manifest import VersionedTable
     from social_media_etl_spark.session import get_spark
 
     spark = get_spark("commit-pointers", master="local[2]")
@@ -176,6 +206,7 @@ def dump(checkout: str, out: str) -> None:
     paths = run_sequence(spark, root)
     record: dict = {}
     for name, path in paths.items():
+        t = VersionedTable(spark, path)
         mdir = os.path.join(path, "_manifests")
         for fname in sorted(os.listdir(mdir)):
             if not re.fullmatch(r"v\d{8}\.json", fname):
@@ -190,7 +221,12 @@ def dump(checkout: str, out: str) -> None:
                 segs.append(body)
             if "segments" in ptr:
                 ptr["segments"] = segs
-            record[f"{name}/{fname[:-5]}"] = _mask(ptr, root)
+            v = int(fname[1:-5])
+            ptr = _mask(ptr, root)
+            ptr["rows_digest"] = _digest(lambda: t.read(v))
+            if name == "a" and v > 0:
+                ptr["feed_digest"] = _digest(lambda: t.read_change_feed(v - 1, v))
+            record[f"{name}/{fname[:-5]}"] = ptr
     with open(out, "w") as fh:
         json.dump(record, fh, indent=1, sort_keys=True)
     print(f"{len(record)} pointers -> {out}")

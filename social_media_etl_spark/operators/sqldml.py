@@ -27,9 +27,8 @@ merge-on-read deletion vectors) resolves like Delta's table-level
 tuning, most-specific-wins: the ``dml_mode`` argument to
 :func:`timetravel.sql`, else the TABLE PROPERTY ``smetl.dml.mode``
 (set via ``ALTER TABLE t SET TBLPROPERTIES ('smetl.dml.mode'='mor')``
-— Delta's DVs-are-a-table-property contract), else the session conf
-``spark.smetl.sql.dml.mode``, else COW — SQL text stays
-strategy-neutral.
+— Delta's DVs-are-a-table-property contract), else COW — SQL text
+stays strategy-neutral.
 
 The parser is deliberately CONSERVATIVE (the ``timetravel`` rewrite
 philosophy): statements are matched against an explicit grammar on a
@@ -234,25 +233,18 @@ def _refresh_head(spark: SparkSession, name: str, t: VersionedTable) -> None:
     _tt.ensure_head_view(spark, name, t)
 
 
-def _resolve_mode(
-    spark: SparkSession, dml_mode: str | None, t: VersionedTable
-) -> str:
+def _resolve_mode(dml_mode: str | None, t: VersionedTable) -> str:
     """COW/MoR strategy, most-specific-wins: the per-call ``dml_mode``
     argument, then the table property ``smetl.dml.mode`` (Delta's
     strategy-is-a-table-property contract — a high-churn table opts
     into deletion vectors once, every SQL writer inherits it), then
-    the session conf, then COW."""
-    mode = (
-        dml_mode
-        or t.properties().get("smetl.dml.mode")
-        or spark.conf.get("spark.smetl.sql.dml.mode", None)
-        or "cow"
-    )
+    COW."""
+    mode = dml_mode or t.properties().get("smetl.dml.mode") or "cow"
     if mode not in ("cow", "mor"):
         raise ValueError(
             f"SQL DML: unknown mode {mode!r} (from the dml_mode "
-            "argument, the smetl.dml.mode table property, or "
-            "spark.smetl.sql.dml.mode) — expected 'cow' or 'mor'"
+            "argument or the smetl.dml.mode table property) — expected "
+            "'cow' or 'mor'"
         )
     return mode
 
@@ -311,7 +303,7 @@ def _run_update(spark, query, masked, tables, dml_mode) -> DataFrame:
         )
     name = m.group(1)
     t = _resolve_table(spark, tables, name, "UPDATE")
-    mode = _resolve_mode(spark, dml_mode, t)
+    mode = _resolve_mode(dml_mode, t)
     assigns = _assignments(
         masked[m.start(2) : m.end(2)], query[m.start(2) : m.end(2)], "UPDATE"
     )
@@ -330,7 +322,7 @@ def _run_delete(spark, query, masked, tables, dml_mode) -> DataFrame:
         )
     name = m.group(1)
     t = _resolve_table(spark, tables, name, "DELETE")
-    mode = _resolve_mode(spark, dml_mode, t)
+    mode = _resolve_mode(dml_mode, t)
     pred = query[m.start(2) : m.end(2)].strip() if m.group(2) else "true"
     v = t.delete(pred, mode=mode)
     _refresh_head(spark, name, t)
@@ -436,7 +428,7 @@ def _run_merge(spark, query, masked, tables, dml_mode) -> DataFrame:
             "keyword — pick another alias"
         )
     t = _resolve_table(spark, tables, name, "MERGE")
-    mode = _resolve_mode(spark, dml_mode, t)
+    mode = _resolve_mode(dml_mode, t)
     pos = h.end()
     # source: '(' balanced-subquery ')' or an identifier
     if masked[pos] == "(":
@@ -1329,8 +1321,8 @@ def run_dml(
 ) -> DataFrame:
     """Execute one DML statement against the registry. ``tables`` is
     the caller's name→path map (:func:`timetravel.registered_tables`);
-    ``dml_mode`` overrides ``spark.smetl.sql.dml.mode`` for the
-    row-level statements (MERGE/UPDATE/DELETE)."""
+    ``dml_mode`` overrides the table property ``smetl.dml.mode`` for
+    the row-level statements (MERGE/UPDATE/DELETE)."""
     masked = _mask(query)
     hm = _DML_HEAD.match(query)
     # CREATE TABLE ... USING versioned passes is_dml without matching

@@ -245,9 +245,9 @@ def sql(
     to :mod:`.sqldml`, which routes them into the manifest layer's
     transactional ops against the same registry. ``dml_mode``
     (``'cow'``/``'mor'``) picks the physical strategy for the
-    row-level statements, defaulting to the session conf
-    ``spark.smetl.sql.dml.mode`` then COW — like Delta, strategy is
-    tuning, not statement syntax."""
+    row-level statements, defaulting to the table property
+    ``smetl.dml.mode`` then COW — like Delta, strategy is tuning, not
+    statement syntax."""
     tables = registered_tables(spark)
     from social_media_etl_spark.operators import sqldml
 

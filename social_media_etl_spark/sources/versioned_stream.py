@@ -158,11 +158,12 @@ def _requalify(root: str, table_path: str, p: str) -> str:
 def _dv_positions(fs, root: str, table_path: str, dv_dirs, file_path) -> set:
     """Row positions of ``file_path`` deleted by the given deletion-
     vector directories (parquet of (file, row-position) keys written
-    by ``VersionedTable.delete(mode='mor')`` — column names pinned in
+    by a merge-on-read delete, update or merge — column names pinned in
     operators/manifest.py:_DV_FILE/_DV_POS). The vector's file column
     holds the scan-side ``_metadata.file_path`` URI; the manifest
     records plain paths — compare on the unquoted URI path, the same
-    normalization the batch layer's ``_touched_files`` uses. Bounded
+    normalization the batch layer applies to the files a vector names
+    (``VersionedTable._apply_row_changes``). Bounded
     by deleted rows, read once per (file, batch)."""
     from urllib.parse import unquote, urlparse
 

@@ -2276,13 +2276,28 @@ def test_light_committer_writes_no_success_marker(spark, tmp_path):
     assert t.read().count() == 10
 
 
-def test_dir_num_rows_counts_footers_and_missing_dir_is_empty(
+def test_dir_has_rows_reads_footers_and_missing_dir_is_empty(
     spark, tmp_path
 ):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     t = VersionedTable.create(spark, str(tmp_path / "t"), _frame(spark, 7))
     ddir = os.path.dirname(t._read_manifest(0)["files"][0])
-    assert t._dir_num_rows(ddir) == 7
-    assert t._dir_num_rows(str(tmp_path / "nope")) == 0
+    assert t._dir_has_rows(ddir)
+    assert not t._dir_has_rows(str(tmp_path / "nope"))
+    # schema-only part files before the one that holds rows
+    mixed = tmp_path / "mixed"
+    mixed.mkdir()
+    empty = pa.table({"k": pa.array([], pa.int64())})
+    pq.write_table(empty, str(mixed / "part-00000.parquet"))
+    pq.write_table(empty, str(mixed / "part-00001.parquet"))
+    assert not t._dir_has_rows(str(mixed))
+    pq.write_table(
+        pa.table({"k": pa.array([1], pa.int64())}),
+        str(mixed / "part-00002.parquet"),
+    )
+    assert t._dir_has_rows(str(mixed))
 
 
 def test_write_first_empty_rewrite_leaves_no_stray_data_dir(

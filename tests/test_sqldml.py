@@ -67,20 +67,6 @@ def test_sql_dml_mor_mode_writes_vector_not_rewrite(spark, tmp_path):
     assert [r[0] for r in _state(t)] == [i for i in range(20) if i != 3]
 
 
-def test_sql_dml_mode_session_conf(spark, tmp_path):
-    t = _mk(spark, tmp_path, "sdml_conf")
-    old = spark.conf.get("spark.smetl.sql.dml.mode", None)
-    try:
-        spark.conf.set("spark.smetl.sql.dml.mode", "mor")
-        tt.sql(spark, "DELETE FROM sdml_conf WHERE k = 0")
-        assert t._read_pointer(1).get("delete_vectors")
-    finally:
-        if old is None:
-            spark.conf.unset("spark.smetl.sql.dml.mode")
-        else:
-            spark.conf.set("spark.smetl.sql.dml.mode", old)
-
-
 def test_sql_dml_refreshes_plain_view(spark, tmp_path):
     """After SQL DML, a PLAIN spark.sql reader of the registered name
     sees the new head (the view refresh is part of the write)."""
@@ -455,8 +441,8 @@ def test_sql_shallow_clone(spark, tmp_path):
 def test_tblproperties_roundtrip_and_mode_resolution(spark, tmp_path):
     """ALTER TABLE SET/UNSET TBLPROPERTIES are metadata-only commits;
     the smetl.dml.mode property makes every SQL writer of the table
-    use deletion vectors, sitting between the per-call argument and
-    the session conf."""
+    use deletion vectors unless the per-call argument says otherwise;
+    without either, DML is COW."""
     t = _mk(spark, tmp_path, "sdml_p")
     out = tt.sql(
         spark,
