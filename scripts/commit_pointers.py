@@ -23,9 +23,11 @@ scratch root are masked. ``compare`` drops keys whose value is null,
 false or empty on both sides before comparing: every reader takes those
 keys with ``.get()`` and an empty default, so absent and empty mean the
 same. Each version's record also carries ``rows_digest``, a sha256 of
-the sorted rows read at that version, and on table ``a`` (the
-change-feed table) ``feed_digest``, the same of its change feed over
-that one version (or the error class a version's read raises).
+the sorted rows read at that version; ``changes_digest``, the same of
+``read_changes`` over that one version, which checks the added-rows
+change feed against every commit op; and on table ``a`` (the
+change-feed table) ``feed_digest``, the same of its typed change feed
+over that one version. A read that raises records its error class.
 It exits 1 if any pointer or digest differs.
 """
 
@@ -224,6 +226,8 @@ def dump(checkout: str, out: str) -> None:
             v = int(fname[1:-5])
             ptr = _mask(ptr, root)
             ptr["rows_digest"] = _digest(lambda: t.read(v))
+            if v > 0:
+                ptr["changes_digest"] = _digest(lambda: t.read_changes(v - 1, v))
             if name == "a" and v > 0:
                 ptr["feed_digest"] = _digest(lambda: t.read_change_feed(v - 1, v))
             record[f"{name}/{fname[:-5]}"] = ptr

@@ -80,6 +80,7 @@ __all__ = [
     "ConcurrentWriteError",
     "UnsupportedTableFeatureError",
     "SUPPORTED_FEATURES",
+    "plan_changes",
 ]
 
 #: Reader/writer feature flags this build of the engine understands —
@@ -135,8 +136,7 @@ _ALL_FILES = object()
 _READ_PLAN_MEMO: dict = {}
 
 #: Commits that move ZERO data files and change ZERO logical rows —
-#: the change feeds (batch + streaming) skip them and `read_changes`'
-#: file-level diff stays well-defined across them.
+#: every change feed skips them (:func:`plan_changes`).
 METADATA_ONLY_OPS = (
     "set_partition_spec",
     "rename",
@@ -148,6 +148,119 @@ METADATA_ONLY_OPS = (
     "analyze",
     "set_properties",
 )
+
+#: Rewrite ops that record their row changes as a CDC dir on a
+#: change-data-feed table; such a commit without one changed zero rows
+_CDF_RECORDED_OPS = (
+    "delete",
+    "update",
+    "merge",
+    "upsert",
+    "overwrite",
+    "restore",
+    "replace_where",
+)
+
+
+def plan_changes(
+    log,
+    start: int,
+    end: int,
+    *,
+    typed: bool,
+    caller: str,
+    snapshot: bool = False,
+) -> list[tuple]:
+    """What versions ``(start, end]`` of a table add or change — the one
+    change-feed policy behind :meth:`VersionedTable.read_changes`,
+    :meth:`VersionedTable.read_change_feed`,
+    ``streaming.ingest.sync_table_changes`` and the ``versioned_cdc``
+    stream. It reads only the commit log and needs no JVM: ``log`` has
+    ``versions()``, ``_read_pointer(v)``, ``_read_segment(name)`` and
+    ``_vector_files(dv_dirs)`` (the data files deletion vectors name).
+
+    Returns ``(version, kind, files_or_cdc_dir, dvs)`` entries:
+
+    - ``insert``: the files of the segments a commit added over its
+      parent. With ``snapshot`` and ``start < 0`` there is one entry
+      instead, every file of ``end`` under ``end``'s vectors ``dvs`` —
+      defined whatever ops produced it, so history is not checked;
+    - ``delete`` (``typed`` only): the files a merge-on-read delete's
+      new vectors ``dvs`` name;
+    - ``cdc`` (``typed`` only): the CDC dir a commit recorded.
+
+    Metadata-only ops contribute nothing. In added-rows mode (not
+    ``typed``) any other commit refuses. In ``typed`` mode
+    ``optimize`` (a content-identical rewrite) and change-feed
+    rewrites that recorded no CDC dir (zero rows changed) contribute
+    nothing, and any other commit refuses. Refusals name ``caller``."""
+    ptrs: dict = {}
+
+    def pointer(v: int) -> dict:
+        if v not in ptrs:
+            ptrs[v] = log._read_pointer(v)
+        return ptrs[v]
+
+    def files(ptr: dict, skip=frozenset()) -> list[str]:
+        return sorted(
+            f
+            for s in ptr["segments"]
+            if s not in skip
+            for f in log._read_segment(s)["files"]
+        )
+
+    if snapshot and start < 0:
+        ptr = pointer(end)
+        dvs = ptr.get("delete_vectors") or None
+        return [(end, "insert", files(ptr), dvs)]
+    out = []
+    for v in log.versions():
+        if not start < v <= end:
+            continue
+        ptr = pointer(v)
+        op, parent = ptr.get("op"), ptr.get("parent")
+        if op in METADATA_ONLY_OPS:
+            continue
+        if op in ("append", "create"):
+            # appends only ADD segments: the new rows are the new
+            # segments' files, and the base file list never loads
+            base = (
+                set(pointer(parent)["segments"]) if parent is not None else ()
+            )
+            new = files(ptr, base)
+            if new:
+                out.append((v, "insert", new, None))
+            continue
+        if not typed:
+            raise ValueError(
+                f"{caller}: version {v} is op '{op}' — the range contains "
+                "rewrite commits, and added-rows semantics are only "
+                "defined along append-only chains; re-read the snapshot "
+                "instead"
+            )
+        if op == "optimize":
+            continue
+        if op == "delete" and ptr.get("mode") == "mor":
+            old = set(pointer(parent).get("delete_vectors") or [])
+            dvs = [d for d in ptr.get("delete_vectors") or [] if d not in old]
+            named = log._vector_files(dvs) if dvs else set()
+            hit = [f for f in files(ptr) if f in named]
+            if hit:
+                out.append((v, "delete", hit, dvs))
+            continue
+        if ptr.get("cdc"):
+            out.append((v, "cdc", ptr["cdc"], None))
+            continue
+        if ptr.get("cdf") and op in _CDF_RECORDED_OPS:
+            continue
+        raise ValueError(
+            f"{caller}: version {v} is op '{op}'"
+            + (f"/mode '{ptr.get('mode')}'" if op == "delete" else "")
+            + " — row-level changes are only recoverable for append,"
+            " merge-on-read delete, and CDC-recorded commits"
+            " (create(change_data_feed=True)); re-snapshot instead"
+        )
+    return out
 
 
 def _holds(sql: str) -> Column:
@@ -2631,8 +2744,8 @@ class VersionedTable:
         per call, the same bounded-metadata poll ``read_changes``
         does, with no per-commit carry-forward bloat. The commit
         itself IS an append (op ``append`` + the record), so schema
-        checking, constraints, segments, the change feeds, and the
-        append-chain streaming source all treat it natively —
+        checking, constraints, segments, and every change feed
+        treat it natively —
         exactly how Delta's COPY INTO commits AddFiles.
 
         ``pattern`` is an fnmatch glob on file BASENAMES (Delta's
@@ -2830,13 +2943,12 @@ class VersionedTable:
         incremental-consumption pattern that drives downstream
         backfills without rescanning the table.
 
-        Resolution is FILE-LEVEL metadata only: along an append-only
-        commit chain the delta is exactly the files present in the
-        newer manifest but not the older one, so at 100 TB this plans
-        a scan of just the new files and never touches existing data.
-        A rewrite commit (upsert/overwrite) in the range makes
-        "added rows" ill-defined at the file level — those manifests'
-        ``op`` says so, and this raises rather than double-counting
+        The rows are :func:`plan_changes`' added-rows mode: each
+        append's new files, found from file-level metadata only, so at
+        100 TB this plans a scan of just the new files and never
+        touches existing data. Metadata-only commits add nothing. Any
+        other commit in the range makes "added rows" ill-defined at
+        the file level, and this raises rather than double-counting
         rewritten rows (consumers of a rewritten range re-read the
         snapshot instead)."""
         head = self.head_version()
@@ -2846,40 +2958,28 @@ class VersionedTable:
                 f"read_changes: from_version {from_version} is newer "
                 f"than to_version {to_v}"
             )
-        vs = [v for v in self.versions() if from_version < v <= to_v]
-        rewrites = [
-            v
-            for v in vs
-            if self._read_pointer(v).get("op")
-            # rename is metadata-only (zero files move), so the
-            # file-level diff stays well-defined across it; optimize
-            # is NOT allowed here — compaction rewrites files and the
-            # diff would double-count their rows (ADVICE r10)
-            not in ("append",) + METADATA_ONLY_OPS
-        ]
-        if rewrites:
-            raise ValueError(
-                "read_changes: version range contains rewrite commits "
-                f"{rewrites} (upsert/overwrite) — added-rows semantics "
-                "are only defined along append-only chains; re-read the "
-                "snapshot instead"
-            )
-        base_segs = set(self._read_pointer(from_version)["segments"])
-        target = self._read_pointer(to_v)
-        # segment-level diff: along an append-only span the target only
-        # ADDED segments, so the delta never materializes the base file
-        # list — O(new segments) metadata at any table size
-        new_files = sorted(
-            f
-            for s in target["segments"]
-            if s not in base_segs
-            for f in self._read_segment(s)["files"]
+        plan = plan_changes(
+            self, from_version, to_v, typed=False, caller="read_changes"
         )
+        new_files = [f for _, _, files, _ in plan for f in files]
+        target = self._read_pointer(to_v)
         if not new_files:
             return self._read_files(
                 target, self._resolve(target)["files"]
             ).limit(0)
         return self._read_files(target, new_files)
+
+    def _vector_files(self, dv_dirs: list[str]) -> set[str]:
+        """The data files the deletion vectors under ``dv_dirs`` name,
+        as the plain paths manifests record (one bounded collect: at
+        most one row per file)."""
+        from urllib.parse import unquote, urlparse
+
+        dv = self.spark.read.parquet(*dv_dirs)
+        return {
+            unquote(urlparse(r[0]).path)
+            for r in dv.select(self._DV_FILE).distinct().collect()
+        }
 
     # CDF metadata column names (the Delta Change Data Feed surface)
     _CDF_TYPE = "_change_type"
@@ -2895,37 +2995,29 @@ class VersionedTable:
         replica or an aggregate across commits that REMOVE rows — the
         case :meth:`read_changes` must refuse.
 
-        Per-commit resolution, all file-level metadata:
+        :func:`plan_changes` (typed mode) decides what each commit
+        contributes, from file-level metadata; this reads it:
 
-        - ``append``/``create`` commits emit their new files' rows as
-          ``insert`` (exactly the :meth:`read_changes` diff);
-        - ``delete(mode='mor')`` commits emit the rows their NEW
-          deletion vector hid as ``delete``: the vector's (file,
-          row-position) keys name the touched files (bounded collect,
-          ≤ one row per file), only those files are re-read, and the
-          inner join on the scan's ``_metadata`` position recovers the
-          deleted rows' full content. A position can only be deleted
-          once (the MoR find-scan is DV-applied), so emissions never
-          duplicate;
-        - on a ``change_data_feed=True`` table, COW delete/update,
-          MERGE, upsert, and overwrite commits recorded their
-          row-level changes as CDC files at commit time (r10-r11, the
-          Delta enableChangeDataFeed contract) and the feed reads
-          them typed (insert / delete / update_preimage /
-          update_postimage);
-        - rename, drop, set_partition_spec (metadata-only) and
-          optimize (content-identical rewrite) change zero logical
-          rows and are skipped, as Delta CDF does;
-        - a rewrite commit on a NON-cdf table still raises: its
-          row-level diff is not recoverable from file metadata alone
-          — enable the feed at create() or re-snapshot.
+        - ``insert`` entries (append/create) read the commit's new
+          files' rows as ``insert``;
+        - ``delete`` entries (a merge-on-read delete) re-read the files
+          its NEW deletion vector names, and the inner join on the
+          scan's ``_metadata`` position recovers the deleted rows' full
+          content. A position can only be deleted once (the MoR
+          find-scan is DV-applied), so emissions never duplicate;
+        - ``cdc`` entries read the CDC files a ``change_data_feed=True``
+          table's rewrite recorded at commit time (r10-r11, the Delta
+          enableChangeDataFeed contract), typed insert / delete /
+          update_preimage / update_postimage.
+
+        Metadata-only commits and optimize change zero logical rows
+        and are skipped, as Delta CDF does; a rewrite on a NON-cdf
+        table raises — enable the feed at create() or re-snapshot.
 
         Rows read under each commit's own manifest and union BY NAME
         with NULL-fill, so additive evolution mid-range is fine; the
         plan is O(commits in range) unions of O(changed files) scans —
         consumers poll bounded ranges, exactly like read_changes."""
-        from urllib.parse import unquote, urlparse
-
         head = self.head_version()
         to_v = head if to_version is None else to_version
         if from_version > to_v:
@@ -2933,99 +3025,37 @@ class VersionedTable:
                 f"read_change_feed: from_version {from_version} is newer "
                 f"than to_version {to_v}"
             )
-        span = [v for v in self.versions() if from_version < v <= to_v]
         frames = []
-        for v in span:
-            ptr = self._read_pointer(v)
-            op = ptr.get("op")
-            if op in METADATA_ONLY_OPS:
-                continue  # metadata-only: no rows changed
-            if op == "optimize":
-                # content-identical rewrite (compaction / Z-order /
-                # DV fold-in): zero logical row changes — Delta CDF
-                # likewise emits nothing for OPTIMIZE (ADVICE r10)
-                continue
-            if op in ("append", "create"):
-                base_segs = (
-                    set(self._read_pointer(ptr["parent"])["segments"])
-                    if ptr.get("parent") is not None
-                    else set()
-                )
-                new_files = sorted(
-                    f
-                    for s_ in ptr["segments"]
-                    if s_ not in base_segs
-                    for f in self._read_segment(s_)["files"]
-                )
-                if not new_files:
-                    continue
+        for v, kind, what, dvs in plan_changes(
+            self, from_version, to_v, typed=True, caller="read_change_feed"
+        ):
+            if kind == "cdc":
+                # _change_type rides in the CDC parquet
+                df = self.spark.read.parquet(what)
+            elif kind == "insert":
                 df = self._read_files(
-                    self._resolve(ptr), new_files, apply_dvs=False
-                )
-                frames.append(
-                    df.select(
-                        "*",
-                        F.lit("insert").alias(self._CDF_TYPE),
-                        F.lit(v).cast("int").alias(self._CDF_VERSION),
-                    )
-                )
-                continue
-            if op == "delete" and ptr.get("mode") == "mor":
-                parent_dvs = set(
-                    self._read_pointer(ptr["parent"]).get("delete_vectors")
-                    or []
-                )
-                new_dvs = [
-                    d
-                    for d in (ptr.get("delete_vectors") or [])
-                    if d not in parent_dvs
-                ]
-                if not new_dvs:
-                    continue
-                dv = self.spark.read.parquet(*new_dvs)
-                touched = {
-                    unquote(urlparse(r[0]).path)
-                    for r in dv.select(self._DV_FILE).distinct().collect()
-                }
-                m_v = self._resolve(ptr)
-                files = [f for f in m_v["files"] if f in touched]
+                    self._read_manifest(v), what, apply_dvs=False
+                ).select("*", F.lit("insert").alias(self._CDF_TYPE))
+            else:
                 rows = self._read_files(
-                    m_v, files, apply_dvs=False, with_pos=True
+                    self._read_manifest(v),
+                    what,
+                    apply_dvs=False,
+                    with_pos=True,
                 )
-                deleted = rows.join(
-                    dv, [self._DV_FILE, self._DV_POS], "inner"
-                ).drop(self._DV_FILE, self._DV_POS)
-                frames.append(
-                    deleted.select(
-                        "*",
-                        F.lit("delete").alias(self._CDF_TYPE),
-                        F.lit(v).cast("int").alias(self._CDF_VERSION),
+                df = (
+                    rows.join(
+                        self.spark.read.parquet(*dvs),
+                        [self._DV_FILE, self._DV_POS],
+                        "inner",
                     )
+                    .drop(self._DV_FILE, self._DV_POS)
+                    .select("*", F.lit("delete").alias(self._CDF_TYPE))
                 )
-                continue
-            if ptr.get("cdc"):
-                # a change-data-feed table's COW commit recorded its
-                # row-level changes at commit time (_change_type rides
-                # in the CDC parquet: insert / delete /
-                # update_preimage / update_postimage)
-                frames.append(
-                    self.spark.read.parquet(ptr["cdc"]).select(
-                        "*",
-                        F.lit(v).cast("int").alias(self._CDF_VERSION),
-                    )
+            frames.append(
+                df.select(
+                    "*", F.lit(v).cast("int").alias(self._CDF_VERSION)
                 )
-                continue
-            if ptr.get("cdf") and op in (
-                "delete", "update", "merge", "upsert", "overwrite",
-                "restore", "replace_where",
-            ):
-                continue  # CDF-recorded commit that changed zero rows
-            raise ValueError(
-                f"read_change_feed: version {v} is op '{op}'"
-                + (f"/mode '{ptr.get('mode')}'" if op == "delete" else "")
-                + " — row-level changes are only recoverable for append,"
-                " merge-on-read delete, and CDC-recorded commits"
-                " (create(change_data_feed=True)); re-snapshot instead"
             )
         target_schema = self._manifest_schema(self._read_pointer(to_v))
         meta_cols = [self._CDF_TYPE, self._CDF_VERSION]
@@ -3365,8 +3395,6 @@ class VersionedTable:
         v = parent + 1
         cdc_dir = None
         if head_ptr.get("cdf"):
-            from urllib.parse import unquote, urlparse
-
             head_m = self._resolve(head_ptr)
             target_m = self._resolve(target_ptr)
             head_files = set(head_m["files"])
@@ -3399,18 +3427,16 @@ class VersionedTable:
             ]
             kept = [f for f in target_m["files"] if f in head_files]
             if new_dvs and kept:
-                dv = self.spark.read.parquet(*new_dvs)
-                dv_files = {
-                    unquote(urlparse(r[0]).path)
-                    for r in dv.select(self._DV_FILE).distinct().collect()
-                }
+                dv_files = self._vector_files(new_dvs)
                 hit = [f for f in kept if f in dv_files]
                 if hit:
                     rows = self._read_files(
                         target_m, hit, apply_dvs=False, with_pos=True
                     )
                     unhidden = rows.join(
-                        dv, [self._DV_FILE, self._DV_POS], "inner"
+                        self.spark.read.parquet(*new_dvs),
+                        [self._DV_FILE, self._DV_POS],
+                        "inner",
                     ).drop(self._DV_FILE, self._DV_POS)
                     frames.append(
                         unhidden.select(
@@ -3895,13 +3921,13 @@ class VersionedTable:
         """ALTER TABLE SET TBLPROPERTIES as a METADATA-ONLY commit
         (r13 — the Delta table-properties surface): merge ``props``
         into the table's property map; zero files move, zero rows
-        change (op ``set_properties`` joins METADATA_ONLY_OPS, so
-        change feeds and the append-chain stream skip it). Properties
+        change (op ``set_properties`` is in METADATA_ONLY_OPS, so
+        :func:`plan_changes` skips it for every change feed). Properties
         are opaque key→string pairs EXCEPT the engine-consulted ones,
         which are validated here so a typo fails at SET time, not at
         the next DML: ``smetl.dml.mode`` must be ``cow``/``mor`` (the
         SQL DML layer resolves it between the per-call argument and
-        the session conf — Delta's strategy-is-a-table-property
+        the COW default — Delta's strategy-is-a-table-property
         contract). First-committer-wins like every metadata commit."""
         if not props:
             raise ValueError("set_properties: empty property map")

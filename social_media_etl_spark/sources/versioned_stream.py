@@ -30,35 +30,32 @@ streaming source re-expressed through Spark 4's Python DataSource API:
   through the same pyarrow.fs layer.
 - ``latestOffset`` lists the manifest directory — O(versions) metadata,
   no data IO. Each micro-batch covers a committed version span.
-- ``partitions(start, end)`` resolves the span to the FILE-LEVEL
-  manifest diff (exactly ``read_changes``): one InputPartition per new
-  data file, so the batch reads execute IN PARALLEL ON EXECUTORS
-  (pyarrow per file), never through the driver. At 100 TB a batch
-  plans a scan of just its commit's files. SEGMENTED manifests diff at
-  the segment level — the base file list is never materialized.
+- ``partitions(start, end)`` resolves the span with the batch side's
+  planner, ``operators.manifest.plan_changes``, over this module's
+  pyarrow-backed commit log (``_Log``, whose pointers pass the batch
+  reader's table-feature gate): one InputPartition per file the plan
+  names, so the batch reads execute IN PARALLEL ON EXECUTORS (pyarrow
+  per file), never through the driver. The stream therefore emits
+  exactly what the batch feeds over the same span return.
 - Offsets are checkpointed by the engine: restart resumes from the
   last committed version — exactly-once without any sink cooperation.
-- A REWRITE commit (upsert/overwrite/delete/update/optimize) inside
-  the span raises, like ``read_changes``: added-rows semantics only
-  exist along append-only chains; a consumer of a rewritten range must
+- Plain mode is ``read_changes``' added-rows mode: appends stream
+  their new files, metadata-only commits are skipped, and any other
+  commit inside the span raises — a consumer of a rewritten range must
   re-snapshot.
-- ``readChangeFeed=true`` (r10 — the streaming twin of
-  ``VersionedTable.read_change_feed``): the schema gains
-  ``_change_type``/``_commit_version``, appends stream as typed
-  ``insert`` rows, a MoR delete INSIDE the span streams the rows its
-  vector hid as ``delete`` rows with full content, and commits that
-  recorded CDC files at commit time (COW delete/update, merge,
-  upsert, overwrite on ``change_data_feed=True`` tables — r10-r11)
-  stream their recorded typed rows; rename/drop/set_partition_spec/
-  optimize are change-free skips. Rewrites on NON-cdf tables still
-  raise.
-- DELETION VECTORS (ADVICE r9, high): a snapshot taken AT OR AFTER a
-  ``delete(mode='mor')`` applies the head's delete vectors — each file
+- ``readChangeFeed=true`` (r10) is ``read_change_feed``'s typed mode:
+  the schema gains ``_change_type``/``_commit_version``, appends
+  stream as typed ``insert`` rows, a MoR delete INSIDE the span
+  streams the rows its vector hid as ``delete`` rows with full
+  content, and commits that recorded CDC files (rewrites on
+  ``change_data_feed=True`` tables) stream their recorded typed rows.
+  Rewrites on NON-cdf tables still raise.
+- The initial snapshot (offset -1, unless ``startingVersionInclusive=0``
+  asks for per-commit replay from v0) is every file of the end version
+  under that version's DELETION VECTORS (ADVICE r9, high): each file
   partition anti-filters its (file, row-position) keys while
   enumerating rows, so MoR-deleted rows are never resurrected by the
-  stream. Spans with ``start >= 0`` need no filtering: their new files
-  postdate every vector (a MoR delete inside the span is op ``delete``
-  and raises via the rewrite refusal above).
+  stream.
 
 FILESYSTEM: all manifest/segment/data IO goes through ``pyarrow.fs``
 resolved from the table path's own scheme (VERDICT r8 #4) — plain
@@ -86,32 +83,12 @@ import posixpath
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
-__all__ = ["VersionedCdcDataSource", "register_versioned_cdc_source"]
-
-#: Commits that move ZERO data files and change ZERO logical rows —
-#: the stream skips them, and they never break an append-only chain.
-#: INLINED copy of ``manifest.METADATA_ONLY_OPS``: this module runs
-#: inside DataSource workers where importing the py4j-backed manifest
-#: module is unnecessary weight. ``tests/test_streaming.py`` asserts
-#: the two tuples stay EQUAL, so a new metadata-only op added to the
-#: manifest fails CI here instead of silently corrupting the feed
-#: (ADVICE r12).
-_METADATA_ONLY_OPS = (
-    "set_partition_spec",
-    "rename",
-    "drop",
-    "widen",
-    "add_column",
-    "add_constraint",
-    "drop_constraint",
-    "analyze",
-    "set_properties",
+from social_media_etl_spark.operators.manifest import (
+    VersionedTable,
+    plan_changes,
 )
 
-#: Ops legal along an APPEND-ONLY chain: data-adding commits plus the
-#: metadata-only set (zero files move, so the v0..end file union is
-#: still the end snapshot and per-commit replay stays well-defined).
-_APPEND_CHAIN_OPS = ("append", "create") + _METADATA_ONLY_OPS
+__all__ = ["VersionedCdcDataSource", "register_versioned_cdc_source"]
 
 
 def _fs_for(path: str):
@@ -129,11 +106,6 @@ def _fs_for(path: str):
             "recognizes here (local paths, file://, and s3:// / gs:// / hdfs:// "
             f"where bindings exist): {exc}"
         ) from None
-
-
-def _read_json(fs, path: str) -> dict:
-    with fs.open_input_stream(path) as f:
-        return json.loads(f.read().decode("utf-8"))
 
 
 def _requalify(root: str, table_path: str, p: str) -> str:
@@ -183,243 +155,75 @@ def _dv_positions(fs, root: str, table_path: str, dv_dirs, file_path) -> set:
     return out
 
 
-def _versions(fs, root: str) -> list[int]:
-    import pyarrow.fs as pafs
+class _Log:
+    """A table's commit log read through ``pyarrow.fs`` — the ``log``
+    that ``plan_changes`` plans over. Pointers pass the batch reader's
+    table-feature gate, so the stream refuses what ``read`` refuses."""
 
-    mdir = posixpath.join(root, "_manifests")
-    sel = pafs.FileSelector(mdir, recursive=False, allow_not_found=True)
-    out = []
-    for info in fs.get_file_info(sel):
-        name = info.base_name
-        if name.startswith("v") and name.endswith(".json"):
-            out.append(int(name[1:-5]))
-    return sorted(out)
+    def __init__(self, path: str):
+        self.path = path
+        self.fs, self.root = _fs_for(path)
+
+    def _json(self, name: str) -> dict:
+        mpath = posixpath.join(self.root, "_manifests", name)
+        with self.fs.open_input_stream(mpath) as f:
+            return json.loads(f.read().decode("utf-8"))
+
+    def versions(self) -> list[int]:
+        import pyarrow.fs as pafs
+
+        mdir = posixpath.join(self.root, "_manifests")
+        sel = pafs.FileSelector(mdir, recursive=False, allow_not_found=True)
+        return sorted(
+            int(i.base_name[1:-5])
+            for i in self.fs.get_file_info(sel)
+            if i.base_name.startswith("v") and i.base_name.endswith(".json")
+        )
+
+    def _read_pointer(self, version: int) -> dict:
+        ptr = self._json(f"v{version:08d}.json")
+        VersionedTable._check_features(ptr)
+        return ptr
+
+    def _read_segment(self, name: str) -> dict:
+        return self._json(name)
+
+    def _vector_files(self, dv_dirs: list[str]) -> set[str]:
+        import pyarrow.dataset as ds
+        from urllib.parse import unquote, urlparse
+
+        out: set = set()
+        for d in dv_dirs:
+            tbl = ds.dataset(
+                _requalify(self.root, self.path, d),
+                filesystem=self.fs,
+                format="parquet",
+            ).to_table(columns=["__smetl_dv_file"])
+            out.update(
+                unquote(urlparse(u).path)
+                for u in set(tbl.column(0).to_pylist())
+            )
+        return out
 
 
-def _start_for_timestamp(fs, root: str, ts_ms: int) -> int:
+def _start_for_timestamp(log: _Log, ts_ms: int) -> int:
     """The offset for ``startingTimestamp``: commits whose CAS-rename
     instant (manifest mtime) is AT OR AFTER the timestamp replay;
     everything earlier counts as already consumed. Returns
     ``first_commit_at_or_after - 1`` (our offsets are
     last-consumed-exclusive), or the head when no commit qualifies yet
     (the stream waits for new commits)."""
-    vs = _versions(fs, root)
+    vs = log.versions()
     if not vs:
-        raise ValueError(f"versioned_cdc: no commits at {root}")
+        raise ValueError(f"versioned_cdc: no commits at {log.root}")
     for v in vs:
-        info = fs.get_file_info(
-            posixpath.join(root, "_manifests", f"v{v:08d}.json")
+        info = log.fs.get_file_info(
+            posixpath.join(log.root, "_manifests", f"v{v:08d}.json")
         )
         mtime_ms = int(info.mtime.timestamp() * 1000)
         if mtime_ms >= ts_ms:
             return v - 1
     return vs[-1]
-
-
-def _pointer(fs, root: str, version: int) -> dict:
-    return _read_json(
-        fs, posixpath.join(root, "_manifests", f"v{version:08d}.json")
-    )
-
-
-def _segment_files(fs, root: str, seg_name: str) -> list[str]:
-    seg = _read_json(fs, posixpath.join(root, "_manifests", seg_name))
-    return seg["files"]
-
-
-def _files_of(fs, root: str, ptr: dict) -> list[str]:
-    return sorted(
-        f for s in ptr["segments"] for f in _segment_files(fs, root, s)
-    )
-
-
-def _added_files(fs, root: str, base: dict | None, ptr: dict) -> list[str]:
-    """Files of ``ptr``'s segments that ``base`` lacks: appends only ADD
-    segments, so along an append-only span this is exactly the new
-    rows — O(new segments) metadata, the base file list never loads."""
-    base_segs = set(base["segments"]) if base is not None else set()
-    return sorted(
-        f
-        for s in ptr["segments"]
-        if s not in base_segs
-        for f in _segment_files(fs, root, s)
-    )
-
-
-def _span_files(
-    fs,
-    root: str,
-    start_v: int,
-    end_v: int,
-    op_cache: dict | None = None,
-    strict_v0: bool = False,
-) -> list[str]:
-    """New files committed over (start_v, end_v] — the read_changes
-    file diff, with the same rewrite refusal. start_v == -1 means the
-    INITIAL SNAPSHOT: every file of end_v, which is well-defined no
-    matter what ops produced it, so historic rewrites are NOT checked
-    there (a table that once saw a delete/upsert/optimize can still
-    START a stream — Delta-source semantics; only rewrites arriving
-    AFTER the stream's snapshot refuse). ``op_cache`` (version → op)
-    is filled across polls — committed manifests are immutable, so a
-    long-lived reader stats each version's op ONCE, keeping per-poll
-    IO O(new commits) on object stores where every read is a request
-    (r8 watch item)."""
-    target = _pointer(fs, root, end_v)
-    if start_v < 0:
-        if strict_v0:
-            # explicit startingVersionInclusive=0 (ADVICE r10): the
-            # caller asked for genuine from-v0 replay, not snapshot
-            # semantics — enforce the same append-only refusal the
-            # per-commit path applies, so behavior is continuous with
-            # inclusive=1. Along an append-only chain the v0..end file
-            # union IS the end snapshot, so the efficient return stays.
-            for v in _versions(fs, root):
-                if v > end_v:
-                    continue
-                op = op_cache.get(v) if op_cache is not None else None
-                if op is None:
-                    op = _pointer(fs, root, v).get("op")
-                    if op_cache is not None:
-                        op_cache[v] = op
-                if op not in _APPEND_CHAIN_OPS:
-                    raise ValueError(
-                        f"versioned_cdc: version {v} is op '{op}' "
-                        "(rewrite) — startingVersionInclusive=0 replays "
-                        "every commit, which is only defined along "
-                        "append-only chains; omit the option to start "
-                        "from the current snapshot instead"
-                    )
-        return _files_of(fs, root, target)
-    for v in _versions(fs, root):
-        if start_v < v <= end_v:
-            op = op_cache.get(v) if op_cache is not None else None
-            if op is None:
-                op = _pointer(fs, root, v).get("op")
-                if op_cache is not None:
-                    op_cache[v] = op
-            if op not in _APPEND_CHAIN_OPS:
-                raise ValueError(
-                    f"versioned_cdc: version {v} is op '{op}' (rewrite) — "
-                    "a change stream is only defined along append-only "
-                    "chains; restart the stream from a fresh snapshot"
-                )
-    return _added_files(fs, root, _pointer(fs, root, start_v), target)
-
-
-def _span_changes(
-    fs,
-    root: str,
-    table_path: str,
-    start_v: int,
-    end_v: int,
-    op_cache: dict | None = None,
-    snapshot_v0: bool = True,
-) -> list[tuple]:
-    """CHANGE-FEED resolution of a span (r10 — the streaming twin of
-    ``VersionedTable.read_change_feed``): a list of (file, kind,
-    commit_version, dv_dirs) partition specs. ``insert`` partitions
-    are a commit's new files (``dv_dirs`` set only on the initial
-    snapshot, where the end version's vectors ANTI-filter); ``delete``
-    partitions re-read the files a MoR delete's NEW vector touched and
-    INNER-join its positions, so deleted rows stream out typed with
-    full content. Ops whose row diff is not file-recoverable (COW
-    delete/update/merge, upsert, overwrite, optimize, rename) raise —
-    same contract as the batch feed."""
-    if start_v < 0 and snapshot_v0:
-        target = _pointer(fs, root, end_v)
-        dvs = target.get("delete_vectors") or None
-        return [
-            (f, "insert", end_v, dvs) for f in _files_of(fs, root, target)
-        ]
-    # snapshot_v0=False (explicit startingVersionInclusive=0, ADVICE
-    # r10): fall through to genuine per-commit replay from v0 — the
-    # loop's (start_v, end_v] span includes the create commit, so v0's
-    # own rows emit typed under their true _commit_version and
-    # historical MoR-delete events are preserved, exactly like
-    # inclusive=1 does for v1.
-    out: list[tuple] = []
-    for v in _versions(fs, root):
-        if not (start_v < v <= end_v):
-            continue
-        ptr = _pointer(fs, root, v)
-        op = ptr.get("op")
-        if op_cache is not None:
-            op_cache[v] = op
-        if op in _METADATA_ONLY_OPS:
-            continue  # metadata-only: no rows changed
-        if op == "optimize":
-            # content-identical rewrite (compaction / Z-order / DV
-            # fold-in): zero logical row changes — same skip as the
-            # batch feed and Delta CDF (ADVICE r10)
-            continue
-        if op in ("append", "create"):
-            parent = ptr.get("parent")
-            base = _pointer(fs, root, parent) if parent is not None else None
-            out.extend(
-                (f, "insert", v, None)
-                for f in _added_files(fs, root, base, ptr)
-            )
-            continue
-        if op == "delete" and ptr.get("mode") == "mor":
-            parent_dvs = set(
-                _pointer(fs, root, ptr["parent"]).get("delete_vectors") or []
-            )
-            new_dvs = [
-                d
-                for d in (ptr.get("delete_vectors") or [])
-                if d not in parent_dvs
-            ]
-            if not new_dvs:
-                continue
-            # the vector names the touched files — bounded metadata
-            import pyarrow.dataset as ds
-            from urllib.parse import unquote, urlparse
-
-            touched = set()
-            for d in new_dvs:
-                tbl = ds.dataset(
-                    _requalify(root, table_path, d), filesystem=fs,
-                    format="parquet",
-                ).to_table(columns=["__smetl_dv_file"])
-                touched.update(
-                    unquote(urlparse(u).path)
-                    for u in set(tbl.column(0).to_pylist())
-                )
-            live = set(_files_of(fs, root, ptr))
-            out.extend(
-                (f, "delete", v, new_dvs)
-                for f in sorted(touched & live)
-            )
-            continue
-        if ptr.get("cdc"):
-            # COW commit on a change-data-feed table: its CDC parquet
-            # already carries _change_type per row — stream the dir's
-            # files; the reader emits rows as recorded ("cdc" kind)
-            import pyarrow.fs as pafs
-
-            cdir = _requalify(root, table_path, ptr["cdc"])
-            sel = pafs.FileSelector(cdir, recursive=True)
-            out.extend(
-                (info.path, "cdc", v, None)
-                for info in fs.get_file_info(sel)
-                if info.is_file and info.base_name.endswith(".parquet")
-            )
-            continue
-        if ptr.get("cdf") and op in (
-            "delete", "update", "merge", "upsert", "overwrite",
-            "restore",
-        ):
-            continue  # CDF-recorded commit that changed zero rows
-        raise ValueError(
-            f"versioned_cdc: version {v} is op '{op}'"
-            + (f"/mode '{ptr.get('mode')}'" if op == "delete" else "")
-            + " — readChangeFeed recovers rows only for append,"
-            " merge-on-read delete, and CDC-recorded commits"
-            " (create(change_data_feed=True)); restart from a fresh"
-            " snapshot"
-        )
-    return out
 
 
 try:
@@ -459,7 +263,7 @@ try:
                 raise ValueError("versioned_cdc requires option 'path'")
             # resolve eagerly: an unreachable scheme must fail at
             # stream construction, not first poll
-            self._fs, self._root = _fs_for(self._path)
+            self._log = _Log(self._path)
             self._schema = schema
             self._fields = [f.name for f in schema.fields]
             cdf = str(options.get("readchangefeed",
@@ -498,66 +302,53 @@ try:
                 if dt.tzinfo is None:
                     dt = dt.replace(tzinfo=timezone.utc)
                 self._start = _start_for_timestamp(
-                    self._fs, self._root, int(dt.timestamp() * 1000)
+                    self._log, int(dt.timestamp() * 1000)
                 )
             else:
                 self._start = int(sv) if sv is not None else -1
-            self._op_cache: dict[int, str] = {}
 
         def initialOffset(self) -> dict:
             return {"version": self._start}
 
         def latestOffset(self) -> dict:
-            vs = _versions(self._fs, self._root)
+            vs = self._log.versions()
             return {"version": vs[-1] if vs else self._start}
 
         def partitions(self, start: dict, end: dict):
             s, e = start["version"], end["version"]
             if e <= s:
                 return [_FilePartition(None)]
-            if len(self._op_cache) > 65536:
-                # committed ops are immutable so the cache only saves
-                # re-stats; cap it so a years-long commit chain cannot
-                # grow reader memory unboundedly (r9 watch item)
-                self._op_cache.clear()
+            log = self._log
+            plan = plan_changes(
+                log,
+                s,
+                e,
+                typed=self._cdf,
+                caller="versioned_cdc",
+                snapshot=not self._v0_per_commit,
+            )
             # alias chains of the span's END manifest: pre-rename
             # files carry old physical names that the reader must map
             # back to current schema fields (r11; one driver-side
             # metadata read per batch)
-            amap = _pointer(self._fs, self._root, e).get("aliases") or None
-            if self._cdf:
-                # readChangeFeed (r10): typed insert/delete partitions
-                # — MoR deletes in the span stream their hidden rows
-                # instead of refusing
-                specs = _span_changes(
-                    self._fs, self._root, self._path, s, e, self._op_cache,
-                    snapshot_v0=not self._v0_per_commit,
-                )
-                if not specs:
-                    return [_FilePartition(None)]
-                return [
-                    _FilePartition(f, dvs, kind, v, amap)
-                    for f, kind, v, dvs in specs
-                ]
-            files = _span_files(
-                self._fs, self._root, s, e, self._op_cache,
-                strict_v0=self._v0_per_commit,
-            )
-            if not files:
-                return [_FilePartition(None)]
-            dv_dirs = None
-            if s < 0:
-                # initial snapshot: the end version's deletion vectors
-                # apply (ADVICE r9 high — without this, rows removed by
-                # delete(mode='mor') resurrect in the stream). Spans
-                # with s >= 0 never need them: their files postdate
-                # every vector, and a MoR delete inside the span raises
-                # via the rewrite refusal in _span_files.
-                dv_dirs = (
-                    _pointer(self._fs, self._root, e).get("delete_vectors")
-                    or None
-                )
-            return [_FilePartition(f, dv_dirs, aliases=amap) for f in files]
+            amap = log._read_pointer(e).get("aliases") or None
+            parts = []
+            for v, kind, what, dvs in plan:
+                if kind == "cdc":
+                    # the recorded CDC parquet carries _change_type per
+                    # row: the reader emits its rows as recorded
+                    import pyarrow.fs as pafs
+
+                    sel = pafs.FileSelector(
+                        _requalify(log.root, self._path, what), recursive=True
+                    )
+                    what = [
+                        info.path
+                        for info in log.fs.get_file_info(sel)
+                        if info.is_file and info.base_name.endswith(".parquet")
+                    ]
+                parts += [_FilePartition(f, dvs, kind, v, amap) for f in what]
+            return parts or [_FilePartition(None)]
 
         def read(self, partition):
             if partition.file is None:
@@ -649,11 +440,11 @@ try:
             path = self.options.get("path")
             if not path:
                 raise ValueError("versioned_cdc requires option 'path'")
-            fs, root = _fs_for(path)
-            vs = _versions(fs, root)
+            log = _Log(path)
+            vs = log.versions()
             if not vs:
                 raise ValueError(f"versioned_cdc: no commits at {path}")
-            m = _pointer(fs, root, vs[-1])
+            m = log._read_pointer(vs[-1])
             if "schema_json" not in m:
                 raise ValueError(
                     "versioned_cdc: legacy manifest without schema_json"

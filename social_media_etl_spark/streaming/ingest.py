@@ -600,12 +600,19 @@ def sync_table_changes(
     schedule) finds every txn already in the sink's log and appends
     NOTHING — exactly-once end to end, no engine support needed.
 
-    A REWRITE commit (upsert/overwrite/delete) in the chain raises,
-    exactly like ``read_changes``: added-rows semantics only exist
-    along append-only chains, and a CDC consumer of a rewritten range
-    must re-snapshot instead. Returns the txn ids applied by THIS
-    call (empty = the sink was already caught up)."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
+    Which source commits land is ``read_changes``' added-rows mode
+    (``operators.manifest.plan_changes``): an ``append`` lands, a
+    metadata-only commit (``set_properties``, ``analyze``,
+    ``add_column``, a rename, … — ``METADATA_ONLY_OPS``) adds no rows
+    and is skipped, and any other commit (upsert, overwrite, delete,
+    update, merge, optimize, …) raises: added-rows semantics only
+    exist along append-only chains, and a CDC consumer of a rewritten
+    range must re-snapshot instead. Returns the txn ids applied by
+    THIS call (empty = the sink was already caught up)."""
+    from social_media_etl_spark.operators.manifest import (
+        VersionedTable,
+        plan_changes,
+    )
 
     src = VersionedTable(spark, src_path)
     dst = VersionedTable(spark, dst_path)
@@ -645,14 +652,11 @@ def sync_table_changes(
             # first landed; skipping BEFORE the manifest read keeps a
             # poll O(new commits), not O(chain length) (r8 review)
             continue
-        m = src._read_pointer(v)  # op/parent only — never resolves segments
-        if m.get("op") != "append":
-            raise ValueError(
-                f"sync_table_changes: source v{v} is op "
-                f"'{m.get('op')}' (rewrite) — added-rows semantics only "
-                "exist along append-only chains; re-snapshot the sink "
-                "from that version instead"
-            )
-        dst.append(src.read_changes(m["parent"], v), txn=txn)
-        applied.append(txn)
+        # a metadata-only commit plans no rows and records no txn (a
+        # later poll re-reads its pointer; it never appends)
+        if plan_changes(
+            src, v - 1, v, typed=False, caller="sync_table_changes"
+        ):
+            dst.append(src.read_changes(v - 1, v), txn=txn)
+            applied.append(txn)
     return applied

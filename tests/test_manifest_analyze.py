@@ -137,3 +137,18 @@ def test_analyze_skipped_by_change_feed_and_commutes(spark, tmp_path):
     assert t.read().where("k = 3").count() == 0
     # the analyze's stats survived the rebased delete
     assert "n" in t._read_pointer(t.head_version())["stats_cols"]
+
+
+def test_read_changes_across_analyze_yields_only_appended_rows(
+    spark, tmp_path
+):
+    """analyze writes new segments for unchanged files: read_changes
+    over a range that crosses it returns only the appended rows, not
+    the re-indexed files' rows."""
+    t = VersionedTable.create(spark, str(tmp_path / "t"), _clustered(spark))
+    t.analyze(stats_cols=["k"])
+    v = t.append(
+        spark.createDataFrame([(9999, 0, "u0")], "k long, n long, u string")
+    )
+    assert [r["k"] for r in t.read_changes(0, v).collect()] == [9999]
+    assert t.read_changes(0, 1).count() == 0

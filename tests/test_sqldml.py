@@ -484,12 +484,10 @@ def test_tblproperties_roundtrip_and_mode_resolution(spark, tmp_path):
 def test_tblproperties_survive_dml_and_skip_feeds(spark, tmp_path):
     """Properties carry through every commit op, and the
     set_properties commit is skipped by the change feed like any
-    metadata-only op (the drift-pinned list)."""
+    metadata-only op."""
     from social_media_etl_spark.operators import manifest as m
-    from social_media_etl_spark.sources import versioned_stream as vs
 
     assert "set_properties" in m.METADATA_ONLY_OPS
-    assert vs._METADATA_ONLY_OPS == m.METADATA_ONLY_OPS
     t = _mk(spark, tmp_path, "sdml_p2", rows=5)
     t.set_properties({"a": "1"})
     t.append(

@@ -645,6 +645,32 @@ def test_sync_table_changes_refuses_rewritten_chain(spark, tmp_path):
         )
 
 
+def test_sync_table_changes_skips_metadata_only_commits(spark, tmp_path):
+    """set_properties and analyze commits between source appends add
+    no rows: one poll replicates every row, a replayed poll applies
+    nothing."""
+    from social_media_etl_spark.operators.manifest import VersionedTable
+
+    src = VersionedTable.create(
+        spark, str(tmp_path / "src"), _vt_df(spark, [(1, "a")])
+    )
+    src.append(_vt_df(spark, [(2, "b")]))
+    src.set_properties({"team": "etl"})
+    src.analyze(stats_cols=["k"])
+    src.append(_vt_df(spark, [(3, "c")]))
+    dst_path = str(tmp_path / "dst")
+    assert ingest.sync_table_changes(spark, src.path, dst_path, "cdc") == [
+        "cdc:snapshot:v0",
+        "cdc:v1",
+        "cdc:v4",
+    ]
+    dst = VersionedTable(spark, dst_path)
+    assert sorted(r["k"] for r in dst.read().collect()) == [1, 2, 3]
+    head = dst.head_version()
+    assert ingest.sync_table_changes(spark, src.path, dst_path, "cdc") == []
+    assert dst.head_version() == head
+
+
 # -- versioned_cdc: Structured Streaming source over the change feed --------
 
 
@@ -788,21 +814,30 @@ def test_versioned_cdc_stream_source_refuses_rewritten_chain(
     spark, tmp_path
 ):
     from social_media_etl_spark.sources import versioned_stream as vs
-    from social_media_etl_spark.operators.manifest import VersionedTable
+    from social_media_etl_spark.operators.manifest import (
+        VersionedTable,
+        plan_changes,
+    )
 
     src = VersionedTable.create(
         spark, str(tmp_path / "t"), _vt_df(spark, [(1, "a"), (2, "b")])
     )
     src.delete("k = 1")
     with pytest.raises(ValueError, match="rewrite"):
-        vs._span_files(*vs._fs_for(src.path), 0, src.head_version())
+        plan_changes(
+            vs._Log(src.path), 0, src.head_version(),
+            typed=False, caller="versioned_cdc",
+        )
 
 
 def test_versioned_cdc_stream_starts_after_historic_rewrite(spark, tmp_path):
     """A table that once saw a rewrite can still START a stream: the
     initial snapshot is well-defined regardless of history (r8
     review); only rewrites arriving AFTER the snapshot refuse."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
+    from social_media_etl_spark.operators.manifest import (
+        VersionedTable,
+        plan_changes,
+    )
     from social_media_etl_spark.sources import versioned_stream as vs
     from social_media_etl_spark.sources.versioned_stream import (
         register_versioned_cdc_source,
@@ -816,7 +851,10 @@ def test_versioned_cdc_stream_starts_after_historic_rewrite(spark, tmp_path):
     src.append(_vt_df(spark, [(3, "c")]))
     head = src.head_version()
     # snapshot start resolves every head file despite the delete at v1
-    assert vs._span_files(*vs._fs_for(src.path), -1, head)
+    log = vs._Log(src.path)
+    assert plan_changes(
+        log, -1, head, typed=False, caller="versioned_cdc", snapshot=True
+    )
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     q = (
         spark.readStream.format("versioned_cdc")
@@ -833,7 +871,9 @@ def test_versioned_cdc_stream_starts_after_historic_rewrite(spark, tmp_path):
     # a rewrite AFTER the consumed snapshot still refuses
     src.update("k = 2", {"v": "'b2'"})
     with pytest.raises(ValueError, match="rewrite"):
-        vs._span_files(*vs._fs_for(src.path), head, src.head_version())
+        plan_changes(
+            log, head, src.head_version(), typed=False, caller="versioned_cdc"
+        )
 
 
 @pytest.mark.slow
@@ -1453,15 +1493,93 @@ def test_transform_with_state_v2_totals(spark, tmp_path):
                 spark.conf.set(k, v)
 
 
-def test_stream_metadata_ops_match_manifest():
-    """ADVICE r12 #4: the stream source inlines the metadata-only op
-    list (no py4j import in DataSource workers) — this pin makes drift
-    a CI failure instead of a silently corrupted feed."""
-    from social_media_etl_spark.operators import manifest as m
-    from social_media_etl_spark.sources import versioned_stream as vs
+def test_versioned_cdc_refuses_unknown_table_feature(spark, tmp_path):
+    """The stream passes the batch reader's table-feature gate: a head
+    pointer recording a feature this build does not know is refused
+    by name when the stream loads."""
+    import json
 
-    assert vs._METADATA_ONLY_OPS == m.METADATA_ONLY_OPS
-    assert vs._APPEND_CHAIN_OPS == ("append", "create") + m.METADATA_ONLY_OPS
+    from social_media_etl_spark.operators.manifest import VersionedTable
+    from social_media_etl_spark.sources.versioned_stream import (
+        register_versioned_cdc_source,
+    )
+
+    register_versioned_cdc_source(spark)
+    t = VersionedTable.create(
+        spark, str(tmp_path / "t"), _vt_df(spark, [(1, "a")])
+    )
+    t.append(_vt_df(spark, [(2, "b")]))
+    mdir = tmp_path / "t" / "_manifests"
+    ptr = json.loads((mdir / "v00000001.json").read_text())
+    ptr.update(
+        version=2,
+        parent=1,
+        op="set_properties",
+        features=[*(ptr.get("features") or []), "future_x"],
+    )
+    (mdir / "v00000002.json").write_text(json.dumps(ptr))
+    with pytest.raises(Exception, match="future_x"):
+        spark.readStream.format("versioned_cdc").option("path", t.path).load()
+
+
+def test_versioned_cdc_change_feed_matches_batch_feed(spark, tmp_path):
+    """Stream and batch run one change-feed planner: an availableNow
+    drain of the typed stream from startingVersion=0 equals
+    read_change_feed(0) as a multiset, across every kind of commit a
+    change-feed table records."""
+    from social_media_etl_spark.operators.manifest import VersionedTable
+    from social_media_etl_spark.sources.versioned_stream import (
+        register_versioned_cdc_source,
+    )
+
+    register_versioned_cdc_source(spark)
+    t = VersionedTable.create(
+        spark,
+        str(tmp_path / "t"),
+        _vt_df(spark, [(i, f"v{i}") for i in range(8)]).coalesce(2),
+        change_data_feed=True,
+    )
+    t.append(_vt_df(spark, [(8, "v8"), (9, "v9")]))
+    t.set_properties({"team": "etl"})
+    t.delete("k = 1", mode="mor")
+    t.update("k = 2", {"v": "'two'"})
+    t.merge(
+        _vt_df(spark, [(3, "m3"), (20, "m20")]),
+        on=["k"],
+        when_matched_update={"v": "s.v"},
+        when_not_matched_insert="*",
+    )
+    t.overwrite_where(_vt_df(spark, [(5, "rw5")]), "k >= 4 AND k < 6")
+    t.optimize()
+    t.append(_vt_df(spark, [(30, "v30")]))
+    cols = ["k", "v", "_change_type", "_commit_version"]
+    want = sorted(
+        tuple(r) for r in t.read_change_feed(0).select(cols).collect()
+    )
+    out = str(tmp_path / "out")
+    q = (
+        spark.readStream.format("versioned_cdc")
+        .option("path", t.path)
+        .option("readChangeFeed", "true")
+        .option("startingVersion", "0")
+        .load()
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = sorted(
+        tuple(r) for r in spark.read.parquet(out).select(cols).collect()
+    )
+    assert got == want
+    assert {r[2] for r in want} == {
+        "insert",
+        "delete",
+        "update_preimage",
+        "update_postimage",
+    }
 
 
 def test_stream_survives_metadata_only_commits(spark, tmp_path):
