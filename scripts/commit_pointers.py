@@ -27,8 +27,13 @@ the sorted rows read at that version; ``changes_digest``, the same of
 ``read_changes`` over that one version, which checks the added-rows
 change feed against every commit op; and on table ``a`` (the
 change-feed table) ``feed_digest``, the same of its typed change feed
-over that one version. A read that raises records its error class.
-It exits 1 if any pointer or digest differs.
+over that one version. ``prune_digest`` covers the file index at that
+version: ``pruned_file_count`` (a range on ``k``), ``pruned_file_count_eq``
+(``s``, table ``a``'s bloom column), ``pruned_file_count_null`` (``x``, both
+ways), ``merge_scan_file_count`` and the input-file count of
+``read_where_in``, each on the fixed probes of ``PRUNE_PROBES``. A read
+that raises records its error class. It exits 1 if any pointer or
+digest differs.
 """
 
 from __future__ import annotations
@@ -198,6 +203,37 @@ def _digest(read) -> str:
     return hashlib.sha256(json.dumps([df.columns, rows]).encode()).hexdigest()
 
 
+#: the fixed probes of ``prune_digest``: a range on a stats column, a
+#: point on a bloom column, a null-census column, and a key list that
+#: reaches several files
+PRUNE_PROBES = {"range": ("k", 10, 20), "eq": ("s", "a3"), "null": "x", "keys": [3, 13, 70]}
+
+
+def _prune_digest(spark, t, v: int) -> str:
+    """sha256 of the file index's answers at version ``v``, each answer
+    (or the error class it raises) recorded separately."""
+    col, lo, hi = PRUNE_PROBES["range"]
+    eq_col, eq_val = PRUNE_PROBES["eq"]
+    null_col, keys = PRUNE_PROBES["null"], PRUNE_PROBES["keys"]
+    probes = {
+        "range": lambda: t.pruned_file_count(col, lo, hi, version=v),
+        "eq": lambda: t.pruned_file_count_eq(eq_col, eq_val, version=v),
+        "null": lambda: t.pruned_file_count_null(null_col, version=v),
+        "not_null": lambda: t.pruned_file_count_null(null_col, version=v, want_null=False),
+        "merge": lambda: t.merge_scan_file_count(
+            spark.createDataFrame([(k,) for k in keys], "k long"), ["k"], version=v
+        ),
+        "in": lambda: len(t.read_where_in("k", keys, version=v).inputFiles()),
+    }
+    out = {}
+    for name, probe in probes.items():
+        try:
+            out[name] = probe()
+        except Exception as e:  # noqa: BLE001 - the error class is the record
+            out[name] = f"error: {type(e).__name__}"
+    return hashlib.sha256(json.dumps(out, sort_keys=True).encode()).hexdigest()
+
+
 def dump(checkout: str, out: str) -> None:
     sys.path.insert(0, os.path.abspath(checkout))
     from social_media_etl_spark.operators.manifest import VersionedTable
@@ -230,6 +266,7 @@ def dump(checkout: str, out: str) -> None:
                 ptr["changes_digest"] = _digest(lambda: t.read_changes(v - 1, v))
             if name == "a" and v > 0:
                 ptr["feed_digest"] = _digest(lambda: t.read_change_feed(v - 1, v))
+            ptr["prune_digest"] = _prune_digest(spark, t, v)
             record[f"{name}/{fname[:-5]}"] = ptr
     with open(out, "w") as fh:
         json.dump(record, fh, indent=1, sort_keys=True)

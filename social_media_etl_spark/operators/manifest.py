@@ -331,7 +331,14 @@ def _stats_rows_for_files(
     parallel lists — the ONE implementation behind commit-time stats
     collection, shared verbatim by the distributed executor path
     (mapInPandas batches) and the small-commit driver fast path, so
-    the recorded index is byte-identical whichever path ran."""
+    the recorded index is byte-identical whichever path ran.
+
+    Every row goes through the local ``emit``. A row is one of:
+    a bloom row (``bloom`` hex, ``"0"`` for a column absent from the
+    footer), a bounds row (typed ``lo``/``hi``, plus the null census
+    when every row group counted its NULLs) or a census-only row (an
+    all-NULL chunk). :meth:`VersionedTable._collect_stats` folds the
+    rows of one (file, column) into its stats entry."""
     import datetime
 
     import pyarrow.parquet as pq
@@ -359,6 +366,14 @@ def _stats_rows_for_files(
         "lo_num": [], "hi_num": [], "lo_str": [], "hi_str": [],
         "bloom": [], "nulls": [], "rows": [],
     }
+
+    def emit(f, c, lo=(None, None), hi=(None, None), bloom=None,
+             nulls=None, rows=None):
+        """One row: bounds as ``_norm`` pairs, the rest as recorded."""
+        for k, v in zip(out, (f, c, lo[0], hi[0], lo[1], hi[1], bloom,
+                              nulls, rows)):
+            out[k].append(v)
+
     for f in files:
         pf = pq.ParquetFile(f)
         md = pf.metadata
@@ -368,15 +383,7 @@ def _stats_rows_for_files(
                 if c in absent_null:
                     # all-NULL by absence: an EMPTY bitmap
                     # skips this file for every lookup
-                    out["file"].append(f)
-                    out["col"].append(c)
-                    out["lo_num"].append(None)
-                    out["hi_num"].append(None)
-                    out["lo_str"].append(None)
-                    out["hi_str"].append(None)
-                    out["bloom"].append("0")
-                    out["nulls"].append(None)
-                    out["rows"].append(None)
+                    emit(f, c, bloom="0")
                 continue  # pre-evolution file: no column
             bm = 0
             indexable = True
@@ -392,29 +399,13 @@ def _stats_rows_for_files(
                     bm |= 1 << i
             if not indexable:
                 continue  # no bitmap: file always kept
-            out["file"].append(f)
-            out["col"].append(c)
-            out["lo_num"].append(None)
-            out["hi_num"].append(None)
-            out["lo_str"].append(None)
-            out["hi_str"].append(None)
-            out["bloom"].append(format(bm, "x"))
-            out["nulls"].append(None)
-            out["rows"].append(None)
+            emit(f, c, bloom=format(bm, "x"))
         for c in stats_cols:
             n_rows = md.num_rows
             if c in absent_null and c not in pf.schema_arrow.names:
                 # full null census for the absent column:
                 # IS NOT NULL skips the file entirely
-                out["file"].append(f)
-                out["col"].append(c)
-                out["lo_num"].append(None)
-                out["hi_num"].append(None)
-                out["lo_str"].append(None)
-                out["hi_str"].append(None)
-                out["bloom"].append(None)
-                out["nulls"].append(n_rows)
-                out["rows"].append(n_rows)
+                emit(f, c, nulls=n_rows, rows=n_rows)
                 continue
             mins, maxs = [], []
             nulls, seen_nc = 0, True
@@ -444,28 +435,13 @@ def _stats_rows_for_files(
                 # but a complete null census is still recorded so
                 # IS NOT NULL can skip the file entirely
                 if seen_nc and nulls == n_rows:
-                    out["file"].append(f)
-                    out["col"].append(c)
-                    out["lo_num"].append(None)
-                    out["hi_num"].append(None)
-                    out["lo_str"].append(None)
-                    out["hi_str"].append(None)
-                    out["bloom"].append(None)
-                    out["nulls"].append(nulls)
-                    out["rows"].append(n_rows)
+                    emit(f, c, nulls=nulls, rows=n_rows)
                 continue
             nlo, nhi = _norm(min(mins)), _norm(max(maxs))
             if nlo is None or nhi is None:
                 continue
-            out["file"].append(f)
-            out["col"].append(c)
-            out["lo_num"].append(nlo[0])
-            out["hi_num"].append(nhi[0])
-            out["lo_str"].append(nlo[1])
-            out["hi_str"].append(nhi[1])
-            out["bloom"].append(None)
-            out["nulls"].append(nulls if seen_nc else None)
-            out["rows"].append(n_rows)
+            emit(f, c, nlo, nhi, nulls=nulls if seen_nc else None,
+                 rows=n_rows)
     return out
 
 
@@ -677,15 +653,22 @@ class VersionedTable:
         this build does not know, BY NAME, before any file is read or
         any commit is staged. Feature-less manifests (pre-r12 tables)
         mean base protocol and pass; a manifest without a segment list
-        (an inline file list) is refused by name."""
-        if "segments" not in ptr:
-            raise UnsupportedTableFeatureError(
-                f"VersionedTable: manifest v{ptr.get('version')} has no "
-                "segment list — the legacy inline layout (file list "
-                "inside the manifest) is no longer supported; rewrite "
-                "the table into a new one with an engine that still "
-                "reads it"
-            )
+        (an inline file list) or without ``schema_json`` (a legacy
+        pointer from before ``create`` recorded it) is refused by
+        name."""
+        for key, what in (
+            ("segments", "segment list — the legacy inline layout (file "
+             "list inside the manifest)"),
+            ("schema_json", "schema_json — the legacy schema-string-only "
+             "pointer"),
+        ):
+            if key not in ptr:
+                raise UnsupportedTableFeatureError(
+                    f"VersionedTable: manifest v{ptr.get('version')} has "
+                    f"no {what} is no longer supported; rewrite the "
+                    "table into a new one with an engine that still "
+                    "reads it"
+                )
         unknown = sorted(set(ptr.get("features") or []) - SUPPORTED_FEATURES)
         if unknown:
             raise UnsupportedTableFeatureError(
@@ -1277,6 +1260,13 @@ class VersionedTable:
         byte-identical output, zero Spark jobs. Large commits (the
         100 TB shape: thousands of files per commit) keep the
         distributed executor pass unchanged.
+
+        Returns ``{file: {col: entry}}``. The rows of one (file, column)
+        fold into its entry ``[lo, hi, bloom, nulls, rows]`` through
+        :meth:`_merge_stats_entry`; an entry without a null census stays
+        ``[lo, hi]`` (``[lo, hi, bloom]`` with a bitmap), the layout
+        committed segments already carry. :meth:`_stats_entry` is the
+        one reader of these entries.
         """
         bloom_cols = (bloom or {}).get("cols") or []
         bloom_bits = int((bloom or {}).get("bits") or 2048)
@@ -1337,26 +1327,30 @@ class VersionedTable:
 
         stats: dict = {}
         for r in rows_iter:
-            entry = stats.setdefault(r["file"], {}).setdefault(
-                r["col"], [None, None]
-            )
             if r["bloom"] is not None:
-                while len(entry) < 3:
-                    entry.append(None)
-                entry[2] = r["bloom"]
+                new = [None, None, r["bloom"]]
             else:
-                entry[0] = (
-                    r["lo_num"] if r["lo_num"] is not None else r["lo_str"]
-                )
-                entry[1] = (
-                    r["hi_num"] if r["hi_num"] is not None else r["hi_str"]
-                )
+                new = [
+                    r["lo_num"] if r["lo_num"] is not None else r["lo_str"],
+                    r["hi_num"] if r["hi_num"] is not None else r["hi_str"],
+                ]
                 if r["nulls"] is not None:
-                    while len(entry) < 5:
-                        entry.append(None)
-                    entry[3] = int(r["nulls"])
-                    entry[4] = int(r["rows"])
+                    new += [None, int(r["nulls"]), int(r["rows"])]
+            cols = stats.setdefault(r["file"], {})
+            cols[r["col"]] = self._merge_stats_entry(
+                cols.get(r["col"], [None, None]), new
+            )
         return stats
+
+    def _kept(self, version: int | None, plan, *args):
+        """``(manifest, kept files)`` for ``version`` (default: head),
+        where ``plan(manifest, *args)`` picks the files — the
+        one preamble of every ``read_where*``, ``pruned_file_count*``
+        and :meth:`merge_scan_file_count`. A read then opens the kept
+        files and applies its exact filter; a count reports them."""
+        v = self.head_version() if version is None else version
+        m = self._read_manifest(v)
+        return m, plan(m, *args)
 
     def read_where(
         self,
@@ -1372,7 +1366,7 @@ class VersionedTable:
         kept — pruning is never allowed to drop data) — then apply the
         exact filter. With a range-clustered layout (warehouse.
         write_sorted shape) a point/range query touches one file
-        instead of all of them."""
+        instead of all of them. A one-conjunct :meth:`read_where_all`."""
         return self.read_where_all([(col, lo, hi)], version=version)
 
     def read_where_all(
@@ -1384,20 +1378,25 @@ class VersionedTable:
         table's partition column) and stats pruning (on any stats
         column) COMBINE — the date-partitioned + id-clustered layout
         every warehouse runs (VERDICT r7 #5). Exact filters are then
-        applied on top, so pruning can only skip work, never rows."""
-        v = self.head_version() if version is None else version
-        m = self._read_manifest(v)
-        kept = self._kept_files_all(m, preds)
-        if not kept:
-            df = self._read_files(m, m["files"]).limit(0)
-        else:
-            df = self._read_files(m, kept)
+        applied on top, so pruning can only skip work, never rows.
+        Files are picked by :meth:`_plan_files` (one interval per
+        conjunct); when it keeps none, the read is the empty scan of
+        :meth:`_read_files` — the schema of :meth:`read`, no input
+        files. Every ``read_where*`` shares that empty path."""
+        m, kept = self._kept(version, self._plan_files, self._ranges(preds))
+        df = self._read_files(m, kept)
         for col, lo, hi in preds:
             if lo is not None:
                 df = df.filter(F.col(col) >= lo)
             if hi is not None:
                 df = df.filter(F.col(col) <= hi)
         return df
+
+    @staticmethod
+    def _ranges(preds: list[tuple]) -> list[tuple]:
+        """``(col, lo, hi)`` range conjuncts as :meth:`_plan_files`
+        conjuncts: one interval each."""
+        return [(c, [(lo, hi)]) for c, lo, hi in preds]
 
     @staticmethod
     def _pv_excludes(pv: str, lo, hi, pt_is_string: bool) -> bool:
@@ -1427,148 +1426,131 @@ class VersionedTable:
         return outside(hi, True) or outside(lo, False)
 
     @staticmethod
-    def _file_overlaps(
-        manifest: dict,
-        f: str,
-        col: str,
-        lo,
-        hi,
-        pt_is_string: bool = False,
-        use_bloom: bool = True,
-    ) -> bool:
-        """Can file ``f`` hold rows with ``col`` in [lo, hi]? Consults
-        the file's recorded PARTITION VALUE (when ``col`` is the
-        table's partition column; see :meth:`_pv_excludes` for the
-        domain rules) and its footer [min, max] stats. Bounds are
-        compared in the metadata's own domain; a predicate whose type
-        can't be compared keeps the file — mis-typed bounds degrade to
-        a full read, never to data loss."""
-        # the file's OWN spec: after set_partition_spec the table spans
-        # specs and each file's recorded values read under the spec it
-        # was written with (r10 — Iceberg spec evolution); files from
-        # the current spec use the manifest's. Specs record WRITE-TIME
-        # physical names, so a RENAMED column matches through its
-        # alias chain — same fallthrough as footer stats below.
-        pbs = (manifest.get("specs") or {}).get(
-            f
-        ) or VersionedTable._pb_cols(manifest.get("partition_by"))
-        spec_col = next(
-            (
-                n
-                for n in [col, *(manifest.get("aliases") or {}).get(col, ())]
-                if n in pbs
-            ),
-            None,
-        )
-        if spec_col is not None:
-            entry = (manifest.get("parts") or {}).get(f)
+    def _stats_entry(manifest: dict, f: str, col: str) -> tuple:
+        """File ``f``'s stats entry for ``col`` as ``(lo, hi, bloom,
+        nulls, rows)``, None where nothing is recorded (no entry, an
+        entry from before bloom bitmaps or the null census, a footer
+        without the counts). The one reader of the entries
+        :meth:`_collect_stats` writes. A renamed column's pre-rename
+        files recorded stats under the OLD physical name, so the
+        lookup falls through the alias chain (r9 #4) — data skipping
+        keeps working across the rename."""
+        fstats = (manifest.get("stats") or {}).get(f) or {}
+        for name in [col, *(manifest.get("aliases") or {}).get(col, ())]:
+            entry = fstats.get(name)
+            if entry is not None:
+                return (*entry, None, None, None, None, None)[:5]
+        return (None,) * 5
+
+    @classmethod
+    def _plan_files(
+        cls, manifest: dict, conjuncts: list[tuple], use_bloom: bool = True
+    ) -> list[str]:
+        """The one kept-files planner: the files of ``manifest`` that
+        may hold rows for ``conjuncts``, a list of ``(col, [(lo, hi),
+        ...])``. A range is one interval; an IN list, or merge's
+        source keys, is one point interval per value. A file is kept
+        when, for EVERY conjunct, SOME interval can overlap both the
+        file's recorded partition value (:meth:`_pv_excludes`) and its
+        footer [min, max]; a point interval (``lo == hi``) must also
+        pass the file's bloom bitmap (r11) unless ``use_bloom`` is
+        off. Bounds are compared in the metadata's own domain: files
+        without metadata, and bounds that can't be compared with it,
+        are kept — pruning degrades to a full read, never drops data.
+        Behind ``read_where*``, ``pruned_file_count*``, prune hints
+        (:meth:`_prune_candidates`), scoped OPTIMIZE and merge's
+        keyed find-scan (:meth:`_keyed_candidate_files`)."""
+        aliases = manifest.get("aliases") or {}
+        parts = manifest.get("parts") or {}
+        specs = manifest.get("specs") or {}
+        cur_spec = cls._pb_cols(manifest.get("partition_by"))
+        bloom = manifest.get("bloom") or {}
+        bloom_cols = bloom.get("cols") or []
+        cols = {c for c, _ in conjuncts}
+        # string-domain lookup for EVERY conjunct column: historical
+        # specs (set_partition_spec) may record values for columns
+        # outside the current spec, and those files still prune
+        pt_str = {
+            x.name: isinstance(x.dataType, T.StringType)
+            for x in cls._manifest_schema(manifest).fields
+            if x.name in cols
+        }
+        # a renamed column's bloom config recorded the OLD name
+        bloomed = {
+            c
+            for c in cols
+            if use_bloom
+            and any(n in bloom_cols for n in [c, *aliases.get(c, ())])
+        }
+
+        def may_hold(f: str, col: str, intervals) -> bool:
+            # the file's OWN spec: after set_partition_spec the table
+            # spans specs and each file's recorded values read under
+            # the spec it was written with (r10 — Iceberg spec
+            # evolution). Specs record WRITE-TIME physical names, so a
+            # RENAMED column matches through its alias chain.
+            spec = specs.get(f) or cur_spec
+            spec_col = next(
+                (n for n in [col, *aliases.get(col, ())] if n in spec), None
+            )
             # legacy single-column manifests record a plain string;
             # multi-column specs record the per-file partition TUPLE —
             # take this column's position (None = NULL value: keep)
-            pv = (
-                entry
-                if isinstance(entry, str) or entry is None
-                else entry[pbs.index(spec_col)]
-            )
-            if pv is not None and VersionedTable._pv_excludes(
-                pv, lo, hi, pt_is_string
-            ):
-                return False
-        fstats = (manifest.get("stats") or {}).get(f, {})
-        s = fstats.get(col)
-        if s is None:
-            # a renamed column's pre-rename files recorded stats under
-            # the OLD physical name — fall through the alias chain so
-            # data skipping keeps working across the rename (r9 #4)
-            for a in (manifest.get("aliases") or {}).get(col, ()):
-                s = fstats.get(a)
-                if s is not None:
-                    break
-        if s is not None:
-            try:
-                if (hi is not None and s[0] > hi) or (
-                    lo is not None and s[1] < lo
+            pv = parts.get(f) if spec_col is not None else None
+            if pv is not None and not isinstance(pv, str):
+                pv = pv[spec.index(spec_col)]
+            lo_f, hi_f, bitmap, _, _ = cls._stats_entry(manifest, f, col)
+            bits = int(bitmap, 16) if bitmap and col in bloomed else None
+            for lo, hi in intervals:
+                if pv is not None and cls._pv_excludes(
+                    pv, lo, hi, pt_str.get(col, False)
                 ):
-                    return False
-            except TypeError:
-                pass
-        if use_bloom and lo is not None and lo == hi:
-            # an EQUALITY bound also consults the file's bloom bitmap
-            # (r11): point DML prune hints (delete "user_id = X" —
-            # the GDPR case), scoped OPTIMIZE and read_where all skip
-            # files range stats cannot. No false negatives by
-            # construction, so verify_prune semantics are unchanged.
-            return VersionedTable._bloom_may_contain(manifest, f, col, lo)
-        return True
+                    continue
+                try:
+                    # unrecorded bounds are None: the comparison
+                    # raises and the file is kept
+                    if (hi is not None and lo_f > hi) or (
+                        lo is not None and hi_f < lo
+                    ):
+                        continue
+                except TypeError:
+                    pass
+                if bits is not None and lo is not None and lo == hi:
+                    # a point also consults the bloom bitmap: no false
+                    # negatives by construction, and a value the hash
+                    # can't index keeps the file
+                    idxs = _bloom_hashes(
+                        lo, int(bloom["bits"]), int(bloom["k"])
+                    )
+                    if idxs is not None and not all(
+                        (bits >> i) & 1 for i in idxs
+                    ):
+                        continue
+                return True
+            return False
 
-    @classmethod
-    def _kept_files_all(
-        cls, manifest: dict, preds: list[tuple], use_bloom: bool = True
-    ) -> list[str]:
-        """The files a conjunctive range read must open: everything
-        that can overlap every (col, lo, hi), plus everything with NO
-        recorded metadata (pruning may never drop data). The single
-        skip predicate read_where* and pruned_file_count* report
-        from."""
-        pt_str: dict = {}
-        # string-domain lookup for EVERY predicate column: historical
-        # specs (set_partition_spec) may record values for columns
-        # outside the current spec, and those files still prune
-        pred_cols = {c for c, _, _ in preds}
-        schema = cls._manifest_schema(manifest)
-        if schema is not None:
-            for x in schema.fields:
-                if x.name in pred_cols:
-                    pt_str[x.name] = isinstance(x.dataType, T.StringType)
         return [
             f
             for f in manifest["files"]
-            if all(
-                cls._file_overlaps(
-                    manifest, f, c, lo, hi, pt_str.get(c, False), use_bloom
-                )
-                for c, lo, hi in preds
-            )
+            if all(may_hold(f, c, iv) for c, iv in conjuncts)
         ]
 
     @classmethod
-    def _kept_files(cls, manifest: dict, col: str, lo, hi) -> list[str]:
-        return cls._kept_files_all(manifest, [(col, lo, hi)])
+    def _null_files(
+        cls, manifest: dict, col: str, want_null: bool
+    ) -> list[str]:
+        """The files an IS NULL (``want_null=False``: IS NOT NULL) scan
+        must open, per the null census of :meth:`_stats_entry`: those
+        with a NULL (with a non-NULL), and every file whose census is
+        unknown — never drop data."""
 
-    @staticmethod
-    def _bloom_may_contain(manifest: dict, f: str, col: str, value) -> bool:
-        """Can file ``f`` hold rows where ``col`` equals ``value``,
-        per its recorded bloom bitmap? Missing configuration, missing
-        bitmap (pre-bloom or non-indexable file), an alias-chain miss,
-        or an unindexable lookup value all KEEP the file — bloom
-        skipping can have false positives, never false negatives."""
-        cfg = manifest.get("bloom")
-        if not cfg or col not in (cfg.get("cols") or []):
-            # a renamed column's bloom config recorded the OLD name
-            alias = next(
-                (
-                    a
-                    for a in (manifest.get("aliases") or {}).get(col, ())
-                    if cfg and a in (cfg.get("cols") or [])
-                ),
-                None,
-            )
-            if alias is None:
+        def may_hold(f: str) -> bool:
+            _, _, _, nulls, rows = cls._stats_entry(manifest, f, col)
+            if nulls is None or rows is None:
                 return True
-        fstats = (manifest.get("stats") or {}).get(f, {})
-        s = fstats.get(col)
-        if s is None:
-            for a in (manifest.get("aliases") or {}).get(col, ()):
-                s = fstats.get(a)
-                if s is not None:
-                    break
-        if s is None or len(s) < 3 or not s[2]:
-            return True
-        idxs = _bloom_hashes(value, int(cfg["bits"]), int(cfg["k"]))
-        if idxs is None:
-            return True
-        bm = int(s[2], 16)
-        return all((bm >> i) & 1 for i in idxs)
+            return nulls > 0 if want_null else nulls < rows
+
+        return [f for f in manifest["files"] if may_hold(f)]
 
     def read_where_eq(
         self, col: str, value, version: int | None = None
@@ -1583,18 +1565,18 @@ class VersionedTable:
         100 TB makes needle-in-haystack lookups (an event by user id,
         a document by hash) scan the table; the bloom answers those
         in O(matching files). False positives only ever cost extra
-        reads; files without bitmaps are always kept."""
+        reads; files without bitmaps are always kept. One point
+        interval for :meth:`_plan_files`, which consults blooms for
+        every point, so read_where, point prune hints and scoped
+        OPTIMIZE skip the same files."""
         if value is None:
             raise ValueError(
                 "read_where_eq: NULL equals nothing — filter IS NULL "
                 "on a plain read instead"
             )
-        v = self.head_version() if version is None else version
-        m = self._read_manifest(v)
-        # equality bounds consult blooms inside _file_overlaps, so the
-        # same skipping serves read_where/point prune hints/scoped
-        # OPTIMIZE — this is just the eq-shaped entry point
-        kept = self._kept_files_all(m, [(col, value, value)])
+        m, kept = self._kept(
+            version, self._plan_files, [(col, [(value, value)])]
+        )
         return self._read_files(m, kept).filter(F.col(col) == F.lit(value))
 
     def pruned_file_count_eq(
@@ -1603,44 +1585,10 @@ class VersionedTable:
         """(kept_after_bloom, kept_by_range_stats_alone, total) for an
         equality lookup — the middle term shows what bloom skipping
         buys BEYOND range/partition pruning."""
-        v = self.head_version() if version is None else version
-        m = self._read_manifest(v)
-        by_range = self._kept_files_all(
-            m, [(col, value, value)], use_bloom=False
-        )
-        by_bloom = self._kept_files_all(m, [(col, value, value)])
+        point = [(col, [(value, value)])]
+        m, by_bloom = self._kept(version, self._plan_files, point)
+        by_range = self._plan_files(m, point, use_bloom=False)
         return len(by_bloom), len(by_range), len(m["files"])
-
-    @staticmethod
-    def _null_census(manifest: dict, f: str, col: str):
-        """(null_count, row_count) recorded for a stats column of file
-        ``f`` — None when unrecorded (legacy entry, footer without the
-        counts, alias miss). Falls through the rename alias chain like
-        every other stats consumer."""
-        fstats = (manifest.get("stats") or {}).get(f, {})
-        s = fstats.get(col)
-        if s is None:
-            for a in (manifest.get("aliases") or {}).get(col, ()):
-                s = fstats.get(a)
-                if s is not None:
-                    break
-        if s is None or len(s) < 5 or s[3] is None or s[4] is None:
-            return None
-        return int(s[3]), int(s[4])
-
-    def _kept_files_null(
-        self, manifest: dict, col: str, want_null: bool
-    ) -> list[str]:
-        kept = []
-        for f in manifest["files"]:
-            c = self._null_census(manifest, f, col)
-            if c is None:
-                kept.append(f)  # unknown census: never drop data
-            elif want_null and c[0] > 0:
-                kept.append(f)  # has at least one NULL
-            elif not want_null and c[0] < c[1]:
-                kept.append(f)  # has at least one non-NULL
-        return kept
 
     def read_where_null(
         self, col: str, version: int | None = None, want_null: bool = True
@@ -1653,12 +1601,9 @@ class VersionedTable:
         all-NULL files. The missing-data sweep over a 100 TB mostly-
         dense table — find the rows a broken upstream left unfilled —
         reads O(defective files) instead of everything. Files without
-        a recorded census are always kept."""
-        v = self.head_version() if version is None else version
-        m = self._read_manifest(v)
-        kept = self._kept_files_null(m, col, want_null)
-        df = self._read_files(m, kept)
-        return df.filter(
+        a recorded census are always kept (:meth:`_null_files`)."""
+        m, kept = self._kept(version, self._null_files, col, want_null)
+        return self._read_files(m, kept).filter(
             F.col(col).isNull() if want_null else F.col(col).isNotNull()
         )
 
@@ -1669,27 +1614,15 @@ class VersionedTable:
         values (per-value range/partition/bloom skipping, unioned) —
         the batched needle fetch (an id list from a join, a blocklist
         sweep) opens O(Σ matching files) instead of |values| passes or
-        a full scan. NULLs in the list are ignored (SQL IN never
-        matches them)."""
+        a full scan. One point interval per value for
+        :meth:`_plan_files`. NULLs in the list are ignored (SQL IN
+        never matches them)."""
         vals = [v for v in values if v is not None]
         if not vals:
             raise ValueError("read_where_in: no non-NULL values")
-        v = self.head_version() if version is None else version
-        m = self._read_manifest(v)
-        schema = self._manifest_schema(m)
-        pt_str = False
-        if schema is not None:
-            for x in schema.fields:
-                if x.name == col:
-                    pt_str = isinstance(x.dataType, T.StringType)
-        kept = [
-            f
-            for f in m["files"]
-            if any(
-                self._file_overlaps(m, f, col, val, val, pt_str)
-                for val in vals
-            )
-        ]
+        m, kept = self._kept(
+            version, self._plan_files, [(col, [(v, v) for v in vals])]
+        )
         return self._read_files(m, kept).filter(F.col(col).isin(vals))
 
     # bounded driver-side key collect for merge/upsert find-scan
@@ -1711,12 +1644,13 @@ class VersionedTable:
         metadata (bloom bitmap, footer stats, or the partition spec),
         collect the source's distinct values for it — BOUNDED at
         ``max_keys``, a metadata-plane collect — and keep a file iff
-        it overlaps ANY value (:meth:`_file_overlaps`, which consults
-        blooms on equality). Sound for every merge-side scan because
-        each one equi-joins the target against the source keys: a
-        pruned-out file provably holds none. Too many distinct keys,
-        an un-metadata'd key set, or a collect past the cap all fall
-        back to the full list — pruning degrades, never drops data."""
+        it overlaps ANY value (one point interval per value for
+        :meth:`_plan_files`, which consults blooms on points). Sound
+        for every merge-side scan because each one equi-joins the
+        target against the source keys: a pruned-out file provably
+        holds none. Too many distinct keys, an un-metadata'd key set,
+        or a collect past the cap all fall back to the full list —
+        pruning degrades, never drops data."""
         files = base["files"]
         if not files:
             return files
@@ -1733,25 +1667,10 @@ class VersionedTable:
         rows = src_keys.select(col).distinct().limit(cap + 1).collect()
         if len(rows) > cap:
             return files
+        # NULL keys match nothing under MERGE's plain equality: an
+        # all-NULL key set keeps zero files
         vals = [r[0] for r in rows if r[0] is not None]
-        if not vals:
-            # NULL keys match nothing under MERGE's plain equality —
-            # zero files can hold a match
-            return []
-        schema = self._manifest_schema(base)
-        pt_str = False
-        if schema is not None:
-            for x in schema.fields:
-                if x.name == col:
-                    pt_str = isinstance(x.dataType, T.StringType)
-        return [
-            f
-            for f in files
-            if any(
-                self._file_overlaps(base, f, col, v, v, pt_str)
-                for v in vals
-            )
-        ]
+        return self._plan_files(base, [(col, [(v, v) for v in vals])])
 
     def merge_scan_file_count(
         self, source: DataFrame, on: list[str], version: int | None = None
@@ -1760,10 +1679,11 @@ class VersionedTable:
         files) for ``source``/``on`` — the observable gate for the
         keyed find-scan pruning (the merge analogue of
         :meth:`pruned_file_count_eq`)."""
-        v = self.head_version() if version is None else version
-        m = self._read_manifest(v)
-        kept = self._keyed_candidate_files(
-            m, on, source.select(*on).distinct()
+        m, kept = self._kept(
+            version,
+            self._keyed_candidate_files,
+            on,
+            source.select(*on).distinct(),
         )
         return len(kept), len(m["files"])
 
@@ -1771,12 +1691,8 @@ class VersionedTable:
         self, col: str, version: int | None = None, want_null: bool = True
     ) -> tuple[int, int]:
         """(kept, total) for an IS [NOT] NULL scan on a stats column."""
-        v = self.head_version() if version is None else version
-        m = self._read_manifest(v)
-        return (
-            len(self._kept_files_null(m, col, want_null)),
-            len(m["files"]),
-        )
+        m, kept = self._kept(version, self._null_files, col, want_null)
+        return len(kept), len(m["files"])
 
     def pruned_file_count(
         self, col: str, lo=None, hi=None, version: int | None = None
@@ -1788,9 +1704,8 @@ class VersionedTable:
         self, preds: list[tuple], version: int | None = None
     ) -> tuple[int, int]:
         """(files kept, files total) for a read_where_all."""
-        v = self.head_version() if version is None else version
-        m = self._read_manifest(v)
-        return len(self._kept_files_all(m, preds)), len(m["files"])
+        m, kept = self._kept(version, self._plan_files, self._ranges(preds))
+        return len(kept), len(m["files"])
 
     _PT_DIR = "smetl_pt"  # partition directory prefix (no leading "_"
     # or "." — Spark's file listing treats those segments as hidden)
@@ -2303,13 +2218,11 @@ class VersionedTable:
         return sorted(set(prior) | {txn}) if txn else sorted(set(prior))
 
     @staticmethod
-    def _manifest_schema(manifest: dict) -> T.StructType | None:
-        """The table schema recorded in a manifest, or None for a
-        legacy manifest that predates ``schema_json`` (those fall back
-        to exact simpleString matching)."""
-        if "schema_json" in manifest:
-            return T.StructType.fromJson(json.loads(manifest["schema_json"]))
-        return None
+    def _manifest_schema(manifest: dict) -> T.StructType:
+        """The table schema recorded in a manifest. Every readable
+        pointer carries ``schema_json`` (:meth:`_check_features`
+        refuses one without it)."""
+        return T.StructType.fromJson(json.loads(manifest["schema_json"]))
 
     def _check_schema(self, df: DataFrame, base: dict) -> dict:
         """Validate an append's schema against the parent pointer
@@ -2324,19 +2237,6 @@ class VersionedTable:
         manifest whose file set spans more than one physical schema,
         switching reads to footer-merged mode."""
         table = self._manifest_schema(base)
-        if table is None:
-            want = base["schema"]
-            got = df.schema.simpleString()
-            if got != want:
-                raise ValueError(
-                    "VersionedTable: schema mismatch — a drifted append "
-                    f"would corrupt snapshot reads. table={want} df={got}"
-                )
-            return {
-                "schema": want,
-                "schema_json": df.schema.json(),
-                "mixed": bool(base.get("mixed")),
-            }
         got_fields = {f.name: f for f in df.schema.fields}
         table_names = {f.name for f in table.fields}
         for f in table.fields:
@@ -2468,8 +2368,9 @@ class VersionedTable:
         for the added columns, then projects the manifest's column
         order — a snapshot always reads as exactly its recorded
         schema, whatever physical layouts it spans. An EMPTY file list
-        (a delete removed every row) reads as zero rows under the
-        manifest schema.
+        (a delete removed every row, a read pruned every file) reads
+        as a parquet scan over no files: zero rows, the schema of a
+        non-empty read, no input files.
 
         DELETION VECTORS (merge-on-read DML, VERDICT r8 #5): when the
         manifest carries ``delete_vectors`` — parquet directories of
@@ -2484,12 +2385,12 @@ class VersionedTable:
         ``with_pos=True`` keeps the (file, position) key columns on
         the result for writers OF new vectors."""
         if not files:
-            schema = self._manifest_schema(manifest)
-            empty = (
-                self.spark.createDataFrame([], schema)
-                if schema is not None
-                else self.spark.createDataFrame([], manifest["schema"])
-            )
+            # a parquet scan over no files: the schema (all columns
+            # nullable, as every parquet scan reads them) and the plan
+            # shape of a non-empty read, with no input files
+            empty = self.spark.read.schema(
+                self._manifest_schema(manifest)
+            ).parquet()
             if with_pos:
                 empty = empty.select(
                     "*",
@@ -2527,13 +2428,10 @@ class VersionedTable:
             # otherwise opens a footer on the driver per read call
             # (~30-60 ms here; a remote-FS round trip at scale). Delta/
             # Iceberg readers never infer either — the manifest owns
-            # the schema. Legacy manifests without schema_json keep
-            # the inference fallback.
-            schema0 = self._manifest_schema(manifest)
-            if schema0 is not None:
-                raw = self.spark.read.schema(schema0).parquet(*files)
-            else:
-                raw = self.spark.read.parquet(*files)
+            # the schema.
+            raw = self.spark.read.schema(
+                self._manifest_schema(manifest)
+            ).parquet(*files)
         df = raw
         if dv_dirs or with_pos:
             df = raw.select(
@@ -2650,10 +2548,9 @@ class VersionedTable:
             # allocation appends the column; restore the table's
             # declared column order for the written files
             tbl = self._manifest_schema(_ptr0)
-            if tbl is not None:
-                order = [f.name for f in tbl.fields if f.name in df.columns]
-                order += [c for c in df.columns if c not in order]
-                df = df.select(*order)
+            order = [f.name for f in tbl.fields if f.name in df.columns]
+            order += [c for c in df.columns if c not in order]
+            df = df.select(*order)
         df = self._apply_generated(df, _ptr0.get("generated"))
         self._check_schema(df, _ptr0)
         partition_by = _ptr0.get("partition_by")
@@ -3069,32 +2966,31 @@ class VersionedTable:
         out = frames[0]
         for f in frames[1:]:
             out = out.unionByName(f, allowMissingColumns=True)
-        if target_schema is not None:
-            # emit the feed under the TARGET version's schema: a
-            # column renamed mid-range coalesces through its alias
-            # chain (earlier commits' frames carry the old logical
-            # name), a column dropped by to_v is omitted entirely
-            # (its tombstoned bytes must not resurface — r11), and a
-            # column added after a frame's commit NULL-fills, exactly
-            # like snapshot reads across evolution.
-            aliases = self._read_pointer(to_v).get("aliases") or {}
-            present = set(out.columns)
-            cols = []
-            for f in target_schema.fields:
-                cands = [
-                    n
-                    for n in [f.name, *aliases.get(f.name, [])]
-                    if n in present
-                ]
-                if not cands:
-                    cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-                elif len(cands) == 1:
-                    cols.append(F.col(cands[0]).alias(f.name))
-                else:
-                    cols.append(
-                        F.coalesce(*[F.col(n) for n in cands]).alias(f.name)
-                    )
-            out = out.select(*cols, *[F.col(c) for c in meta_cols])
+        # emit the feed under the TARGET version's schema: a
+        # column renamed mid-range coalesces through its alias
+        # chain (earlier commits' frames carry the old logical
+        # name), a column dropped by to_v is omitted entirely
+        # (its tombstoned bytes must not resurface — r11), and a
+        # column added after a frame's commit NULL-fills, exactly
+        # like snapshot reads across evolution.
+        aliases = self._read_pointer(to_v).get("aliases") or {}
+        present = set(out.columns)
+        cols = []
+        for f in target_schema.fields:
+            cands = [
+                n
+                for n in [f.name, *aliases.get(f.name, [])]
+                if n in present
+            ]
+            if not cands:
+                cols.append(F.lit(None).cast(f.dataType).alias(f.name))
+            elif len(cands) == 1:
+                cols.append(F.col(cands[0]).alias(f.name))
+            else:
+                cols.append(
+                    F.coalesce(*[F.col(n) for n in cands]).alias(f.name)
+                )
+        out = out.select(*cols, *[F.col(c) for c in meta_cols])
         return out
 
     def overwrite(
@@ -3183,12 +3079,9 @@ class VersionedTable:
             df, id_alloc = self._alloc_identity(df, id_map)
             if id_alloc:
                 tbl = self._manifest_schema(self._read_pointer(parent))
-                if tbl is not None:
-                    order = [
-                        f.name for f in tbl.fields if f.name in df.columns
-                    ]
-                    order += [c for c in df.columns if c not in order]
-                    df = df.select(*order)
+                order = [f.name for f in tbl.fields if f.name in df.columns]
+                order += [c for c in df.columns if c not in order]
+                df = df.select(*order)
         if not replace_schema:
             # replace_schema redefines the table, dropping the
             # generation contract with the rest of the old schema;
@@ -3249,10 +3142,7 @@ class VersionedTable:
             # expression reads a column the new schema dropped would
             # fail every later ingest with a raw Catalyst error —
             # refuse crisply instead, mirroring drop_column (r14)
-            old_schema = self._manifest_schema(base)
-            old_cols = (
-                {f.name for f in old_schema.fields} if old_schema else set()
-            )
+            old_cols = {f.name for f in self._manifest_schema(base).fields}
             for cname, cexpr in (base.get("constraints") or {}).items():
                 broken = sorted(
                     (self._expr_identifiers(cexpr) & old_cols)
@@ -3834,11 +3724,6 @@ class VersionedTable:
         parent = self.head_version()
         ptr = self._read_pointer(parent)
         schema = self._manifest_schema(ptr)
-        if schema is None:
-            raise ValueError(
-                "VersionedTable.add_column: legacy manifest without "
-                "schema_json cannot evolve"
-            )
         if name in {f.name for f in schema.fields}:
             raise ValueError(
                 f"VersionedTable.add_column: column '{name}' already "
@@ -4100,19 +3985,15 @@ class VersionedTable:
         parent = self.head_version()
         ptr = self._read_pointer(parent)
         base = self._resolve(ptr)
-        schema = self._manifest_schema(base)
-        known = (
-            {f.name for f in schema.fields} if schema is not None else None
-        )
+        known = {f.name for f in self._manifest_schema(base).fields}
         want_stats = list(stats_cols or [])
         want_bloom = list(bloom_cols or [])
-        if known is not None:
-            unknown = (set(want_stats) | set(want_bloom)) - known
-            if unknown:
-                raise ValueError(
-                    f"VersionedTable.analyze: column(s) {sorted(unknown)} "
-                    f"not in the table schema {sorted(known)}"
-                )
+        unknown = (set(want_stats) | set(want_bloom)) - known
+        if unknown:
+            raise ValueError(
+                f"VersionedTable.analyze: column(s) {sorted(unknown)} "
+                f"not in the table schema {sorted(known)}"
+            )
         cur_stats = list(base.get("stats_cols") or [])
         cur_bloom_cfg = base.get("bloom")
         cur_bloom = list((cur_bloom_cfg or {}).get("cols") or [])
@@ -4220,7 +4101,7 @@ class VersionedTable:
         every physical name the column ever had; reads coalesce the
         current name with any alias present in the opened footers
         (:meth:`_read_files`), stats pruning falls through the chain
-        (:meth:`_file_overlaps`), and a renamed PARTITION column keeps
+        (:meth:`_stats_entry`), and a renamed PARTITION column keeps
         pruning because partition tuples are positional. Time travel
         to a pre-rename version resolves that version's own manifest —
         byte-identical, old name and all.
@@ -4238,11 +4119,6 @@ class VersionedTable:
         parent = self.head_version()
         ptr = self._read_pointer(parent)
         schema = self._manifest_schema(ptr)
-        if schema is None:
-            raise ValueError(
-                "VersionedTable.rename_column: legacy manifest without "
-                "schema_json cannot track column mapping"
-            )
         names = [f.name for f in schema.fields]
         if old not in names:
             raise ValueError(
@@ -4368,11 +4244,6 @@ class VersionedTable:
         parent = self.head_version()
         ptr = self._read_pointer(parent)
         schema = self._manifest_schema(ptr)
-        if schema is None:
-            raise ValueError(
-                "VersionedTable.drop_column: legacy manifest without "
-                "schema_json cannot track column mapping"
-            )
         names = [f.name for f in schema.fields]
         if name not in names:
             raise ValueError(
@@ -4492,11 +4363,6 @@ class VersionedTable:
         parent = self.head_version()
         ptr = self._read_pointer(parent)
         schema = self._manifest_schema(ptr)
-        if schema is None:
-            raise ValueError(
-                "VersionedTable.widen_column: legacy manifest without "
-                "schema_json cannot evolve types"
-            )
         names = [f.name for f in schema.fields]
         if name not in names:
             raise ValueError(
@@ -4665,11 +4531,6 @@ class VersionedTable:
             except OSError:  # pragma: no cover - cross-device fallback
                 shutil.copy2(f, os.path.join(vdir, base))
         schema = self._manifest_schema(m)
-        if schema is None:
-            raise ValueError(
-                "VersionedTable.register_bucketed: legacy manifest "
-                "without schema_json"
-            )
         cols_ddl = ", ".join(
             f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
         )
@@ -4694,7 +4555,7 @@ class VersionedTable:
         (r10 — Iceberg partition-spec evolution): zero files move.
         Existing files keep pruning under the spec they were written
         with (each segment records its spec; :meth:`_resolve` builds a
-        per-file map, :meth:`_file_overlaps` reads it); commits from
+        per-file map, :meth:`_plan_files` reads it); commits from
         here lay out under the NEW spec — the unpartitioned→(date) and
         (date)→(date, region) growth paths every long-lived table
         walks, without a rewrite. ``None`` drops partitioning for new
@@ -4713,9 +4574,8 @@ class VersionedTable:
                 "compose with partition_by"
             )
         new_spec = self._pb_cols(partition_by)
-        schema = self._manifest_schema(ptr)
-        if schema is not None and new_spec:
-            names = {f.name for f in schema.fields}
+        if new_spec:
+            names = {f.name for f in self._manifest_schema(ptr).fields}
             missing = [c for c in new_spec if c not in names]
             if missing:
                 raise ValueError(
@@ -4766,7 +4626,9 @@ class VersionedTable:
         production path (ADVICE r8: the contract is now explicit and
         checkable at call sites)."""
         candidates = (
-            self._kept_files_all(base, prune) if prune else base["files"]
+            self._plan_files(base, self._ranges(prune))
+            if prune
+            else base["files"]
         )
         if prune and verify_prune:
             cand = set(candidates)
@@ -4964,12 +4826,9 @@ class VersionedTable:
         df = self._apply_generated(df, ptr.get("generated"))
         if id_alloc:
             tbl = self._manifest_schema(ptr)
-            if tbl is not None:
-                order = [
-                    f.name for f in tbl.fields if f.name in df.columns
-                ]
-                order += [c for c in df.columns if c not in order]
-                df = df.select(*order)
+            order = [f.name for f in tbl.fields if f.name in df.columns]
+            order += [c for c in df.columns if c not in order]
+            df = df.select(*order)
         sch = self._check_schema(df, ptr)
         # conformance probe (bounded: first violation only) — BEFORE
         # any file is written
@@ -5662,39 +5521,38 @@ class VersionedTable:
                     .lower()
                     == "true"
                 )
-            if tbl_schema is not None:
-                tbl_types = {f.name: f.dataType for f in tbl_schema.fields}
-                extra = [
-                    f
-                    for f in source.schema.fields
-                    if f.name not in tbl_types
+            tbl_types = {f.name: f.dataType for f in tbl_schema.fields}
+            extra = [
+                f
+                for f in source.schema.fields
+                if f.name not in tbl_types
+            ]
+            if extra and not schema_evolution:
+                raise ValueError(
+                    "VersionedTable.merge: INSERT * source carries "
+                    f"column(s) {sorted(f.name for f in extra)} not "
+                    "in the target schema "
+                    f"{sorted(tbl_types)} — dropping them silently "
+                    "would lose data. Opt into schema evolution "
+                    "(schema_evolution=True, or table property "
+                    "smetl.merge.schemaEvolution='true') to widen "
+                    "the target, or project the source first."
+                )
+            if schema_evolution:
+                pending_adds = [
+                    (f.name, f.dataType.simpleString()) for f in extra
                 ]
-                if extra and not schema_evolution:
-                    raise ValueError(
-                        "VersionedTable.merge: INSERT * source carries "
-                        f"column(s) {sorted(f.name for f in extra)} not "
-                        "in the target schema "
-                        f"{sorted(tbl_types)} — dropping them silently "
-                        "would lose data. Opt into schema evolution "
-                        "(schema_evolution=True, or table property "
-                        "smetl.merge.schemaEvolution='true') to widen "
-                        "the target, or project the source first."
-                    )
-                if schema_evolution:
-                    pending_adds = [
-                        (f.name, f.dataType.simpleString()) for f in extra
-                    ]
-                    for f in source.schema.fields:
-                        cur = tbl_types.get(f.name)
-                        if (
-                            cur is not None
-                            and cur != f.dataType
-                            and f.dataType.simpleString()
-                            in self._WIDENINGS.get(cur.simpleString(), ())
-                        ):
-                            pending_widens.append(
-                                (f.name, f.dataType.simpleString())
-                            )
+                for f in source.schema.fields:
+                    cur = tbl_types.get(f.name)
+                    if (
+                        cur is not None
+                        and cur != f.dataType
+                        and f.dataType.simpleString()
+                        in self._WIDENINGS.get(cur.simpleString(), ())
+                    ):
+                        pending_widens.append(
+                            (f.name, f.dataType.simpleString())
+                        )
         parent = self.head_version()
         ptr = self._read_pointer(parent)
         id_map = {
@@ -5734,11 +5592,6 @@ class VersionedTable:
                 )
         base = self._resolve(ptr)
         schema = self._manifest_schema(base)
-        if schema is None:
-            raise ValueError(
-                "VersionedTable.merge: legacy manifest without "
-                "schema_json cannot type-check merge clauses"
-            )
         types = {f.name: f.dataType for f in schema.fields}
         # validations below see the POST-evolution types (the planned
         # adds/widens overlaid) so clause checks keep their r14
@@ -6227,11 +6080,6 @@ class VersionedTable:
         parent = self.head_version()
         base = self._resolve(self._read_pointer(parent))
         schema = self._manifest_schema(base)
-        if schema is None:
-            raise ValueError(
-                "VersionedTable.update: legacy manifest without "
-                "schema_json cannot type-check assignments"
-            )
         types = {f.name: f.dataType for f in schema.fields}
         unknown = set(assignments) - set(types)
         if unknown:
@@ -6330,7 +6178,7 @@ class VersionedTable:
         base_ptr = self._read_pointer(parent)
         base = self._resolve(base_ptr)
         if where:
-            touched_files = self._kept_files_all(base, list(where))
+            touched_files = self._plan_files(base, self._ranges(where))
             if not touched_files:
                 return parent  # scope matches nothing: no empty commits
         else:

@@ -445,10 +445,6 @@ try:
             if not vs:
                 raise ValueError(f"versioned_cdc: no commits at {path}")
             m = log._read_pointer(vs[-1])
-            if "schema_json" not in m:
-                raise ValueError(
-                    "versioned_cdc: legacy manifest without schema_json"
-                )
             out = T.StructType.fromJson(json.loads(m["schema_json"]))
             cdf = str(
                 self.options.get(

@@ -2047,7 +2047,7 @@ def test_true_concurrent_appends_and_disjoint_dml(spark, tmp_path):
 
 def test_point_delete_prune_hint_uses_bloom(spark, tmp_path):
     """A point DELETE's eq prune hint consults blooms inside
-    _file_overlaps: on a hash layout (range stats useless) the
+    _plan_files: on a hash layout (range stats useless) the
     find-scan opens only bloom-kept files, the rewrite touches only
     the true file, and verify_prune's no-false-negative audit passes —
     the GDPR delete-by-id shape at 100 TB."""
@@ -2114,6 +2114,35 @@ def test_null_census_skips_files_for_is_null_scans(spark, tmp_path):
     t.rename_column("val", "value2")
     kept2, _ = t.pruned_file_count_null("value2")
     assert kept2 == kept + 1
+
+
+def test_fully_pruned_reads_match_the_scan_schema(spark, tmp_path):
+    """A read that prunes every file is the same empty parquet scan
+    for every read_where* entry point: the schema of read() (a
+    spark.range id is non-nullable in the frame but nullable in any
+    parquet scan) and no input files — not a local relation under the
+    frame's schema, and not a scan of the whole table."""
+    t = VersionedTable.create(
+        spark,
+        str(tmp_path / "t"),
+        spark.range(0, 100).selectExpr("id", "id * 2 AS v").coalesce(2),
+        stats_cols=["id", "v"],
+    )
+    want = t.read().schema
+    misses = {
+        "read_where": lambda: t.read_where("id", 500, 600),
+        "read_where_all": lambda: t.read_where_all(
+            [("id", 0, 10), ("v", 900, 1000)]
+        ),
+        "read_where_eq": lambda: t.read_where_eq("id", 12345),
+        "read_where_null": lambda: t.read_where_null("id"),
+        "read_where_in": lambda: t.read_where_in("id", [777, 888]),
+    }
+    for name, read in misses.items():
+        df = read()
+        assert df.schema == want, name
+        assert df.inputFiles() == [], name
+        assert df.count() == 0, name
 
 
 def test_read_where_in_batched_lookup(spark, tmp_path):

@@ -119,13 +119,13 @@ def test_read_changes_diffs_at_segment_level(spark, tmp_path):
 
 def test_inline_manifest_refused_by_name(spark, tmp_path):
     """A manifest without a segment list (the retired inline layout,
-    file list inside the manifest) is outside input on disk: reads,
-    commits and history refuse it by name instead of failing on a
-    missing key."""
+    file list inside the manifest), or a v0 pointer without
+    ``schema_json`` (from before create recorded it), is outside input
+    on disk: reads, commits and history refuse it by name instead of
+    failing on a missing key."""
     t = VersionedTable.create(spark, str(tmp_path / "t"), _df(spark, [(1, "a")]))
     files = t._read_manifest(0)["files"]
-    inline = VersionedTable(spark, str(tmp_path / "inline"))
-    v0 = {
+    inline = {
         "version": 0,
         "parent": None,
         "op": "create",
@@ -136,15 +136,23 @@ def test_inline_manifest_refused_by_name(spark, tmp_path):
         "stats": {},
         "parts": {},
     }
-    assert inline._try_commit(v0, 0)
-    for op in (
-        lambda: inline.read(),
-        lambda: inline.append(_df(spark, [(2, "b")])),
-        lambda: inline.history(),
+    legacy = {
+        k: v for k, v in t._read_pointer(0).items() if k != "schema_json"
+    }
+    for name, v0, match in (
+        ("inline", inline, "inline"),
+        ("legacy", legacy, "schema_json"),
     ):
-        with pytest.raises(UnsupportedTableFeatureError, match="inline"):
-            op()
-    assert inline.versions() == [0]
+        bad = VersionedTable(spark, str(tmp_path / name))
+        assert bad._try_commit(v0, 0)
+        for op in (
+            lambda: bad.read(),
+            lambda: bad.append(_df(spark, [(2, "b")])),
+            lambda: bad.history(),
+        ):
+            with pytest.raises(UnsupportedTableFeatureError, match=match):
+                op()
+        assert bad.versions() == [0]
 
 
 def test_segment_cache_serves_repeat_resolution(spark, tmp_path):

@@ -379,32 +379,47 @@ _str_interval = st.tuples(st.text(max_size=6), st.text(max_size=6)).map(
         st.one_of(_interval, _str_interval, st.none()), min_size=1, max_size=20
     ),
     q=st.one_of(_interval, _str_interval),
+    in_list=st.one_of(
+        st.lists(st.floats(-1e6, 1e6, allow_nan=False), min_size=1, max_size=5),
+        st.lists(st.text(max_size=6), min_size=1, max_size=5),
+    ),
 )
 @settings(**{**_SETTINGS, "max_examples": 200})
-def test_kept_files_never_prunes_an_overlapping_file(stats, q):
-    """Pruning soundness for ANY mix of numeric/string/missing file
-    stats and any query range: a file whose recorded [min, max]
-    overlaps the query — or whose stats are missing or of an
-    incomparable type — must be kept. (Completeness, i.e. skipping
-    disjoint same-typed files, is pinned by the graded keys.)"""
+def test_kept_files_never_prunes_an_overlapping_file(stats, q, in_list):
+    """Pruning soundness of the kept-files planner for ANY mix of
+    numeric/string/missing file stats, for a range conjunct and for an
+    IN list (one point interval per value): a file whose recorded
+    [min, max] overlaps the range, or holds any value of the list — or
+    whose stats are missing or of an incomparable type — must be kept.
+    (Completeness, i.e. skipping disjoint same-typed files, is pinned by
+    the graded keys.)"""
     from social_media_etl_spark.operators.manifest import VersionedTable
 
     files = [f"f{i}" for i in range(len(stats))]
     manifest = {
         "files": files,
+        "schema_json": '{"type":"struct","fields":[{"name":"c",'
+        '"type":"double","nullable":true,"metadata":{}}]}',
         "stats": {
             f: {"c": s} for f, s in zip(files, stats) if s is not None
         },
     }
     lo, hi = q
-    kept = set(VersionedTable._kept_files(manifest, "c", lo, hi))
+    kept = set(VersionedTable._plan_files(manifest, [("c", [(lo, hi)])]))
+    kept_in = set(
+        VersionedTable._plan_files(manifest, [("c", [(v, v) for v in in_list])])
+    )
     for f, s in zip(files, stats):
         if s is None:
-            assert f in kept  # no stats -> never pruned
+            assert f in kept and f in kept_in  # no stats -> never pruned
         elif type(s[0]) is not type(lo):
             assert f in kept  # incomparable predicate -> never pruned
         elif not (s[0] > hi or s[1] < lo):
             assert f in kept  # overlapping range -> must be read
+        if s is not None and any(
+            type(s[0]) is not type(v) or s[0] <= v <= s[1] for v in in_list
+        ):
+            assert f in kept_in  # may hold a listed value -> must be read
 
 
 @given(
