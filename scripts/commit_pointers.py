@@ -9,9 +9,14 @@ column, set_partition_spec, COW and MoR delete, update and merge,
 overwrite_where, scoped and full optimize) on small seeded tables. The
 MoR ops cover every clause kind (a merge with matched-delete and
 by-source clauses on the change-feed table) and both layout branches of
-MoR file sizing (updates on a partitioned and on a bucketed table). Run
-it against two checkouts and compare, to check that a change to the
-commit path leaves every committed pointer and every row the same:
+MoR file sizing (updates on a partitioned and on a bucketed table). A second,
+fixed SQL sequence (``SQL_SEQUENCE``) runs one statement of every form
+the ``sqldml`` grammar takes through ``timetravel.sql`` on small seeded
+tables, and records each statement's result rows, or the class of the
+error it raises, alongside the pointers its tables commit. Run it
+against two checkouts and compare, to check that a change to the
+commit path or to the SQL front end leaves every committed pointer,
+every row and every statement result the same:
 
     python scripts/commit_pointers.py dump <checkout> <out.json>
     python scripts/commit_pointers.py compare <before.json> <after.json>
@@ -34,6 +39,13 @@ ways), ``merge_scan_file_count`` and the input-file count of
 ``read_where_in``, each on the fixed probes of ``PRUNE_PROBES``. A read
 that raises records its error class. It exits 1 if any pointer or
 digest differs.
+
+Statement records are keyed ``sql/NN`` in sequence order and hold the
+statement text, then ``columns`` and ``rows`` (sorted; commit
+timestamps masked) or ``error``. The statements after
+``SQL_FIXED_FROM`` run on their own table, ``sq_fix``, so a statement
+one checkout refuses and the other executes shifts no version of the
+other tables.
 """
 
 from __future__ import annotations
@@ -178,6 +190,167 @@ def run_sequence(spark, root: str) -> dict[str, str]:
     return paths
 
 
+_SQ_ROWS = ", ".join(
+    f"({i}, 'a{i}', '{'even' if i % 2 == 0 else 'odd'}', {i * 10})"
+    for i in range(14)
+)
+
+#: one statement of every form the sqldml grammar takes, in order;
+#: ``{root}`` is the scratch root
+SQL_SEQUENCE = [
+    "CREATE TABLE sq (k BIGINT NOT NULL, s STRING, p STRING, x INT, "
+    "k2 BIGINT GENERATED ALWAYS AS (k * 2)) USING versioned "
+    "LOCATION '{root}/sq' PARTITIONED BY (p) "
+    "TBLPROPERTIES ('owner'='etl', 'team'='core')",
+    f"INSERT INTO sq VALUES {_SQ_ROWS}",
+    "INSERT INTO sq (k, s, p, x) SELECT id + 20, concat('b', id), 'even', "
+    "CAST(id AS INT) FROM range(3)",
+    "INSERT INTO sq (k, s, p) VALUES (30, 'c30', 'odd')",
+    "INSERT INTO sq REPLACE WHERE k >= 20 AND k < 22 "
+    "SELECT 20, 'rw20', 'even', 200",
+    "UPDATE sq SET s = concat(s, '!'), x = x + 1 WHERE k < 3",
+    "UPDATE sq SET s = 'WHEN MATCHED THEN DELETE' WHERE k = 3",
+    "DELETE FROM sq WHERE k = 4",
+    "CREATE TABLE sq_src (k BIGINT, s STRING, p STRING, x INT) "
+    "USING versioned LOCATION '{root}/sq_src'",
+    "INSERT INTO sq_src VALUES (5, 'u5', 'odd', 500), "
+    "(6, 'del', 'even', 600), (40, 'n40', 'even', 4000)",
+    "MERGE INTO sq AS tgt USING sq_src AS src ON tgt.k = src.k "
+    "WHEN MATCHED AND src.s = 'del' THEN DELETE "
+    "WHEN MATCHED THEN UPDATE SET s = src.s, x = tgt.x + src.x "
+    "WHEN NOT MATCHED THEN INSERT (k, s, p, x) "
+    "VALUES (src.k, src.s, src.p, src.x)",
+    "MERGE INTO sq t USING (SELECT k, concat('st', s) AS s, p, x "
+    "FROM sq_src WHERE k = 5) s ON t.k = s.k "
+    "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+    "MERGE INTO sq t USING sq_view s ON t.k = s.k "
+    "WHEN MATCHED AND s.x > 100 THEN UPDATE SET x = s.x "
+    "WHEN MATCHED THEN DELETE "
+    "WHEN NOT MATCHED BY SOURCE AND t.k > 25 THEN UPDATE SET s = 'gone' "
+    "WHEN NOT MATCHED BY SOURCE AND t.k = 0 THEN DELETE",
+    "ALTER TABLE sq SET TBLPROPERTIES "
+    "('smetl.dml.mode'='mor', 'owner'='ops')",
+    "DELETE FROM sq WHERE k = 7",
+    "UPDATE sq SET x = x + 100 WHERE k = 8",
+    "ALTER TABLE sq UNSET TBLPROPERTIES ('owner', 'ghost')",
+    "SHOW TBLPROPERTIES sq",
+    "ALTER TABLE sq ADD COLUMN note STRING",
+    "ALTER TABLE sq RENAME COLUMN note TO remark",
+    "ALTER TABLE sq ADD COLUMN cnt INT",
+    "ALTER TABLE sq ALTER COLUMN cnt TYPE BIGINT",
+    "ALTER TABLE sq DROP COLUMN remark",
+    "ALTER TABLE sq ADD CONSTRAINT k_small CHECK (k < 100000)",
+    "ALTER TABLE sq DROP CONSTRAINT k_small",
+    "ALTER TABLE sq CLEAR PARTITIONING",
+    "ALTER TABLE sq SET PARTITIONED BY (p)",
+    "ANALYZE TABLE sq COMPUTE STATISTICS FOR COLUMNS k, x",
+    "ANALYZE TABLE sq COMPUTE STATISTICS FOR COLUMNS s BLOOM (p)",
+    "OPTIMIZE sq WHERE k BETWEEN 0 AND 10",
+    "OPTIMIZE sq ZORDER BY (k, x)",
+    "SELECT count(*) AS n, sum(x) AS sx FROM sq",
+    "SELECT k, s FROM sq VERSION AS OF 2",
+    "SELECT count(*) AS n FROM table_changes('sq', 1, 3)",
+    "DESCRIBE HISTORY sq",
+    "DESCRIBE DETAIL sq",
+    "SHOW CREATE TABLE sq",
+    "RESTORE TABLE sq TO VERSION AS OF 3",
+    "RESTORE TABLE sq TO TIMESTAMP AS OF '2999-01-01 00:00:00'",
+    "VACUUM sq RETAIN 100 VERSIONS DRY RUN",
+    "VACUUM sq",
+    "COPY INTO sq_src FROM '{root}/sq_landing' FILEFORMAT = PARQUET "
+    "PATTERN = '*.parquet'",
+    "CREATE TABLE sq_clone SHALLOW CLONE sq VERSION AS OF 2 "
+    "LOCATION '{root}/sq_clone'",
+    "CREATE TABLE sq_deep DEEP CLONE sq LOCATION '{root}/sq_deep'",
+    "CREATE TABLE sq_ctas USING versioned LOCATION '{root}/sq_ctas' "
+    "AS SELECT k, x FROM sq WHERE k < 10",
+    "INSERT OVERWRITE sq_ctas SELECT k, x FROM sq WHERE k >= 10",
+    "CREATE OR REPLACE TABLE sq_ctas (k BIGINT, y DOUBLE) USING versioned "
+    "LOCATION '{root}/sq_ctas' TBLPROPERTIES ('v'='2')",
+    "CREATE TABLE sq_id (id BIGINT GENERATED ALWAYS AS IDENTITY "
+    "(START WITH 100 INCREMENT BY 5), name STRING) USING versioned "
+    "LOCATION '{root}/sq_id'",
+    "INSERT INTO sq_id VALUES ('a'), ('b')",
+    "INSERT INTO sq_id (name) SELECT 'c'",
+    "DROP TABLE sq_deep",
+    "DROP TABLE IF EXISTS sq_not_registered",
+    "UPDATE sq WHERE k = 1",
+    "MERGE INTO sq t USING sq_src s ON t.k > s.k WHEN MATCHED THEN DELETE",
+    "DELETE FROM sq_not_registered WHERE k = 1",
+    "CREATE TABLE sq_bad (k BIGINT) USING versioned",
+    "ALTER TABLE sq FROBNICATE",
+    # -- statements a text-level SQL front end gets wrong (quotes,
+    # -- comments and alias-like text inside literals), on table sq_fix
+    "CREATE TABLE sq_fix (k BIGINT, s STRING, x INT) USING versioned "
+    "LOCATION '{root}/sq_fix'",
+    "INSERT INTO sq_fix VALUES (1, 'a', 10), (2, 'b', 20), (3, 'c', 30)",
+    'UPDATE sq_fix SET s = "a, b" WHERE k = 1',
+    'UPDATE sq_fix SET s = "x WHERE y" WHERE k = 2',
+    "UPDATE sq_fix SET `s` = 'q' WHERE k = 3",
+    "DELETE FROM sq_fix -- a comment\nWHERE k = 2",
+    "MERGE INTO sq_fix AS o USING sq_src AS s ON (o.k = s.k) "
+    "WHEN MATCHED THEN UPDATE SET s = 'o.x' "
+    "WHEN NOT MATCHED THEN INSERT (k, s, x) VALUES (s.k, 'o.new', s.x)",
+    'SELECT "sq_fix VERSION AS OF 0" AS s',
+    "SELECT \"table_changes('sq_fix', 0)\" AS s",
+    "INSERT INTO sq_fix (k, s) REPLACE WHERE k = 1 SELECT 1, 'z'",
+    "ALTER TABLE sq_fix ADD COLUMN nn INT NOT NULL",
+    "ALTER TABLE sq_fix SET TBLPROPERTIES ()",
+]
+SQL_FIXED_FROM = SQL_SEQUENCE.index(
+    next(s for s in SQL_SEQUENCE if s.startswith("CREATE TABLE sq_fix"))
+)
+SQL_TABLES = ("sq", "sq_src", "sq_clone", "sq_deep", "sq_ctas", "sq_id", "sq_rt", "sq_fix")
+
+
+def _result(df) -> dict:
+    """Columns and sorted rows of a statement's result frame; commit
+    timestamps (``*_ts_ms`` columns) masked."""
+    cols = df.columns
+    rows = []
+    for r in df.collect():
+        row = ["<ts>" if c.endswith("_ts_ms") else v for c, v in zip(cols, r)]
+        rows.append(json.dumps(row, default=str))
+    return {"columns": cols, "rows": sorted(rows)}
+
+
+def run_sql_sequence(spark, root: str) -> tuple[dict[str, str], list[dict]]:
+    """Run ``SQL_SEQUENCE`` under ``root``; returns table name -> path
+    and one record per statement. After ``SHOW CREATE TABLE`` the
+    emitted DDL is run again as table ``sq_rt``, its round trip."""
+    from social_media_etl_spark.operators import timetravel as tt
+
+    spark.createDataFrame(
+        [(1, "v1", "odd", 150), (9, "v9", "odd", 5), (50, "v50", "even", 1)],
+        SCHEMA,
+    ).createOrReplaceTempView("sq_view")
+    land = os.path.join(root, "sq_landing")
+    spark.createDataFrame(_rows(60, 63, "l"), SCHEMA).coalesce(1).write.parquet(
+        os.path.join(land, "batch")
+    )
+    for f in os.listdir(os.path.join(land, "batch")):
+        if f.endswith(".parquet"):
+            os.replace(os.path.join(land, "batch", f), os.path.join(land, "l0.parquet"))
+
+    def run(stmt: str) -> dict:
+        rec = {"stmt": stmt}
+        try:
+            rec.update(_result(tt.sql(spark, stmt)))
+        except Exception as e:  # noqa: BLE001 - the error class is the record
+            rec["error"] = type(e).__name__
+        return rec
+
+    records = []
+    for stmt in SQL_SEQUENCE:
+        records.append(run(stmt.replace("{root}", root)))
+        if stmt.startswith("SHOW CREATE TABLE") and "rows" in records[-1]:
+            ddl = json.loads(records[-1]["rows"][0])[0].split(";")[0]
+            ddl = ddl.replace("TABLE sq ", "TABLE sq_rt ")
+            records.append(run(ddl.replace(f"{root}/sq'", f"{root}/sq_rt'")))
+    paths = {n: os.path.join(root, n) for n in SQL_TABLES}
+    return {n: p for n, p in paths.items() if os.path.isdir(p)}, records
+
+
 def _mask(obj, root: str):
     if isinstance(obj, str):
         s = obj.replace("file:" + root, "<root>").replace(root, "<root>")
@@ -242,7 +415,11 @@ def dump(checkout: str, out: str) -> None:
     spark = get_spark("commit-pointers", master="local[2]")
     root = os.path.realpath(tempfile.mkdtemp(prefix="smetl_pointers_"))
     paths = run_sequence(spark, root)
-    record: dict = {}
+    sql_paths, statements = run_sql_sequence(spark, root)
+    paths.update(sql_paths)
+    record: dict = {
+        f"sql/{i:02d}": _mask(rec, root) for i, rec in enumerate(statements)
+    }
     for name, path in paths.items():
         t = VersionedTable(spark, path)
         mdir = os.path.join(path, "_manifests")
@@ -270,7 +447,7 @@ def dump(checkout: str, out: str) -> None:
             record[f"{name}/{fname[:-5]}"] = ptr
     with open(out, "w") as fh:
         json.dump(record, fh, indent=1, sort_keys=True)
-    print(f"{len(record)} pointers -> {out}")
+    print(f"{len(record)} pointers and statement records -> {out}")
     spark.stop()
     shutil.rmtree(root, ignore_errors=True)
 

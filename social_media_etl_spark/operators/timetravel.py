@@ -133,6 +133,19 @@ _TABLE_CHANGES = re.compile(
     rf"(?:,\s*(\d+)\s*)?\)",
     re.IGNORECASE,
 )
+#: a single- or double-quoted SQL string literal (backslash escapes
+#: included) — Spark reads both quote kinds as string literals
+LITERAL = re.compile(r"'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\"")
+
+
+def mask_literals(query: str) -> str:
+    """``query`` with every string literal's CONTENTS blanked (quotes
+    kept, length preserved), so keyword and name patterns never fire
+    inside a literal while match positions still index the real
+    text."""
+    return LITERAL.sub(
+        lambda m: m[0][0] + "\x00" * (len(m[0]) - 2) + m[0][-1], query
+    )
 
 
 def register_table(spark: SparkSession, name: str, path: str) -> None:
@@ -180,9 +193,33 @@ def _ts_ms(literal: str) -> int:
     return int(dt.timestamp() * 1000)
 
 
+def _rewrite(
+    query: str, masked: str, finder: re.Pattern, pattern: re.Pattern, view
+) -> tuple[str, str]:
+    """Replace every ``finder`` match on the masked text — so never one
+    inside a string literal — with ``view(m, text)``, where ``m`` is
+    ``pattern`` re-run on the real ``text`` of that span (the mask
+    blanked quoted operands). ``view`` returns a temp view name, or
+    None to keep the span. Returns the rewritten query and its masked twin: a
+    view name holds no literal, so both take it verbatim."""
+    out_q, out_m, last = [], [], 0
+    for f in finder.finditer(masked):
+        text = query[f.start() : f.end()]
+        name = view(pattern.match(query, f.start(), f.end()), text)
+        if name is None:
+            continue
+        out_q += [query[last : f.start()], name]
+        out_m += [masked[last : f.start()], name]
+        last = f.end()
+    return (
+        "".join(out_q) + query[last:],
+        "".join(out_m) + masked[last:],
+    )
+
+
 def _rewrite_table_changes(
-    spark: SparkSession, query: str, tables: dict[str, str]
-) -> str:
+    spark: SparkSession, query: str, masked: str, tables: dict[str, str]
+) -> tuple[str, str]:
     """Resolve ``table_changes('name', start [, end])`` calls (Delta's
     SQL CDF surface, INCLUSIVE version bounds) against registered
     VersionedTables: each call registers the typed change feed
@@ -192,23 +229,11 @@ def _rewrite_table_changes(
     query flows through Catalyst like any other table reference.
     String-literal masking keeps a quoted "table_changes(...)" inert;
     an unregistered name raises with the registered list."""
-    masked = re.sub(
-        r"'[^']*'",
-        lambda m: "'" + "\x00" * (len(m.group(0)) - 2) + "'",
-        query,
-    )
-    out = []
-    last = 0
-    for m in _TABLE_CHANGES_MASKED.finditer(masked):
-        # any masked match is OUTSIDE string literals (a call inside
-        # one has its keyword blanked); the strict re-parse on the
-        # real text recovers the quoted name the mask blanked
-        real = _TABLE_CHANGES.match(query, m.start(), m.end())
-        out.append(query[last : m.start()])
+
+    def view(real: re.Match | None, call: str) -> str:
         if real is None:
             raise ValueError(
-                "table_changes: cannot parse "
-                f"{query[m.start():m.end()]!r} — expected "
+                f"table_changes: cannot parse {call!r} — expected "
                 "table_changes('<table>', <start> [, <end>]) with an "
                 "identifier table name"
             )
@@ -223,12 +248,47 @@ def _rewrite_table_changes(
         start = int(real.group(3))
         t = VersionedTable(spark, path)
         end = int(real.group(4)) if real.group(4) else t.head_version()
-        view = f"{name}__cdf_{start}_{end}"
-        t.read_change_feed(start - 1, end).createOrReplaceTempView(view)
-        out.append(view)
-        last = m.end()
-    out.append(query[last:])
-    return "".join(out)
+        name = f"{name}__cdf_{start}_{end}"
+        t.read_change_feed(start - 1, end).createOrReplaceTempView(name)
+        return name
+
+    return _rewrite(query, masked, _TABLE_CHANGES_MASKED, _TABLE_CHANGES, view)
+
+
+def _travel_view(
+    spark: SparkSession, m: re.Match | None, tables: dict[str, str]
+) -> str | None:
+    """Register the snapshot a ``<name> VERSION|TIMESTAMP AS OF
+    <operand>`` clause pins and return its view name; None (keep the
+    text) when the operand does not re-parse on the real text."""
+    if m is None:
+        return None
+    name, kind, operand = m.group(1), m.group(2).upper(), m.group(3)
+    path = tables.get(name)
+    if path is None:
+        raise ValueError(
+            f"time travel on unregistered table {name!r} — "
+            f"registered: {sorted(tables) or '(none)'}; call "
+            "register_table(spark, name, path) first"
+        )
+    t = VersionedTable(spark, path)
+    if kind == "VERSION":
+        if not operand.isdigit():
+            raise ValueError(
+                f"VERSION AS OF needs an integer version, got "
+                f"{operand} for table {name!r}"
+            )
+        version = int(operand)
+    else:
+        if not (operand.startswith("'") and operand.endswith("'")):
+            raise ValueError(
+                f"TIMESTAMP AS OF needs a quoted literal, got "
+                f"{operand} for table {name!r}"
+            )
+        version = t.version_as_of(_ts_ms(operand[1:-1]))
+    view = f"{name}__v{version}"
+    t.read(version).createOrReplaceTempView(view)
+    return view
 
 
 def sql(
@@ -249,66 +309,26 @@ def sql(
     ``smetl.dml.mode`` then COW — like Delta, strategy is tuning, not
     statement syntax."""
     tables = registered_tables(spark)
+    # ONE literal mask per call, shared by the DML dispatch, both
+    # rewrites and the head-view scan
+    masked = mask_literals(query)
     from social_media_etl_spark.operators import sqldml
 
-    if sqldml.is_dml(query):
+    if sqldml.is_dml(query, masked):
         return sqldml.run_dml(spark, query, tables, dml_mode)
-    query = _rewrite_table_changes(spark, query, tables)
-
-    def _replace(m: re.Match) -> str:
-        name, kind, operand = m.group(1), m.group(2).upper(), m.group(3)
-        path = tables.get(name)
-        if path is None:
-            raise ValueError(
-                f"time travel on unregistered table {name!r} — "
-                f"registered: {sorted(tables) or '(none)'}; call "
-                "register_table(spark, name, path) first"
-            )
-        t = VersionedTable(spark, path)
-        if kind == "VERSION":
-            if not operand.isdigit():
-                raise ValueError(
-                    f"VERSION AS OF needs an integer version, got "
-                    f"{operand} for table {name!r}"
-                )
-            version = int(operand)
-        else:
-            if not (operand.startswith("'") and operand.endswith("'")):
-                raise ValueError(
-                    f"TIMESTAMP AS OF needs a quoted literal, got "
-                    f"{operand} for table {name!r}"
-                )
-            version = t.version_as_of(_ts_ms(operand[1:-1]))
-        view = f"{name}__v{version}"
-        t.read(version).createOrReplaceTempView(view)
-        return view
-
-    # mask string literal CONTENTS (quotes kept, so a TIMESTAMP AS OF
-    # operand still parses) — a quoted "VERSION AS OF" never rewrites
-    masked = re.sub(
-        r"'[^']*'",
-        lambda m: "'" + "\x00" * (len(m.group(0)) - 2) + "'",
+    query, masked = _rewrite_table_changes(spark, query, masked, tables)
+    rewritten, _ = _rewrite(
         query,
+        masked,
+        _TRAVEL,
+        _TRAVEL,
+        lambda m, _text: _travel_view(spark, m, tables),
     )
-    out = []
-    last = 0
-    for m in _TRAVEL.finditer(masked):
-        out.append(query[last : m.start()])
-        # re-run the match on the REAL text for the operand (the mask
-        # blanked quoted literals, incl. a TIMESTAMP AS OF operand)
-        real = _TRAVEL.match(query, m.start(), m.end())
-        if real is None:  # operand was inside a string literal → skip
-            out.append(query[m.start() : m.end()])
-        else:
-            out.append(_replace(real))
-        last = m.end()
-    out.append(query[last:])
-    rewritten = "".join(out)
     # refresh head views for bare names so a long session reads current
     # (re.escape is defense-in-depth — register_table only admits
     # identifier names today, but a future relaxation must not turn a
     # table name into regex syntax; VERDICT r12 nit #1)
-    for name, path in tables.items():
+    for name in tables:
         if re.search(rf"\b{re.escape(name)}\b", masked):
             ensure_head_view(spark, name)
     return spark.sql(rewritten)

@@ -693,7 +693,7 @@ def test_sql_merge_unconditional_first_matched_clause_refused(spark, tmp_path):
     spark.createDataFrame([(1,)], "k long").createOrReplaceTempView(
         "sdml_ord3_src"
     )
-    with pytest.raises(ValueError, match="UPDATE first"):
+    with pytest.raises(ValueError, match="only the last MATCHED clause"):
         tt.sql(
             spark,
             """
@@ -702,7 +702,7 @@ def test_sql_merge_unconditional_first_matched_clause_refused(spark, tmp_path):
             WHEN MATCHED THEN DELETE
             """,
         )
-    with pytest.raises(ValueError, match="unconditional"):
+    with pytest.raises(ValueError, match="only the last MATCHED clause"):
         tt.sql(
             spark,
             """
@@ -863,7 +863,7 @@ def test_create_table_refusals(spark, tmp_path):
         (
             f"CREATE TABLE sdml_ctr3 (x INT) USING versioned "
             f"LOCATION '{tmp_path}/r3' AS SELECT 1",
-            "mutually exclusive",
+            "Schema may not be specified",
         ),
         (
             f"CREATE TABLE sdml_ctr4 (x INT, b INT GENERATED ALWAYS AS "
@@ -878,7 +878,7 @@ def test_create_table_refusals(spark, tmp_path):
         (
             f"CREATE TABLE sdml_ctr6 (x INT) USING versioned "
             f"LOCATION '{tmp_path}/r6' WOBBLE",
-            "trailing clause",
+            "extra input 'WOBBLE'",
         ),
         (
             f"CREATE TABLE sdml_ctr7 (b INT GENERATED ALWAYS AS (1)) "
@@ -1395,3 +1395,122 @@ def test_sql_deep_clone(spark, tmp_path):
             "CREATE OR REPLACE TABLE sdml_dcl2 DEEP CLONE sdml_dcl "
             f"LOCATION '{tmp_path / 'd2'}'",
         )
+
+
+# -- one SQL front end: Spark's own parser reads every statement --------------
+
+
+def test_sql_merge_alias_never_rewritten_inside_literal(spark, tmp_path):
+    """Target/source aliases are re-qualified on the PARSED attribute
+    references only: alias-like text inside a string literal ('o.x')
+    is stored verbatim, while the real references still resolve."""
+    t = _mk(spark, tmp_path, "sdml_lit", rows=3)
+    spark.createDataFrame(
+        [(1, "n")], "k long, g string"
+    ).createOrReplaceTempView("sdml_lit_src")
+    tt.sql(
+        spark,
+        """
+        MERGE INTO sdml_lit AS o USING sdml_lit_src AS s ON o.k = s.k
+        WHEN MATCHED THEN UPDATE SET g = 'o.x', v = o.v + 10
+        """,
+    )
+    assert _state(t)[1] == (1, "o.x", 11.0)
+    tt.sql(
+        spark,
+        """
+        MERGE INTO sdml_lit AS o USING sdml_lit_src AS s ON o.k = s.k
+        WHEN MATCHED THEN UPDATE SET g = concat(s.g, ' s.g o.g')
+        """,
+    )
+    assert _state(t)[1] == (1, "n s.g o.g", 11.0)
+
+
+@pytest.mark.parametrize(
+    "stmt, changed",
+    [
+        ('UPDATE {t} SET g = "a, b" WHERE k = 1', {1: (1, "a, b", 1.0)}),
+        (
+            'UPDATE {t} SET g = "x WHERE y" WHERE k = 1',
+            {1: (1, "x WHERE y", 1.0)},
+        ),
+        ("DELETE FROM {t} -- c\nWHERE k = 1", {1: None}),
+        ("UPDATE {t} SET `g` = 'q' WHERE k = 2", {2: (2, "q", 2.0)}),
+        (
+            "MERGE INTO {t} AS t USING {t}_src AS s ON (t.k = s.k) "
+            "WHEN MATCHED THEN UPDATE SET v = s.v",
+            {3: (3, "g0", 30.0)},
+        ),
+    ],
+    ids=[
+        "update-dq-comma",
+        "update-dq-where",
+        "delete-line-comment",
+        "update-quoted-column",
+        "merge-parenthesized-on",
+    ],
+)
+def test_sql_valid_statements_accepted(spark, tmp_path, stmt, changed):
+    """Valid statements the old masked-regex grammar refused or
+    mis-split: double-quoted literals holding ',' or 'WHERE', a line
+    comment before WHERE, a backquoted column, a parenthesized ON.
+    Each leaves exactly the rows its Spark reading says."""
+    t = _mk(spark, tmp_path, "sdml_valid", rows=5)
+    spark.createDataFrame(
+        [(3, 30.0)], "k long, v double"
+    ).createOrReplaceTempView("sdml_valid_src")
+    tt.sql(spark, stmt.format(t="sdml_valid"))
+    want = {i: (i, f"g{i % 3}", float(i)) for i in range(5)}
+    for k, row in changed.items():
+        if row is None:
+            del want[k]
+        else:
+            want[k] = row
+    assert _state(t) == sorted(want.values())
+
+
+@pytest.mark.parametrize(
+    "kind, stmt",
+    [
+        (
+            "MERGE",
+            "MERGE INTO {t} t USING {t} s ON t.k = s.k WHEN MATCHED THEN",
+        ),
+        ("UPDATE", "UPDATE {t} SET g = WHERE k = 1"),
+        (
+            "CREATE TABLE",
+            "CREATE TABLE {t}_new (k BIGINT,) USING versioned "
+            "LOCATION '{loc}'",
+        ),
+    ],
+    ids=["merge", "update", "create-versioned"],
+)
+def test_sql_malformed_statement_refused_with_position(
+    spark, tmp_path, kind, stmt
+):
+    """A statement Spark cannot parse refuses as a ValueError naming
+    the statement kind and carrying Spark's parse position."""
+    t = _mk(spark, tmp_path, "sdml_bad", rows=2)
+    before = t.head_version()
+    with pytest.raises(
+        ValueError, match=rf"^{kind}: (?s:.*)\(line 1, pos \d+\)"
+    ):
+        tt.sql(spark, stmt.format(t="sdml_bad", loc=tmp_path / "new"))
+    assert t.head_version() == before
+
+
+def test_sql_delete_bare_exists_never_reads_as_no_where(spark, tmp_path):
+    """Spark builds a bare EXISTS without an origin of its own (it
+    carries the statement's span, like the TRUE literal of a DELETE
+    with no WHERE): the DELETE refuses instead of deleting every row."""
+    t = _mk(spark, tmp_path, "sdml_exists", rows=4)
+    spark.createDataFrame([(1,)], "k long").createOrReplaceTempView(
+        "sdml_exists_src"
+    )
+    with pytest.raises(ValueError, match="cannot locate"):
+        tt.sql(
+            spark,
+            "DELETE FROM sdml_exists WHERE EXISTS "
+            "(SELECT 1 FROM sdml_exists_src WHERE sdml_exists_src.k = 9)",
+        )
+    assert len(_state(t)) == 4

@@ -156,3 +156,14 @@ def test_table_changes_sql_surface(spark, tmp_path):
 def test_table_changes_unregistered_refused(spark):
     with pytest.raises(ValueError, match="unregistered"):
         tt.sql(spark, "SELECT * FROM table_changes('nope_xyz', 0)")
+
+
+def test_double_quoted_literal_is_not_rewritten(spark, table):
+    """Spark reads "..." as a string literal too: neither a travel
+    clause nor a table_changes call inside one is rewritten."""
+    got = tt.sql(
+        spark, 'SELECT "tt_events VERSION AS OF 0" AS s FROM tt_events'
+    ).collect()
+    assert [r["s"] for r in got] == ["tt_events VERSION AS OF 0"] * 3
+    got = tt.sql(spark, "SELECT \"table_changes('tt_events', 0)\" AS s")
+    assert got.collect()[0]["s"] == "table_changes('tt_events', 0)"
