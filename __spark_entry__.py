@@ -5985,7 +5985,7 @@ def _versioned_manifest_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     ptr1 = t._read_pointer(v1)
     v2 = t.append(c.repartition(2))
     ptr2 = t._read_pointer(v2)
-    seg2 = t._read_segment(ptr2["segments"][-1])
+    seg2 = t._log.read_segment(ptr2["segments"][-1])
     resolved = t._read_manifest(v2)
     appended_files = set(resolved["files"]) - set(t._read_manifest(v1)["files"])
     ok = (

@@ -40,6 +40,15 @@ ways), ``merge_scan_file_count`` and the input-file count of
 that raises records its error class. It exits 1 if any pointer or
 digest differs.
 
+``dump`` runs the op sequence twice: on plain paths, and on ``file://``
+URIs under a second scratch root, recorded as ``file:<table>/vNN``. A
+table on a URI takes the non-POSIX path through the commit log, so
+``compare`` checks the pointers that path commits too. The scratch root
+is masked but a ``file://`` prefix is kept, so recorded table, CDC and
+deletion-vector paths read ``file://<root>/...`` while data-file paths,
+which must stay scheme-stripped, read ``<root>/...``; a data-file path
+that gained the scheme shows as a difference.
+
 Statement records are keyed ``sql/NN`` in sequence order and hold the
 statement text, then ``columns`` and ``rows`` (sorted; commit
 timestamps masked) or ``error``. The statements after
@@ -71,14 +80,19 @@ def _rows(lo: int, hi: int, tag: str = "a") -> list[tuple]:
     return [(i, f"{tag}{i}", "even" if i % 2 == 0 else "odd", i * 10) for i in range(lo, hi)]
 
 
-def run_sequence(spark, root: str) -> dict[str, str]:
-    """Run the op sequence under ``root``; returns table name -> path."""
+def run_sequence(spark, root: str, scheme: str = "") -> dict[str, str]:
+    """Run the op sequence under ``root``, with every table path (and
+    the COPY INTO source) prefixed by ``scheme``; returns table name ->
+    path."""
     from social_media_etl_spark.operators.manifest import VersionedTable
 
     def df(rows, schema=SCHEMA, parts=1):
         return spark.createDataFrame(rows, schema).coalesce(parts)
 
-    paths = {n: os.path.join(root, n) for n in ("a", "b", "c", "clone", "deep", "id")}
+    paths = {
+        n: scheme + os.path.join(root, n)
+        for n in ("a", "b", "c", "clone", "deep", "id")
+    }
 
     # -- table a: stats, bloom, change feed, constraints, generated ----------
     a = VersionedTable.create(
@@ -104,9 +118,10 @@ def run_sequence(spark, root: str) -> dict[str, str]:
             ),
             os.path.join(land, f"f{i}.parquet"),
         )
-    a.copy_into(land, pattern="*.parquet")
+    a.copy_into(scheme + land, pattern="*.parquet")
     a.set_properties({"team": "etl", "smetl.dml.mode": "cow"}, txn="t2")
-    a.copy_into(land, pattern="*.parquet")  # every file loaded: no commit
+    # every file loaded: no commit
+    a.copy_into(scheme + land, pattern="*.parquet")
     a.upsert(df([(3, "up3", "odd", 31), (70, "new70", "even", 700)]), ["k"], ["x"])
     a.delete("k = 5", txn="t3", prune=[("k", 5, 5)])
     a.delete("k = 7", mode="mor")
@@ -409,7 +424,6 @@ def _prune_digest(spark, t, v: int) -> str:
 
 def dump(checkout: str, out: str) -> None:
     sys.path.insert(0, os.path.abspath(checkout))
-    from social_media_etl_spark.operators.manifest import VersionedTable
     from social_media_etl_spark.session import get_spark
 
     spark = get_spark("commit-pointers", master="local[2]")
@@ -420,9 +434,28 @@ def dump(checkout: str, out: str) -> None:
     record: dict = {
         f"sql/{i:02d}": _mask(rec, root) for i, rec in enumerate(statements)
     }
+    _dump_tables(spark, paths, root, "", record)
+    # the same op sequence on file:// URIs: the tables' non-POSIX path
+    froot = os.path.realpath(tempfile.mkdtemp(prefix="smetl_pointers_"))
+    fpaths = run_sequence(spark, froot, "file://")
+    _dump_tables(spark, fpaths, froot, "file:", record)
+    with open(out, "w") as fh:
+        json.dump(record, fh, indent=1, sort_keys=True)
+    print(f"{len(record)} pointers and statement records -> {out}")
+    spark.stop()
+    shutil.rmtree(root, ignore_errors=True)
+    shutil.rmtree(froot, ignore_errors=True)
+
+
+def _dump_tables(spark, paths: dict, root: str, prefix: str, record: dict) -> None:
+    """Add each table's pointers and digests to ``record``, keyed
+    ``<prefix><table>/vNN``; ``root`` is the scratch root the paths
+    sit under, with or without a ``file://`` scheme."""
+    from social_media_etl_spark.operators.manifest import VersionedTable
+
     for name, path in paths.items():
         t = VersionedTable(spark, path)
-        mdir = os.path.join(path, "_manifests")
+        mdir = os.path.join(path.removeprefix("file://"), "_manifests")
         for fname in sorted(os.listdir(mdir)):
             if not re.fullmatch(r"v\d{8}\.json", fname):
                 continue
@@ -444,12 +477,7 @@ def dump(checkout: str, out: str) -> None:
             if name == "a" and v > 0:
                 ptr["feed_digest"] = _digest(lambda: t.read_change_feed(v - 1, v))
             ptr["prune_digest"] = _prune_digest(spark, t, v)
-            record[f"{name}/{fname[:-5]}"] = ptr
-    with open(out, "w") as fh:
-        json.dump(record, fh, indent=1, sort_keys=True)
-    print(f"{len(record)} pointers and statement records -> {out}")
-    spark.stop()
-    shutil.rmtree(root, ignore_errors=True)
+            record[f"{prefix}{name}/{fname[:-5]}"] = ptr
 
 
 def _significant(ptr: dict) -> dict:

@@ -53,8 +53,9 @@ _REGISTRY: dict[tuple[str, str], str] = {}
 #: per call — the memo turns the no-change refreshes into one
 #: head_version() listing (r15 optimization). Never a RESULT cache: a
 #: view is only skipped when the head version (which pins the
-#: immutable manifest, file list, and DVs) AND the head manifest
-#: file's identity (mtime_ns, size — so a table directory deleted and
+#: immutable manifest, file list, and DVs) AND the head manifest's
+#: identity in the commit log (``TableLog.identity``: mtime_ns and
+#: size on every filesystem — so a table directory deleted and
 #: recreated at the same path up to the same version still misses,
 #: ADVICE r15) are exactly what the live view was registered from.
 #: Entries from other (stopped) applications are swept once the memo
@@ -62,23 +63,6 @@ _REGISTRY: dict[tuple[str, str], str] = {}
 _VIEW_VERSION: dict[tuple[str, str], tuple] = {}
 
 _VIEW_VERSION_MAX = 512
-
-
-def _manifest_identity(t: VersionedTable, head: int):
-    """(mtime_ns, size) of the head manifest file on local tables —
-    the cheap identity that distinguishes a recreated table at the
-    same path/version. Remote tables return None (a per-refresh
-    remote stat would cost what the memo saves); their memo falls
-    back to (path, version) alone."""
-    if not t._local:
-        return None
-    import os
-
-    try:
-        st = os.stat(t._manifest_path(head))
-        return (st.st_mtime_ns, st.st_size)
-    except OSError:
-        return None
 
 
 def ensure_head_view(
@@ -94,7 +78,7 @@ def ensure_head_view(
     if t is None or t.path != path:
         t = VersionedTable(spark, path)
     head = t.head_version()
-    ident = _manifest_identity(t, head)
+    ident = t._log.identity(head)
     if _VIEW_VERSION.get(key) == (
         path,
         head,

@@ -655,7 +655,7 @@ def sync_table_changes(
         # a metadata-only commit plans no rows and records no txn (a
         # later poll re-reads its pointer; it never appends)
         if plan_changes(
-            src, v - 1, v, typed=False, caller="sync_table_changes"
+            src._log, v - 1, v, typed=False, caller="sync_table_changes"
         ):
             dst.append(src.read_changes(v - 1, v), txn=txn)
             applied.append(txn)

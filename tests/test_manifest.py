@@ -898,13 +898,23 @@ def test_read_changes_and_cdc_sync_over_partitioned_appends(spark, tmp_path):
     assert sorted(r["k"] for r in dst.read().collect()) == list(range(12))
 
 
-def test_version_as_of_and_history(spark, tmp_path):
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["posix", "file"])
+def test_version_as_of_and_history(spark, tmp_path, scheme):
     """Timestamp time travel resolves to the highest commit at or
-    before the instant (commit instant = the manifest's CAS rename
-    mtime), and history() surfaces the commit log as a DataFrame."""
+    before the instant (commit instant = the manifest's CAS mtime),
+    and history() surfaces the commit log as a DataFrame. Then the
+    rest of the protocol on the same table — append, read_changes,
+    COW and MoR delete, update and merge, read(v), read_change_feed
+    and vacuum — on a plain path and on a ``file://`` URI, the
+    table's non-POSIX path through its commit log."""
     import time
 
-    t = VersionedTable.create(spark, str(tmp_path / "t"), _df(spark, [(1, "a", 1)]))
+    t = VersionedTable.create(
+        spark,
+        scheme + str(tmp_path / "t"),
+        _df(spark, [(1, "a", 1)]),
+        change_data_feed=True,
+    )
     time.sleep(0.05)
     mid_ms = int(time.time() * 1000)
     time.sleep(0.05)
@@ -920,6 +930,36 @@ def test_version_as_of_and_history(spark, tmp_path):
     assert hist[1]["op"] == "append" and hist[1]["txn"] == "tx-1"
     assert hist[1]["n_files"] > hist[0]["n_files"] - 1
     assert hist[0]["commit_ts_ms"] <= mid_ms <= hist[1]["commit_ts_ms"]
+
+    t.append(_df(spark, [(3, "c", 3), (4, "d", 4)]))  # v2
+    assert sorted(r["k"] for r in t.read_changes(1, 2).collect()) == [3, 4]
+    t.delete("k = 1")  # v3
+    t.delete("k = 2", mode="mor")  # v4
+    t.update("k = 3", {"v": "'c2'"})  # v5
+    t.update("k = 4", {"v": "'d2'"}, mode="mor")  # v6
+    for rows, mode in (
+        ([(3, "m", 9), (5, "e", 5)], "cow"),  # v7
+        ([(4, "n", 0), (6, "f", 6)], "mor"),  # v8
+    ):
+        t.merge(
+            _df(spark, rows),
+            on=["k"],
+            when_matched_update={"v": "s.v"},
+            when_not_matched_insert="*",
+            mode=mode,
+        )
+    final = [(3, "m", 3), (4, "n", 4), (5, "e", 5), (6, "f", 6)]
+    assert t.head_version() == 8
+    assert sorted(map(tuple, t.read().collect())) == final
+    assert sorted(r["k"] for r in t.read(2).collect()) == [1, 2, 3, 4]
+    with pytest.raises(ValueError, match="rewrite"):
+        t.read_changes(2, 3)
+    feed = {(r["k"], r["_change_type"]) for r in t.read_change_feed(2, 4).collect()}
+    assert feed == {(1, "delete"), (2, "delete")}
+    assert t.version_as_of(int(time.time() * 1000) + 1000) == 8
+    assert len(t.history().collect()) == 9
+    assert t.vacuum(keep_last=1, min_age_seconds=0) >= 1
+    assert sorted(map(tuple, t.read().collect())) == final
 
 
 def test_delete_with_prune_hints_narrows_find_scan(spark, tmp_path):

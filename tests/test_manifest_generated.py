@@ -123,7 +123,8 @@ def test_generated_delete_ok_and_feature_gate(spark, tmp_path):
             generated={"a": "v + 1", "b": "a * 2"},
         )
     # feature gating: a build without 'generated' support must refuse
-    import social_media_etl_spark.operators.manifest as m
+    # (the gate reads the commit log's feature set)
+    import social_media_etl_spark.operators.table_log as m
 
     old = m.SUPPORTED_FEATURES
     m.SUPPORTED_FEATURES = frozenset(old - {"generated"})

@@ -165,7 +165,7 @@ def test_supported_set_is_the_documented_ten(spark):
 
 
 def test_read_plan_memo_does_not_bypass_feature_gate(spark, tmp_path):
-    from social_media_etl_spark.operators import manifest as m
+    from social_media_etl_spark.operators import table_log as m
 
     t = VersionedTable.create(
         spark,

@@ -15,6 +15,7 @@ from social_media_etl_spark.operators.manifest import (
     UnsupportedTableFeatureError,
     VersionedTable,
 )
+from social_media_etl_spark.operators.table_log import TableLog
 
 
 def _df(spark, rows):
@@ -49,7 +50,7 @@ def test_append_metadata_is_o_of_appended_files(spark, tmp_path):
         v = t.append(_df(spark, [(10 + i, "x")]))
         after = _pointer(t, v)
         assert after["segments"][:-1] == before["segments"]  # reuse by NAME
-        new_seg = t._read_segment(after["segments"][-1])
+        new_seg = t._log.read_segment(after["segments"][-1])
         appended = set(t._read_manifest(v)["files"]) - set(
             t._read_manifest(v - 1)["files"]
         )
@@ -159,7 +160,7 @@ def test_segment_cache_serves_repeat_resolution(spark, tmp_path):
     t = VersionedTable.create(spark, str(tmp_path / "t"), _df(spark, [(1, "a")]))
     name = _pointer(t, 0)["segments"][0]
     t._read_manifest(0)
-    assert (t.path, name) in VersionedTable._SEG_CACHE
+    assert (t.path, name) in TableLog._SEG_CACHE
     # cached → a second resolve never re-opens the file (poison the
     # on-disk copy and resolve again)
     (tmp_path / "t" / "_manifests" / name).write_text("NOT JSON")

@@ -167,3 +167,37 @@ def test_double_quoted_literal_is_not_rewritten(spark, table):
     assert [r["s"] for r in got] == ["tt_events VERSION AS OF 0"] * 3
     got = tt.sql(spark, "SELECT \"table_changes('tt_events', 0)\" AS s")
     assert got.collect()[0]["s"] == "table_changes('tt_events', 0)"
+
+
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["posix", "file"])
+def test_recreated_table_never_serves_the_old_plan(spark, tmp_path, scheme):
+    """A table deleted and recreated at the same path, up to the same
+    version, has new manifests: neither ``read()``'s plan memo nor the
+    registered head view may serve the old table's files. The memo
+    keys carry the head manifest's identity from the commit log on
+    every filesystem, a ``file://`` URI included."""
+    import shutil
+
+    path = scheme + str(tmp_path / "t")
+
+    def build(tag):
+        t = VersionedTable.create(spark, path, _df(spark, [(0, tag)]))
+        for k in (1, 2, 3):
+            t.append(_df(spark, [(k, tag)]))
+        return t
+
+    build("old")
+    tt.register_table(spark, "tt_recreated", path)
+    assert {r["v"] for r in VersionedTable(spark, path).read().collect()} == {
+        "old"
+    }
+    assert tt.sql(spark, "SELECT DISTINCT v FROM tt_recreated").collect()[0][
+        "v"
+    ] == "old"
+    shutil.rmtree(tmp_path / "t")
+    t = build("new")
+    assert sorted(map(tuple, t.read().collect())) == [
+        (k, "new") for k in range(4)
+    ]
+    got = tt.sql(spark, "SELECT k, v FROM tt_recreated ORDER BY k").collect()
+    assert [tuple(r) for r in got] == [(k, "new") for k in range(4)]
