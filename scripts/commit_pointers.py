@@ -311,6 +311,14 @@ SQL_SEQUENCE = [
     "INSERT INTO sq_fix (k, s) REPLACE WHERE k = 1 SELECT 1, 'z'",
     "ALTER TABLE sq_fix ADD COLUMN nn INT NOT NULL",
     "ALTER TABLE sq_fix SET TBLPROPERTIES ()",
+    # -- CREATE OR REPLACE builds the table definition as CREATE does:
+    # -- fresh field ids (a rename of a new column works) and the
+    # -- reserved-name refusal
+    "CREATE OR REPLACE TABLE sq_fix (k BIGINT, s STRING, x INT, w INT) "
+    "USING versioned LOCATION '{root}/sq_fix'",
+    "ALTER TABLE sq_fix RENAME COLUMN w TO w2",
+    "CREATE OR REPLACE TABLE sq_fix (k BIGINT, __s_hit BOOLEAN) "
+    "USING versioned LOCATION '{root}/sq_fix'",
 ]
 SQL_FIXED_FROM = SQL_SEQUENCE.index(
     next(s for s in SQL_SEQUENCE if s.startswith("CREATE TABLE sq_fix"))

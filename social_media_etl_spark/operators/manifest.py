@@ -605,32 +605,6 @@ class VersionedTable:
                 "by the engine; they cannot be assigned"
             )
 
-    @staticmethod
-    def _validate_identity(
-        identity: dict, columns: list[str], generated: dict | None
-    ) -> None:
-        """CREATE/REPLACE-time validation of an identity declaration:
-        ``{col: {"start": int, "step": int}}`` — the column must be
-        declared (bigint, checked by the caller against the schema),
-        the step nonzero, and the column must not also be GENERATED
-        ALWAYS AS (expr)."""
-        for col, spec in identity.items():
-            if col not in columns:
-                raise ValueError(
-                    f"VersionedTable: identity column {col!r} not in "
-                    f"the table schema {columns}"
-                )
-            if int(spec.get("step", 1)) == 0:
-                raise ValueError(
-                    f"VersionedTable: identity column {col!r} has "
-                    "INCREMENT BY 0 — the sequence would never advance"
-                )
-            if generated and col in generated:
-                raise ValueError(
-                    f"VersionedTable: column {col!r} cannot be both "
-                    "GENERATED ALWAYS AS (expr) and IDENTITY"
-                )
-
     def _alloc_identity(
         self, df: DataFrame, id_map: dict | None, allow_present: bool = False
     ) -> tuple[DataFrame, list[str]]:
@@ -887,7 +861,8 @@ class VersionedTable:
     #: describes only the commit that wrote it and is never carried.
     #: Full rewrites carry ``aliases`` too: once no live footer holds an
     #: old physical name its alias entries are inert (reads coalesce
-    #: only the names a footer actually has).
+    #: only the names a footer actually has). A new definition
+    #: (:meth:`_define`) drops them, since its footers may reuse a name.
     _CARRY = (
         "schema",
         "schema_json",
@@ -1795,6 +1770,169 @@ class VersionedTable:
         return dict(self._read_pointer(self.head_version()).get("constraints") or {})
 
     @classmethod
+    def _check_layout(cls, op: str, columns, partition_by, bucket_by) -> None:
+        """The partition rules of a table definition (create, REPLACE,
+        :meth:`set_partition_spec`): every spec column is a table
+        column, and a partition spec does not compose with a bucket
+        layout."""
+        if partition_by and bucket_by:
+            raise ValueError(
+                f"VersionedTable.{op}: partition_by does not compose "
+                "with bucket_by — pick one layout"
+            )
+        missing = [c for c in cls._pb_cols(partition_by) if c not in columns]
+        if missing:
+            raise ValueError(
+                f"VersionedTable.{op}: unknown partition column(s) "
+                f"{missing} — not in the table schema {list(columns)}"
+            )
+
+    @staticmethod
+    def _bloom_config(
+        op: str, columns, bloom_cols, bits: int, k: int
+    ) -> dict | None:
+        """The bloom rules of a table definition (create, REPLACE,
+        :meth:`analyze`): the config for ``bloom_cols``, or None
+        without any; every column is a table column, bits >= 64, k >= 1."""
+        if not bloom_cols:
+            return None
+        missing = [c for c in bloom_cols if c not in columns]
+        if missing:
+            raise ValueError(
+                f"VersionedTable.{op}: bloom_cols {missing} not in the "
+                "table schema"
+            )
+        if bits < 64 or k < 1:
+            raise ValueError(
+                f"VersionedTable.{op}: bloom_bits must be >= 64 and "
+                "bloom_hashes >= 1"
+            )
+        return {"cols": list(bloom_cols), "bits": int(bits), "k": int(k)}
+
+    def _define(
+        self,
+        df: DataFrame,
+        base: dict,
+        op: str,
+        *,
+        stats_cols: list[str],
+        partition_by,
+        bucket_by: dict | None,
+        bloom_cols: list[str] | None,
+        bloom_bits: int,
+        bloom_hashes: int,
+        cdf: bool,
+        constraints: dict,
+        generated: dict[str, str] | None,
+        identity: dict[str, dict] | None,
+    ) -> tuple[DataFrame, dict, list[str]]:
+        """Check and build a table definition: the one place
+        :meth:`create` (``base = {}``) and REPLACE (``base`` = the head
+        pointer) do it. Returns the frame with generated and identity
+        columns applied, the definition fields the commit records, and
+        the identity columns allocated on the frame (the caller records
+        their watermark once the files are written). Runs no Spark
+        action beyond an identity column's emptiness probe.
+
+        The new table's schema, ``mixed = False`` and ``field_ids`` are
+        built from the frame, with no alias chains or dropped names;
+        its features are ``base``'s plus the ones the definition uses."""
+        gen = dict(generated or {})
+        # a generation expression may not reference another generated
+        # column (Delta's rule — evaluation order would otherwise
+        # matter) nor itself
+        for g, expr in gen.items():
+            circular = set(gen) & self._expr_identifiers(expr)
+            if circular:
+                raise ValueError(
+                    f"VersionedTable.{op}: generated column '{g}' "
+                    f"expression references generated column(s) "
+                    f"{sorted(circular)} — generation expressions may "
+                    "only use regular columns"
+                )
+        df = self._apply_generated(df, gen)
+        # GENERATED ALWAYS AS IDENTITY (r15 — Delta identity columns):
+        # {col: {"start": s, "step": i}}; the column is engine-owned
+        # BIGINT. "high" records the watermark the next allocation
+        # continues from (start - step ⇒ the first id is exactly start)
+        id_map: dict[str, dict] = {}
+        for col, spec in (identity or {}).items():
+            s, i = int(spec.get("start", 1)), int(spec.get("step", 1))
+            if i == 0:
+                raise ValueError(
+                    f"VersionedTable.{op}: identity column {col!r} has "
+                    "INCREMENT BY 0 — the sequence would never advance"
+                )
+            if col in gen:
+                raise ValueError(
+                    f"VersionedTable.{op}: column {col!r} cannot be both "
+                    "GENERATED ALWAYS AS (expr) and IDENTITY"
+                )
+            if col in df.columns:
+                t = df.schema[col].dataType.simpleString()
+                if t != "bigint":
+                    raise ValueError(
+                        f"VersionedTable.{op}: identity column {col!r} "
+                        f"must be BIGINT, got {t}"
+                    )
+            id_map[col] = {"start": s, "step": i, "high": s - i}
+        df, id_alloc = self._alloc_identity(df, id_map, allow_present=True)
+        self._check_reserved_names(df.columns, op)
+        self._check_layout(op, df.columns, partition_by, bucket_by)
+        bloom = self._bloom_config(
+            op, df.columns, bloom_cols, bloom_bits, bloom_hashes
+        )
+        used = {
+            "cdf": cdf,
+            "bloom": bloom,
+            "bucket": bucket_by,
+            "constraints": constraints,
+            "generated": gen,
+            "identity": id_map,
+        }
+        return df, {
+            "schema": df.schema.simpleString(),
+            "schema_json": df.schema.json(),
+            "mixed": False,
+            "stats_cols": stats_cols,
+            # per-file bloom bitmaps for point-lookup skipping (r11):
+            # every data-adding commit inherits the config and records
+            # bitmaps for its OWN files; read_where_eq consults them
+            "bloom": bloom,
+            "partition_by": partition_by,
+            "bucket_by": bucket_by,
+            # Delta's enableChangeDataFeed: COW DELETE/UPDATE commits
+            # then write their row-level changes as CDC files, making
+            # read_change_feed/readChangeFeed cover them (r10)
+            "cdf": cdf,
+            "constraints": constraints,
+            # GENERATED ALWAYS AS expressions (r13) and IDENTITY specs
+            # with their high watermark (r15); carried by every commit
+            # (_CARRY)
+            "generated": gen,
+            "identity": id_map,
+            # name→field-id indirection (VERDICT r9 #4, the Iceberg/
+            # Delta column-mapping substrate): ids are assigned once
+            # here, survive renames (the id keeps its identity, the
+            # name key moves), and additive evolution mints new ids
+            "field_ids": {
+                f.name: i + 1 for i, f in enumerate(df.schema.fields)
+            },
+            # the base's alias chains and dropped physical names
+            # describe files this definition replaces; carried, a read
+            # after the next rename would coalesce a new column that
+            # reuses an old name into the one aliased to it
+            **{k: None for k in ("aliases", "dropped_phys") if base.get(k)},
+            # protocol gate (VERDICT r11 #2): the feature set a reader
+            # must understand to interpret this table; ops that first
+            # USE a feature later (MoR DML → dv, rename → column_
+            # mapping, widen_column → widen) add their flag then
+            "features": self._features_with(
+                base, "segments", *(n for n, on in used.items() if on)
+            ),
+        }, id_alloc
+
+    @classmethod
     def create(
         cls,
         spark: SparkSession,
@@ -1836,130 +1974,39 @@ class VersionedTable:
         expression mentions, and MERGE inserts compute it — so
         readers (and partition pruning) may always trust the column.
         Recorded as the ``generated`` table feature; expressions may
-        not reference other generated columns."""
+        not reference other generated columns.
+
+        The definition is checked and built by :meth:`_define`, the
+        same path REPLACE (``overwrite(replace_schema=True)``) takes,
+        so both refuse the same definitions with the same messages."""
         t = cls(spark, path)
         if t.versions():
             raise IOError(f"VersionedTable: {path} already initialized")
-        if generated:
-            # a generation expression may not reference another
-            # generated column (Delta's rule — evaluation order would
-            # otherwise matter) nor itself
-            for g, expr in generated.items():
-                circular = set(generated) & cls._expr_identifiers(expr)
-                if circular:
-                    raise ValueError(
-                        f"VersionedTable.create: generated column "
-                        f"'{g}' expression references generated "
-                        f"column(s) {sorted(circular)} — generation "
-                        "expressions may only use regular columns"
-                    )
-            df = cls._apply_generated(df, generated)
-        id_map: dict[str, dict] = {}
-        id_alloc: list[str] = []
-        if identity:
-            # GENERATED ALWAYS AS IDENTITY (r15 — Delta identity
-            # columns): {col: {"start": s, "step": i}}; the column is
-            # engine-owned BIGINT. "high" records the watermark the
-            # next allocation continues from (start - step ⇒ the
-            # first id is exactly start).
-            cls._validate_identity(
-                identity,
-                sorted(set(df.columns) | set(identity)),
-                generated,
-            )
-            for col, spec in identity.items():
-                s, i = int(spec.get("start", 1)), int(spec.get("step", 1))
-                id_map[col] = {"start": s, "step": i, "high": s - i}
-                if col in df.columns and (
-                    df.schema[col].dataType.simpleString() != "bigint"
-                ):
-                    raise ValueError(
-                        f"VersionedTable.create: identity column "
-                        f"{col!r} must be BIGINT, got "
-                        f"{df.schema[col].dataType.simpleString()}"
-                    )
-            df, id_alloc = t._alloc_identity(
-                df, id_map, allow_present=True
-            )
-        cls._check_reserved_names(df.columns, "create")
-        bucket = None
-        if bucket_by is not None:
-            if partition_by:
-                raise ValueError(
-                    "VersionedTable: bucket_by does not compose with "
-                    "partition_by yet — pick one layout"
-                )
-            bcol, nb = bucket_by
-            bucket = {"col": bcol, "n": int(nb)}
-        bloom = None
-        if bloom_cols:
-            missing = [c for c in bloom_cols if c not in df.columns]
-            if missing:
-                raise ValueError(
-                    f"VersionedTable: bloom_cols {missing} not in the "
-                    "table schema"
-                )
-            if bloom_bits < 64 or bloom_hashes < 1:
-                raise ValueError(
-                    "VersionedTable: bloom_bits must be >= 64 and "
-                    "bloom_hashes >= 1"
-                )
-            bloom = {
-                "cols": list(bloom_cols),
-                "bits": int(bloom_bits),
-                "k": int(bloom_hashes),
-            }
-        files = t._write_data(df, 0, partition_by, bucket)
-        m = {
-            "schema": df.schema.simpleString(),
-            "schema_json": df.schema.json(),
-            "mixed": False,
-            "stats_cols": stats_cols or [],
-            # per-file bloom bitmaps for point-lookup skipping (r11):
-            # every data-adding commit inherits the config and records
-            # bitmaps for its OWN files; read_where_eq consults them
-            "bloom": bloom,
-            "partition_by": partition_by,
-            "bucket_by": bucket,
-            # Delta's enableChangeDataFeed: COW DELETE/UPDATE commits
-            # then write their row-level changes as CDC files, making
-            # read_change_feed/readChangeFeed cover them (r10)
-            "cdf": bool(change_data_feed),
-            "constraints": constraints or {},
-            # GENERATED ALWAYS AS expressions (r13): computed when an
-            # ingest omits the column, validated in-plan when it
-            # supplies one; carried by every commit (_CARRY)
-            "generated": generated or {},
-            # GENERATED ALWAYS AS IDENTITY specs + per-column high
-            # watermark (r15): advanced by every allocating commit,
-            # carried by the rest (_CARRY)
-            "identity": cls._bump_identity(
-                id_map,
-                t._identity_watermark(files, id_map, id_alloc),
-            )
-            if id_map
-            else {},
-            # name→field-id indirection (VERDICT r9 #4, the Iceberg/
-            # Delta column-mapping substrate): ids are assigned once
-            # here, survive renames (the id keeps its identity, the
-            # name key moves), and additive evolution mints new ids
-            "field_ids": {
-                f.name: i + 1 for i, f in enumerate(df.schema.fields)
-            },
-            # protocol gate (VERDICT r11 #2): the feature set a reader
-            # must understand to interpret this table; ops that first
-            # USE a feature later (MoR DML → dv, rename → column_
-            # mapping, widen_column → widen) add their flag then
-            "features": sorted(
-                ["segments"]
-                + (["cdf"] if change_data_feed else [])
-                + (["bloom"] if bloom else [])
-                + (["bucket"] if bucket else [])
-                + (["constraints"] if constraints else [])
-                + (["generated"] if generated else [])
-                + (["identity"] if id_map else [])
+        df, m, id_alloc = t._define(
+            df,
+            {},
+            "create",
+            stats_cols=stats_cols or [],
+            partition_by=partition_by,
+            bucket_by=(
+                None
+                if bucket_by is None
+                else {"col": bucket_by[0], "n": int(bucket_by[1])}
             ),
-        }
+            bloom_cols=bloom_cols,
+            bloom_bits=bloom_bits,
+            bloom_hashes=bloom_hashes,
+            cdf=bool(change_data_feed),
+            constraints=constraints or {},
+            generated=generated,
+            identity=identity,
+        )
+        files = t._write_data(df, 0, partition_by, m["bucket_by"])
+        if id_alloc:
+            m["identity"] = t._bump_identity(
+                m["identity"],
+                t._identity_watermark(files, m["identity"], id_alloc),
+            )
         t._commit(
             "create",
             None,
@@ -2787,7 +2834,18 @@ class VersionedTable:
         as ``smetl.dml.mode``; pass ``{}`` to clear, omit to carry
         the old map). All four refuse without ``replace_schema`` —
         they redefine the table, which a schema-preserving overwrite
-        must not."""
+        must not.
+
+        REPLACE checks and builds the new definition in
+        :meth:`_define`, the path :meth:`create` takes, so it refuses
+        what create refuses (reserved names, a non-BIGINT identity, a
+        circular generated column, a partition spec on a bucket
+        layout) and builds the same fields: ``field_ids`` are minted
+        fresh from the replacement schema, and the old table's column
+        mapping (alias chains, dropped names) is not carried. What it carries from the old table — the stats and
+        bloom columns still live, the partition spec unless its column
+        is gone, the constraints and the properties unless new ones
+        are given — is decided here."""
         parent = self.head_version()
         if not replace_schema and (
             partition_by is not _UNSET
@@ -2803,114 +2861,85 @@ class VersionedTable:
             )
         if properties is not None:
             self._validate_properties(properties)
-        id_map: dict[str, dict] = {}
-        id_alloc: list[str] = []
+        base = self._read_pointer(parent)
         if replace_schema:
-            if identity:
-                # REPLACE declares a NEW identity contract (create's
-                # semantics); omitted = the old map drops with the
-                # rest of the old schema, like generated
-                self._validate_identity(
-                    identity,
-                    sorted(set(df.columns) | set(identity)),
-                    generated,
-                )
-                for col, spec in identity.items():
-                    s = int(spec.get("start", 1))
-                    i = int(spec.get("step", 1))
-                    id_map[col] = {"start": s, "step": i, "high": s - i}
-                df, id_alloc = self._alloc_identity(
-                    df, id_map, allow_present=True
-                )
+            # the REPLACE carry rules, over the replacement's columns
+            # (its own plus the generated and identity ones it gains)
+            live = set(df.columns) | set(generated or {}) | set(identity or {})
+            if partition_by is _UNSET:
+                partition_by = base.get("partition_by")
+                if not set(self._pb_cols(partition_by)) <= live:
+                    partition_by = None  # new schema dropped its column
+            if constraints is None:
+                # CHECK constraints carry across the swap; one whose
+                # expression reads a column the new schema dropped
+                # would fail every later ingest with a raw Catalyst
+                # error — refuse crisply instead, mirroring drop_column
+                old_cols = {
+                    f.name for f in self._manifest_schema(base).fields
+                }
+                constraints = base.get("constraints") or {}
+                for cname, cexpr in constraints.items():
+                    broken = sorted(
+                        (self._expr_identifiers(cexpr) & old_cols) - live
+                    )
+                    if broken:
+                        raise ValueError(
+                            "VersionedTable.overwrite: CHECK constraint "
+                            f"{cname!r} references column(s) {broken} "
+                            "absent from the replacement schema; drop "
+                            "the constraint first (or pass a "
+                            "replacement constraints map)"
+                        )
+            # indexes over columns the new schema dropped go (stats
+            # over absent columns would record dead all-NULL census
+            # entries forever)
+            bloom = base.get("bloom") or {}
+            df, m, id_alloc = self._define(
+                df,
+                base,
+                "overwrite",
+                stats_cols=[
+                    c for c in base.get("stats_cols") or [] if c in live
+                ],
+                partition_by=partition_by,
+                bucket_by=base.get("bucket_by"),
+                bloom_cols=[c for c in bloom.get("cols") or [] if c in live],
+                bloom_bits=bloom.get("bits", 2048),
+                bloom_hashes=bloom.get("k", 3),
+                cdf=bool(base.get("cdf")),
+                constraints=dict(constraints),
+                generated=generated,
+                identity=identity,
+            )
+            id_map = m["identity"]
+            if properties is not None:
+                # the REPLACE lands as ONE commit: the declared
+                # property map rides the same CAS as the data swap,
+                # so no reader ever sees the new definition under the
+                # old table's properties (ADVICE r14 #1)
+                m["properties"] = dict(properties)
         else:
-            id_map = self._read_pointer(parent).get("identity") or {}
+            id_map = base.get("identity") or {}
             # a truncate-and-load CONTINUES the sequence from the
             # watermark — ids are never reused (Delta's contract)
             df, id_alloc = self._alloc_identity(df, id_map)
             if id_alloc:
-                tbl = self._manifest_schema(self._read_pointer(parent))
+                tbl = self._manifest_schema(base)
                 order = [f.name for f in tbl.fields if f.name in df.columns]
                 order += [c for c in df.columns if c not in order]
                 df = df.select(*order)
-        if not replace_schema:
-            # replace_schema redefines the table, dropping the
-            # generation contract with the rest of the old schema;
-            # a plain overwrite keeps enforcing it on the new rows
-            df = self._apply_generated(
-                df, self._read_pointer(parent).get("generated")
-            )
-        elif generated:
-            for g, gexpr in generated.items():
-                circular = set(generated) & self._expr_identifiers(gexpr)
-                if circular:
-                    raise ValueError(
-                        "VersionedTable.overwrite: generated column "
-                        f"'{g}' expression references generated "
-                        f"column(s) {sorted(circular)} — generation "
-                        "expressions may only use regular columns"
-                    )
-            df = self._apply_generated(df, generated)
-        base = self._read_pointer(parent)
-        if replace_schema:
-            sch = {
-                "schema": df.schema.simpleString(),
-                "schema_json": df.schema.json(),
-                "mixed": False,
-            }
-        else:
-            sch = self._check_schema(df, base)
+            # a plain overwrite keeps enforcing the generation contract
+            # on the new rows
+            df = self._apply_generated(df, base.get("generated"))
+            m = self._check_schema(df, base)
             # a full rewrite lands every logical column in every file
-            sch["mixed"] = False
-        new_pb = partition_by
-        partition_by = base.get("partition_by")
-        if replace_schema and new_pb is not _UNSET:
-            partition_by = new_pb
-            if partition_by:
-                if base.get("bucket_by"):
-                    raise ValueError(
-                        "VersionedTable.overwrite: partition_by does "
-                        "not compose with a bucket layout — the table "
-                        "is bucket-spec'd"
-                    )
-                missing = [
-                    c
-                    for c in self._pb_cols(partition_by)
-                    if c not in df.columns
-                ]
-                if missing:
-                    raise ValueError(
-                        "VersionedTable.overwrite: partition column(s) "
-                        f"{missing} not in the replacement schema "
-                        f"{df.columns}"
-                    )
-        elif replace_schema and partition_by and any(
-            c not in df.columns for c in self._pb_cols(partition_by)
-        ):
-            partition_by = None  # new schema dropped a partition column
-        if replace_schema and constraints is None:
-            # CHECK constraints carry across the swap; one whose
-            # expression reads a column the new schema dropped would
-            # fail every later ingest with a raw Catalyst error —
-            # refuse crisply instead, mirroring drop_column (r14)
-            old_cols = {f.name for f in self._manifest_schema(base).fields}
-            for cname, cexpr in (base.get("constraints") or {}).items():
-                broken = sorted(
-                    (self._expr_identifiers(cexpr) & old_cols)
-                    - set(df.columns)
-                )
-                if broken:
-                    raise ValueError(
-                        "VersionedTable.overwrite: CHECK constraint "
-                        f"{cname!r} references column(s) {broken} "
-                        "absent from the replacement schema; drop the "
-                        "constraint first (or pass a replacement "
-                        "constraints map)"
-                    )
+            m["mixed"] = False
+            m["partition_by"] = base.get("partition_by")
         files = self._write_data(
-            df, parent + 1, partition_by, base.get("bucket_by")
+            df, parent + 1, m["partition_by"], base.get("bucket_by")
         )
-        v = parent + 1
-        cdc_dir = None
+        m["cdc"] = None
         if base.get("cdf"):
             # change-data-feed table (r11, completing the DML set
             # after r10 delete/update/merge and upsert): a
@@ -2930,60 +2959,10 @@ class VersionedTable:
                     allowMissingColumns=True,
                 )
             )
-            cdc_dir = self._write_cdc_if_any(cdc, v)
-        stats_cols = base.get("stats_cols") or []
-        bloom_cfg = base.get("bloom")
-        if replace_schema:
-            # the new schema may have dropped indexed columns — keep
-            # only the live ones (stats over absent columns would
-            # record dead all-NULL census entries forever)
-            stats_cols = [c for c in stats_cols if c in df.columns]
-            if bloom_cfg:
-                live_bloom = [
-                    c for c in bloom_cfg["cols"] if c in df.columns
-                ]
-                bloom_cfg = (
-                    {**bloom_cfg, "cols": live_bloom} if live_bloom else None
-                )
-        m = {
-            **sch,
-            "stats_cols": stats_cols,
-            "bloom": bloom_cfg,
-            "partition_by": partition_by,
-            "cdc": cdc_dir,
-        }
-        if replace_schema:
-            if constraints is not None:
-                m["constraints"] = dict(constraints)
-            # the schema swap redefines the table — generation
-            # expressions over the OLD columns no longer apply; a
-            # supplied map declares the NEW contract (create's
-            # semantics, r14)
-            m["generated"] = dict(generated or {})
-            m["identity"] = (
-                self._bump_identity(
-                    id_map,
-                    self._identity_watermark(files, id_map, id_alloc),
-                )
-                if id_map
-                else {}
-            )
-            m["features"] = self._features_with(
-                base,
-                *(["generated"] if generated else []),
-                *(["constraints"] if constraints else []),
-                *(["identity"] if id_map else []),
-            )
-            if properties is not None:
-                # the REPLACE lands as ONE commit: the declared
-                # property map rides the same CAS as the data swap,
-                # so no reader ever sees the new definition under the
-                # old table's properties (ADVICE r14 #1)
-                m["properties"] = dict(properties)
-        elif id_alloc:
+            m["cdc"] = self._write_cdc_if_any(cdc, parent + 1)
+        if id_alloc:
             m["identity"] = self._bump_identity(
-                id_map,
-                self._identity_watermark(files, id_map, id_alloc),
+                id_map, self._identity_watermark(files, id_map, id_alloc)
             )
         return self._commit(
             "overwrite",
@@ -3762,15 +3741,13 @@ class VersionedTable:
                 )
             bloom_bits = int(cur_bloom_cfg["bits"])
             bloom_hashes = int(cur_bloom_cfg["k"])
-        elif want_bloom and (bloom_bits < 64 or bloom_hashes < 1):
-            raise ValueError(
-                "VersionedTable.analyze: bloom_bits must be >= 64 and "
-                "bloom_hashes >= 1"
-            )
         added_stats = [c for c in want_stats if c not in cur_stats]
         added_bloom = [c for c in want_bloom if c not in cur_bloom]
         if not added_stats and not added_bloom:
             return parent
+        new_bloom_cfg = self._bloom_config(
+            "analyze", known, cur_bloom + added_bloom, bloom_bits, bloom_hashes
+        )
         aliases = base.get("aliases") or {}
         new_entries = (
             self._collect_stats(
@@ -3798,15 +3775,6 @@ class VersionedTable:
             else {}
         )
         new_stats_cols = cur_stats + added_stats
-        new_bloom_cfg = (
-            {
-                "cols": cur_bloom + added_bloom,
-                "bits": bloom_bits,
-                "k": bloom_hashes,
-            }
-            if (cur_bloom or added_bloom)
-            else None
-        )
         segs = []
         for name in ptr["segments"]:
             seg = self._log.read_segment(name)
@@ -4317,20 +4285,12 @@ class VersionedTable:
         each would make old values misread under the new spec."""
         parent = self.head_version()
         ptr = self._read_pointer(parent)
-        if ptr.get("bucket_by"):
-            raise ValueError(
-                "VersionedTable.set_partition_spec: bucket_by does not "
-                "compose with partition_by"
-            )
-        new_spec = self._pb_cols(partition_by)
-        if new_spec:
-            names = {f.name for f in self._manifest_schema(ptr).fields}
-            missing = [c for c in new_spec if c not in names]
-            if missing:
-                raise ValueError(
-                    "VersionedTable.set_partition_spec: unknown "
-                    f"partition column(s) {missing}"
-                )
+        self._check_layout(
+            "set_partition_spec",
+            [f.name for f in self._manifest_schema(ptr).fields],
+            partition_by,
+            ptr.get("bucket_by"),
+        )
         old_spec = self._pb_cols(ptr.get("partition_by"))
         if old_spec:
             for name in ptr["segments"]:

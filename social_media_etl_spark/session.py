@@ -56,11 +56,23 @@ from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "DEFAULT_CONF"]
 
+
+def _default_driver_memory() -> str:
+    """Half of physical memory, capped at 16g. In local mode the driver
+    JVM is the executor too, so its heap is sized to the machine, not
+    to Spark's 1g default; the other half stays with the Python workers
+    and whatever else the host runs."""
+    try:
+        half_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 >> 20
+    except (ValueError, OSError):
+        return "16g"
+    return "16g" if half_mib >= 16 << 10 else f"{half_mib}m"
+
+
 DEFAULT_CONF: dict[str, str] = {
-    # local mode: the driver JVM IS the executor — size its heap to the
-    # machine, not Spark's 1g default (only applies at JVM launch; a
-    # pre-existing session keeps its own setting)
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    # only applies at JVM launch; a pre-existing session keeps its own
+    # setting. SPARK_GRAFT_DRIVER_MEM sets it per deployment.
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",

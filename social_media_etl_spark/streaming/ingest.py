@@ -289,13 +289,29 @@ def run_available_now(
     return stream_df.sparkSession.table(query_name)
 
 
+def _drain_foreach_batch(
+    stream_df: DataFrame, sink: Callable[[DataFrame, int], None], checkpoint_dir: str
+):
+    """Run ``sink`` on every micro-batch of an ``availableNow`` drain of
+    ``stream_df`` (checkpointed at ``checkpoint_dir``): everything
+    currently available, then the query stops. Returns the stopped
+    query — the drain every ``write_foreach_batch_*`` sink runs."""
+    q = (
+        stream_df.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
+
+
 def write_foreach_batch_overwrite(
     stream_df: DataFrame,
     target_path: str,
     checkpoint_dir: str,
     transform: Callable[[DataFrame], DataFrame] | None = None,
     fmt: str = "parquet",
-    available_now: bool = True,
 ):
     """The reference's idempotent truncate-and-load (SURVEY §2.2 K4) as
     a streaming sink: each micro-batch runs ``transform`` and
@@ -349,16 +365,7 @@ def write_foreach_batch_overwrite(
             target_path
         )
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-    return q
+    return _drain_foreach_batch(stream_df, _sink, checkpoint_dir)
 
 
 def write_foreach_batch_upsert(
@@ -367,7 +374,6 @@ def write_foreach_batch_upsert(
     checkpoint_dir: str,
     key_cols: Sequence[str],
     order_cols: Sequence[str],
-    available_now: bool = True,
 ):
     """Streaming micro-batch MERGE: each batch upserts into a keyed
     parquet serving table, keeping the highest ``order_cols`` row per
@@ -400,15 +406,7 @@ def write_foreach_batch_upsert(
             list(order_cols),
         )
 
-    writer = stream_df.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-    return q
+    return _drain_foreach_batch(stream_df, _sink, checkpoint_dir)
 
 
 def write_foreach_batch_incremental_agg(
@@ -417,7 +415,6 @@ def write_foreach_batch_incremental_agg(
     checkpoint_dir: str,
     group_cols: Sequence[str],
     value_col: str,
-    available_now: bool = True,
 ):
     """Incrementally-maintained rollup (materialized view) via
     ``foreachBatch``: each micro-batch writes its PARTIAL aggregate
@@ -447,15 +444,7 @@ def write_foreach_batch_incremental_agg(
             .parquet(target_path)
         )
 
-    writer = stream_df.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-    return q
+    return _drain_foreach_batch(stream_df, _sink, checkpoint_dir)
 
 
 def read_incremental_rollup(
@@ -481,7 +470,6 @@ def write_foreach_batch_cms(
     depth: int = 4,
     width: int = 1024,
     seed: int = 7,
-    available_now: bool = True,
 ):
     """Streaming frequency-sketch maintenance: each micro-batch builds
     its own count-min sketch (``functions/sketches.py:cms_build``) and
@@ -508,15 +496,7 @@ def write_foreach_batch_cms(
             .parquet(target_path)
         )
 
-    writer = stream_df.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-    return q
+    return _drain_foreach_batch(stream_df, _sink, checkpoint_dir)
 
 
 def read_cms_sketch(spark: SparkSession, target_path: str) -> DataFrame:
@@ -534,7 +514,6 @@ def write_foreach_batch_versioned(
     stream_df: DataFrame,
     table_path: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     app_id: str = "stream",
 ):
     """Exactly-once streaming commits into a VersionedTable
@@ -563,15 +542,7 @@ def write_foreach_batch_versioned(
             return  # replayed batch — already committed
         t.append(batch_df, txn=txn)
 
-    writer = stream_df.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-    return q
+    return _drain_foreach_batch(stream_df, _sink, checkpoint_dir)
 
 
 def sync_table_changes(

@@ -125,24 +125,20 @@ def test_connected_components_chain_and_islands(spark):
         assert out == want, f"threshold={threshold}"
 
 
-def test_component_threshold_conf_knob_and_memory_default(spark):
-    """VERDICT r8 #7: driver_threshold=None resolves the session conf
-    spark.smetl.dedup.driverComponentThreshold; without the conf the
-    default derives from driver memory (capped at the old 1M constant,
-    floored at 10k) instead of being a constant."""
+def test_component_threshold_forced_path_and_memory_default(spark):
+    """VERDICT r8 #7: driver_threshold forces a path (0 runs the
+    distributed loop); driver_threshold=None takes a default derived
+    from driver memory (capped at the old 1M constant, floored at 10k)
+    instead of a constant."""
     pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
     want = {1: 1, 2: 1, 3: 1}
-    key = "spark.smetl.dedup.driverComponentThreshold"
-    spark.conf.set(key, "0")  # force the DISTRIBUTED path on 4 edges
-    try:
-        out = dedup.connected_components(pairs)
-        # the distributed loop's output is a joined/propagated frame,
-        # not a driver-side LocalTableScan
-        plan = out._jdf.queryExecution().optimizedPlan().toString()
-        assert "LocalRelation" not in plan.splitlines()[0]
-        assert {r["node"]: r["component"] for r in out.collect()} == want
-    finally:
-        spark.conf.unset(key)
+    # force the DISTRIBUTED path on 4 edges
+    out = dedup.connected_components(pairs, driver_threshold=0)
+    # the distributed loop's output is a joined/propagated frame,
+    # not a driver-side LocalTableScan
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" not in plan.splitlines()[0]
+    assert {r["node"]: r["component"] for r in out.collect()} == want
     derived = dedup._driver_component_threshold(spark)
     assert 10_000 <= derived <= 1_000_000
     out2 = {

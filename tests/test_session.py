@@ -149,6 +149,26 @@ def test_publish_moves_the_archive_and_records_its_size(install):
     assert session._plan_launch({}).java_options.startswith("-XX:SharedArchiveFile=")
 
 
+@pytest.mark.parametrize(
+    "phys_gib, want", [(15.7, "8038m"), (4, "2048m"), (32, "16g"), (256, "16g")]
+)
+def test_default_driver_memory_is_half_the_host_capped_at_16g(monkeypatch, phys_gib, want):
+    sizes = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": int(phys_gib * (1 << 30)) // 4096}
+    monkeypatch.setattr(session.os, "sysconf", sizes.__getitem__)
+    assert session._default_driver_memory() == want
+
+
+def test_driver_memory_env_overrides_the_default():
+    code = "from social_media_etl_spark.session import DEFAULT_CONF as c; print(c['spark.driver.memory'])"
+    env = {**os.environ, "PYTHONPATH": str(REPO)}
+    env.pop("SPARK_GRAFT_DRIVER_MEM", None)
+    got = subprocess.run([sys.executable, "-c", code], env=env, capture_output=True, text=True, check=True)
+    assert got.stdout.strip() == session._default_driver_memory()
+    env["SPARK_GRAFT_DRIVER_MEM"] = "3g"
+    got = subprocess.run([sys.executable, "-c", code], env=env, capture_output=True, text=True, check=True)
+    assert got.stdout.strip() == "3g"
+
+
 def test_file_stream_sink_logs_errors_only(spark):
     logger = spark._jvm.org.apache.logging.log4j.LogManager.getLogger(
         "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink"
