@@ -1506,8 +1506,10 @@ def test_set_partition_spec_refusals_and_cdc_transparency(spark, tmp_path):
     tb = VersionedTable.create(
         spark, str(tmp_path / "tb"), df, bucket_by=("k", 2)
     )
-    with pytest.raises(ValueError, match="compose"):
-        tb.set_partition_spec("v")
+    for spec in ("v", None):  # a bucket layout has no spec to clear
+        with pytest.raises(ValueError, match="compose"):
+            tb.set_partition_spec(spec)
+    assert tb.head_version() == 0
     # a spec change is metadata-only: read_changes spans CROSS it
     t.set_partition_spec("v")
     t.append(spark.createDataFrame([(2, "b")], "k long, v string"))

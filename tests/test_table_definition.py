@@ -26,7 +26,6 @@ CASES = {
         "generated column",
     ),
     "partition_with_bucket": (BASE, {"bucket_by": ("k", 2)}, {"partition_by": "s"}, "does not compose"),
-    "unknown_bloom_column": (BASE, {}, {"bloom_cols": ["nope"]}, "not in the table schema"),
 }
 
 
@@ -48,14 +47,31 @@ def test_create_and_replace_refuse_the_same_definitions(spark, tmp_path, entry, 
         return
     t = VersionedTable.create(spark, path, _frame(spark, BASE), **table_kw)
     with pytest.raises(ValueError, match=phrase):
-        if "bloom_cols" in define_kw:
-            # REPLACE declares no bloom index (it carries the old one's
-            # live columns); the bloom rule's other caller is analyze
-            t.overwrite(df, replace_schema=True)
-            t.analyze(**define_kw)
-        else:
-            t.overwrite(df, replace_schema=True, **define_kw)
-    assert t.head_version() == (1 if "bloom_cols" in define_kw else 0)
+        t.overwrite(df, replace_schema=True, **define_kw)
+    assert t.head_version() == 0
+
+
+def test_create_refuses_an_unknown_bloom_column(spark, tmp_path):
+    """REPLACE declares no bloom index (it carries the old one's live
+    columns), so only create can name an unknown one."""
+    with pytest.raises(ValueError, match="not in the table schema"):
+        VersionedTable.create(spark, str(tmp_path / "t"), _frame(spark, BASE), bloom_cols=["nope"])
+
+
+@pytest.mark.parametrize("evolve", ["rename", "drop"])
+def test_analyze_after_a_bloom_column_moved(spark, tmp_path, evolve):
+    """The bloom config keeps a renamed or dropped column's old name;
+    analyze checks only the columns it adds, so it still indexes."""
+    df = spark.createDataFrame([(1, "a", 10)], "k long, s string, y long")
+    t = VersionedTable.create(spark, str(tmp_path / "t"), df, bloom_cols=["y"])
+    if evolve == "rename":
+        t.rename_column("y", "z")
+    else:
+        t.drop_column("y")
+    assert t.analyze(stats_cols=["k"]) == 2
+    ptr = t._read_pointer(2)
+    assert ptr["stats_cols"] == ["k"]
+    assert ptr["bloom"]["cols"] == ["y"]
 
 
 def test_replace_mints_fresh_field_ids_so_new_columns_rename(spark, tmp_path):
@@ -112,3 +128,20 @@ def test_replace_starts_a_fresh_column_mapping(spark, tmp_path):
     t.rename_column("k", "kk")  # a rename makes the read footer-merged
     got = sorted(tuple(r) for r in t.read().collect())
     assert got == [(1, "zv", "yv"), (2, None, "y2")]
+
+
+def test_replace_keeps_the_feed_mapping_of_a_renamed_column(spark, tmp_path):
+    """A REPLACE that redeclares a renamed column keeps its alias chain,
+    so the change feed still shows the rows committed before the rename
+    under the new name."""
+    t = VersionedTable.create(
+        spark, str(tmp_path / "t"), spark.createDataFrame([(1, "a")], "k long, y string"), change_data_feed=True
+    )
+    t.rename_column("y", "z")
+    t.overwrite(spark.createDataFrame([(2, "b")], "k long, z string"), replace_schema=True)
+    assert t._read_pointer(2)["aliases"] == {"z": ["y"]}
+    got = sorted(
+        (r["_commit_version"], r["_change_type"], r["k"], r["z"])
+        for r in t.read_change_feed(-1).collect()
+    )
+    assert got == [(0, "insert", 1, "a"), (2, "delete", 1, "a"), (2, "insert", 2, "b")]
