@@ -9,7 +9,10 @@ column, set_partition_spec, COW and MoR delete, update and merge,
 overwrite_where, scoped and full optimize) on small seeded tables. The
 MoR ops cover every clause kind (a merge with matched-delete and
 by-source clauses on the change-feed table) and both layout branches of
-MoR file sizing (updates on a partitioned and on a bucketed table). A second,
+MoR file sizing (updates on a partitioned and on a bucketed table). The
+bucketed table ends with an upsert that adds a column; the identity
+table takes every op that allocates ids (append, overwrite_where,
+overwrite and a merge insert). A second,
 fixed SQL sequence (``SQL_SEQUENCE``) runs one statement of every form
 the ``sqldml`` grammar takes through ``timetravel.sql`` on small seeded
 tables, and records each statement's result rows, or the class of the
@@ -190,6 +193,12 @@ def run_sequence(spark, root: str, scheme: str = "") -> dict[str, str]:
     c.append(df(_rows(16, 20)))
     c.update("k = 2", {"s": "'b2'"})
     c.update("k >= 5 AND k < 9", {"x": "x + 1"}, mode="mor")
+    # an upsert that adds a column (append's additive evolution)
+    c.upsert(
+        spark.createDataFrame([(2, "u2", "even", 21, "w2")], SCHEMA + ", w string"),
+        ["k"],
+        ["x"],
+    )
 
     # -- table id: identity + generated columns ------------------------------
     ids = VersionedTable.create(
@@ -202,6 +211,11 @@ def run_sequence(spark, root: str, scheme: str = "") -> dict[str, str]:
     ids.append(spark.createDataFrame([("c", 3)], "s string, x int"))
     ids.overwrite_where(spark.createDataFrame([("d", 4)], "s string, x int"), "x >= 3")
     ids.overwrite(spark.createDataFrame([("e", 5)], "s string, x int"))
+    ids.merge(
+        spark.createDataFrame([("e", 50), ("f", 6)], "s string, x int"),
+        on=["s"],
+        when_not_matched_insert="*",
+    )
     return paths
 
 
@@ -434,7 +448,15 @@ def dump(checkout: str, out: str) -> None:
     sys.path.insert(0, os.path.abspath(checkout))
     from social_media_etl_spark.session import get_spark
 
-    spark = get_spark("commit-pointers", master="local[2]")
+    # the shuffle-partition count decides how many part files a
+    # shuffled write leaves (read_where_in's input files in
+    # prune_digest); get_spark takes it from SPARK_GRAFT_CPUS, so pin it
+    # to the master's two cores and dumps compare across environments
+    spark = get_spark(
+        "commit-pointers",
+        master="local[2]",
+        extra_conf={"spark.sql.shuffle.partitions": "2"},
+    )
     root = os.path.realpath(tempfile.mkdtemp(prefix="smetl_pointers_"))
     paths = run_sequence(spark, root)
     sql_paths, statements = run_sql_sequence(spark, root)

@@ -605,22 +605,32 @@ class VersionedTable:
                 "by the engine; they cannot be assigned"
             )
 
+    @staticmethod
+    def _identity_sql(spec: dict) -> str:
+        """The SQL text of one identity column's allocation,
+        ``watermark + step * (monotonically_increasing_id() + 1)`` as
+        BIGINT — what :meth:`_alloc_identity` adds to an ingest frame
+        and MERGE projects over its unmatched source rows."""
+        return (
+            f"CAST({int(spec['high'])} + {int(spec['step'])}"
+            " * (monotonically_increasing_id() + 1) AS BIGINT)"
+        )
+
     def _alloc_identity(
         self, df: DataFrame, id_map: dict | None, allow_present: bool = False
     ) -> tuple[DataFrame, list[str]]:
         """GENERATED ALWAYS AS IDENTITY allocation (r15, VERDICT r14
         #7 — Delta's identity columns): for each identity column the
-        ingest OMITS, allocate ``watermark + step * (mid + 1)`` where
-        ``mid`` is ``monotonically_increasing_id()`` — per-partition
-        id blocks, the Delta/Snowflake reserve-a-range pattern: NO
-        global sort, NO shuffle, NO driver loop; ids are unique and
-        monotone within each commit and strictly beyond every earlier
-        commit's watermark, at the price of GAPS between partition
-        blocks (Delta documents the same). An ingest that SUPPLIES
-        the column refuses — ALWAYS means the engine owns the values
+        ingest OMITS, add :meth:`_identity_sql` — per-partition id
+        blocks, the Delta/Snowflake reserve-a-range pattern: NO global
+        sort, NO shuffle, NO driver loop; ids are unique and monotone
+        within each commit and strictly beyond every earlier commit's
+        watermark, at the price of GAPS between partition blocks
+        (Delta documents the same). An ingest that SUPPLIES the column
+        refuses — ALWAYS means the engine owns the values
         (``allow_present`` admits the zero-row declared-schema frame
         CREATE TABLE builds). Returns (df, allocated column names);
-        the commit path derives the new watermark from the written
+        :meth:`_commit` derives the new watermark from the written
         files' stats and records it in the manifest."""
         if not id_map:
             return df, []
@@ -634,16 +644,43 @@ class VersionedTable:
                     "ALWAYS AS IDENTITY — omit it from the ingest; "
                     "values are allocated by the engine"
                 )
-            df = df.withColumn(
-                col,
-                (
-                    F.lit(int(spec["high"]))
-                    + F.lit(int(spec["step"]))
-                    * (F.monotonically_increasing_id() + F.lit(1))
-                ).cast("bigint"),
-            )
+            df = df.withColumn(col, F.expr(self._identity_sql(spec)))
             allocated.append(col)
         return df, allocated
+
+    def _conform(
+        self, df: DataFrame, ptr: dict, allow_present: bool = False
+    ) -> tuple[DataFrame, dict | None, list[str]]:
+        """Bring an ingest frame to the table definition ``ptr`` — the
+        one place every data-adding commit does it, in one fixed order:
+        allocate the identity columns the frame omits
+        (:meth:`_alloc_identity`), apply the generated map
+        (:meth:`_apply_generated`, after the allocation so a generation
+        expression may read an identity column), restore the table's
+        column order (new columns last) and check the schema
+        (:meth:`_check_schema`). Returns the frame, the schema fields
+        the commit records and the allocated columns, whose watermark
+        :meth:`_commit` records. A frame that already matches the table
+        gets no projection and no Spark action.
+
+        A definition being built (:meth:`_define`; ``ptr`` holds only
+        its identity and generated maps, no schema yet) takes the first
+        two steps; its schema fields are None."""
+        df, allocated = self._alloc_identity(
+            df, ptr.get("identity"), allow_present
+        )
+        df = self._apply_generated(df, ptr.get("generated"))
+        if "schema_json" not in ptr:
+            return df, None, allocated
+        order = [
+            f.name
+            for f in self._manifest_schema(ptr).fields
+            if f.name in df.columns
+        ]
+        order += [c for c in df.columns if c not in order]
+        if order != df.columns:
+            df = df.select(*order)
+        return df, self._check_schema(df, ptr), allocated
 
     def _identity_watermark(
         self, files: list[str], id_map: dict, allocated: list[str]
@@ -722,32 +759,40 @@ class VersionedTable:
         }
 
     @staticmethod
+    def _strict_cast_sql(sql: str, name: str, t: str, what: str) -> str:
+        """The engine-wide strict cast as SQL text: evaluate ``sql``,
+        cast it to type ``t``, and raise in-plan (never a silent NULL —
+        ADVICE r8) when a non-NULL value does not fit, with the message
+        ``<what> column '<name>' does not fit type <t> for value
+        '<v>'``. SQL text (r16) parses in one ``F.expr`` or
+        ``selectExpr`` call instead of ~12 py4j Column-DSL round trips
+        per column; the resolved expression tree is the same."""
+        p = (
+            f"{what} column '{name}' does not fit type {t} for value '"
+        ).replace("'", "''")
+        e = f"({sql})"
+        return (
+            f"CASE WHEN {e} IS NOT NULL "
+            f"AND CAST({e} AS {t}) IS NULL "
+            f"THEN CAST(raise_error(concat('{p}', "
+            f"CAST({e} AS STRING), '''')) AS {t}) "
+            f"ELSE CAST({e} AS {t}) END"
+        )
+
+    @classmethod
     def _strict_casts(
-        exprs: dict[str, str], types: dict, what: str
+        cls, exprs: dict[str, str], types: dict, what: str
     ) -> dict[str, Column]:
-        """``{col: sql}`` as ``{col: Column}`` under the engine-wide
-        strict-cast contract: evaluate each expression, cast it to its
-        column's type, and raise in-plan (never a silent NULL — ADVICE
-        r8) when a non-NULL value does not fit, with the message
-        ``<what> column '<col>' does not fit type <t> for value
-        '<v>'``. One ``F.expr`` parse per column (r16) instead of ~12
-        py4j Column-DSL round trips; the resolved expression tree is
-        identical."""
-        out = {}
-        for name, sql in exprs.items():
-            t = types[name].simpleString()
-            p = (
-                f"{what} column '{name}' does not fit type {t} for value '"
-            ).replace("'", "''")
-            e = f"({sql})"
-            out[name] = F.expr(
-                f"CASE WHEN {e} IS NOT NULL "
-                f"AND CAST({e} AS {t}) IS NULL "
-                f"THEN CAST(raise_error(concat('{p}', "
-                f"CAST({e} AS STRING), '''')) AS {t}) "
-                f"ELSE CAST({e} AS {t}) END"
+        """``{col: sql}`` as ``{col: Column}``, each expression under
+        :meth:`_strict_cast_sql` to its column's type."""
+        return {
+            name: F.expr(
+                cls._strict_cast_sql(
+                    sql, name, types[name].simpleString(), what
+                )
             )
-        return out
+            for name, sql in exprs.items()
+        }
 
     @staticmethod
     def _bump_identity(
@@ -898,9 +943,11 @@ class VersionedTable:
         rebase=None,
         carry_from: dict | None = None,
         retries: int = 10,
+        allocated: list[str] = (),
     ) -> int:
         """Commit one version — the only place a manifest pointer is
-        built and CASed. Returns the committed version.
+        built and CASed, and the only place an identity watermark
+        moves. Returns the committed version.
 
         The child pointer is the parent's :attr:`_CARRY` keys (or
         ``carry_from``'s: restore carries its target snapshot, a clone
@@ -918,12 +965,21 @@ class VersionedTable:
         validates CHECK constraints over ``new_files`` once, before
         the first CAS.
 
+        ``allocated`` names the identity columns whose ids the op
+        allocated (:meth:`_conform`) from the first attempt's
+        ``identity`` map. Their watermark over ``new_files``
+        (:meth:`_identity_watermark`) is computed once, before the
+        first CAS, and every attempt bumps the child's map outward to
+        it (:meth:`_bump_identity`).
+
         On a lost CAS, ``rebase(parent, ptr)`` returns the new
         ``(parent, ptr)`` to retry on or raises; without it the commit
         raises :class:`ConcurrentWriteError` naming the op and its
-        stale parent."""
+        stale parent. A rebase onto a head whose identity map is not
+        the one the ids came from refuses too: the staged ids could
+        collide with the winner's, and a re-run reallocates."""
         ptr = {} if parent is None else self._read_pointer(parent)
-        new_segs = None
+        new_segs = id_map = marks = None
         for _ in range(retries):
             src = ptr if carry_from is None else carry_from
             m = {k: src[k] for k in self._CARRY if k in src}
@@ -947,6 +1003,14 @@ class VersionedTable:
                     m.get("partition_by"),
                     m.get("bloom"),
                 )
+                id_map = m.get("identity") or {}
+                marks = (
+                    self._identity_watermark(new_files, id_map, allocated)
+                    if allocated
+                    else {}
+                )
+            if marks:
+                m["identity"] = self._bump_identity(m["identity"], marks)
             if removed is _ALL_FILES:
                 m.pop("delete_vectors", None)
                 m["segments"], m["n_files"] = [], 0
@@ -968,6 +1032,12 @@ class VersionedTable:
                     "re-run"
                 )
             parent, ptr = rebase(parent, ptr)
+            if allocated and (ptr.get("identity") or {}) != id_map:
+                raise ConcurrentWriteError(
+                    f"VersionedTable: {op} raced a commit that advanced "
+                    "the identity watermark; the staged ids are stale — "
+                    "re-run"
+                )
         raise ConcurrentWriteError(
             f"VersionedTable: {op} lost {retries} CAS races"
         )
@@ -1825,9 +1895,11 @@ class VersionedTable:
         :meth:`create` (``base = {}``) and REPLACE (``base`` = the head
         pointer) do it. Returns the frame with generated and identity
         columns applied, the definition fields the commit records, and
-        the identity columns allocated on the frame (the caller records
-        their watermark once the files are written). Runs no Spark
-        action beyond an identity column's emptiness probe.
+        the identity columns allocated on the frame (the caller hands
+        them to :meth:`_commit`, which records their watermark). The
+        frame is brought to the definition by :meth:`_conform`, in the
+        ingest ops' order. Runs no Spark action beyond an identity
+        column's emptiness probe.
 
         The new table's schema, ``mixed = False`` and ``field_ids`` are
         built from the frame; ``base``'s alias chains lose the names the
@@ -1846,7 +1918,6 @@ class VersionedTable:
                     f"{sorted(circular)} — generation expressions may "
                     "only use regular columns"
                 )
-        df = self._apply_generated(df, gen)
         # GENERATED ALWAYS AS IDENTITY (r15 — Delta identity columns):
         # {col: {"start": s, "step": i}}; the column is engine-owned
         # BIGINT. "high" records the watermark the next allocation
@@ -1872,7 +1943,16 @@ class VersionedTable:
                         f"must be BIGINT, got {t}"
                     )
             id_map[col] = {"start": s, "step": i, "high": s - i}
-        df, id_alloc = self._alloc_identity(df, id_map, allow_present=True)
+        # the ingest ops' order: ids first, so a generation expression
+        # may read an identity column
+        df, _, id_alloc = self._conform(
+            df, {"identity": id_map, "generated": gen}, allow_present=True
+        )
+        # a definition's columns: the frame's, the generated ones it
+        # lacks, then the allocated identity ones
+        order = [c for c in df.columns if c not in id_alloc] + id_alloc
+        if order != df.columns:
+            df = df.select(*order)
         self._check_reserved_names(df.columns, op)
         self._check_layout(op, df.columns, partition_by, bucket_by)
         # REPLACE passes only the old index's live columns, so this
@@ -2013,11 +2093,6 @@ class VersionedTable:
             identity=identity,
         )
         files = t._write_data(df, 0, partition_by, m["bucket_by"])
-        if id_alloc:
-            m["identity"] = t._bump_identity(
-                m["identity"],
-                t._identity_watermark(files, m["identity"], id_alloc),
-            )
         t._commit(
             "create",
             None,
@@ -2026,6 +2101,7 @@ class VersionedTable:
             new_files=files,
             removed=_ALL_FILES,
             check=True,
+            allocated=id_alloc,
         )
         return t
 
@@ -2360,54 +2436,24 @@ class VersionedTable:
         file list is never materialized, so a commit to a 10⁶-file
         table moves the same few KB as a commit to a 10-file one."""
         parent = self.head_version()
-        _ptr0 = self._read_pointer(parent)
-        id_map = _ptr0.get("identity") or {}
-        df, id_alloc = self._alloc_identity(df, id_map)
-        if id_alloc:
-            # allocation appends the column; restore the table's
-            # declared column order for the written files
-            tbl = self._manifest_schema(_ptr0)
-            order = [f.name for f in tbl.fields if f.name in df.columns]
-            order += [c for c in df.columns if c not in order]
-            df = df.select(*order)
-        df = self._apply_generated(df, _ptr0.get("generated"))
-        self._check_schema(df, _ptr0)
-        partition_by = _ptr0.get("partition_by")
-        bucket_by = _ptr0.get("bucket_by")
+        ptr = self._read_pointer(parent)
+        df, _, id_alloc = self._conform(df, ptr)
+        partition_by = ptr.get("partition_by")
+        bucket_by = ptr.get("bucket_by")
         files = self._write_data(df, parent + 1, partition_by, bucket_by)
-        id_marks = (
-            self._identity_watermark(files, id_map, id_alloc)
-            if id_alloc
-            else {}
-        )
 
         def fields(base: dict) -> dict:
             # the winner of a lost race may itself have evolved the
             # schema: re-validate against each head tried
             out = self._check_schema(df, base)
-            if id_marks:
-                out["identity"] = self._bump_identity(id_map, id_marks)
             # op-specific metadata riders (copy_into's loaded-file
             # record) — never carried keys, so every attempt re-applies
             # them verbatim
-            out.update(_commit_extra or {})
-            return out
+            return {**out, **(_commit_extra or {})}
 
         def rebase(_parent: int, _ptr: dict) -> tuple[int, dict]:
             head = self.head_version()
             base = self._read_pointer(head)
-            if id_alloc and (base.get("identity") or {}) != id_map:
-                # a raced commit advanced the identity watermark: the
-                # staged files carry ids allocated from the STALE
-                # watermark and could collide with the winner's —
-                # refuse the rebase; a re-run reallocates from the
-                # new head (uniqueness over convenience, the Delta
-                # identity-conflict behavior)
-                raise ConcurrentWriteError(
-                    "VersionedTable: append raced a commit that "
-                    "advanced the identity watermark; the staged ids "
-                    "are stale — re-run"
-                )
             # a raced writer may have changed the PARTITION SPEC (an
             # overwrite(replace_schema=True) can drop the partition
             # column); our files are already laid out under the stale
@@ -2437,6 +2483,7 @@ class VersionedTable:
             check=True,
             rebase=rebase,
             retries=max_retries,
+            allocated=id_alloc,
         )
 
     def copy_into(
@@ -2512,6 +2559,14 @@ class VersionedTable:
         the head moved while merging, the merge is stale and the
         caller must re-run (snapshot isolation).
 
+        The incoming rows meet the table definition as an append's do
+        (:meth:`_conform`): generated columns compute or validate, and
+        the schema contract is :meth:`_check_schema`'s — a new column
+        is added as a nullable column (NULL on the table's rows), a
+        missing column or a type drift refuses before anything is
+        written. Tables with identity columns refuse: an upsert
+        rewrites rows, and allocating ids for them is not defined.
+
         On a ``change_data_feed=True`` table the commit also records
         classified CDC rows (insert / update_preimage /
         update_postimage — VERDICT r10 #8), so ``read_change_feed``
@@ -2523,7 +2578,8 @@ class VersionedTable:
         from pyspark.sql import functions as F
 
         parent = self.head_version()
-        if self._read_pointer(parent).get("identity"):
+        base = self._read_pointer(parent)
+        if base.get("identity"):
             raise ValueError(
                 "VersionedTable.upsert: table has GENERATED ALWAYS "
                 "AS IDENTITY column(s) — upsert cannot allocate ids; "
@@ -2531,10 +2587,11 @@ class VersionedTable:
                 "without IDENTITY"
             )
         current = self.read(parent)
-        df = self._apply_generated(
-            df, self._read_pointer(parent).get("generated")
-        )
-        merged = current.unionByName(df.select(*current.columns))
+        df, sch, _ = self._conform(df, base)
+        # a column the frame adds reads as NULL on the table's rows
+        for f in self._manifest_schema(sch).fields[len(current.columns):]:
+            current = current.withColumn(f.name, F.lit(None).cast(f.dataType))
+        merged = current.unionByName(df)
         w = Window.partitionBy(*key_cols).orderBy(
             *[F.desc(c) for c in order_cols]
         )
@@ -2543,7 +2600,6 @@ class VersionedTable:
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        base = self._read_pointer(parent)
         partition_by = base.get("partition_by")
         files = self._write_data(
             latest, parent + 1, partition_by, base.get("bucket_by")
@@ -2639,6 +2695,7 @@ class VersionedTable:
             "upsert",
             parent,
             {
+                **sch,
                 # a full rewrite lands every logical column in every
                 # file, collapsing any earlier mixed layout back to
                 # uniform
@@ -2925,7 +2982,6 @@ class VersionedTable:
                 generated=generated,
                 identity=identity,
             )
-            id_map = m["identity"]
             if properties is not None:
                 # the REPLACE lands as ONE commit: the declared
                 # property map rides the same CAS as the data swap,
@@ -2933,19 +2989,10 @@ class VersionedTable:
                 # old table's properties (ADVICE r14 #1)
                 m["properties"] = dict(properties)
         else:
-            id_map = base.get("identity") or {}
-            # a truncate-and-load CONTINUES the sequence from the
-            # watermark — ids are never reused (Delta's contract)
-            df, id_alloc = self._alloc_identity(df, id_map)
-            if id_alloc:
-                tbl = self._manifest_schema(base)
-                order = [f.name for f in tbl.fields if f.name in df.columns]
-                order += [c for c in df.columns if c not in order]
-                df = df.select(*order)
-            # a plain overwrite keeps enforcing the generation contract
-            # on the new rows
-            df = self._apply_generated(df, base.get("generated"))
-            m = self._check_schema(df, base)
+            # a truncate-and-load CONTINUES the identity sequence from
+            # the watermark — ids are never reused (Delta's contract) —
+            # and keeps enforcing the generation contract on the new rows
+            df, m, id_alloc = self._conform(df, base)
             # a full rewrite lands every logical column in every file
             m["mixed"] = False
             m["partition_by"] = base.get("partition_by")
@@ -2973,10 +3020,6 @@ class VersionedTable:
                 )
             )
             m["cdc"] = self._write_cdc_if_any(cdc, parent + 1)
-        if id_alloc:
-            m["identity"] = self._bump_identity(
-                id_map, self._identity_watermark(files, id_map, id_alloc)
-            )
         return self._commit(
             "overwrite",
             parent,
@@ -2985,6 +3028,7 @@ class VersionedTable:
             new_files=files,
             removed=_ALL_FILES,
             check=True,
+            allocated=id_alloc,
         )
 
     def restore(self, version: int, txn: str | None = None) -> int:
@@ -4551,15 +4595,7 @@ class VersionedTable:
         parent = self.head_version()
         ptr = self._read_pointer(parent)
         base = self._resolve(ptr)
-        id_map = ptr.get("identity") or {}
-        df, id_alloc = self._alloc_identity(df, id_map)
-        df = self._apply_generated(df, ptr.get("generated"))
-        if id_alloc:
-            tbl = self._manifest_schema(ptr)
-            order = [f.name for f in tbl.fields if f.name in df.columns]
-            order += [c for c in df.columns if c not in order]
-            df = df.select(*order)
-        sch = self._check_schema(df, ptr)
+        df, sch, id_alloc = self._conform(df, ptr)
         # conformance probe (bounded: first violation only) — BEFORE
         # any file is written
         hit = _holds(predicate)
@@ -4598,8 +4634,7 @@ class VersionedTable:
             fields=fields,
             txn=txn,
             is_stale=self._stale_if_predicate_match(predicate),
-            id_map=id_map,
-            id_alloc=id_alloc,
+            allocated=id_alloc,
         )
 
     # commit ops a lost CAS race can rebase OVER: appends and
@@ -4795,8 +4830,7 @@ class VersionedTable:
         post_cols: list[Column] | None = None,
         inserts: DataFrame | None = None,
         target: str | None = None,
-        id_map: dict | None = None,
-        id_alloc: list[str] | None = None,
+        allocated: list[str] = (),
     ) -> int:
         """Carry out one row-level change and commit it — the one
         write-and-commit path of :meth:`delete`, :meth:`update`,
@@ -4827,11 +4861,10 @@ class VersionedTable:
           feed :meth:`read_change_feed` derives from its vector.
         - One commit of the op's ``fields`` (a dict, or a callable of
           the parent pointer): CHECK constraints when any row is new,
-          the identity watermark of the ``id_alloc`` columns bumped
-          outward, and a lost CAS rebased by
+          the identity watermark of the ``allocated`` columns
+          (:meth:`_commit`), and a lost CAS rebased by
           :meth:`_rebase_over_disjoint` over the rewritten (COW) or
-          vectored (MoR) files with ``is_stale``; a winner that moved
-          an allocated identity watermark refuses.
+          vectored (MoR) files with ``is_stale``.
 
         Returns the new version, or ``parent`` when nothing changed
         (no empty commits)."""
@@ -4981,11 +5014,6 @@ class VersionedTable:
         finally:
             if src is not rows:
                 src.unpersist()
-        id_marks = (
-            self._identity_watermark(new_files, id_map, id_alloc)
-            if id_alloc and new_files
-            else {}
-        )
 
         def commit_fields(b: dict) -> dict:
             out = dict(fields(b) if callable(fields) else fields)
@@ -5000,27 +5028,16 @@ class VersionedTable:
                 # readers must anti-join the vector or resurrect rows —
                 # gate them (protocol feature, r12)
                 out["features"] = self._features_with(b, "dv")
-            if id_marks:
-                out["identity"] = self._bump_identity(
-                    b.get("identity") or id_map, id_marks
-                )
             return out
 
         def rebase(p: int, b: dict) -> tuple[int, dict]:
-            p, b = self._rebase_over_disjoint(
+            return self._rebase_over_disjoint(
                 p,
                 b,
                 f"{op}(mor)" if mor else op,
                 dv_files if mor else files,
                 is_stale,
             )
-            if id_alloc and (b.get("identity") or {}) != id_map:
-                raise ConcurrentWriteError(
-                    f"VersionedTable: {op} raced a commit that advanced "
-                    "the identity watermark; the staged ids are stale — "
-                    "re-run"
-                )
-            return p, b
 
         # COW drops the rewritten files (their vectored rows are
         # physically gone; kept files still need the vectors); MoR
@@ -5034,6 +5051,7 @@ class VersionedTable:
             removed=None if mor else set(files),
             check=take_update is not None or inserts is not None,
             rebase=rebase,
+            allocated=allocated,
         )
 
     def merge(
@@ -5630,24 +5648,15 @@ class VersionedTable:
                     _holds(when_not_matched_insert_condition)
                 )
 
-            def _id_alloc_sql(name):
-                # identity allocation for MERGE inserts (r15):
-                # the same per-partition-range formula append
-                # uses, evaluated over the unmatched-source frame
-                spec = id_map[name]
-                return (
-                    f"CAST({int(spec['high'])} + {int(spec['step'])}"
-                    " * (monotonically_increasing_id() + 1)"
-                    " AS BIGINT)"
-                )
-
             # insert expressions as SQL TEXT (r16): each column's
             # strict cast parses in one F.expr instead of ~12 py4j
-            # Column calls — same resolved tree
+            # Column calls — same resolved tree. Identity columns
+            # allocate with append's formula (r15), evaluated over the
+            # unmatched-source frame
             src_cols = set(source.columns)
             ins_exprs = {
                 f.name: (
-                    _id_alloc_sql(f.name)
+                    self._identity_sql(id_map[f.name])
                     if f.name in id_map
                     else (
                         f"s.`{f.name}`" if f.name in src_cols else "NULL"
@@ -5683,33 +5692,15 @@ class VersionedTable:
                 *[c.alias(n) for n, c in ins_casts.items()]
             )
             if gen_cols:
-                computed = self._apply_generated(inserts, gen_cols)
-
-                def _gen_cast(name):
-                    # computed values strict-cast to the column
-                    # type — the _strict_casts contract (no silent
-                    # NULLs)
-                    val = F.col(name)
-                    casted = val.cast(types[name])
-                    return F.when(
-                        val.isNotNull() & casted.isNull(),
-                        F.raise_error(
-                            F.lit(
-                                "VersionedTable.merge: generated "
-                                f"column '{name}' expression does "
-                                "not fit type "
-                                f"{types[name].simpleString()}"
-                            )
-                        ).cast(types[name]),
-                    ).otherwise(casted)
-
-                inserts = computed.select(
+                # computed values strict-cast to the column type
+                gen_casts = self._strict_casts(
+                    {g: f"`{g}`" for g in gen_cols},
+                    types,
+                    "VersionedTable.merge: generated",
+                )
+                inserts = self._apply_generated(inserts, gen_cols).select(
                     *[
-                        (
-                            _gen_cast(f.name)
-                            if f.name in gen_cols
-                            else F.col(f.name)
-                        ).alias(f.name)
+                        gen_casts.get(f.name, F.col(f.name)).alias(f.name)
                         for f in schema.fields
                     ]
                 )
@@ -5759,8 +5750,7 @@ class VersionedTable:
             fields={"merge_on": list(on)},
             txn=txn,
             is_stale=_stale_if_key_match,
-            id_map=id_map,
-            id_alloc=(
+            allocated=(
                 sorted(id_map)
                 if id_map and when_not_matched_insert is not None
                 else []

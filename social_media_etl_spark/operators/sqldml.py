@@ -733,23 +733,16 @@ def _run_insert(stmt: _Statement, tables) -> DataFrame:
     def _strict(src_col: str, target: str) -> str:
         # positional mapping + strict cast: a value that does not
         # fit the column type raises in-plan, never a silent NULL
-        # (the engine-wide DML contract). Built as ONE SQL string
-        # per column (r16): the Column-DSL version cost ~12 py4j
-        # round trips per column (~25 ms each statement); the
-        # selectExpr below parses the whole projection in one
-        # call. Same resolved expression tree.
-        t = types[target].simpleString()
-        prefix = (
-            f"INSERT: value for column '{target}' does "
-            f"not fit type {t}: '"
-        ).replace("'", "''")
-        return (
-            f"CASE WHEN `{src_col}` IS NOT NULL "
-            f"AND CAST(`{src_col}` AS {t}) IS NULL "
-            f"THEN CAST(raise_error(concat('{prefix}', "
-            f"CAST(`{src_col}` AS STRING), '''')) AS {t}) "
-            f"ELSE CAST(`{src_col}` AS {t}) END AS `{target}`"
-        )
+        # (the engine-wide DML contract). SQL text, so the
+        # selectExpr below parses the whole projection in one call
+        # (r16: the Column-DSL version cost ~12 py4j round trips
+        # per column)
+        return VersionedTable._strict_cast_sql(
+            f"`{src_col}`",
+            target,
+            types[target].simpleString(),
+            "INSERT: value for",
+        ) + f" AS `{target}`"
 
     # positional rename first: a VALUES/SELECT output column can
     # be named like "CAST(9.0 AS DOUBLE)", which F.col would parse

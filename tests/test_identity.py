@@ -187,31 +187,40 @@ def test_identity_overwrite_continues_sequence(spark, tmp_path):
 def test_identity_rebase_race_refuses(spark, tmp_path):
     """A concurrent append that advanced the watermark makes the
     loser's staged ids stale — the rebase refuses so a re-run
-    reallocates (uniqueness survives the race)."""
-    t = _mk_identity(spark, tmp_path)
-    t.append(_vals(spark, "a"))
+    reallocates (uniqueness survives the race). The refusal lives in
+    the commit path, so it fires for every op that allocates ids:
+    append, INSERT ... REPLACE WHERE and a MERGE insert clause."""
+    losers = {
+        "append": lambda t, df: t.append(df),
+        "replace_where": lambda t, df: t.overwrite_where(df, "v = 'loser'"),
+        "merge": lambda t, df: t.merge(df, on=["v"], when_not_matched_insert="*"),
+    }
     orig = VersionedTable._try_commit
-    state = {"fired": False}
+    for op, ingest in losers.items():
+        t = _mk_identity(spark, tmp_path / op)
+        t.append(_vals(spark, "a"))
+        state = {"fired": False}
 
-    def inject(self, man, ver):
-        if not state["fired"] and man.get("op") == "append":
-            state["fired"] = True
-            # the winner lands first, advancing the watermark
-            other = VersionedTable(spark, t.path)
-            other.append(_vals(spark, "winner"))
-            return False
-        return orig(self, man, ver)
+        def inject(self, man, ver, t=t, op=op, state=state):
+            if not state["fired"] and man.get("op") == op:
+                state["fired"] = True
+                # the winner lands first, advancing the watermark
+                other = VersionedTable(spark, t.path)
+                other.append(_vals(spark, "winner"))
+                return False
+            return orig(self, man, ver)
 
-    VersionedTable._try_commit = inject
-    try:
-        with pytest.raises(ConcurrentWriteError, match="identity"):
-            t.append(_vals(spark, "loser"))
-    finally:
-        VersionedTable._try_commit = orig
-    # winner's ids are intact and unique; a re-run then succeeds
-    t.append(_vals(spark, "retry"))
-    ids = [r["id"] for r in t.read().collect()]
-    assert len(set(ids)) == len(ids) == 3
+        VersionedTable._try_commit = inject
+        try:
+            with pytest.raises(ConcurrentWriteError, match="identity"):
+                ingest(t, _vals(spark, "loser"))
+        finally:
+            VersionedTable._try_commit = orig
+        assert state["fired"], op
+        # winner's ids are intact and unique; a re-run then succeeds
+        ingest(t, _vals(spark, "loser"))
+        ids = [r["id"] for r in t.read().collect()]
+        assert len(set(ids)) == len(ids) == 3, op
 
 
 def test_identity_rename_drop_maintain_map(spark, tmp_path):
