@@ -23,8 +23,11 @@ from __future__ import annotations
 
 import json
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the checkout owning this script, so a copy checks its own code
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 import __spark_entry__ as entry  # noqa: E402
 from social_media_etl_spark.session import get_spark  # noqa: E402

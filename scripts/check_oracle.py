@@ -16,10 +16,13 @@ import os
 import sys
 import time
 from datetime import datetime
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the checkout owning this script, so a copy checks its own code
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from social_media_etl_spark.catalog import TABLES  # noqa: E402

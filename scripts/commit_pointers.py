@@ -12,7 +12,9 @@ by-source clauses on the change-feed table) and both layout branches of
 MoR file sizing (updates on a partitioned and on a bucketed table). The
 bucketed table ends with an upsert that adds a column; the identity
 table takes every op that allocates ids (append, overwrite_where,
-overwrite and a merge insert). A second,
+overwrite and a merge insert). The ``dv`` table hides a row behind a
+MoR delete, then runs COW update, delete, merge and overwrite_where on
+that row only; none of them finds a visible row, so none commits. A second,
 fixed SQL sequence (``SQL_SEQUENCE``) runs one statement of every form
 the ``sqldml`` grammar takes through ``timetravel.sql`` on small seeded
 tables, and records each statement's result rows, or the class of the
@@ -94,7 +96,7 @@ def run_sequence(spark, root: str, scheme: str = "") -> dict[str, str]:
 
     paths = {
         n: scheme + os.path.join(root, n)
-        for n in ("a", "b", "c", "clone", "deep", "id")
+        for n in ("a", "b", "c", "clone", "deep", "id", "dv")
     }
 
     # -- table a: stats, bloom, change feed, constraints, generated ----------
@@ -216,6 +218,15 @@ def run_sequence(spark, root: str, scheme: str = "") -> dict[str, str]:
         on=["s"],
         when_not_matched_insert="*",
     )
+
+    # -- table dv: copy-on-write ops whose only match a vector hides ---------
+    dv = VersionedTable.create(spark, paths["dv"], df(_rows(0, 8), parts=2))
+    dv.delete("k = 1", mode="mor")
+    # each finds no visible row, so none commits
+    dv.update("k = 1", {"s": "'x'"})
+    dv.delete("k = 1")
+    dv.merge(df([(1, "m1", "odd", 1)]), on=["k"], when_matched_update={"s": "s.s"})
+    dv.overwrite_where(df([]), "k = 1")
     return paths
 
 

@@ -1,13 +1,16 @@
 """Regenerate PLANS.md: formatted physical plans of representative
 queries with the scale property each plan is expected to exhibit.
-Run:  python scripts/dump_plans.py  (writes /root/repo/PLANS.md)
+Run:  python scripts/dump_plans.py  (writes PLANS.md at the checkout root)
 """
 
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the checkout owning this script, so a copy checks its own code
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 import __spark_entry__ as entry  # noqa: E402
 from social_media_etl_spark.session import get_spark  # noqa: E402
@@ -250,7 +253,7 @@ def main() -> None:
         if len(plan) > 12000:
             plan = plan[:12000] + "\n... (truncated)\n"
         sections.append(f"## {name}\n\n{blurb}\n\n```\n{plan}\n```\n")
-    with open("/root/repo/PLANS.md", "w", encoding="utf-8") as fh:
+    with open(REPO / "PLANS.md", "w", encoding="utf-8") as fh:
         fh.write("\n".join(sections))
     print(f"wrote PLANS.md ({len(frames)} plans)")
 

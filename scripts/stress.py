@@ -26,8 +26,11 @@ import json
 import sys
 import time
 from functools import reduce
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the checkout owning this script, so a copy checks its own code
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 from social_media_etl_spark.catalog import load_table  # noqa: E402
 from social_media_etl_spark.plans import analytics  # noqa: E402

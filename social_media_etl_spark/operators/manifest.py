@@ -80,6 +80,7 @@ from social_media_etl_spark.operators.table_log import (
     TableLog,
     UnsupportedTableFeatureError,
     check_features,
+    plain_path,
 )
 from social_media_etl_spark.write_opts import apply_light_committer
 
@@ -243,6 +244,54 @@ def _either(a: Column | None, b: Column | None) -> Column | None:
     if a is None or b is None:
         return b if a is None else a
     return a | b
+
+
+def _ident(name: str) -> str:
+    """A column name as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _type_sql(t: T.DataType) -> str:
+    """SQL type text that parses back to ``t`` (all fields nullable, as
+    every parquet scan reads them); nested field names are quoted."""
+    if isinstance(t, T.StructType):
+        return (
+            "struct<"
+            + ",".join(f"{_ident(f.name)}:{_type_sql(f.dataType)}" for f in t)
+            + ">"
+        )
+    if isinstance(t, T.ArrayType):
+        return f"array<{_type_sql(t.elementType)}>"
+    if isinstance(t, T.MapType):
+        return f"map<{_type_sql(t.keyType)},{_type_sql(t.valueType)}>"
+    return t.simpleString()
+
+
+def _schema_projection(
+    schema: T.StructType, aliases: dict, present: set
+) -> list[str]:
+    """SQL text projecting a frame whose columns are ``present`` onto
+    ``schema``, for one ``selectExpr``. A RENAMED column reads through
+    its alias chain (column mapping): files written before the rename
+    carry an OLD physical name, so the current and alias names
+    coalesce — per row exactly one of them comes from the row's own
+    file, the others are NULL. A column no name of which is present
+    NULL-fills, as it would in a full-snapshot read."""
+    out = []
+    for f in schema.fields:
+        q = _ident(f.name)
+        cands = [
+            _ident(n)
+            for n in [f.name, *aliases.get(f.name, [])]
+            if n in present
+        ]
+        if not cands:
+            out.append(f"CAST(NULL AS {_type_sql(f.dataType)}) AS {q}")
+        elif len(cands) == 1:
+            out.append(q if cands[0] == q else f"{cands[0]} AS {q}")
+        else:
+            out.append(f"coalesce({', '.join(cands)}) AS {q}")
+    return out
 
 
 def _bloom_hashes(value, bits: int, k: int) -> list | None:
@@ -2282,25 +2331,26 @@ class VersionedTable:
         deleted rows vanish at read time without any file having been
         rewritten. The DV side is bounded by deleted rows; AQE picks a
         broadcast when it is small (the common case), and OPTIMIZE
-        compacts vectors away entirely. ``apply_dvs=False`` is for
-        internal find-scans that must see physical rows;
-        ``with_pos=True`` keeps the (file, position) key columns on
-        the result for writers OF new vectors."""
+        compacts vectors away entirely. ``apply_dvs=False`` reads the
+        physical rows, for change feeds that join a vector's keys back
+        to the rows it hid; ``with_pos=True`` keeps the (file,
+        position) key columns on the result, for the find step
+        (:meth:`_find_files`) and writers OF new vectors."""
+        schema = self._manifest_schema(manifest)
         if not files:
             # a parquet scan over no files: the schema (all columns
             # nullable, as every parquet scan reads them) and the plan
             # shape of a non-empty read, with no input files
-            empty = self.spark.read.schema(
-                self._manifest_schema(manifest)
-            ).parquet()
+            empty = self.spark.read.schema(schema).parquet()
             if with_pos:
-                empty = empty.select(
+                empty = empty.selectExpr(
                     "*",
-                    F.lit(None).cast("string").alias(self._DV_FILE),
-                    F.lit(None).cast("long").alias(self._DV_POS),
+                    f"CAST(NULL AS STRING) AS {self._DV_FILE}",
+                    f"CAST(NULL AS BIGINT) AS {self._DV_POS}",
                 )
             return empty
         dv_dirs = (manifest.get("delete_vectors") or []) if apply_dvs else []
+        aliases = {}
         if manifest.get("mixed"):
             # REQUESTED-SCHEMA read over the physical generations
             # (r11, replacing mergeSchema): the manifest's own types
@@ -2312,18 +2362,15 @@ class VersionedTable:
             # parquet type-promotion (int→long, float→double) — which
             # mergeSchema refuses to unify. No footer pre-pass either:
             # cheaper at many files.
-            schema_req = self._manifest_schema(manifest)
-            aliases_req = manifest.get("aliases") or {}
-            fields = list(schema_req.fields)
+            aliases = manifest.get("aliases") or {}
+            fields = list(schema.fields)
             have = {f.name for f in fields}
-            for f in schema_req.fields:
-                for a in aliases_req.get(f.name, ()):
+            for f in schema.fields:
+                for a in aliases.get(f.name, ()):
                     if a not in have:
                         fields.append(T.StructField(a, f.dataType, True))
                         have.add(a)
-            raw = self.spark.read.schema(T.StructType(fields)).parquet(
-                *files
-            )
+            read_schema = T.StructType(fields)
         else:
             # NON-mixed manifests: every footer matches the recorded
             # schema exactly, so pass it explicitly — schema INFERENCE
@@ -2331,52 +2378,28 @@ class VersionedTable:
             # (~30-60 ms here; a remote-FS round trip at scale). Delta/
             # Iceberg readers never infer either — the manifest owns
             # the schema.
-            raw = self.spark.read.schema(
-                self._manifest_schema(manifest)
-            ).parquet(*files)
-        df = raw
+            read_schema = schema
+        df = self.spark.read.schema(read_schema).parquet(*files)
         if dv_dirs or with_pos:
-            df = raw.select(
-                raw["*"],
-                F.col("_metadata.file_path").alias(self._DV_FILE),
-                F.col("_metadata.row_index").alias(self._DV_POS),
+            df = df.selectExpr(
+                "*",
+                f"_metadata.file_path AS {self._DV_FILE}",
+                f"_metadata.row_index AS {self._DV_POS}",
             )
         if dv_dirs:
             dv = self.spark.read.parquet(*dv_dirs)
             df = df.join(dv, [self._DV_FILE, self._DV_POS], "left_anti")
-        if manifest.get("mixed"):
-            schema = self._manifest_schema(manifest)
-            # a SUBSET read (delete's touched files, a CDC range) may
-            # span only pre-evolution files — columns the manifest
-            # declares but no opened footer carries NULL-fill, exactly
-            # as they would in a full-snapshot read. A RENAMED column
-            # (VERDICT r9 #4) reads through its alias chain: files
-            # written before the rename carry the OLD physical name,
-            # so the projection coalesces current-name and alias
-            # columns — per row exactly one of them comes from the
-            # row's own file, the others are merge-schema NULLs.
-            aliases = manifest.get("aliases") or {}
-            present = set(raw.columns)
-            cols = []
-            for f in schema.fields:
-                cands = [
-                    n
-                    for n in [f.name, *aliases.get(f.name, [])]
-                    if n in present
-                ]
-                if not cands:
-                    cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-                elif len(cands) == 1:
-                    cols.append(F.col(cands[0]).alias(f.name))
-                else:
-                    cols.append(
-                        F.coalesce(*[F.col(n) for n in cands]).alias(f.name)
-                    )
-        else:
-            cols = [F.col(c) for c in raw.columns]
+        # projections as SQL text, one selectExpr (each Column-DSL
+        # column costs about 13 py4j round trips). A SUBSET read
+        # (delete's touched files, a CDC range) of a mixed manifest may
+        # span only pre-evolution files: every declared column still
+        # projects, NULL-filled or through its alias chain.
+        cols = _schema_projection(
+            schema, aliases, {f.name for f in read_schema.fields}
+        )
         if with_pos:
-            cols += [F.col(self._DV_FILE), F.col(self._DV_POS)]
-        return df.select(*cols)
+            cols += [self._DV_FILE, self._DV_POS]
+        return df.selectExpr(*cols)
 
     def read(self, version: int | None = None) -> DataFrame:
         """Full-snapshot read of ``version`` (default: head).
@@ -2819,8 +2842,6 @@ class VersionedTable:
                     "*", F.lit(v).cast("int").alias(self._CDF_VERSION)
                 )
             )
-        target_schema = self._manifest_schema(self._read_pointer(to_v))
-        meta_cols = [self._CDF_TYPE, self._CDF_VERSION]
         if not frames:
             empty = self._read_files(self._read_manifest(to_v), [])
             return empty.select(
@@ -2838,25 +2859,16 @@ class VersionedTable:
         # (its tombstoned bytes must not resurface — r11), and a
         # column added after a frame's commit NULL-fills, exactly
         # like snapshot reads across evolution.
-        aliases = self._read_pointer(to_v).get("aliases") or {}
-        present = set(out.columns)
-        cols = []
-        for f in target_schema.fields:
-            cands = [
-                n
-                for n in [f.name, *aliases.get(f.name, [])]
-                if n in present
-            ]
-            if not cands:
-                cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-            elif len(cands) == 1:
-                cols.append(F.col(cands[0]).alias(f.name))
-            else:
-                cols.append(
-                    F.coalesce(*[F.col(n) for n in cands]).alias(f.name)
-                )
-        out = out.select(*cols, *[F.col(c) for c in meta_cols])
-        return out
+        target = self._read_pointer(to_v)
+        return out.selectExpr(
+            *_schema_projection(
+                self._manifest_schema(target),
+                target.get("aliases") or {},
+                set(out.columns),
+            ),
+            self._CDF_TYPE,
+            self._CDF_VERSION,
+        )
 
     def overwrite(
         self,
@@ -4421,6 +4433,28 @@ class VersionedTable:
                 )
         return candidates
 
+    def _find_files(
+        self, base: dict, files: list[str], match
+    ) -> dict[str, int]:
+        """The find step of every copy-on-write op: the files among
+        ``files`` that hold a row ``match`` keeps, each with the largest
+        ``__n`` among its kept rows. ``match`` maps the DV-applied rows
+        of ``files``, with their file column ``_DV_FILE``
+        (``_metadata.file_path``), to the matching rows with that
+        column and an integer ``__n`` (merge: the source multiplicity of
+        the row's key). A row a deletion vector hides never matches, so
+        no op rewrites a file for it. One job; a bounded collect of at
+        most one row per data file, keyed by manifest path."""
+        if not files:
+            return {}
+        found = (
+            match(self._read_files(base, files, with_pos=True))
+            .groupBy(self._DV_FILE)
+            .agg(F.max("__n"))
+            .collect()
+        )
+        return {plain_path(f): n for f, n in found}
+
     def _touched_files(
         self,
         base: dict,
@@ -4428,30 +4462,17 @@ class VersionedTable:
         prune: list[tuple] | None,
         verify_prune: bool = False,
     ) -> list[str]:
-        """The copy-on-write find-scan of :meth:`delete`,
-        :meth:`update` and :meth:`overwrite_where`: distinct source
-        files of predicate-matching rows (bounded collect, ≤ one row
-        per data file) among the :meth:`_prune_candidates`."""
-        from urllib.parse import unquote, urlparse
-
-        candidates = self._prune_candidates(
-            base, predicate, prune, verify_prune
+        """The copy-on-write find of :meth:`delete`, :meth:`update`
+        and :meth:`overwrite_where`: the files among the
+        :meth:`_prune_candidates` that hold a visible row matching
+        ``predicate`` (:meth:`_find_files`), in manifest order."""
+        touched = self._find_files(
+            base,
+            self._prune_candidates(base, predicate, prune, verify_prune),
+            lambda rows: rows.filter(F.expr(predicate)).selectExpr(
+                self._DV_FILE, "1 AS __n"
+            ),
         )
-        if not candidates:
-            return []
-        # apply_dvs=False: input_file_name() is only defined over a
-        # pure scan (a DV anti-join would blank it). Rows a deletion
-        # vector already hides can only ADD a file to the rewrite set
-        # (over-approximation); the rewrite itself reads DV-applied,
-        # so they stay deleted.
-        matched = (
-            self._read_files(base, candidates, apply_dvs=False)
-            .filter(F.expr(predicate))
-            .select(F.input_file_name().alias("__f"))
-            .distinct()
-            .collect()
-        )
-        touched = {unquote(urlparse(r["__f"]).path) for r in matched}
         return [f for f in base["files"] if f in touched]
 
     def _predicate_rows(
@@ -4493,13 +4514,14 @@ class VersionedTable:
         ``delete`` in both modes.
 
         ``mode='cow'`` (COPY-ON-WRITE) rewrites only the files that
-        actually CONTAIN matching rows: a filter-pushed scan collects
-        the distinct ``input_file_name()`` of matching rows
+        actually CONTAIN visible matching rows: a filter-pushed,
+        DV-applied scan collects the distinct files of matching rows
         (:meth:`_touched_files`; at 100 TB the scan is pruned by
         parquet footer stats under the pushed predicate and the match
         set is O(files) metadata), untouched files are carried into
         the new manifest byte-identical, and the touched files are
-        re-written WITHOUT their matching rows.
+        re-written WITHOUT their matching rows. A row a deletion
+        vector already hides matches nothing.
 
         ``mode='mor'`` (MERGE-ON-READ, Delta deletion vectors, VERDICT
         r8 #5) rewrites nothing: the matching rows' (file,
@@ -4688,8 +4710,6 @@ class VersionedTable:
         any violated rule raises :class:`ConcurrentWriteError` and the
         caller must recompute. Cost is O(span metadata) + one scan of
         the span's added files — never a re-scan of the table."""
-        from urllib.parse import unquote, urlparse
-
         new_head = self.head_version()
         span = [v2 for v2 in self.versions() if parent < v2 <= new_head]
         bad = [
@@ -4722,14 +4742,7 @@ class VersionedTable:
         ]
         if new_dvs and touched:
             # bounded by the winners' vectors: file-level keys only
-            dv_files = {
-                unquote(urlparse(r[0]).path)
-                for r in self.spark.read.parquet(*new_dvs)
-                .select(self._DV_FILE)
-                .distinct()
-                .collect()
-            }
-            if dv_files & touched:
+            if self._log.vector_files(new_dvs) & touched:
                 raise ConcurrentWriteError(
                     f"VersionedTable: {op} raced a deletion vector on "
                     "a file it rewrote — the staged output would "
@@ -4915,17 +4928,9 @@ class VersionedTable:
                     ).parquet(dv_dir)
                     dv_dir = self._keep_if_rows(dv_dir)
                 if dv_dir is not None:
-                    from urllib.parse import unquote, urlparse
-
                     # the files the vector names: the rebase guards
                     # exactly these (file, position) keys
-                    dv_files = {
-                        unquote(urlparse(r[0]).path)
-                        for r in self.spark.read.parquet(dv_dir)
-                        .select(self._DV_FILE)
-                        .distinct()
-                        .collect()
-                    }
+                    dv_files = self._log.vector_files([dv_dir])
                 new_rows = union(
                     [
                         taken_by(take_update).select(*post_cols)
@@ -5005,8 +5010,8 @@ class VersionedTable:
                             "*", F.lit("insert").alias("_change_type")
                         )
                     )
-                # a change can take zero visible rows (the COW find-scan
-                # ignores vectors): no rows, no CDC dir
+                # a change can take zero rows (a merge whose update
+                # condition fails on every matched row): no CDC dir
                 cdc = union(frames)
                 cdc_dir = (
                     self._write_cdc_if_any(cdc, v) if cdc is not None else None
@@ -5053,6 +5058,37 @@ class VersionedTable:
             rebase=rebase,
             allocated=allocated,
         )
+
+    def _key_matched_files(
+        self,
+        base: dict,
+        files: list[str],
+        source: DataFrame,
+        on: list[str],
+    ) -> set[str]:
+        """MERGE's key find: the files among ``files`` holding a
+        visible target row whose keys equal a source row's (plain
+        equality — NULL keys match nothing). A target row matched by
+        more than one source row has no deterministic clause outcome
+        and is refused, as Delta does. The per-key source count rides
+        the find (:meth:`_find_files`), so one job returns both; the
+        inner join against one count row per key never multiplies
+        target rows."""
+        counts = source.groupBy(*on).agg(F.count(F.lit(1)).alias("__n"))
+        found = self._find_files(
+            base,
+            files,
+            lambda rows: rows.select(self._DV_FILE, *on).join(
+                counts, on, "inner"
+            ),
+        )
+        if any(n > 1 for n in found.values()):
+            raise ValueError(
+                "VersionedTable.merge: a target row matches multiple "
+                "source rows — reduce the source to one row per key "
+                "first (latest-wins is upsert's job)"
+            )
+        return set(found)
 
     def merge(
         self,
@@ -5136,10 +5172,10 @@ class VersionedTable:
           COW-granular: only files holding a matched row or an
           unmatched row the clause fires for are rewritten.
 
-        Only target files CONTAINING matched keys are rewritten
-        (found via a key semi-join against a scan-level
-        ``input_file_name`` projection — manifest metadata in,
-        O(matched files) out); untouched files carry over
+        Only target files CONTAINING visible matched keys are
+        rewritten (:meth:`_key_matched_files` — one DV-applied scan of
+        the candidates joined to the per-key source counts, manifest
+        metadata in, O(matched files) out); untouched files carry over
         byte-identical, and untouched SEGMENTS carry by NAME. Inserts land in the same new file set, so the
         whole MERGE is one atomic snapshot swap with
         first-committer-wins CAS (a lost race raises — the merge was
@@ -5166,8 +5202,8 @@ class VersionedTable:
         FIND-SCAN PRUNING (VERDICT r11 #6): when a merge key column
         carries per-file metadata (bloom bitmap, footer stats, or the
         partition spec) and the source's distinct keys are few, the
-        target-side scans — matched-file discovery, the ambiguity
-        probe, and the insert anti-join — open only files that may
+        target-side scans — the key find with its ambiguity probe,
+        and the insert anti-join — open only files that may
         hold a source key (:meth:`_keyed_candidate_files`), so a
         point-keyed MERGE on a bloom-indexed key reads
         O(files-holding-keys). A NOT MATCHED BY SOURCE clause
@@ -5419,47 +5455,11 @@ class VersionedTable:
         # pruning bought THIS merge (kept == total when it fell back)
         self.last_merge_scan_files = (len(candidates), len(base["files"]))
 
-        # ambiguity: a target row matched by >1 source row has no
-        # deterministic clause outcome — refuse, as Delta does. The
-        # target-side probe only runs when the source actually HAS
-        # duplicate keys (deduped sources — the common case — cost one
-        # source-side aggregate, never a table scan). Runs BEFORE the
-        # deferred evolution commits (ADVICE r14 #2): an ambiguity
-        # refusal leaves the target schema untouched.
-        target_keys = None
-        # FUSED ambiguity probe (r16, guide §1.2): when no schema
-        # evolution is pending (nothing to defer a refusal past) and
-        # the target carries no deletion vectors (the probe must count
-        # only VISIBLE rows, and the find-scan below is physical), the
-        # duplicate-source-match refusal rides the matched-files scan
-        # itself — max source-key multiplicity per touched file in the
-        # SAME job — instead of a separate source aggregate per merge.
-        fuse_ambiguity = (
-            keys_preexist
-            and not pending_adds
-            and not pending_widens
-            and not base.get("delete_vectors")
-        )
         if keys_preexist:
-            target_keys = self._read_files(base, candidates).select(*on)
-            if not fuse_ambiguity:
-                dup_keys = (
-                    source.groupBy(*on)
-                    .agg(F.count(F.lit(1)).alias("__n"))
-                    .filter(F.col("__n") > 1)
-                    .drop("__n")
-                )
-                if dup_keys.limit(1).count() and (
-                    dup_keys.join(
-                        target_keys, on, "left_semi"
-                    ).limit(1).count()
-                ):
-                    raise ValueError(
-                        "VersionedTable.merge: a target row matches "
-                        "multiple source rows — reduce the source to "
-                        "one row per key first (latest-wins is "
-                        "upsert's job)"
-                    )
+            # the key find refuses ambiguity BEFORE the deferred
+            # evolution commits (ADVICE r14 #2): a refusal leaves the
+            # target schema untouched
+            touched = self._key_matched_files(base, candidates, source, on)
 
         if pending_adds or pending_widens:
             # every refusal above has passed — land the metadata-only
@@ -5483,53 +5483,11 @@ class VersionedTable:
                 len(candidates),
                 len(base["files"]),
             )
-            # the evolved snapshot NULL-fills the added columns, so
-            # key projection is always well-defined from here
-            target_keys = self._read_files(base, candidates).select(*on)
+            # found again on the new head: another commit can land
+            # between the evolution commits. The evolved snapshot
+            # NULL-fills added columns, so an added key matches nothing
+            touched = self._key_matched_files(base, candidates, source, on)
 
-        # files to rewrite: project file identity AT THE SCAN (valid
-        # there, unlike post-shuffle input_file_name), then semi-join
-        # the source keys
-        from urllib.parse import unquote, urlparse
-
-        if fuse_ambiguity:
-            # one job returns the touched files AND the ambiguity
-            # verdict: a target row matching a key with source
-            # multiplicity > 1 is exactly the refusal condition (the
-            # inner join against per-key counts never multiplies rows
-            # — one count row per key; null keys never match, as with
-            # the semi join)
-            per_file = (
-                self._read_files(base, candidates, apply_dvs=False)
-                .select(F.input_file_name().alias("__f"), *on)
-                .join(
-                    source.groupBy(*on).agg(
-                        F.count(F.lit(1)).alias("__n")
-                    ),
-                    on,
-                    "inner",
-                )
-                .groupBy("__f")
-                .agg(F.max("__n").alias("__mx"))
-                .collect()
-            )
-            if any(r["__mx"] > 1 for r in per_file):
-                raise ValueError(
-                    "VersionedTable.merge: a target row matches "
-                    "multiple source rows — reduce the source to one "
-                    "row per key first (latest-wins is upsert's job)"
-                )
-            matched_rows = per_file
-        else:
-            matched_rows = (
-                self._read_files(base, candidates, apply_dvs=False)
-                .select(F.input_file_name().alias("__f"), *on)
-                .join(src_keys, on, "left_semi")
-                .select("__f")
-                .distinct()
-                .collect()
-            )
-        touched = {unquote(urlparse(r["__f"]).path) for r in matched_rows}
         if by_source:
             # a NOT MATCHED BY SOURCE clause also rewrites every file
             # holding an UNMATCHED row the clause fires for: an
@@ -5537,23 +5495,18 @@ class VersionedTable:
             # with any unmatched row (the sync-to-source shape), a
             # conditional delete only the files where the condition
             # holds — COW granularity is preserved
-            bs_scan = (
-                self._read_files(base, base["files"], apply_dvs=False)
-                .select(F.input_file_name().alias("__f"), "*")
-                .alias("t")
-                .join(src_keys, on, "left_anti")
-            )
-            if (
-                when_not_matched_by_source_update is None
-                and when_not_matched_by_source_delete is not None
-            ):
-                bs_scan = bs_scan.filter(
-                    _holds(when_not_matched_by_source_delete)
-                )
-            touched |= {
-                unquote(urlparse(r["__f"]).path)
-                for r in bs_scan.select("__f").distinct().collect()
-            }
+            def unmatched(rows: DataFrame) -> DataFrame:
+                out = rows.alias("t").join(src_keys, on, "left_anti")
+                if (
+                    when_not_matched_by_source_update is None
+                    and when_not_matched_by_source_delete is not None
+                ):
+                    out = out.filter(
+                        _holds(when_not_matched_by_source_delete)
+                    )
+                return out.selectExpr(self._DV_FILE, "1 AS __n")
+
+            touched |= set(self._find_files(base, base["files"], unmatched))
         touched_files = [f for f in base["files"] if f in touched]
 
         # rewritten rows: matched targets take the delete/update
@@ -5573,8 +5526,8 @@ class VersionedTable:
                 # say NULL keys match nothing — a NULL-keyed source row
                 # falls through to the not-matched (insert) clause, and
                 # a NULL-keyed target row is never updated/deleted.
-                # (eqNullSafe here would also contradict the find-files
-                # semi-join, which uses null-unsafe equality — r9
+                # (eqNullSafe here would also contradict the key find's
+                # join, which uses null-unsafe equality — r9
                 # self-review.)
                 eq = F.col(f"t.{c}") == F.col(f"s.{c}")
                 cond = eq if cond is None else cond & eq
@@ -5637,7 +5590,9 @@ class VersionedTable:
         inserts = None
         if when_not_matched_insert is not None:
             unmatched_src = source.alias("s").join(
-                target_keys, on, "left_anti"
+                self._read_files(base, candidates).select(*on),
+                on,
+                "left_anti",
             )
             if when_not_matched_insert_condition is not None:
                 # Delta's WHEN NOT MATCHED AND <cond> THEN INSERT:

@@ -56,6 +56,7 @@ __all__ = [
     "UnsupportedTableFeatureError",
     "SUPPORTED_FEATURES",
     "check_features",
+    "plain_path",
 ]
 
 #: Reader/writer feature flags this build of the engine understands —
@@ -103,6 +104,14 @@ class UnsupportedTableFeatureError(RuntimeError):
     changes what a correct READ means (DVs hide rows, aliases remap
     columns, widened types re-type footers), so a reader that ignored
     an unknown flag would return wrong rows, not degraded ones."""
+
+
+def plain_path(uri: str) -> str:
+    """The plain path a manifest records for a data file, from the URI
+    a scan reports for it (``_metadata.file_path``, which deletion
+    vectors also store): the scheme and authority stripped, percent-
+    escapes decoded."""
+    return unquote(urlparse(uri).path)
 
 
 def check_features(ptr: dict) -> None:
@@ -254,9 +263,8 @@ class TableLog:
 
     def vector_files(self, dv_dirs: list[str]) -> set[str]:
         """The data files the deletion vectors under ``dv_dirs`` name,
-        as the plain paths manifests record. The vector's file column
-        holds the scan-side ``_metadata.file_path`` URI; compare on its
-        unquoted path (at most one row per deleted row, read once)."""
+        as the plain paths manifests record (:func:`plain_path`; at most
+        one row per deleted row, read once)."""
         import pyarrow.dataset as ds
 
         out: set = set()
@@ -264,10 +272,7 @@ class TableLog:
             tbl = ds.dataset(
                 self.fs_path(d), filesystem=self.fs, format="parquet"
             ).to_table(columns=["__smetl_dv_file"])
-            out.update(
-                unquote(urlparse(u).path)
-                for u in set(tbl.column(0).to_pylist())
-            )
+            out.update(map(plain_path, set(tbl.column(0).to_pylist())))
         return out
 
     # -- writes --------------------------------------------------------------

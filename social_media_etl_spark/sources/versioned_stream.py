@@ -86,7 +86,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from social_media_etl_spark.operators.manifest import plan_changes
-from social_media_etl_spark.operators.table_log import TableLog
+from social_media_etl_spark.operators.table_log import TableLog, plain_path
 
 __all__ = ["VersionedCdcDataSource", "register_versioned_cdc_source"]
 
@@ -97,12 +97,9 @@ def _dv_positions(log: TableLog, dv_dirs, file_path) -> set:
     by a merge-on-read delete, update or merge — column names pinned in
     operators/manifest.py:_DV_FILE/_DV_POS). The vector's file column
     holds the scan-side ``_metadata.file_path`` URI; the manifest
-    records plain paths — compare on the unquoted URI path, the same
-    normalization the batch layer applies to the files a vector names
-    (``VersionedTable._apply_row_changes``). Bounded
-    by deleted rows, read once per (file, batch)."""
-    from urllib.parse import unquote, urlparse
-
+    records plain paths — compare through ``table_log.plain_path``, as
+    the batch layer does. Bounded by deleted rows, read once per (file,
+    batch)."""
     import pyarrow.dataset as ds
 
     out: set = set()
@@ -112,7 +109,7 @@ def _dv_positions(log: TableLog, dv_dirs, file_path) -> set:
         for v, pos in zip(
             tbl.column(0).to_pylist(), tbl.column(1).to_pylist()
         ):
-            if unquote(urlparse(v).path) == file_path:
+            if plain_path(v) == file_path:
                 out.add(pos)
     return out
 

@@ -92,6 +92,47 @@ def test_add_column_skipped_by_change_feed(spark, tmp_path):
 # --------------------------------------------------------- constraints
 
 
+NESTED = (
+    "struct<a:int,`b c`:array<map<string,decimal(10,2)>>,"
+    "d:struct<`x.y`:timestamp,z:binary>>"
+)
+
+
+@pytest.mark.parametrize(
+    "ddl",
+    ["bigint", "decimal(38,6)", "timestamp_ntz", "date", "array<double>",
+     "map<string,array<bigint>>", NESTED],
+)
+def test_null_fill_type_text_round_trips(spark, ddl):
+    """The NULL-fill of a mixed projection is SQL text: its type text
+    must parse back to the column's type, nested fields included."""
+    from pyspark.sql import types as T
+
+    from social_media_etl_spark.operators.manifest import _type_sql
+
+    t = T._parse_datatype_string(ddl)
+    got = spark.range(1).selectExpr(f"CAST(NULL AS {_type_sql(t)}) AS c")
+    assert got.schema["c"].dataType == t
+
+
+def test_change_feed_null_fills_a_column_added_after_the_range(
+    spark, tmp_path
+):
+    """A struct column added after every commit of a feed range is
+    NULL under its full nested type."""
+    from pyspark.sql import types as T
+
+    t = VersionedTable.create(
+        spark, str(tmp_path / "t"), _df(spark, [(1, "a")]),
+        change_data_feed=True,
+    )
+    t.append(_df(spark, [(2, "b")]))
+    t.add_column("meta", NESTED)
+    feed = t.read_change_feed(0)
+    assert feed.schema["meta"].dataType == T._parse_datatype_string(NESTED)
+    assert [(r["k"], r["meta"]) for r in feed.collect()] == [(2, None)]
+
+
 def test_add_constraint_validates_existing_head(spark, tmp_path):
     t = VersionedTable.create(
         spark, str(tmp_path / "t"), _df(spark, [(1, "a"), (-5, "b")])

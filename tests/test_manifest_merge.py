@@ -98,6 +98,49 @@ def test_merge_ambiguous_source_raises(spark, tmp_path):
     # duplicate UNMATCHED keys are also a caller bug only when a clause
     # consumes them; with no target hit and no insert clause it's a noop
     assert t.head_version() == 0
+    # on a table with deletion vectors the probe sees the DV-applied
+    # rows: a duplicate key refuses when it matches a visible row, and
+    # merges when its only target row is hidden
+    t = VersionedTable.create(
+        spark,
+        str(tmp_path / "d"),
+        _df(spark, [(1, "a", 1.0), (2, "b", 2.0)]).coalesce(1),
+    )
+    t.delete("k = 2", mode="mor")  # v1: DV hides k=2
+    with pytest.raises(ValueError, match="multiple source rows"):
+        t.merge(
+            _df(spark, [(1, "x", 1.0), (1, "y", 2.0)]),
+            on=["k"],
+            when_matched_update={"v": "s.v"},
+        )
+    assert t.head_version() == 1
+    v = t.merge(
+        _df(spark, [(2, "x", 1.0), (2, "y", 2.0)]),
+        on=["k"],
+        when_matched_update={"v": "s.v"},
+        when_not_matched_insert="*",
+    )
+    assert v == 2
+    assert sorted((r["k"], r["v"]) for r in t.read().collect()) == [
+        (1, "a"),
+        (2, "x"),
+        (2, "y"),
+    ]
+    # with schema evolution pending, the refusal still comes first
+    src = spark.createDataFrame(
+        [(1, "x", 1.0, "t1"), (1, "y", 2.0, "t2")],
+        "k long, v string, amt double, tag string",
+    )
+    with pytest.raises(ValueError, match="multiple source rows"):
+        t.merge(
+            src,
+            on=["k"],
+            when_matched_update={"v": "s.v"},
+            when_not_matched_insert="*",
+            schema_evolution=True,
+        )
+    assert t.head_version() == 2
+    assert "tag" not in t.read().columns
 
 
 def test_merge_strict_cast_raises_on_misfit_update(spark, tmp_path):

@@ -325,12 +325,10 @@ def test_vacuum_sweeps_dead_cdc_dirs(spark, tmp_path):
 def test_cdf_cow_dml_on_fully_dv_hidden_matches_records_no_cdc(
     spark, tmp_path
 ):
-    """The find-scan over-approximates (it skips DVs) while the CDC
-    preimage read is DV-applied — a COW delete/update whose every
-    predicate match is already vector-hidden must SKIP recording
-    (an empty parquet dir is unreadable) and the feed must treat the
-    commit as change-free instead of failing schema inference
-    (ADVICE r10 medium)."""
+    """The COW find step is DV-applied: a delete/update whose every
+    predicate match a vector already hides finds no file, so it
+    commits no version and records no CDC, and the feed still holds
+    only the MoR delete's typed row."""
     t = VersionedTable.create(
         spark,
         str(tmp_path / "t"),
@@ -338,11 +336,8 @@ def test_cdf_cow_dml_on_fully_dv_hidden_matches_records_no_cdc(
         change_data_feed=True,
     )
     t.delete("k = 2", mode="mor")  # v1: DV hides k=2
-    v = t.delete("k = 2")  # v2: COW — every match already hidden
-    assert v == 2
-    assert not t._read_pointer(2).get("cdc")
-    # the feed crosses the no-change commit without erroring and
-    # emits only the MoR delete's typed row
+    v = t.delete("k = 2")  # COW — every match already hidden
+    assert v == 1 and t.head_version() == 1
     got = sorted(
         (r["_commit_version"], r["_change_type"], r["k"])
         for r in t.read_change_feed(0).collect()
@@ -358,9 +353,8 @@ def test_cdf_cow_dml_on_fully_dv_hidden_matches_records_no_cdc(
         change_data_feed=True,
     )
     u.delete("k = 3", mode="mor")  # v1: DV hides k=3
-    v = u.update("k = 3", {"v": "'zz'"})  # v2: every match hidden
-    assert v == 2
-    assert not u._read_pointer(2).get("cdc")
+    v = u.update("k = 3", {"v": "'zz'"})  # every match hidden
+    assert v == 1 and u.head_version() == 1
     got = sorted(
         (r["_commit_version"], r["_change_type"], r["k"])
         for r in u.read_change_feed(0).collect()
@@ -370,6 +364,32 @@ def test_cdf_cow_dml_on_fully_dv_hidden_matches_records_no_cdc(
         (1, "a"),
         (2, "b"),
     }
+
+
+@pytest.mark.parametrize("op", ["update", "delete", "merge", "overwrite_where"])
+def test_cow_dml_on_dv_hidden_row_commits_nothing(spark, tmp_path, op):
+    """Every copy-on-write op finds its files from DV-applied rows: one
+    whose only match a deletion vector hides rewrites no file and
+    commits no version (no empty commits)."""
+    t = VersionedTable.create(
+        spark,
+        str(tmp_path / "t"),
+        _df(spark, [(i, "x") for i in range(8)]).coalesce(2),
+    )
+    t.delete("k = 1", mode="mor")  # v1: DV hides k=1
+    before = sorted((r["k"], r["v"]) for r in t.read().collect())
+    if op == "update":
+        v = t.update("k = 1", {"v": "'y'"})
+    elif op == "delete":
+        v = t.delete("k = 1")
+    elif op == "merge":
+        v = t.merge(
+            _df(spark, [(1, "m")]), on=["k"], when_matched_update={"v": "s.v"}
+        )
+    else:
+        v = t.overwrite_where(_df(spark, []), "k = 1")
+    assert v == 1 and t.head_version() == 1
+    assert sorted((r["k"], r["v"]) for r in t.read().collect()) == before
 
 
 def test_change_feed_skips_rename_and_optimize_commits(spark, tmp_path):
