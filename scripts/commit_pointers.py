@@ -14,7 +14,13 @@ bucketed table ends with an upsert that adds a column; the identity
 table takes every op that allocates ids (append, overwrite_where,
 overwrite and a merge insert). The ``dv`` table hides a row behind a
 MoR delete, then runs COW update, delete, merge and overwrite_where on
-that row only; none of them finds a visible row, so none commits. A second,
+that row only; none of them finds a visible row, so none commits. The
+``evo`` table takes every kind of column change: an append that adds a
+column and a rename of it, an append that adds a reserved name, a drop
+of a column a CHECK names only inside a string literal, and an evolving
+merge that adds one column and widens another; the outcome of each (the
+version it returns, or the class of its error) is recorded as
+``evo/<op>``. A second,
 fixed SQL sequence (``SQL_SEQUENCE``) runs one statement of every form
 the ``sqldml`` grammar takes through ``timetravel.sql`` on small seeded
 tables, and records each statement's result rows, or the class of the
@@ -85,10 +91,19 @@ def _rows(lo: int, hi: int, tag: str = "a") -> list[tuple]:
     return [(i, f"{tag}{i}", "even" if i % 2 == 0 else "odd", i * 10) for i in range(lo, hi)]
 
 
-def run_sequence(spark, root: str, scheme: str = "") -> dict[str, str]:
+def _outcome(op) -> dict:
+    """The version ``op()`` returns, or the class of the error it
+    raises."""
+    try:
+        return {"version": op()}
+    except Exception as e:  # noqa: BLE001 - the error class is the record
+        return {"error": type(e).__name__}
+
+
+def run_sequence(spark, root: str, scheme: str = "") -> tuple[dict[str, str], dict]:
     """Run the op sequence under ``root``, with every table path (and
     the COPY INTO source) prefixed by ``scheme``; returns table name ->
-    path."""
+    path, and the outcome of each ``evo`` op (:func:`_outcome`)."""
     from social_media_etl_spark.operators.manifest import VersionedTable
 
     def df(rows, schema=SCHEMA, parts=1):
@@ -96,7 +111,7 @@ def run_sequence(spark, root: str, scheme: str = "") -> dict[str, str]:
 
     paths = {
         n: scheme + os.path.join(root, n)
-        for n in ("a", "b", "c", "clone", "deep", "id", "dv")
+        for n in ("a", "b", "c", "clone", "deep", "id", "dv", "evo")
     }
 
     # -- table a: stats, bloom, change feed, constraints, generated ----------
@@ -227,7 +242,40 @@ def run_sequence(spark, root: str, scheme: str = "") -> dict[str, str]:
     dv.delete("k = 1")
     dv.merge(df([(1, "m1", "odd", 1)]), on=["k"], when_matched_update={"s": "s.s"})
     dv.overwrite_where(df([]), "k = 1")
-    return paths
+
+    # -- table evo: every kind of column change ------------------------------
+    evo = VersionedTable.create(
+        spark, paths["evo"], df(_rows(0, 6), parts=2), constraints={"not_old": "s <> 'old'"}
+    )
+    ops = {
+        # an append that adds a column, then a rename of it
+        "append_new": lambda: evo.append(
+            spark.createDataFrame([(6, "a6", "even", 60, "n6")], SCHEMA + ", note string")
+        ),
+        "rename_new": lambda: evo.rename_column("note", "remark"),
+        # an append that adds a reserved name
+        "append_reserved": lambda: evo.append(
+            spark.createDataFrame(
+                [(7, "a7", "odd", 70, "r7", "h")], SCHEMA + ", remark string, __s_hit string"
+            )
+        ),
+        # a column the CHECK names only inside a string literal
+        "add_old": lambda: evo.add_column("old", "string"),
+        "drop_old": lambda: evo.drop_column("old"),
+        # an evolving merge: adds tag, widens x
+        "merge_evolving": lambda: evo.merge(
+            spark.createDataFrame(
+                [(1, "m1", "odd", 2**40, None, "t1"), (20, "m20", "even", 5, "r20", "t20")],
+                "k long, s string, p string, x bigint, remark string, tag string",
+            ),
+            on=["k"],
+            when_matched_update={"s": "s.s"},
+            when_not_matched_insert="*",
+            schema_evolution=True,
+        ),
+    }
+    outcomes = {f"evo/{name}": _outcome(op) for name, op in ops.items()}
+    return paths, outcomes
 
 
 _SQ_ROWS = ", ".join(
@@ -469,16 +517,17 @@ def dump(checkout: str, out: str) -> None:
         extra_conf={"spark.sql.shuffle.partitions": "2"},
     )
     root = os.path.realpath(tempfile.mkdtemp(prefix="smetl_pointers_"))
-    paths = run_sequence(spark, root)
+    paths, record = run_sequence(spark, root)
     sql_paths, statements = run_sql_sequence(spark, root)
     paths.update(sql_paths)
-    record: dict = {
-        f"sql/{i:02d}": _mask(rec, root) for i, rec in enumerate(statements)
-    }
+    record.update(
+        (f"sql/{i:02d}", _mask(rec, root)) for i, rec in enumerate(statements)
+    )
     _dump_tables(spark, paths, root, "", record)
     # the same op sequence on file:// URIs: the tables' non-POSIX path
     froot = os.path.realpath(tempfile.mkdtemp(prefix="smetl_pointers_"))
-    fpaths = run_sequence(spark, froot, "file://")
+    fpaths, foutcomes = run_sequence(spark, froot, "file://")
+    record.update((f"file:{k}", v) for k, v in foutcomes.items())
     _dump_tables(spark, fpaths, froot, "file:", record)
     with open(out, "w") as fh:
         json.dump(record, fh, indent=1, sort_keys=True)

@@ -1009,8 +1009,9 @@ class VersionedTable:
         ``new_files`` land as new segments, built once under the
         child's stats/bloom/partition config and reused across
         retries. ``removed`` drops files from the parent's segments
-        (:meth:`_segments_without`); :data:`_ALL_FILES` replaces the
-        whole file set, and its deletion vectors with it. ``check``
+        (:meth:`_segments_without`), and with them every deletion
+        vector whose named files all leave; :data:`_ALL_FILES` replaces
+        the whole file set, and its deletion vectors with it. ``check``
         validates CHECK constraints over ``new_files`` once, before
         the first CAS.
 
@@ -1029,6 +1030,7 @@ class VersionedTable:
         collide with the winner's, and a re-run reallocates."""
         ptr = {} if parent is None else self._read_pointer(parent)
         new_segs = id_map = marks = None
+        named: dict[str, set] = {}  # deletion vector -> files it names
         for _ in range(retries):
             src = ptr if carry_from is None else carry_from
             m = {k: src[k] for k in self._CARRY if k in src}
@@ -1067,6 +1069,15 @@ class VersionedTable:
                 m["segments"], m["n_files"] = self._segments_without(
                     src, removed
                 )
+                # a vector all of whose files leave hides nothing more
+                dvs = m.get("delete_vectors") or []
+                for d in dvs:
+                    if d not in named:
+                        named[d] = self._log.vector_files([d])
+                if dvs:
+                    m["delete_vectors"] = [
+                        d for d in dvs if not named[d] <= removed
+                    ]
             m["segments"] = m["segments"] + new_segs
             m["n_files"] += len(new_files)
             if self._try_commit(m, m["version"]):
@@ -1627,9 +1638,11 @@ class VersionedTable:
         partition directory columns (partitioned writes refuse them
         per-write, but an unpartitioned table could still commit one
         and break a later repartition-spec change), and merge's
-        ``__s_hit`` match marker. Shared by create / add_column /
-        rename_column so the refusal happens at DDL time with a clear
-        message instead of a confusing failure on a later commit."""
+        ``__s_hit`` match marker. Shared by a table definition
+        (:meth:`_define`) and every column change (:meth:`_evolve`:
+        ingest, ALTER and MERGE alike) so the refusal happens when the
+        name is introduced, with a clear message, instead of a
+        confusing failure on a later commit."""
         import re as _re
 
         bad = [
@@ -2186,17 +2199,16 @@ class VersionedTable:
         return T.StructType.fromJson(json.loads(manifest["schema_json"]))
 
     def _check_schema(self, df: DataFrame, base: dict) -> dict:
-        """Validate an append's schema against the parent pointer
-        ``base`` and return the child manifest's schema fields:
-        ``{"schema", "schema_json", "mixed"}``.
+        """Validate an ingest frame's schema against the parent pointer
+        ``base`` and return the child's column fields: those
+        :meth:`_evolve` derives for the columns ``df`` adds, or none
+        when it adds none.
 
         Evolution contract (VERDICT r6, the Delta/Iceberg add-column
         rule): an append may ADD new columns — they become nullable
         table columns, and rows from older files read as NULL — but it
         may never drop a column, change a column's type, or otherwise
-        drift: that would corrupt snapshot reads. ``mixed`` marks a
-        manifest whose file set spans more than one physical schema,
-        switching reads to footer-merged mode."""
+        drift: that would corrupt snapshot reads."""
         table = self._manifest_schema(base)
         got_fields = {f.name: f for f in df.schema.fields}
         table_names = {f.name for f in table.fields}
@@ -2218,33 +2230,201 @@ class VersionedTable:
                     "ADDITIVE evolution (new nullable columns) is "
                     "supported."
                 )
-        new_fields = [
-            T.StructField(f.name, f.dataType, True)
-            for f in df.schema.fields
-            if f.name not in table_names
-        ]
-        # a new column may not take a name some live footer still
-        # carries PHYSICALLY — a DROPPED column's name (or any of its
-        # aliases) would resurrect the old bytes through the
-        # name-mapped read, and a renamed column's pre-rename physical
-        # name would feed TWO logical columns at once
-        forbidden = set(base.get("dropped_phys") or [])
-        for chain in (base.get("aliases") or {}).values():
-            forbidden.update(chain)
-        for f in new_fields:
-            if f.name in forbidden:
-                raise ValueError(
-                    "VersionedTable: schema mismatch — new column "
-                    f"'{f.name}' collides with a physical name live in "
-                    "pre-drop/pre-rename files; a name-mapped read "
-                    "would surface the OLD bytes. Pick a fresh name."
-                )
-        merged = T.StructType(list(table.fields) + new_fields)
-        return {
-            "schema": merged.simpleString(),
-            "schema_json": merged.json(),
-            "mixed": bool(base.get("mixed")) or bool(new_fields),
+        return self._evolve(
+            base,
+            "append",
+            add=[f for f in df.schema.fields if f.name not in table_names],
+        )
+
+    # lossless primitive widenings (Iceberg/Delta type-widening set,
+    # plus int→double which is exact for 32-bit integers); Spark 4's
+    # parquet readers promote these at scan time under a requested
+    # schema, so old files never rewrite
+    _WIDENINGS = {
+        "tinyint": {"smallint", "int", "bigint", "double"},
+        "smallint": {"int", "bigint", "double"},
+        "int": {"bigint", "double"},
+        "float": {"double"},
+    }
+
+    def _evolve(
+        self,
+        ptr: dict,
+        op: str,
+        *,
+        add: list = (),
+        widen: dict | None = None,
+        rename: tuple[str, str] | None = None,
+        drop: str | None = None,
+    ) -> dict:
+        """The child's column fields for one column change on the
+        parent pointer ``ptr`` — the one place a commit that changes a
+        table's columns derives them (``_define`` builds a new
+        definition instead). The change: ``add`` new columns (struct
+        fields; they land nullable with fresh field ids), ``widen``
+        columns to wider types (name -> type text), ``rename`` one
+        column (old, new) or ``drop`` one. Returns the changed
+        ``schema``/``schema_json``/``mixed``/``field_ids``/
+        ``aliases``/``dropped_phys``/``stats_cols``/``partition_by``/
+        ``bucket_by``/``generated``/``identity``/``features`` (keys the
+        parent lacks are left out while empty), or ``{}`` when nothing
+        changes (a widen to the current type included).
+
+        Every column refusal lives here, named by ``op``:
+
+        - a new name (added or renamed to) may not be reserved
+          (:meth:`_check_reserved_names`), an existing column, or a
+          physical name live in pre-rename/pre-drop footers: a
+          name-mapped read would surface the old bytes;
+        - a renamed or dropped column may not be read by a CHECK
+          constraint or another column's generation expression
+          (:meth:`_expr_identifiers`, which masks string literals);
+        - a drop keeps the last column, the partition columns and the
+          bucket column; a widen leaves the bucket column (its hashes
+          are type-sensitive) and takes only :attr:`_WIDENINGS` pairs.
+
+        Pre-change files keep their physical layout, so the child reads
+        ``mixed`` unless the table holds no file. A rename adds an alias
+        chain link, a drop tombstones the column's physical names, and
+        both need the ``column_mapping`` reader feature; a widen needs
+        ``widen``."""
+        widen = dict(widen or {})
+        fields = list(self._manifest_schema(ptr).fields)
+        names = [f.name for f in fields]
+        aliases = {k: list(v) for k, v in (ptr.get("aliases") or {}).items()}
+        live = set(ptr.get("dropped_phys") or []) | {
+            a for chain in aliases.values() for a in chain
         }
+        old, new = rename or (None, None)
+        fresh = [f.name for f in add] + ([new] if rename else [])
+        self._check_reserved_names(fresh, op)
+        for n in fresh:
+            if n in names:
+                raise ValueError(
+                    f"VersionedTable.{op}: column {n!r} already exists — "
+                    "the new name collides with it"
+                )
+            if n in live:
+                raise ValueError(
+                    f"VersionedTable.{op}: new name {n!r} collides with "
+                    "a physical name live in pre-drop/pre-rename files; "
+                    "a name-mapped read would surface the OLD bytes. "
+                    "Pick a fresh name."
+                )
+        for n in [*widen, old, drop]:
+            if n is not None and n not in names:
+                raise ValueError(
+                    f"VersionedTable.{op}: no column {n!r} in {names}"
+                )
+        gen = dict(ptr.get("generated") or {})
+        for n in (old, drop):
+            if n is None:
+                continue
+            for cname, expr in (ptr.get("constraints") or {}).items():
+                if n in self._expr_identifiers(expr):
+                    raise ValueError(
+                        f"VersionedTable.{op}: CHECK constraint "
+                        f"{cname!r} references {n!r}; drop the "
+                        "constraint first (and re-add it after)"
+                    )
+            for g, gexpr in gen.items():
+                if g != n and n in self._expr_identifiers(gexpr):
+                    raise ValueError(
+                        f"VersionedTable.{op}: generated column {g!r} "
+                        f"(= {gexpr}) references {n!r}; drop the "
+                        "generated column first"
+                    )
+        pb = ptr.get("partition_by")
+        bk = ptr.get("bucket_by")
+        if drop is not None:
+            if len(names) == 1:
+                raise ValueError(
+                    f"VersionedTable.{op}: cannot drop the last column — "
+                    "a table needs at least one"
+                )
+            if drop in self._pb_cols(pb):
+                raise ValueError(
+                    f"VersionedTable.{op}: {drop!r} is a partition "
+                    "column — set_partition_spec away from it first"
+                )
+        for n in [*widen, drop]:
+            if bk and n is not None and bk.get("col") == n:
+                raise ValueError(
+                    f"VersionedTable.{op}: {n!r} is the bucket column — "
+                    "the layout hashes its typed values"
+                )
+        types = {f.name: f.dataType.simpleString() for f in fields}
+        for n, want in list(widen.items()):
+            if want == types[n]:
+                del widen[n]  # already that type
+            elif want not in self._WIDENINGS.get(types[n], ()):
+                raise ValueError(
+                    f"VersionedTable.{op}: {types[n]} → {want} is not a "
+                    "lossless widening; allowed: "
+                    f"{sorted(self._WIDENINGS.get(types[n], ()))}"
+                )
+        if not (add or widen or rename or drop):
+            return {}
+
+        def renamed(c: str) -> str:
+            return new if c == old else c
+
+        ids = {k: dict(v) for k, v in (ptr.get("identity") or {}).items()}
+        field_ids = dict(
+            ptr.get("field_ids") or {n: i + 1 for i, n in enumerate(names)}
+        )
+        dropped = set(ptr.get("dropped_phys") or [])
+        features = ["widen"] if widen else []
+        fields = [
+            T.StructField(
+                renamed(f.name),
+                T._parse_datatype_string(widen[f.name])
+                if f.name in widen
+                else f.dataType,
+                f.nullable,
+            )
+            for f in fields
+            if f.name != drop
+        ] + [T.StructField(f.name, f.dataType, True) for f in add]
+        for f in add:
+            field_ids[f.name] = max(field_ids.values(), default=0) + 1
+        if rename:
+            aliases[new] = aliases.pop(old, []) + [old]
+            field_ids[new] = field_ids.pop(old)
+            for m in (gen, ids):
+                if old in m:
+                    m[new] = m.pop(old)
+            features.append("column_mapping")
+        if drop is not None:
+            dropped |= {drop} | set(aliases.pop(drop, []))
+            field_ids.pop(drop, None)
+            gen.pop(drop, None)
+            ids.pop(drop, None)  # a dropped identity column retires
+            features.append("column_mapping")
+        schema = T.StructType(fields)
+        out = {
+            "schema": schema.simpleString(),
+            "schema_json": schema.json(),
+            "mixed": bool(ptr.get("mixed")) or ptr["n_files"] > 0,
+            "field_ids": field_ids,
+            "aliases": aliases,
+            "dropped_phys": sorted(dropped),
+            "stats_cols": [
+                renamed(c) for c in ptr.get("stats_cols") or [] if c != drop
+            ],
+            "partition_by": (
+                renamed(pb)
+                if isinstance(pb, str)
+                else [renamed(c) for c in pb] if pb else pb
+            ),
+            "bucket_by": (
+                {**bk, "col": renamed(bk["col"])} if bk else bk
+            ),
+            "generated": gen,
+            "identity": ids,
+            "features": self._features_with(ptr, *features),
+        }
+        return {k: v for k, v in out.items() if k in ptr or v}
 
     def head_version(self) -> int:
         vs = self.versions()
@@ -2612,7 +2792,9 @@ class VersionedTable:
         current = self.read(parent)
         df, sch, _ = self._conform(df, base)
         # a column the frame adds reads as NULL on the table's rows
-        for f in self._manifest_schema(sch).fields[len(current.columns):]:
+        for f in self._manifest_schema({**base, **sch}).fields[
+            len(current.columns):
+        ]:
             current = current.withColumn(f.name, F.lit(None).cast(f.dataType))
         merged = current.unionByName(df)
         w = Window.partitionBy(*key_cols).orderBy(
@@ -3511,32 +3693,13 @@ class VersionedTable:
         manifest schema gains a NULLABLE field and a fresh field id —
         zero files move, existing files NULL-fill through the
         ``mixed`` read path exactly as after an implicit additive
-        append. Refuses an existing name and any name a live footer
-        still carries physically (a dropped column's name or a
-        pre-rename alias — the same resurrect-guard the append path
-        enforces). The new column is immediately assignable by
-        UPDATE/MERGE and appendable; stats/bloom configs do not
-        change (opt in by creating future tables with the column
-        listed). First-committer-wins like every metadata commit."""
-        parent = self.head_version()
-        ptr = self._read_pointer(parent)
-        schema = self._manifest_schema(ptr)
-        if name in {f.name for f in schema.fields}:
-            raise ValueError(
-                f"VersionedTable.add_column: column '{name}' already "
-                "exists"
-            )
-        self._check_reserved_names([name], "add_column")
-        forbidden = set(ptr.get("dropped_phys") or [])
-        for chain in (ptr.get("aliases") or {}).values():
-            forbidden.update(chain)
-        if name in forbidden:
-            raise ValueError(
-                "VersionedTable.add_column: new column "
-                f"'{name}' collides with a physical name live in "
-                "pre-drop/pre-rename files; a name-mapped read would "
-                "surface the OLD bytes. Pick a fresh name."
-            )
+        append. The column change and its refusals (an existing,
+        reserved or live physical name) are :meth:`_evolve`'s, the
+        same an additive append or an evolving MERGE goes through. The
+        new column is immediately assignable by UPDATE/MERGE and
+        appendable; stats/bloom configs do not change (opt in by
+        creating future tables with the column listed).
+        First-committer-wins like every metadata commit."""
         try:
             new_field = T.StructType.fromDDL(f"`{name}` {dtype}").fields[0]
         except Exception as exc:
@@ -3544,27 +3707,13 @@ class VersionedTable:
                 f"VersionedTable.add_column: cannot parse type "
                 f"{dtype!r}: {exc}"
             ) from None
-        merged = T.StructType(
-            list(schema.fields)
-            + [T.StructField(name, new_field.dataType, True)]
-        )
-        field_ids = dict(
-            ptr.get("field_ids")
-            or {f.name: i + 1 for i, f in enumerate(schema.fields)}
-        )
-        field_ids[name] = max(field_ids.values(), default=0) + 1
+        parent = self.head_version()
         return self._commit(
             "add_column",
             parent,
-            {
-                "schema": merged.simpleString(),
-                "schema_json": merged.json(),
-                # existing files lack the column → reads NULL-fill
-                # through the mixed projection (unless the table is
-                # empty, where the next write lands the full schema)
-                "mixed": bool(ptr.get("mixed")) or ptr["n_files"] > 0,
-                "field_ids": field_ids,
-            },
+            self._evolve(
+                self._read_pointer(parent), "add_column", add=[new_field]
+            ),
             txn=txn,
         )
 
@@ -3894,111 +4043,26 @@ class VersionedTable:
         to a pre-rename version resolves that version's own manifest —
         byte-identical, old name and all.
 
-        Refusals (each would corrupt semantics silently otherwise):
-        renaming to an existing column, to any LIVE physical name (an
-        old file could then feed two logical columns), or renaming a
-        column referenced by a CHECK constraint (the stored SQL text
-        would break at the next data-adding commit — drop and re-add
-        the constraint around the rename). DROP is :meth:`drop_column`
+        The change and its refusals are :meth:`_evolve`'s (each would
+        corrupt semantics silently otherwise): renaming to an existing
+        column, a reserved name or any LIVE physical name (an old file
+        could then feed two logical columns), or renaming a column a
+        CHECK constraint or another column's generation expression
+        reads (the stored SQL text would break at the next data-adding
+        commit; a name inside a string literal is not a reference).
+        The partition spec, bucket spec, stats columns, generated and
+        identity maps follow the new name. DROP is :meth:`drop_column`
         (r11); an APPEND that silently omits a column still refuses
         (:meth:`_check_schema`)."""
-        import re as _re
-
         parent = self.head_version()
-        ptr = self._read_pointer(parent)
-        schema = self._manifest_schema(ptr)
-        names = [f.name for f in schema.fields]
-        if old not in names:
-            raise ValueError(
-                f"VersionedTable.rename_column: no column {old!r} in "
-                f"{names}"
-            )
-        aliases = {k: list(v) for k, v in (ptr.get("aliases") or {}).items()}
-        live_phys = (
-            set(names)
-            | {a for v in aliases.values() for a in v}
-            | set(ptr.get("dropped_phys") or [])
+        return self._commit(
+            "rename",
+            parent,
+            self._evolve(
+                self._read_pointer(parent), "rename_column", rename=(old, new)
+            ),
+            txn=txn,
         )
-        if new in live_phys:
-            raise ValueError(
-                f"VersionedTable.rename_column: {new!r} collides with a "
-                "current column or a live physical name of one — a "
-                "pre-rename file could feed two logical columns"
-            )
-        self._check_reserved_names([new], "rename_column")
-        for cname, expr in (ptr.get("constraints") or {}).items():
-            if _re.search(rf"\b{_re.escape(old)}\b", expr):
-                raise ValueError(
-                    "VersionedTable.rename_column: CHECK constraint "
-                    f"{cname!r} references {old!r}; drop and re-add the "
-                    "constraint around the rename"
-                )
-        # generated columns (ADVICE r13 #3): renaming a column a
-        # generation expression READS would break the stored SQL text
-        # at the next data-adding commit (refuse, mirroring the CHECK
-        # refusal above); renaming the generated column ITSELF just
-        # moves the map key — the expression only reads regular
-        # columns (circularity is refused at create/add time)
-        gen = dict(ptr.get("generated") or {})
-        for g, gexpr in gen.items():
-            if g != old and old in self._expr_identifiers(gexpr):
-                raise ValueError(
-                    "VersionedTable.rename_column: generated column "
-                    f"{g!r} (= {gexpr}) references {old!r}; drop the "
-                    "generated column first, or rename around it"
-                )
-        if old in gen:
-            gen[new] = gen.pop(old)
-        ids = {k: dict(v) for k, v in (ptr.get("identity") or {}).items()}
-        if old in ids:
-            # the sequence follows the column: spec and watermark move
-            # with the new name
-            ids[new] = ids.pop(old)
-        merged = T.StructType(
-            [
-                T.StructField(
-                    new if f.name == old else f.name, f.dataType, f.nullable
-                )
-                for f in schema.fields
-            ]
-        )
-        aliases[new] = aliases.pop(old, []) + [old]
-        field_ids = dict(
-            ptr.get("field_ids") or {n: i + 1 for i, n in enumerate(names)}
-        )
-        field_ids[new] = field_ids.pop(old)
-        pb = ptr.get("partition_by")
-        if isinstance(pb, str):
-            pb = new if pb == old else pb
-        elif pb:
-            pb = [new if c == old else c for c in pb]
-        fields = {
-            "schema": merged.simpleString(),
-            "schema_json": merged.json(),
-            # pre-rename files now carry a different physical name for
-            # the field → reads must footer-merge (unless the table is
-            # empty)
-            "mixed": bool(ptr.get("mixed")) or ptr["n_files"] > 0,
-            "stats_cols": [
-                new if c == old else c
-                for c in (ptr.get("stats_cols") or [])
-            ],
-            "partition_by": pb,
-            "aliases": aliases,
-            "field_ids": field_ids,
-            "generated": gen,
-            # readers must walk the alias chain or miss the column in
-            # pre-rename footers — gate them (protocol feature, r12)
-            "features": self._features_with(ptr, "column_mapping"),
-        }
-        if ptr.get("identity"):
-            fields["identity"] = ids
-        bk = ptr.get("bucket_by")
-        if bk and bk.get("col") == old:
-            # bucket hashing is value-based — the spec just tracks the
-            # column's new name
-            fields["bucket_by"] = {**bk, "col": new}
-        return self._commit("rename", parent, fields, txn=txn)
 
     def drop_column(self, name: str, txn: str | None = None) -> int:
         """Column DROP as a METADATA-ONLY commit (VERDICT r10 #7 —
@@ -4022,111 +4086,21 @@ class VersionedTable:
         the refusal the honest contract — pick a fresh name, or
         OPTIMIZE-rewrite and re-create to reclaim one).
 
-        Refusals (each would corrupt semantics silently otherwise):
-        the last remaining column, a partition or bucket column (the
-        layout and its pruning are keyed on the values), a column a
-        CHECK constraint references (drop the constraint first), and
-        legacy manifests without ``schema_json``."""
-        import re as _re
-
+        The change and its refusals are :meth:`_evolve`'s (each would
+        corrupt semantics silently otherwise): the last remaining
+        column, a partition or bucket column (the layout and its
+        pruning are keyed on the values), and a column a CHECK
+        constraint or another column's generation expression reads
+        (drop that first; a name inside a string literal is not a
+        reference). Dropping a generated or identity column removes
+        its map entry."""
         parent = self.head_version()
-        ptr = self._read_pointer(parent)
-        schema = self._manifest_schema(ptr)
-        names = [f.name for f in schema.fields]
-        if name not in names:
-            raise ValueError(
-                f"VersionedTable.drop_column: no column {name!r} in "
-                f"{names}"
-            )
-        if len(names) == 1:
-            raise ValueError(
-                "VersionedTable.drop_column: cannot drop the last "
-                "column — a table needs at least one"
-            )
-        pb = ptr.get("partition_by")
-        pb_cols = self._pb_cols(pb)
-        if name in pb_cols:
-            raise ValueError(
-                f"VersionedTable.drop_column: {name!r} is a partition "
-                "column — set_partition_spec away from it first"
-            )
-        bk = ptr.get("bucket_by")
-        if bk and bk.get("col") == name:
-            raise ValueError(
-                f"VersionedTable.drop_column: {name!r} is the bucket "
-                "column — the layout is keyed on its values"
-            )
-        for cname, expr in (ptr.get("constraints") or {}).items():
-            if _re.search(rf"\b{_re.escape(name)}\b", expr):
-                raise ValueError(
-                    "VersionedTable.drop_column: CHECK constraint "
-                    f"{cname!r} references {name!r}; drop the "
-                    "constraint first"
-                )
-        # generated columns (ADVICE r13 #3): dropping a column a
-        # generation expression READS would make every later ingest
-        # fail at _apply_generated (F.expr over a missing name) —
-        # refuse, pointing at the generated column; dropping the
-        # generated column ITSELF removes its map entry so later
-        # ingests stop computing it (carrying the stale entry forward
-        # would resurrect the dropped column on the next append)
-        gen = dict(ptr.get("generated") or {})
-        for g, gexpr in gen.items():
-            if g != name and name in self._expr_identifiers(gexpr):
-                raise ValueError(
-                    "VersionedTable.drop_column: generated column "
-                    f"{g!r} (= {gexpr}) references {name!r}; drop the "
-                    "generated column first"
-                )
-        gen.pop(name, None)
-        drop_ids = {
-            k: dict(v) for k, v in (ptr.get("identity") or {}).items()
-        }
-        drop_ids.pop(name, None)
-        merged = T.StructType([f for f in schema.fields if f.name != name])
-        aliases = {k: list(v) for k, v in (ptr.get("aliases") or {}).items()}
-        tombstones = {name} | set(aliases.pop(name, []))
-        dropped = sorted(set(ptr.get("dropped_phys") or []) | tombstones)
-        field_ids = dict(
-            ptr.get("field_ids") or {n: i + 1 for i, n in enumerate(names)}
-        )
-        field_ids.pop(name, None)
         return self._commit(
             "drop",
             parent,
-            {
-                "schema": merged.simpleString(),
-                "schema_json": merged.json(),
-                # existing files carry MORE columns than the manifest
-                # declares → reads must project the manifest schema
-                "mixed": bool(ptr.get("mixed")) or ptr["n_files"] > 0,
-                "stats_cols": [
-                    c for c in (ptr.get("stats_cols") or []) if c != name
-                ],
-                "aliases": aliases,
-                "field_ids": field_ids,
-                "dropped_phys": dropped,
-                "generated": gen,
-                # dropping the identity column retires its sequence
-                "identity": drop_ids,
-                # readers must honor dropped_phys or resurrect the
-                # column from old footers — gate them (protocol
-                # feature, r12)
-                "features": self._features_with(ptr, "column_mapping"),
-            },
+            self._evolve(self._read_pointer(parent), "drop_column", drop=name),
             txn=txn,
         )
-
-    # lossless primitive widenings (Iceberg/Delta type-widening set,
-    # plus int→double which is exact for 32-bit integers); Spark 4's
-    # parquet readers promote these at scan time under a requested
-    # schema, so old files never rewrite
-    _WIDENINGS = {
-        "tinyint": {"smallint", "int", "bigint", "double"},
-        "smallint": {"int", "bigint", "double"},
-        "int": {"bigint", "double"},
-        "float": {"double"},
-    }
 
     def widen_column(
         self, name: str, new_type: str, txn: str | None = None
@@ -4144,64 +4118,22 @@ class VersionedTable:
         bloom bitmaps normalize integral values to integer text, so
         data skipping carries across the widen unchanged.
 
-        Refusals: narrowing or lateral changes (only
-        :attr:`_WIDENINGS` pairs), unknown columns, the bucket column
-        (bucket-hash values are type-sensitive), and legacy manifests
-        without ``schema_json``."""
-        parent = self.head_version()
-        ptr = self._read_pointer(parent)
-        schema = self._manifest_schema(ptr)
-        names = [f.name for f in schema.fields]
-        if name not in names:
-            raise ValueError(
-                f"VersionedTable.widen_column: no column {name!r} in "
-                f"{names}"
-            )
-        bk = ptr.get("bucket_by")
-        if bk and bk.get("col") == name:
-            raise ValueError(
-                f"VersionedTable.widen_column: {name!r} is the bucket "
-                "column — bucket hashes are type-sensitive"
-            )
-        old_f = next(f for f in schema.fields if f.name == name)
-        old_t = old_f.dataType.simpleString()
+        The change and its refusals are :meth:`_evolve`'s: narrowing or
+        lateral changes (only :attr:`_WIDENINGS` pairs), unknown
+        columns and the bucket column (bucket-hash values are
+        type-sensitive). Widening to the current type commits
+        nothing."""
         want = new_type.strip().lower()
         want = {"long": "bigint", "short": "smallint", "byte": "tinyint"}.get(
             want, want
         )
-        if want == old_t:
+        parent = self.head_version()
+        fields = self._evolve(
+            self._read_pointer(parent), "widen_column", widen={name: want}
+        )
+        if not fields:
             return parent  # already that type: no empty commits
-        if want not in self._WIDENINGS.get(old_t, set()):
-            raise ValueError(
-                f"VersionedTable.widen_column: {old_t} → {want} is not "
-                "a lossless widening; allowed: "
-                f"{sorted(self._WIDENINGS.get(old_t, set()))}"
-            )
-        new_dt = T._parse_datatype_string(want)
-        merged = T.StructType(
-            [
-                T.StructField(name, new_dt, f.nullable)
-                if f.name == name
-                else f
-                for f in schema.fields
-            ]
-        )
-        return self._commit(
-            "widen",
-            parent,
-            {
-                "schema": merged.simpleString(),
-                "schema_json": merged.json(),
-                # existing files carry the NARROW physical type →
-                # reads must request the manifest schema
-                "mixed": bool(ptr.get("mixed")) or ptr["n_files"] > 0,
-                # readers must request the manifest type over narrower
-                # footers or fail/misread the promotion — gate them
-                # (r12)
-                "features": self._features_with(ptr, "widen"),
-            },
-            txn=txn,
-        )
+        return self._commit("widen", parent, fields, txn=txn)
 
     def register_bucketed(
         self, name: str, version: int | None = None, mode: str = "link"
@@ -4617,7 +4549,7 @@ class VersionedTable:
         parent = self.head_version()
         ptr = self._read_pointer(parent)
         base = self._resolve(ptr)
-        df, sch, id_alloc = self._conform(df, ptr)
+        df, _, id_alloc = self._conform(df, ptr)
         # conformance probe (bounded: first violation only) — BEFORE
         # any file is written
         hit = _holds(predicate)
@@ -4637,12 +4569,9 @@ class VersionedTable:
         )
 
         def fields(b: dict) -> dict:
-            return {
-                "predicate": predicate,
-                "schema": sch["schema"],
-                "schema_json": sch["schema_json"],
-                "mixed": bool(b.get("mixed")) or bool(sch["mixed"]),
-            }
+            # a winner of a lost race may have changed the columns:
+            # re-check the schema on each head tried, as append does
+            return {"predicate": predicate, **self._check_schema(df, b)}
 
         return self._apply_row_changes(
             "replace_where",
@@ -5032,7 +4961,7 @@ class VersionedTable:
                 ]
                 # readers must anti-join the vector or resurrect rows —
                 # gate them (protocol feature, r12)
-                out["features"] = self._features_with(b, "dv")
+                out["features"] = self._features_with({**b, **out}, "dv")
             return out
 
         def rebase(p: int, b: dict) -> tuple[int, dict]:
@@ -5129,19 +5058,18 @@ class VersionedTable:
           ``spark.databricks.delta.schema.autoMerge``, VERDICT r13
           #4): opt-in per call, or table-wide via the property
           ``smetl.merge.schemaEvolution='true'``. With ``INSERT *``,
-          new source columns WIDEN the target schema first (one
-          metadata-only :meth:`add_column` commit each — zero files
-          move; pre-evolution rows NULL-fill through the mixed read),
-          and a source column whose type is a lossless widening of
-          the target's (:attr:`_WIDENINGS` — int→bigint, float→double
-          …) widens it via :meth:`widen_column` the same way; the
-          data merge then runs against the evolved schema. The
-          evolution commits precede the data commit (each
-          individually atomic and CAS-rebased — the same sequence a
-          Delta user runs manually; a concurrent reader between them
-          sees the widened-but-not-yet-merged schema, never a torn
-          one). Dict-form inserts and UPDATE assignments never
-          evolve — they refuse unknown columns as before.
+          new source columns are added to the target (pre-evolution
+          rows NULL-fill through the mixed read), and a source column
+          whose type is a lossless widening of the target's
+          (:attr:`_WIDENINGS` — int→bigint, float→double …) widens
+          it: the column change of :meth:`_evolve`, the one
+          add_column and widen_column make. The merge plans against
+          the evolved columns and commits them in its one data commit,
+          as Delta does, so a refused, raced or row-less merge leaves
+          the schema as it was. A rebase re-derives the change on the
+          new head, and refuses when that head already changed an
+          evolved column. Dict-form inserts and UPDATE assignments
+          never evolve — they refuse unknown columns as before.
         - ``when_matched_update_condition`` /
           ``when_not_matched_insert_condition`` /
           ``when_not_matched_by_source_update_condition`` (r13 —
@@ -5281,36 +5209,26 @@ class VersionedTable:
                         f"reference from {txt!r} (Delta refuses these "
                         "too)"
                     )
-        pending_adds: list[tuple[str, str]] = []
-        pending_widens: list[tuple[str, str]] = []
+        parent = self.head_version()
+        ptr = self._read_pointer(parent)
+        evolution: dict = {}
         if when_not_matched_insert == "*":
             # schema evolution (r14, see docstring): resolve the
-            # opt-in, then either PLAN the metadata-only evolution or
-            # refuse extra source columns explicitly — never drop
-            # them silently. The evolution commits are DEFERRED past
-            # every pre-commit validation (ADVICE r14 #2): a merge
-            # that is refused for duplicate-key ambiguity, an unknown
-            # column, or a bad clause no longer leaves add_column/
-            # widen commits behind. (A merge that loses its final CAS
-            # still does — the evolution commits are harmless
-            # metadata a re-run reuses; Delta folds them into one
-            # transaction, this engine keeps them as its standard
-            # metadata commits.)
-            head_ptr = self._read_pointer(self.head_version())
-            tbl_schema = self._manifest_schema(head_ptr)
+            # opt-in, then either plan the column change or refuse
+            # extra source columns explicitly — never drop them
+            # silently
             if schema_evolution is None:
                 schema_evolution = (
-                    (head_ptr.get("properties") or {})
+                    (ptr.get("properties") or {})
                     .get("smetl.merge.schemaEvolution", "")
                     .lower()
                     == "true"
                 )
-            tbl_types = {f.name: f.dataType for f in tbl_schema.fields}
-            extra = [
-                f
-                for f in source.schema.fields
-                if f.name not in tbl_types
-            ]
+            tbl_types = {
+                f.name: f.dataType for f in self._manifest_schema(ptr).fields
+            }
+            src_fields = source.schema.fields
+            extra = [f for f in src_fields if f.name not in tbl_types]
             if extra and not schema_evolution:
                 raise ValueError(
                     "VersionedTable.merge: INSERT * source carries "
@@ -5323,22 +5241,18 @@ class VersionedTable:
                     "the target, or project the source first."
                 )
             if schema_evolution:
-                pending_adds = [
-                    (f.name, f.dataType.simpleString()) for f in extra
-                ]
-                for f in source.schema.fields:
-                    cur = tbl_types.get(f.name)
-                    if (
-                        cur is not None
-                        and cur != f.dataType
+                evolution = {
+                    "add": extra,
+                    "widen": {
+                        f.name: f.dataType.simpleString()
+                        for f in src_fields
+                        if f.name in tbl_types
                         and f.dataType.simpleString()
-                        in self._WIDENINGS.get(cur.simpleString(), ())
-                    ):
-                        pending_widens.append(
-                            (f.name, f.dataType.simpleString())
+                        in self._WIDENINGS.get(
+                            tbl_types[f.name].simpleString(), ()
                         )
-        parent = self.head_version()
-        ptr = self._read_pointer(parent)
+                    },
+                }
         id_map = {
             k: dict(v) for k, v in (ptr.get("identity") or {}).items()
         }
@@ -5374,17 +5288,14 @@ class VersionedTable:
                     "engine allocates them; project them out of the "
                     "source / omit them from the insert list"
                 )
-        base = self._resolve(ptr)
+        # the merge plans against the evolved columns in memory; its
+        # one data commit records them (re-derived on a rebased head)
+        base = {
+            **self._resolve(ptr),
+            **self._evolve(ptr, "merge", **evolution),
+        }
         schema = self._manifest_schema(base)
         types = {f.name: f.dataType for f in schema.fields}
-        # validations below see the POST-evolution types (the planned
-        # adds/widens overlaid) so clause checks keep their r14
-        # semantics while the commits themselves stay deferred
-        pre_evolution_cols = set(types)
-        for _n, _dt in pending_adds:
-            types[_n] = T._parse_datatype_string(_dt)
-        for _n, _dt in pending_widens:
-            types[_n] = T._parse_datatype_string(_dt)
         if when_not_matched_insert not in (None, "*") and not isinstance(
             when_not_matched_insert, dict
         ):
@@ -5440,53 +5351,18 @@ class VersionedTable:
         # against SOURCE KEYS on equality, and a pruned-out file
         # provably holds none of them. A by-source clause reads
         # unmatched rows anywhere, so it keeps the full list.
-        # A key column the evolution will ADD has no target values
-        # yet: pruning and the ambiguity probe are skipped (no target
-        # row can match a NULL-only key — SQL MERGE's null-unsafe
-        # equality), and the post-evolution refresh below recomputes
-        # the candidate list against the evolved manifest.
-        keys_preexist = all(c in pre_evolution_cols for c in on)
+        # A key column the evolution adds holds only NULLs in the
+        # target, so no target row matches it (SQL MERGE's null-unsafe
+        # equality) and its files are all candidates.
         candidates = (
             base["files"]
-            if by_source or not keys_preexist
+            if by_source
             else self._keyed_candidate_files(base, on, src_keys)
         )
         # introspection for gates/ops dashboards: what the keyed
         # pruning bought THIS merge (kept == total when it fell back)
         self.last_merge_scan_files = (len(candidates), len(base["files"]))
-
-        if keys_preexist:
-            # the key find refuses ambiguity BEFORE the deferred
-            # evolution commits (ADVICE r14 #2): a refusal leaves the
-            # target schema untouched
-            touched = self._key_matched_files(base, candidates, source, on)
-
-        if pending_adds or pending_widens:
-            # every refusal above has passed — land the metadata-only
-            # evolution commits, then re-read the head so the merge
-            # plans against the evolved schema
-            for _n, _dt in pending_adds:
-                self.add_column(_n, _dt)
-            for _n, _dt in pending_widens:
-                self.widen_column(_n, _dt)
-            parent = self.head_version()
-            ptr = self._read_pointer(parent)
-            base = self._resolve(ptr)
-            schema = self._manifest_schema(base)
-            types = {f.name: f.dataType for f in schema.fields}
-            candidates = (
-                base["files"]
-                if by_source
-                else self._keyed_candidate_files(base, on, src_keys)
-            )
-            self.last_merge_scan_files = (
-                len(candidates),
-                len(base["files"]),
-            )
-            # found again on the new head: another commit can land
-            # between the evolution commits. The evolved snapshot
-            # NULL-fills added columns, so an added key matches nothing
-            touched = self._key_matched_files(base, candidates, source, on)
+        touched = self._key_matched_files(base, candidates, source, on)
 
         if by_source:
             # a NOT MATCHED BY SOURCE clause also rewrites every file
@@ -5690,6 +5566,31 @@ class VersionedTable:
                 )
             return None
 
+        evolved = [f.name for f in evolution.get("add", ())] + list(
+            evolution.get("widen", ())
+        )
+
+        def fields(b: dict) -> dict:
+            # the column change lands in the merge's own commit, derived
+            # on the head it commits onto; a head that already changed
+            # an evolved column makes the planned change stale
+            if evolved:
+                was, now = (
+                    {f.name: f.dataType for f in self._manifest_schema(p).fields}
+                    for p in (ptr, b)
+                )
+                raced = [n for n in evolved if now.get(n) != was.get(n)]
+                if raced:
+                    raise ConcurrentWriteError(
+                        "VersionedTable: merge raced a commit that changed "
+                        f"the evolved column(s) {sorted(raced)} — re-run "
+                        "against the new head"
+                    )
+            return {
+                "merge_on": list(on),
+                **self._evolve(b, "merge", **evolution),
+            }
+
         return self._apply_row_changes(
             "merge",
             parent,
@@ -5702,7 +5603,7 @@ class VersionedTable:
             post_cols=post_cols,
             inserts=inserts,
             target="t",
-            fields={"merge_on": list(on)},
+            fields=fields,
             txn=txn,
             is_stale=_stale_if_key_match,
             allocated=(
@@ -5841,8 +5742,9 @@ class VersionedTable:
         partitions are never rewritten. Files without stats for a
         scoped column are conservatively INCLUDED (compacting more
         than asked is always safe). Deletion vectors: rows of scoped
-        files fold in physically; vectors survive for the untouched
-        files (their entries for vanished files are inert). A scope
+        files fold in physically; a vector naming only compacted files
+        leaves the snapshot (:meth:`_commit`), the others still hide
+        rows of the untouched files. A scope
         matching zero files returns the current version unchanged."""
         if recluster_by is not None and zorder_by:
             raise ValueError(
@@ -5889,21 +5791,13 @@ class VersionedTable:
             # construction (their files are simply "kept"). touched ⊆
             # head files (a rebase proves no winner removed one).
             kept_any = head["n_files"] > len(touched)
-            out = {
+            return {
                 # appends may have evolved the schema; the rebase keeps
                 # the HEAD's logical schema (compacted files are then a
                 # pre-evolution physical layout → mixed)
                 "mixed": (kept_any and bool(head.get("mixed")))
                 or (bool(files) and head["schema"] != base["schema"]),
             }
-            # scoped compaction carries the head's vectors: they still
-            # hide rows of the carried-over files; entries for the
-            # vanished compacted files are inert (their paths match no
-            # scanned row). A winner's NEW vector on a compacted file
-            # was already rejected by the rebase.
-            if not kept_any:
-                out["delete_vectors"] = []
-            return out
 
         # file-granularity rebase (r11): optimize commutes with appends
         # AND with DISJOINT rewrites — any winner that left the

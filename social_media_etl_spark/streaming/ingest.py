@@ -244,9 +244,13 @@ ROCKSDB_STATE_CONF: dict[str, str] = {
 }
 
 
-def state_partitions(
-    spark, cores_per_state_partition: int = 8, floor: int = 4
-) -> int:
+#: Cores per state partition of a stateful drain (measured-best at
+#: local[32] → 4 partitions), and the partition floor for small hosts.
+CORES_PER_STATE_PARTITION = 8
+STATE_PARTITION_FLOOR = 4
+
+
+def state_partitions(spark) -> int:
     """Shuffle-partition count for STATEFUL streaming drains.
 
     Stateful streaming disables AQE, so every micro-batch pays the full
@@ -254,13 +258,14 @@ def state_partitions(
     snapshot per partition per batch) — and the count is frozen into
     the checkpoint for the query's lifetime. Size it to the cluster
     instead of pinning a constant: one state partition per
-    ``cores_per_state_partition`` cores (measured-best at local[32] →
-    4; a 1000-core cluster gets 125, so the state store never
-    serializes on a handful of partitions), with a small floor so tiny
-    clusters still overlap state maintenance with IO.
+    :data:`CORES_PER_STATE_PARTITION` cores (a 1000-core cluster gets
+    125, so the state store never serializes on a handful of
+    partitions), with :data:`STATE_PARTITION_FLOOR` so tiny clusters
+    still overlap state maintenance with IO.
     """
     return max(
-        floor, spark.sparkContext.defaultParallelism // cores_per_state_partition
+        STATE_PARTITION_FLOOR,
+        spark.sparkContext.defaultParallelism // CORES_PER_STATE_PARTITION,
     )
 
 

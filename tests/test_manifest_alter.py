@@ -230,5 +230,78 @@ def test_reserved_internal_names_refused_everywhere(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="reserved"):
         VersionedTable.create(spark, str(tmp_path / "t2"), bad_df)
+    # and so does every ingest that would add one as a new column
+    for bad in ("__smetl_dv_file", "__s_hit"):
+        wide = spark.createDataFrame([(2, "b", "z")], f"k long, v string, {bad} string")
+        with pytest.raises(ValueError, match="reserved"):
+            t.append(wide)
+        with pytest.raises(ValueError, match="reserved"):
+            t.upsert(wide, ["k"], ["v"])
+        with pytest.raises(ValueError, match="reserved"):
+            t.overwrite_where(wide, "k = 2")
     # table unchanged: head still commits normally after the refusals
     assert t.add_column("fresh", "string") == 1
+    # a later MoR delete still reads the table
+    t.delete("k = 1", mode="mor")
+    assert t.read().count() == 0
+
+
+def test_append_added_column_gets_a_field_id_and_renames(spark, tmp_path):
+    """A column an append adds mints a field id, as add_column does, so
+    a later rename of it works."""
+    t = VersionedTable.create(
+        spark, str(tmp_path / "t"), _df(spark, [(1, "a")])
+    )
+    t.append(spark.createDataFrame([(2, "b", 7)], "k long, v string, x int"))
+    ids = t._read_pointer(1)["field_ids"]
+    assert ids["x"] == max(ids.values()) == 3
+    t.rename_column("x", "y")
+    assert t._read_pointer(2)["field_ids"]["y"] == 3
+    assert sorted((r["k"], r["y"]) for r in t.read().collect()) == [
+        (1, None), (2, 7)
+    ]
+
+
+def test_column_references_skip_string_literals(spark, tmp_path):
+    """A CHECK constraint that mentions a column name only inside a
+    string literal does not reference it: drop and rename go through.
+    A real reference still refuses both."""
+    t = VersionedTable.create(
+        spark,
+        str(tmp_path / "t"),
+        spark.createDataFrame([(1, "a", 1, 2)], "k long, s string, old int, o2 int"),
+        constraints={"words": "s <> 'old' AND s <> 'k'", "o2_pos": "o2 > 0"},
+    )
+    t.drop_column("old")
+    t.rename_column("k", "key")
+    assert t.read().columns == ["key", "s", "o2"]
+    with pytest.raises(ValueError, match="CHECK constraint 'o2_pos'"):
+        t.drop_column("o2")
+    with pytest.raises(ValueError, match="CHECK constraint 'o2_pos'"):
+        t.rename_column("o2", "o3")
+
+
+def test_overwrite_where_rebase_keeps_a_raced_added_column(spark, tmp_path):
+    """overwrite_where re-checks its schema on the head it rebases onto:
+    a racing append that added column z is never undone by the
+    rebased commit."""
+    t = VersionedTable.create(
+        spark, str(tmp_path / "t"), _df(spark, [(i, "x") for i in range(4)])
+    )
+    t2 = VersionedTable(spark, t.path)
+    real_commit = t._try_commit
+
+    def racing(m, v):
+        if m.get("op") == "replace_where" and not getattr(racing, "raced", False):
+            racing.raced = True
+            t2.append(spark.createDataFrame([(9, "w", 1)], "k long, v string, z int"))
+        return real_commit(m, v)
+
+    t._try_commit = racing
+    try:
+        with pytest.raises(ValueError, match="drops column 'z'"):
+            t.overwrite_where(_df(spark, [(1, "y")]), "k = 1")
+    finally:
+        t._try_commit = real_commit
+    assert t._read_pointer(t.head_version())["op"] == "append"
+    assert "z" in t.read().columns

@@ -653,8 +653,8 @@ def test_merge_insert_star_extra_columns_refused_by_default(spark, tmp_path):
 
 
 def test_merge_schema_evolution_new_column(spark, tmp_path):
-    """With the flag, a new source column widens the target as a
-    metadata-only add_column commit; pre-evolution rows NULL-fill."""
+    """With the flag, a new source column is added to the target in the
+    merge's own commit; pre-evolution rows NULL-fill."""
     t = VersionedTable.create(
         spark, str(tmp_path / "t"), _df(spark, [(1, "a", 1.0)])
     )
@@ -666,10 +666,13 @@ def test_merge_schema_evolution_new_column(spark, tmp_path):
         src, on=["k"], when_not_matched_insert="*", schema_evolution=True
     )
     assert [t._read_pointer(i)["op"] for i in range(v + 1)] == [
-        "create", "add_column", "merge"
+        "create", "merge"
     ]
-    # the add_column commit moved zero files
-    assert set(t._read_manifest(1)["files"]) == files0
+    # the merge kept the old file and evolved the schema in one commit
+    assert files0 <= set(t._read_manifest(1)["files"])
+    assert t.read(0).columns == ["k", "v", "amt"]
+    assert t.read().columns == ["k", "v", "amt", "tag"]
+    assert "tag" in t._read_pointer(1)["field_ids"]
     got = sorted(
         (r["k"], r["v"], r["amt"], r["tag"]) for r in t.read().collect()
     )
@@ -678,8 +681,8 @@ def test_merge_schema_evolution_new_column(spark, tmp_path):
 
 def test_merge_schema_evolution_widens_type(spark, tmp_path):
     """A source column typed as a lossless widening of the target's
-    (int→bigint here) widens via the metadata-only widen commit; both
-    pre- and post-widen rows read back under the wider type."""
+    (int→bigint here) widens in the merge's own commit; both pre- and
+    post-widen rows read back under the wider type."""
     t = VersionedTable.create(
         spark,
         str(tmp_path / "t"),
@@ -696,8 +699,9 @@ def test_merge_schema_evolution_widens_type(spark, tmp_path):
         schema_evolution=True,
     )
     assert [t._read_pointer(i)["op"] for i in range(v + 1)] == [
-        "create", "widen", "merge"
+        "create", "merge"
     ]
+    assert t.read(0).schema["n"].dataType.simpleString() == "int"
     assert t.read().schema["n"].dataType.simpleString() == "bigint"
     assert sorted((r["k"], r["n"]) for r in t.read().collect()) == [
         (1, 2**40), (2, 20)
@@ -788,9 +792,9 @@ def test_merge_refused_leaves_schema_unevolved(spark, tmp_path):
 
 
 def test_merge_evolution_still_lands_after_deferral(spark, tmp_path):
-    """The deferral keeps the green path intact: a valid evolving
-    merge still commits add_column before the merge commit, and an
-    evolved column may be assigned by the update clause."""
+    """A valid evolving merge commits its column change with its rows,
+    in one commit, and an evolved column may be assigned by the update
+    clause."""
     t = VersionedTable.create(
         spark, str(tmp_path / "t"), _df(spark, [(1, "a", 1.0)])
     )
@@ -806,8 +810,10 @@ def test_merge_evolution_still_lands_after_deferral(spark, tmp_path):
         schema_evolution=True,
     )
     assert [t._read_pointer(i)["op"] for i in range(v + 1)] == [
-        "create", "add_column", "merge"
+        "create", "merge"
     ]
+    assert "tag" not in t.read(0).columns
+    assert "tag" in t.read().columns
     got = sorted(
         (r["k"], r["v"], r["tag"]) for r in t.read().collect()
     )
@@ -833,3 +839,74 @@ def test_merge_evolution_on_new_key_column(spark, tmp_path):
     assert sorted(
         r["nk"] for r in t.read().where("nk IS NOT NULL").collect()
     ) == [10, 11]
+
+
+def test_evolving_merge_is_one_commit_with_one_key_find(spark, tmp_path):
+    """An evolving merge runs its key find once and commits its column
+    change in its own data commit: a merge that loses its final CAS
+    leaves the schema unevolved, and a rebase onto a head that already
+    added an evolved column refuses naming it."""
+    from social_media_etl_spark.operators.manifest import ConcurrentWriteError
+
+    t = VersionedTable.create(
+        spark, str(tmp_path / "t"),
+        spark.createDataFrame([(1, "a", 1)], "k long, v string, n int"),
+    )
+    src = spark.createDataFrame(
+        [(1, "a2", 2**40, "t1"), (2, "b", 5, "t2")],
+        "k long, v string, n bigint, tag string",
+    )
+    finds = []
+    real_find = t._key_matched_files
+    t._key_matched_files = lambda *a: finds.append(1) or real_find(*a)
+    t2 = VersionedTable(spark, t.path)
+    real_commit = t._try_commit
+
+    def race_with(winner):
+        def racing(m, v):
+            if m.get("op") == "merge" and not racing.raced:
+                racing.raced = True
+                winner()
+            return real_commit(m, v)
+
+        racing.raced = False
+        return racing
+
+    def merge():
+        return t.merge(
+            src,
+            on=["k"],
+            when_matched_update={"v": "s.v"},
+            when_not_matched_insert="*",
+            schema_evolution=True,
+        )
+
+    # a non-rebasable winner: the merge raises, and nothing evolved
+    t._try_commit = race_with(lambda: t2.set_properties({"p": "1"}))
+    with pytest.raises(ConcurrentWriteError):
+        merge()
+    head = t.head_version()
+    assert [t._read_pointer(i)["op"] for i in range(head + 1)] == [
+        "create", "set_properties"
+    ]
+    assert "tag" not in t.read().columns
+    assert len(finds) == 1
+    # a rebasable winner that added an evolved column: refused by name
+    t._try_commit = race_with(
+        lambda: t2.append(
+            spark.createDataFrame([(7, "w", 7, "x")], "k long, v string, n int, tag string")
+        )
+    )
+    with pytest.raises(ConcurrentWriteError, match="'tag'"):
+        merge()
+    assert t._read_pointer(t.head_version())["op"] == "append"
+    # unraced: one commit, one key find
+    t._try_commit = real_commit
+    finds.clear()
+    v = merge()
+    assert t._read_pointer(v)["op"] == "merge" and v == t.head_version()
+    assert len(finds) == 1
+    assert t.read().schema["n"].dataType.simpleString() == "bigint"
+    assert sorted((r["k"], r["v"], r["n"], r["tag"]) for r in t.read().collect()) == [
+        (1, "a2", 1, None), (2, "b", 5, "t2"), (7, "w", 7, "x")
+    ]

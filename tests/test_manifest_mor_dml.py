@@ -503,3 +503,20 @@ def test_cow_and_mor_agree_on_rows_and_change_feed(spark, tmp_path, case):
         out[mode] = (_rows(t), sorted(tuple(r) for r in feed.collect()))
     assert out["cow"] == out["mor"]
     assert out["cow"][1]  # the op changed rows
+
+
+def test_cow_rewrite_of_every_vectored_file_drops_the_vector(spark, tmp_path):
+    """A copy-on-write commit that removes every file a deletion vector
+    names drops that vector: the head lists none, and its read plan
+    anti-joins nothing."""
+    t = VersionedTable.create(
+        spark, str(tmp_path / "t"), _df(spark, _base_rows(4)).coalesce(1)
+    )
+    t.delete("k = 1", mode="mor")
+    assert t._read_pointer(1)["delete_vectors"]
+    t.delete("k = 2")
+    head = t._read_pointer(t.head_version())
+    assert not head.get("delete_vectors")
+    plan = t.read()._jdf.queryExecution().optimizedPlan().toString()
+    assert "LeftAnti" not in plan
+    assert sorted(r["k"] for r in t.read().collect()) == [0, 3]

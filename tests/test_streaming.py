@@ -397,14 +397,17 @@ def test_interval_join_left_outer_batch_parity(spark):
 
 
 def test_state_partitions_scales_with_cores(spark):
-    """Cores-derived state-store sizing: local[32] lands on the
-    measured-best 4; the formula scales linearly with parallelism
-    instead of pinning a constant (VERDICT r3 #3)."""
-    n = ingest.state_partitions(spark)
-    expected = max(4, spark.sparkContext.defaultParallelism // 8)
-    assert n == expected
-    assert ingest.state_partitions(spark, cores_per_state_partition=1) \
-        == spark.sparkContext.defaultParallelism
+    """Cores-derived state-store sizing: one state partition per
+    CORES_PER_STATE_PARTITION cores of the session, never below the
+    floor (VERDICT r3 #3) — local[32] lands on the measured-best 4."""
+    cores = spark.sparkContext.defaultParallelism
+    assert ingest.state_partitions(spark) == max(
+        ingest.STATE_PARTITION_FLOOR,
+        cores // ingest.CORES_PER_STATE_PARTITION,
+    )
+    assert max(
+        ingest.STATE_PARTITION_FLOOR, 32 // ingest.CORES_PER_STATE_PARTITION
+    ) == 4
 
 
 def test_rocksdb_state_store_parity(spark, events_stream_dir, tmp_path):
